@@ -435,12 +435,12 @@ def _bpe_train_oracle(rounds: int = 8) -> str:
     left-to-right non-overlapping merge is exactly SQL ``replace()``.
     Pair counting is substr(es, i, 2) over an UNNEST(range), argmax
     uses the DECODED symbol strings for the (freq desc, l asc, r asc)
-    tie-break — the same ordering the Spark loop applies — and the
+    tie-break — the same ordering the trainer applies — and the
     dictionary is canonical BY STRING (if a later merge reproduces an
     existing symbol string, its char is reused), so grouping by encoded
     chars is provably grouping by symbol strings.  Each of the 8
     layers re-derives pair counts → argmax → dict extension → corpus
-    replace, digit-for-digit what the Spark driver loop does."""
+    replace, digit-for-digit what the trainer's rounds do."""
     prefix, bs = _bpe_layers_sql(rounds)
     final = [
         f"SELECT CAST({k} AS INT) AS merge_rank, ls AS \"left\","
@@ -487,23 +487,20 @@ def _bpe_encode_oracle(rounds: int = 8) -> str:
 # exact-equivalence-gated against a pure-Python reference BPE in
 # tests/test_advanced_ext.py::test_bpe_train_matches_reference.
 # Caveat the oracle inherits from its own construction: it always runs
-# 8 rounds, while the Spark loop stops early if the best pair's freq
-# drops below 2 — at every driver scale (sf0.001/0.01/0.1) all 8
-# rounds clear freq >= 1800, so the shapes agree; a corpus tiny enough
-# to trip the early stop would surface as a row-count mismatch there,
-# not a silent wrong value (and as the loud assert in
-# vocab_bpe_encode_corpus).
+# 8 rounds, while the trainer stops early once the best pair's freq
+# drops below 2.  At every driver scale (sf0.001/0.01/0.1) all 8
+# rounds clear freq >= 1800, so the shapes agree.  A corpus small
+# enough to stop early shows up here as a row-count mismatch, not a
+# silent wrong value, and as the named ValueError in
+# vocab_bpe_encode_corpus.
 _BPE_TRAIN_ORACLE = _bpe_train_oracle()
 
 
 def _train_bpe_merges(spark: SparkSession, sf_dir: str) -> list:
-    """The 8-round training loop (see vocab_bpe_train_merges for the
-    algorithm), memoized per corpus fingerprint via
-    plans.artifact_cache: the merge list is the textbook k-sized
-    trained artifact — production trains a tokenizer once per corpus
-    snapshot and applies it everywhere, so repeated invocations in one
-    session (train + encode + bench repeats) must not re-run eight
-    vocab-table jobs each."""
+    """The merge list of _train_bpe_merges_uncached, memoized per
+    corpus fingerprint via plans.artifact_cache: a tokenizer is
+    trained once per corpus snapshot and applied everywhere, so train,
+    encode and bench repeats in one session share one training run."""
     from guidewire_spark.plans.artifact_cache import (
         corpus_fingerprint,
         get_or_train,
@@ -516,75 +513,64 @@ def _train_bpe_merges(spark: SparkSession, sf_dir: str) -> list:
     )
 
 
-def _train_bpe_merges_uncached(spark: SparkSession, sf_dir: str) -> list:
-    """Eight rounds of pair-count → exact-integer argmax → greedy fold
-    (Sennrich et al.'s public algorithm); returns the ordered merge
-    list as (rank, left, right, merged, freq) tuples.
+def _merge_pair(symbols: list, left: str, right: str, merged: str) -> list:
+    """Greedy left-to-right, non-overlapping merge of (left, right) in
+    one word.  No overlap flag is needed: ``merged`` can never equal
+    ``left`` (``right`` is non-empty), so after a merge the last-element
+    check cannot fire on the merged token's own right half."""
+    out: list = []
+    for x in symbols:
+        if out and out[-1] == left and x == right:
+            out[-1] = merged
+        else:
+            out.append(x)
+    return out
 
-    THE scale trick is classic BPE's own: after ONE corpus pass that
-    aggregates words into a (word, count) vocabulary, every training
-    round runs on the VOCAB table (distinct words — bounded by
-    language, not corpus size), so 100 TB of text costs one shuffle up
-    front and then k tiny vocab-sized jobs.  The driver loop carries
-    only the 1-row argmax per round; the greedy merge itself is a
-    JVM-side array fold (aggregate HOF), no Python in the per-word
-    path.  Left-to-right greedy needs no overlap flag: a merged token
-    A||B can never equal its own left side A (B is non-empty), so the
-    fold's last-element check is exactly the non-overlapping rule."""
+
+def _train_bpe_merges_uncached(spark: SparkSession, sf_dir: str) -> list:
+    """Eight rounds of pair count -> exact-integer argmax -> greedy
+    merge (Sennrich et al.'s public algorithm); returns the ordered
+    merge list as (rank, left, right, merged, freq) tuples.
+
+    Spark runs ONE corpus aggregation into the (symbols, n) word
+    vocabulary, with the tokenization vocab_bpe_encode_corpus applies
+    (T.words, then split(w, "")), and collects it; the rounds then run
+    on the driver.  The argmax key is (-freq, left, right): Python
+    compares str by code point, which is the order of Spark's binary
+    UTF-8 string comparison, so ties break as a Spark orderBy would.
+
+    Bound: the driver holds one entry per DISTINCT word, and every
+    round rescans all of them.  That is language-sized, not
+    corpus-sized (31 words at sf0.001, sf0.01 and sf0.1), but the cost
+    is linear in it: these 8 rounds over random 3-12-letter words took
+    0.38 s at 10^4 words, 4.8 s at 10^5 and 37 s at 8x10^5 (CPython
+    3.11, one thread of a 4-core VM)."""
     d = load_table(spark, sf_dir, "documents")
-    vocab = (
-        d.select(F.explode(T.words(F.col("text"))).alias("w"))
+    vocab = [
+        (r.symbols, r.n)
+        for r in d.select(F.explode(T.words(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("n"))
         .select(
             F.filter(F.split("w", ""), lambda c: c != "").alias("symbols"),
             "n",
         )
-    )
-    vocab = vocab.persist()
+        .collect()
+    ]
     merges = []
     for rnd in range(8):
-        pairs = vocab.select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("symbols"), 1, F.size("symbols") - 1),
-                    F.slice(F.col("symbols"), 2, F.size("symbols") - 1),
-                    lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                )
-            ).alias("p"),
-            "n",
-        )
-        top = (
-            pairs.groupBy("p")
-            .agg(F.sum("n").alias("freq"))
-            .orderBy(
-                F.col("freq").desc(), F.col("p.l").asc(), F.col("p.r").asc()
-            )
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["freq"] < 2:
+        pairs: dict = {}
+        for symbols, n in vocab:
+            for pair in zip(symbols, symbols[1:]):
+                pairs[pair] = pairs.get(pair, 0) + n
+        if not pairs:
             break
-        left, right, freq = top[0]["p"]["l"], top[0]["p"]["r"], top[0]["freq"]
-        merges.append((rnd, left, right, left + right, int(freq)))
-        lw, rw, mw = F.lit(left), F.lit(right), F.lit(left + right)
-        merged_syms = F.aggregate(
-            "symbols",
-            F.array().cast("array<string>"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == lw)
-                & (x == rw),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1), F.array(mw)
-                ),
-            ).otherwise(F.concat(acc, F.array(x))),
-        )
-        nxt = vocab.select(merged_syms.alias("symbols"), "n").persist()
-        nxt.count()  # materialize before dropping the parent pin
-        vocab.unpersist()
-        vocab = nxt
-    vocab.unpersist()
+        (left, right), freq = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        if freq < 2:
+            break
+        merged = left + right
+        merges.append((rnd, left, right, merged, freq))
+        vocab = [(_merge_pair(s, left, right, merged), n) for s, n in vocab]
     return merges
 
 
@@ -595,8 +581,9 @@ def vocab_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     public algorithm does — per round, count adjacent symbol pairs,
     take the argmax (frequency desc, pair asc — exact integer counts,
     no float argmax), merge it greedily left-to-right, repeat.
-    Algorithm details and the scale argument live on the (memoized)
-    trainer, _train_bpe_merges/_train_bpe_merges_uncached."""
+    Spark aggregates the word vocabulary once and the rounds run on
+    the driver; the algorithm and its driver-memory bound live on the
+    (memoized) trainer, _train_bpe_merges/_train_bpe_merges_uncached."""
     return spark.createDataFrame(
         _train_bpe_merges(spark, sf_dir),
         "merge_rank int, left string, right string, merged string, freq long",
@@ -609,20 +596,21 @@ def vocab_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the oracle re-learns the merge list with the shared train layers
 # and re-encodes every word with ordered nested replace() over the
 # one-char-per-symbol encoding.  Early-stop caveat, SPECIFIC to this
-# row: the oracle always unrolls 8 merge rounds while the Spark
-# trainer stops when the best pair's freq drops below 2 — and unlike
+# row: the oracle always unrolls 8 merge rounds while the trainer
+# stops when the best pair's freq drops below 2 — and unlike
 # vocab_bpe_train_merges (where an early stop shows up as a ROW-COUNT
 # mismatch), here the oracle's extra merges would produce silently
-# different tokens_bpe values.  The assert below makes that failure
-# mode loud and named instead of a bare hash mismatch.
+# different tokens_bpe values.  The ValueError below makes that
+# failure mode loud and named instead of a bare hash mismatch.
 def vocab_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the 8 learned BPE merges (vocab_bpe_train_merges) to the
     WHOLE corpus and account per-document token counts — the encode
     half of tokenizer training, and the real budget number a training
     pipeline reports (tokens-after-BPE, not characters).
 
-    The merge list is learned once (vocab-table-sized work), collected
-    (8 rows), and applied as 8 CHAINED JVM array folds over each
+    The merge list is learned once per corpus (one vocabulary
+    aggregation, then driver-side rounds; memoized), and applied as
+    8 CHAINED JVM array folds over each
     word's symbol sequence in ONE corpus pass — merges must apply in
     learned order (merge k can consume tokens merge k-1 created:
     that is what makes BPE multiplicative), so the folds compose

@@ -1737,23 +1737,18 @@ def feature_scaling_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
     )
     cd = F.col("cents").cast("decimal(38,0)")
+    # one percentile buffer for all three quartiles (round-12, same
+    # bit-equal array-form rewrite as agg_tukey_fences)
+    qq = F.percentile("cents", F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
     stats = base.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),
         F.sum("cents").cast("double").alias("s"),
         F.sum(cd * cd).cast("double").alias("ss"),
         F.min("cents").cast("double").alias("mn"),
         F.max("cents").cast("double").alias("mx"),
-        # one percentile buffer for all three quartiles (round-12,
-        # same bit-equal array-form rewrite as agg_tukey_fences)
-        F.percentile("cents", F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))[
-            0
-        ].alias("q1"),
-        F.percentile("cents", F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))[
-            1
-        ].alias("med"),
-        F.percentile("cents", F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))[
-            2
-        ].alias("q3"),
+        qq[0].alias("q1"),
+        qq[1].alias("med"),
+        qq[2].alias("q3"),
     )
     mean = F.col("s") / F.col("n")
     sd = F.sqrt(F.col("ss") / F.col("n") - mean * mean)

@@ -11,11 +11,14 @@ and mtime_ns — so any data change invalidates naturally.  Entries are
 driver-side memory only and k-sized by contract (a merge list, an
 8x64 centroid table), never row data.
 
-Scale note: at 100 TB the training passes these artifacts come from
-are themselves scale-sane (vocab-table-sized BPE rounds, partial-agg
-Lloyd steps); the cache removes their FIXED cost from repeated
-applications in one session, which is where local benchmarks and
-interactive use spend their time.
+Scale note: the training passes these artifacts come from touch the
+corpus a bounded number of times.  BPE aggregates it ONCE into its
+distinct-word vocabulary and runs every merge round on the driver
+over that vocabulary (driver memory and per-round time grow with the
+number of distinct words, not with corpus size); IVF's Lloyd steps
+are partial aggregates.  The cache removes their FIXED cost from
+repeated applications in one session, which is where local
+benchmarks and interactive use spend their time.
 """
 
 from __future__ import annotations

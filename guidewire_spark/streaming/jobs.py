@@ -261,6 +261,12 @@ def stage_event_sides(
     )
     if sentinel:
         max_ts = e.agg(F.max("ts")).collect()[0][0]
+        if max_ts is None:
+            raise ValueError(
+                "stage_event_sides(sentinel=True) needs at least one "
+                "event with a non-null ts: the sentinel rows are placed "
+                "96 h after the latest event, and the events frame has none"
+            )
         far = max_ts + datetime.timedelta(hours=96)
         sides = sides.unionByName(
             local_df(

@@ -7,6 +7,9 @@ metrics contract."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from guidewire_spark.operators.advanced_ext import (
@@ -97,23 +100,15 @@ def test_observation_metrics_ride_the_same_job(spark, sf_dir):
     assert metrics["dropped_chars"] >= 0
 
 
-def test_bpe_train_matches_reference(spark, sf_dir):
-    """vocab_bpe_train_merges must reproduce EXACTLY the merge list a
-    pure-Python reference BPE (Sennrich-style: word-frequency vocab,
+def _reference_bpe_merges(texts: list[str]) -> list[tuple]:
+    """Pure-Python reference BPE (Sennrich-style: word-frequency vocab,
     argmax by (freq, pair) with lexicographic tie-break, greedy
-    left-to-right application) learns on the same corpus."""
+    left-to-right application), written independently of the trainer."""
     import re
     from collections import Counter
 
-    from guidewire_spark.operators.advanced_ext import vocab_bpe_train_merges
-    from guidewire_spark.plans.catalog import load_table
-
-    docs = [
-        r.text
-        for r in load_table(spark, sf_dir, "documents").select("text").collect()
-    ]
     words = Counter()
-    for t in docs:
+    for t in texts:
         for w in re.findall(r"\S+", t):  # mirrors T.words
             words[w] += 1
     vocab = {tuple(w): n for w, n in words.items()}
@@ -141,12 +136,85 @@ def test_bpe_train_matches_reference(spark, sf_dir):
                     out.append(x)
             merged_vocab[tuple(out)] = merged_vocab.get(tuple(out), 0) + n
         vocab = merged_vocab
+    return expected
+
+
+# Small corpora, each written as its own documents.parquet, with the
+# (left, right) merge order each one must produce.  None = the sf_dir
+# test corpus, which sustains all 8 rounds.
+_BPE_CORPORA = {
+    "sf_dir": (None, None),
+    # every pair has freq 2: ties break on the left symbol, then the
+    # right one
+    "ties": (["zy xb xa", "xa xb zy"], [("x", "a"), ("x", "b"), ("z", "y")]),
+    # greedy and non-overlapping: aaaa -> aa aa (3 pairs counted,
+    # 2 merged), then aa aa -> aaaa
+    "overlap": (["aaaa aaaa", "aaaa"], [("a", "a"), ("aa", "aa")]),
+    # the third round's best pair has freq 1: fewer than 8 merges
+    "early_stop": (["abc abc def"], [("a", "b"), ("ab", "c")]),
+    # U+FF5A sorts before U+1D538 by code point and by UTF-8 bytes, but
+    # after it in UTF-16: a code-unit comparison would flip rounds 1-2
+    "non_ascii": (
+        ["日本 é\U0001d538 éｚ", "日本 日本 é\U0001d538 éｚ"],
+        [("日", "本"), ("é", "ｚ"), ("é", "\U0001d538")],
+    ),
+    "empty": ([], []),
+}
+
+
+@pytest.mark.parametrize("corpus", list(_BPE_CORPORA))
+def test_bpe_train_matches_reference(spark, sf_dir, tmp_path, corpus):
+    """vocab_bpe_train_merges must reproduce EXACTLY the merge list the
+    pure-Python reference BPE learns on the same corpus, in at most 3
+    Spark jobs (one vocabulary aggregation; the rounds run on the
+    driver)."""
+    from guidewire_spark.operators.advanced_ext import (
+        _train_bpe_merges_uncached,
+        vocab_bpe_encode_corpus,
+        vocab_bpe_train_merges,
+    )
+
+    texts, pairs = _BPE_CORPORA[corpus]
+    if texts is None:
+        d = sf_dir
+        texts = [
+            r.text
+            for r in load_table(spark, d, "documents").select("text").collect()
+        ]
+    else:
+        d = str(tmp_path)
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array(range(len(texts)), pa.int64()),
+                    "text": pa.array(texts, pa.string()),
+                }
+            ),
+            f"{d}/documents.parquet",
+        )
+    expected = _reference_bpe_merges(texts)
+    if pairs is not None:
+        assert [(l, r) for _, l, r, _, _ in expected] == pairs
+
+    sc = spark.sparkContext
+    group = f"test-bpe-train-{corpus}"
+    sc.setJobGroup(group, group)
+    try:
+        trained = _train_bpe_merges_uncached(spark, d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
     got = [
         (r.merge_rank, r.left, r.right, r.merged, r.freq)
-        for r in vocab_bpe_train_merges(spark, sf_dir).collect()
+        for r in vocab_bpe_train_merges(spark, d).collect()
     ]
-    assert got == expected
-    assert len(got) == 8  # this corpus sustains all 8 rounds
+    assert got == trained == expected
+    if corpus == "sf_dir":
+        assert len(got) == 8  # this corpus sustains all 8 rounds
+    if corpus == "early_stop":
+        with pytest.raises(ValueError, match="early-stopped at 2 merges"):
+            vocab_bpe_encode_corpus(spark, d)
 
 
 def test_bpe_encode_matches_reference(spark, sf_dir):

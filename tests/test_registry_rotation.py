@@ -1,7 +1,8 @@
 """The computed driver-window rotation: failed or errored
 CORRECTNESS entries must NOT count as driver-checked (they re-front
-automatically after a fix), and the window stays exactly _WINDOW
-zero-green-history queries, plan-dependent families first."""
+automatically after a fix), and the window fronts the
+zero-green-history backlog, up to _WINDOW queries, plan-dependent
+families first."""
 
 from __future__ import annotations
 
@@ -48,7 +49,9 @@ def test_checked_names_match_committed_green_history():
     assert _driver_checked_names() == want
 
 
-def test_window_is_zero_history_failed_then_plan_dependent_first():
+def _assert_window_order() -> list[str]:
+    """Check driver_window_order() against the committed history;
+    returns the effective backlog."""
     from guidewire_spark.registry import _driver_history
 
     registry = all_queries()
@@ -56,7 +59,6 @@ def test_window_is_zero_history_failed_then_plan_dependent_first():
     checked = _driver_checked_names()
     ordered = list(driver_window_order())
     assert set(ordered) == set(registry)
-    front = ordered[:_WINDOW]
     # effective backlog = never-green PLUS oracle-upgraded rows-only
     # greens (a rows-only pass proves the query ran, not that its
     # values hash-match — adding an oracle re-fronts it, round 9)
@@ -66,9 +68,14 @@ def test_window_is_zero_history_failed_then_plan_dependent_first():
         if n not in checked
         or (history.get(n, (False, False))[1] and registry[n].oracle)
     ]
-    assert set(front) <= set(backlog)
-    if len(backlog) >= _WINDOW:
-        assert len(front) == _WINDOW
+    # the window is backlog-only and as full as the backlog allows: a
+    # backlog shorter than _WINDOW is fronted whole (already-checked
+    # queries fill the remaining slots)
+    front = ordered[: min(_WINDOW, len(backlog))]
+    if len(backlog) <= _WINDOW:
+        assert set(front) == set(backlog)
+    else:
+        assert set(front) <= set(backlog)
     # class order inside the window: failed-then-fixed rows lead
     # unconditionally (a red must never be crowded out by new
     # registrations), then plan-dependent families, then value-only
@@ -92,3 +99,19 @@ def test_window_is_zero_history_failed_then_plan_dependent_first():
     # every currently-red row re-verifies inside the window
     red = [n for n in registry if history.get(n, (True, False))[0] is False]
     assert set(red) <= set(front[: len(red)])
+    return backlog
+
+
+def test_window_is_zero_history_failed_then_plan_dependent_first():
+    _assert_window_order()
+
+
+def test_window_with_empty_backlog_is_registration_order(monkeypatch):
+    import guidewire_spark.registry as reg
+
+    names = list(all_queries())
+    monkeypatch.setattr(
+        reg, "_driver_history", lambda: {n: (True, False) for n in names}
+    )
+    assert _assert_window_order() == []
+    assert list(driver_window_order()) == names

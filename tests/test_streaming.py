@@ -659,3 +659,13 @@ def test_psi_monitor_baseline_frozen_and_batch_psi_sane(spark, sf_dir):
         pb = (nb + 0.5) / (tb + 5.0)
         psi = np.sum((pc - pb) * np.round(np.log(pc / pb), 6))
         assert abs(grp["psi_term"].sum() - round(psi, 4)) < 1e-3
+
+
+def test_stage_event_sides_sentinel_rejects_empty_events(spark, sf_dir, tmp_path):
+    """The sentinel rows sit 96 h after the latest event; an events
+    frame with no rows has no latest event, which must surface as a
+    named ValueError before anything is staged."""
+    empty = load_table(spark, sf_dir, "events").limit(0)
+    with pytest.raises(ValueError, match="non-null ts"):
+        jobs.stage_event_sides(spark, empty, str(tmp_path), sentinel=True)
+    assert not os.listdir(tmp_path)
