@@ -62,10 +62,7 @@ def _register_squares_source(spark: SparkSession) -> None:
         def reader(self, schema):
             return SynthReader(self.options)
 
-    try:
-        spark.dataSource.register(SynthSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(SynthSource)  # re-registering replaces
 
 
 @query(
@@ -311,10 +308,7 @@ def pyds_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         def writer(self, schema, overwrite):
             return CsvWriter(self.options)
 
-    try:
-        spark.dataSource.register(CsvSink)
-    except Exception:
-        pass  # already registered this session
+    spark.dataSource.register(CsvSink)  # re-registering replaces
 
     e = load_table(spark, sf_dir, "events").where(F.col("user_id") % 40 == 0)
     agg = e.groupBy("user_id").agg(

@@ -13,6 +13,13 @@ Scale notes: all three are fact-to-fact joins on orders/lineitem with
 dimension joins (region/nation/customer/supplier) that AQE broadcasts;
 aggregation is partial+final; top-k uses ORDER BY + LIMIT which Spark
 executes as TakeOrderedAndProject (no global sort materialization).
+
+Revenue sums round through ``DECIMAL(18,4)`` on both sides:
+``ROUND(double, 2)`` at a half cent differs between the engines (Spark
+rounds the shortest decimal rendering, DuckDB the binary value), and
+the two engines' sums can differ in the last bit, so a half-cent
+revenue (449314.275 on one fixture seed) rounded .28 in Spark and .27
+in DuckDB.
 """
 
 from __future__ import annotations
@@ -27,7 +34,8 @@ from guidewire_spark.registry import query
     "sql_q3_shipping_priority",
     oracle="""
     SELECT l_orderkey,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount))
+                AS DECIMAL(18,4)), 2) AS DOUBLE) AS revenue,
            strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
            o_orderpriority
     FROM customer
@@ -49,7 +57,8 @@ def sql_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         """
         SELECT l_orderkey,
-               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+               CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount))
+                    AS DECIMAL(18,4)), 2) AS DOUBLE) AS revenue,
                date_format(o_orderdate, 'yyyy-MM-dd') AS orderdate,
                o_orderpriority
         FROM customer
@@ -69,7 +78,8 @@ def sql_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sql_q5_local_supplier_volume",
     oracle="""
     SELECT n_name,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+           CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount))
+                AS DECIMAL(18,4)), 2) AS DOUBLE) AS revenue
     FROM customer
     JOIN orders ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -89,7 +99,8 @@ def sql_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         """
         SELECT n_name,
-               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+               CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount))
+                    AS DECIMAL(18,4)), 2) AS DOUBLE) AS revenue
         FROM customer
         JOIN orders ON c_custkey = o_custkey
         JOIN lineitem ON l_orderkey = o_orderkey
@@ -160,7 +171,8 @@ def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sql_q10_returned_items",
     oracle="""
     SELECT c_custkey, c_name,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount))
+                AS DECIMAL(18,4)), 2) AS DOUBLE) AS revenue,
            ROUND(c_acctbal, 2) AS acctbal,
            n_name
     FROM customer
@@ -182,7 +194,8 @@ def sql_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         """
         SELECT c_custkey, c_name,
-               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+               CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount))
+                    AS DECIMAL(18,4)), 2) AS DOUBLE) AS revenue,
                ROUND(c_acctbal, 2) AS acctbal,
                n_name
         FROM customer

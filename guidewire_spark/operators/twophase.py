@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from typing import Mapping, Sequence
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -127,8 +128,8 @@ def _pin_partitioning(parted: DataFrame) -> DataFrame:
         )
         try:
             old.unpersist(blocking=False)
-        except Exception:
-            pass  # session may already be stopped
+        except Py4JError:
+            pass  # session already stopped: its cache went with it
     return pinned
 
 
@@ -157,8 +158,8 @@ def clear_two_phase_pins() -> int:
         df = _PIN_FIFO.pop()
         try:
             df.unpersist(blocking=False)
-        except Exception:
-            pass
+        except Py4JError:
+            pass  # session already stopped: its cache went with it
     return n
 
 

@@ -72,14 +72,18 @@ def fan_out(d: DataFrame) -> DataFrame:
     and this is a no-op — no gratuitous full shuffle of raw text.
 
     The guard reads the frame's ACTUAL partition count
-    (``rdd.getNumPartitions()`` — a driver-side plan materialization,
-    no job), not the input-file count: Spark packs small files into
-    fewer splits (maxPartitionBytes/openCostInBytes), so a 40-file
-    scan can open as 20 tasks — round-12 measured the file-count
-    guard leaving the tokenize stage at 20/32 width on a multi-file
-    10× fixture (46 s of CPU over 20 tasks).  Partition count also
-    covers non-scan frames (unions, post-shuffle results) uniformly:
-    a frame that already fans wide is never re-shuffled."""
+    (``rdd.getNumPartitions()``), not the input-file count: Spark
+    packs small files into fewer splits (maxPartitionBytes/
+    openCostInBytes), so a 40-file scan can open as 20 tasks —
+    round-12 measured the file-count guard leaving the tokenize stage
+    at 20/32 width on a multi-file 10× fixture (46 s of CPU over 20
+    tasks).  On a scan-backed frame (every current caller) ``.rdd`` is
+    a driver-side plan materialization with no job.  It is NOT free on
+    other frames: under AQE, ``.rdd`` on a plan with exchanges
+    (unions of shuffled inputs, post-aggregation or post-join results)
+    runs the upstream query stages to size them, so wrapping such a
+    frame pays real jobs inside this width probe.  Wrap scan-backed
+    frames only."""
     parallelism = d.sparkSession.sparkContext.defaultParallelism
     width = d.rdd.getNumPartitions()
     if width < parallelism:

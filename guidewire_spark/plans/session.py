@@ -13,6 +13,27 @@ cluster and merely *also* work on local[N]:
 * Arrow on — every Python-side operator in this engine is an
   Arrow-batched pandas UDF, never a row-at-a-time UDF (except where a
   query exists specifically to cover the scalar-UDF API surface).
+* ``spark.sql.sources.parallelPartitionDiscovery.threshold`` at its
+  maximum — every file scan lists on the driver, never in a Spark
+  job. ``read_delta`` (plain, deletion-vector, partitioned and
+  row-id reads), ``dv.scan_with_row_index``, the writer's rewrite
+  reads, ``bloom`` and ``joins`` all hand ``spark.read.parquet`` an
+  explicit path list resolved from the Delta log. Above the default
+  threshold (32 paths) ``InMemoryFileIndex`` starts a job with one
+  task per path just to stat files whose paths and sizes the log
+  already holds. Measured on 4 cores: building a 38–47-file
+  ``read_delta`` frame 233–306 → 32–43 ms (one listing job gone;
+  builds under 32 files are unchanged), and the benchmark's
+  ``cda_sync`` read-back 0.735 → 0.529 s per round (median of 10
+  pairs, see PERF.md).
+  The bound, stated honestly: driver listing is serial stat calls,
+  about 1 ms per file on local disk. On an object store a 10⁴-file
+  snapshot would pay 10⁴ sequential requests. Lifting that needs a
+  log-backed ``FileIndex`` in the JVM (paths and sizes straight from
+  the snapshot), which this engine does not have. Seeding Spark's
+  ``InMemoryFileIndex``/``FileStatusCache`` from Python instead was
+  measured slower (about 3 ms of py4j per file). A vanilla session
+  keeps Spark's default and stays correct, only slower.
 """
 
 from __future__ import annotations
@@ -52,6 +73,11 @@ def get_spark(
         # sources prune on metadata wants the planner to hand them the
         # predicates
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # list log-resolved path lists on the driver (module docstring)
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            "2147483647",
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

@@ -289,7 +289,7 @@ def _state_rows(table_path: str, version: int | None):
                 "add": {
                     "path": path,
                     "size": snap.file_sizes.get(path, 0),
-                    "modificationTime": 0,
+                    "modificationTime": snap.file_mtimes.get(path, 0),
                     "dataChange": True,
                     "stats": snap.file_stats.get(path),
                     "partitionValues": [
@@ -419,6 +419,7 @@ def load_checkpoint_state(
 ) -> tuple[
     dict[str, str | None],
     dict[str, int],
+    dict[str, int],
     dict[str, dict],
     dict[str, dict],
     dict[str, int],
@@ -428,12 +429,14 @@ def load_checkpoint_state(
     dict[str, str],
     dict[str, str],
     dict[str, int],
+    dict,
 ]:
     """Read ``<version>.checkpoint.parquet`` (single-file or all
     parts of the multi-part form) → (active file → stats, file →
-    size, file → partitionValues, file → deletionVector, file →
-    baseRowId, schema, metadata id, partition columns, configuration,
-    live domainMetadata) to seed log replay."""
+    size, file → modificationTime, file → partitionValues, file →
+    deletionVector, file → baseRowId, schema, metadata id, partition
+    columns, configuration, live domainMetadata, txn high-water
+    marks, protocol) to seed log replay."""
     files = checkpoint_files(table_path, version)
     if not files:
         raise FileNotFoundError(
@@ -452,6 +455,7 @@ def load_checkpoint_state(
             action_rows.extend(pq.read_table(f).to_pylist())
     active: dict[str, str | None] = {}
     sizes: dict[str, int] = {}
+    mtimes: dict[str, int] = {}
     partitions: dict[str, dict] = {}
     dvs: dict[str, dict] = {}
     base_rows: dict[str, int] = {}
@@ -482,6 +486,7 @@ def load_checkpoint_state(
         if add and add.get("path"):
             active[add["path"]] = add.get("stats")
             sizes[add["path"]] = add.get("size") or 0
+            mtimes[add["path"]] = add.get("modificationTime") or 0
             partitions[add["path"]] = dict(add.get("partitionValues") or [])
             dv = add.get("deletionVector")
             if dv and dv.get("storageType"):
@@ -494,8 +499,8 @@ def load_checkpoint_state(
             meta_id = meta.get("id") or None
             part_cols = list(meta.get("partitionColumns") or [])
             config = dict(meta.get("configuration") or [])
-    return (active, sizes, partitions, dvs, base_rows, schema, meta_id,
-            part_cols, config, domains, txns, protocol)
+    return (active, sizes, mtimes, partitions, dvs, base_rows, schema,
+            meta_id, part_cols, config, domains, txns, protocol)
 
 
 def expire_log(table_path: str, keep_versions: int) -> dict:

@@ -77,6 +77,9 @@ class DeltaSnapshot:
     commit_timestamps: dict[int, int] = field(default_factory=dict)
     file_stats: dict[str, str | None] = field(default_factory=dict)
     file_sizes: dict[str, int] = field(default_factory=dict)
+    # add.modificationTime (epoch millis) by file path — carried so a
+    # log checkpoint rewrites the adds it replaces faithfully
+    file_mtimes: dict[str, int] = field(default_factory=dict)
     metadata_id: str | None = None
     partition_columns: list[str] = field(default_factory=list)
     file_partitions: dict[str, dict] = field(default_factory=dict)
@@ -193,6 +196,7 @@ def load_snapshot(
 
     active: dict[str, str | None] = {}
     sizes: dict[str, int] = {}
+    mtimes: dict[str, int] = {}
     partitions: dict[str, dict] = {}
     dvs: dict[str, dict] = {}
     base_rows: dict[str, int] = {}
@@ -208,7 +212,7 @@ def load_snapshot(
     if ckpt_version is not None and ckpt_version <= version:
         # O(1) replay: seed from the checkpoint parquet, then apply
         # only the JSON tail — instead of O(versions) JSON reads.
-        (active, sizes, partitions, dvs, base_rows, schema, meta_id,
+        (active, sizes, mtimes, partitions, dvs, base_rows, schema, meta_id,
          part_cols, config, domains, txns, protocol) = load_checkpoint_state(
             table_path, ckpt_version
         )
@@ -223,6 +227,7 @@ def load_snapshot(
                 path = action["add"]["path"]
                 active[path] = action["add"].get("stats")
                 sizes[path] = action["add"].get("size", 0)
+                mtimes[path] = action["add"].get("modificationTime", 0)
                 partitions[path] = action["add"].get("partitionValues") or {}
                 # re-adding a path REPLACES its DV state (a MOR delete
                 # carries the merged descriptor; a plain re-add after
@@ -240,6 +245,7 @@ def load_snapshot(
             elif "remove" in action:
                 active.pop(action["remove"]["path"], None)
                 sizes.pop(action["remove"]["path"], None)
+                mtimes.pop(action["remove"]["path"], None)
                 partitions.pop(action["remove"]["path"], None)
                 dvs.pop(action["remove"]["path"], None)
                 base_rows.pop(action["remove"]["path"], None)
@@ -284,6 +290,7 @@ def load_snapshot(
         commit_timestamps=commit_ts,
         file_stats=dict(active),
         file_sizes=sizes,
+        file_mtimes=mtimes,
         metadata_id=meta_id,
         partition_columns=part_cols,
         file_partitions=partitions,

@@ -428,11 +428,8 @@ class CdaStreamSource(DataSource):
 
 
 def register_cda_stream_source(spark) -> None:
-    """Idempotent per session."""
-    try:
-        spark.dataSource.register(CdaStreamSource)
-    except Exception:
-        pass  # already registered
+    """Idempotent per session: re-registering replaces the entry."""
+    spark.dataSource.register(CdaStreamSource)
 
 
 # ---------------------------------------------------------------------------
@@ -552,10 +549,7 @@ def register_cda_batch_source(spark) -> None:
     runtime-settable, so registration is the right chokepoint: every
     consumer (queries, tests, external callers) inherits it."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        spark.dataSource.register(CdaBatchSource)
-    except Exception:
-        pass
+    spark.dataSource.register(CdaBatchSource)
 
 
 # ---------------------------------------------------------------------------
@@ -1247,8 +1241,5 @@ class CdaStreamSink(DataSource):
 
 
 def register_cda_stream_sink(spark) -> None:
-    """Idempotent per session."""
-    try:
-        spark.dataSource.register(CdaStreamSink)
-    except Exception:
-        pass
+    """Idempotent per session: re-registering replaces the entry."""
+    spark.dataSource.register(CdaStreamSink)

@@ -4,8 +4,11 @@ the JSON prefix is gone (log truncation)."""
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
@@ -15,10 +18,11 @@ from guidewire_spark.sources.deltalog import (
     delta_log_dir,
     metadata_action,
     protocol_action,
+    list_versions,
     remove_action,
     write_commit,
 )
-from guidewire_spark.sources.indexer import Batch, commit_batches
+from guidewire_spark.sources.indexer import Batch, commit_batches, index
 from guidewire_spark.sources.fs import FileMeta
 from guidewire_spark.sources.log_checkpoint import (
     checkpoint_path,
@@ -625,3 +629,55 @@ def test_table_configuration_survives_log_expiry(spark, sf_dir, tmp_path):
     bad = n.withColumn("n_nationkey", F.col("n_nationkey") + 100000)
     with _pytest.raises(ValueError, match="key_bounded"):
         write_delta(bad, t, mode="append")
+
+
+def test_index_checkpoint_keeps_add_modification_times(tmp_path):
+    """After a 10-commit ``index()`` the auto-checkpoint at v9 carries
+    every add's epoch-millis ``modificationTime`` (and size) exactly as
+    the JSON adds it replaces, and replay from it keeps them too."""
+    root = tmp_path / "source" / "claims"
+    fp = "301248659"
+    stamps = [1680350543000 + i * 60_000 for i in range(10)]
+    for i, ts in enumerate(stamps):
+        folder = root / fp / str(ts)
+        folder.mkdir(parents=True)
+        pq.write_table(
+            pa.table({"k": pa.array([i], pa.int64())}),
+            str(folder / "part-00000-c000.snappy.parquet"),
+        )
+    manifest = tmp_path / "manifest.json"
+    manifest.write_text(
+        json.dumps(
+            {
+                "claims": {
+                    "lastSuccessfulWriteTimestamp": str(stamps[-1]),
+                    "totalProcessedRecordsCount": len(stamps),
+                    "dataFilesPath": str(root),
+                    "schemaHistory": {fp: str(stamps[-1])},
+                }
+            }
+        )
+    )
+    table = str(tmp_path / "db" / "claims")
+    index(str(manifest), str(tmp_path / "db"), save_mode="overwrite")
+    assert list_versions(table) == list(range(10))
+    assert read_last_checkpoint(table) == 9
+
+    json_adds = {}
+    for v in range(10):
+        with open(os.path.join(delta_log_dir(table), f"{v:020d}.json")) as f:
+            for line in f:
+                action = json.loads(line)
+                if "add" in action:
+                    add = action["add"]
+                    json_adds[add["path"]] = (add["size"], add["modificationTime"])
+    ckpt_adds = {
+        row["add"]["path"]: (row["add"]["size"], row["add"]["modificationTime"])
+        for row in pq.read_table(checkpoint_path(table, 9)).to_pylist()
+        if row["add"] is not None
+    }
+    assert len(json_adds) == len(stamps)
+    assert ckpt_adds == json_adds
+    assert all(mtime >= 10**12 for _, mtime in ckpt_adds.values())  # epoch millis
+    snap = load_snapshot(table)
+    assert snap.file_mtimes == {p: m for p, (_, m) in json_adds.items()}
