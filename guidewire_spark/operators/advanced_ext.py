@@ -18,13 +18,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from guidewire_spark.functions import text as T
+from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.plans.catalog import load_table, register_views
 from guidewire_spark.registry import query
-
-
-def _r(col: F.Column, dp: int, prec: str = "decimal(24,10)") -> F.Column:
-    """Engine-stable rounding: DECIMAL bridge then round, as double."""
-    return F.round(col.cast(prec), dp).cast("double")
 
 
 @query(
@@ -104,13 +100,7 @@ def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "i",
         "j",
         cov_num.alias("cov_num"),
-        F.round(
-            (
-                cov_num.cast("double") / F.col("n") / F.col("n") / 1e8
-            ).cast("decimal(28,14)"),
-            10,
-        )
-        .cast("double")
+        _r(cov_num.cast("double") / F.col("n") / F.col("n") / 1e8, 10, "decimal(28,14)")
         .alias("cov"),
     )
 

@@ -17,15 +17,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from guidewire_spark.functions import text as T
+from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.operators.twophase import two_phase_ordered
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.plans.scratch import scratch_dir
 from guidewire_spark.registry import query
-
-
-def _r(col: F.Column, dp: int, prec: str = "decimal(24,10)") -> F.Column:
-    """Engine-stable rounding: DECIMAL bridge then round, as double."""
-    return F.round(col.cast(prec), dp).cast("double")
 
 
 @query(
@@ -930,8 +926,7 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy((F.col("pos0") + 1).cast("long").alias("pos"))
         .agg(
             _r(F.avg(v), 6).alias("dim_mean"),
-            F.round(F.stddev_pop(v).cast("decimal(24,10)"), 5)
-            .cast("double")
+            _r(F.stddev_pop(v), 5)
             .alias("dim_std"),
             _r(F.min(v), 6).alias("dim_min"),
             _r(F.max(v), 6).alias("dim_max"),
@@ -2046,10 +2041,7 @@ def ts_velocity_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.col("ts_us") - F.lag("ts_us").over(w)).alias("us_since_prev"),
         (F.count("*").over(day) - 1).cast("long").alias("n_prev_24h"),
-        F.round(
-            (F.col("value") - F.lag("value").over(w)).cast("decimal(24,10)"), 4
-        )
-        .cast("double")
+        _r(F.col("value") - F.lag("value").over(w), 4)
         .alias("value_delta"),
     )
 
@@ -2075,8 +2067,7 @@ def agg_distinct_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         _r(F.sum_distinct(F.col("l_quantity")), 2).alias("sum_distinct_qty"),
-        F.round(F.expr("avg(DISTINCT l_quantity)").cast("decimal(24,10)"), 6)
-        .cast("double")
+        _r(F.expr("avg(DISTINCT l_quantity)"), 6)
         .alias("avg_distinct_qty"),
         F.count_distinct(F.col("l_linenumber")).cast("long").alias(
             "n_linenumbers"
@@ -2127,21 +2118,9 @@ def window_ignore_nulls_carry(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.select(
         "event_id",
         "user_id",
-        F.round(
-            F.last("purchase_value", ignorenulls=True).over(past).cast(
-                "decimal(24,10)"
-            ),
-            4,
-        )
-        .cast("double")
+        _r(F.last("purchase_value", ignorenulls=True).over(past), 4)
         .alias("last_purchase_value"),
-        F.round(
-            F.first("purchase_value", ignorenulls=True).over(future).cast(
-                "decimal(24,10)"
-            ),
-            4,
-        )
-        .cast("double")
+        _r(F.first("purchase_value", ignorenulls=True).over(future), 4)
         .alias("next_purchase_value"),
     )
 

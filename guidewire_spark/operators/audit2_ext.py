@@ -11,11 +11,6 @@ from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.registry import query
 
 
-def _r(col: F.Column, dp: int, prec: str = "decimal(24,10)") -> F.Column:
-    """Engine-stable rounding: DECIMAL bridge then round, as double."""
-    return F.round(col.cast(prec), dp).cast("double")
-
-
 # ---------------------------------------------------------------------------
 # Unicode script profile
 # ---------------------------------------------------------------------------

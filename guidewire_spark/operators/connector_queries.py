@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions.rounding import stable_round
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.plans.scratch import scratch_dir
 from guidewire_spark.registry import query
@@ -2186,10 +2187,7 @@ def delta_matview_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Internal maintenance stays DECIMAL (exact adds/cancels); the
         # output contract requires DOUBLE in the final select.
         F.col("vsum_s_acctbal").cast("double").alias("vsum"),
-        F.round(
-            ((sq - sm * sm / n) / (n - F.lit(1.0))).cast("decimal(24,10)"), 4
-        )
-        .cast("double")
+        stable_round((sq - sm * sm / n) / (n - F.lit(1.0)), 4)
         .alias("var_acctbal"),
     )
 

@@ -8,13 +8,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from guidewire_spark.functions import text as T
+from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.registry import query
-
-
-def _r(col: F.Column, dp: int, prec: str = "decimal(24,10)") -> F.Column:
-    """Engine-stable rounding: DECIMAL bridge then round, as double."""
-    return F.round(col.cast(prec), dp).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -124,13 +120,7 @@ def ts_ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return filtered.agg(
         F.max("n_days").cast("long").alias("n_days"),
         F.count("*").cast("long").alias("n_lags"),
-        F.round(
-            (
-                F.max("n_days") * (F.max("n_days") + 2) * F.sum("term")
-            ).cast("decimal(20,10)"),
-            4,
-        )
-        .cast("double")
+        _r(F.max("n_days") * (F.max("n_days") + 2) * F.sum("term"), 4, "decimal(20,10)")
         .alias("lb_q"),
     )
 
@@ -645,7 +635,6 @@ def agg_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.select(term.alias("term")).agg(
         F.count("*").cast("long").alias("n_cells"),
-        F.round(F.sum("term").cast("decimal(20,12)"), 6)
-        .cast("double")
+        _r(F.sum("term"), 6, "decimal(20,12)")
         .alias("entropy_rate_bits"),
     )

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions.rounding import stable_round
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.plans.scratch import scratch_dir
 from guidewire_spark.registry import query
@@ -689,13 +690,14 @@ def ts_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "view_value_1h",
-            F.round(
+            stable_round(
                 F.coalesce(
                     F.sum(F.when(F.col("is_view"), F.col("value"))).over(w),
                     F.lit(0.0),
-                ).cast("decimal(24,8)"),
+                ),
                 4,
-            ).cast("double"),
+                "decimal(24,8)",
+            ),
         )
         .where(~F.col("is_view"))
         .select("event_id", "user_id", "n_views_1h", "view_value_1h")

@@ -16,13 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.registry import query
-
-
-def _r(col: F.Column, dp: int, prec: str = "decimal(24,10)") -> F.Column:
-    """Engine-stable rounding: DECIMAL bridge then round, as double."""
-    return F.round(col.cast(prec), dp).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -235,7 +231,7 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dims.agg(
         F.max("nr").cast("long").alias("n_rows"),
         F.max("nc").cast("long").alias("n_cols"),
-        F.round(chi2.cast("decimal(20,12)"), 4).cast("double").alias("chi2"),
+        _r(chi2, 4, "decimal(20,12)").alias("chi2"),
         _r(
             F.sqrt(
                 chi2.cast("double") / (F.max("n") * (min_dim - F.lit(1)))
@@ -399,8 +395,7 @@ def agg_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("decimal(20,12)")
     return probs.select(term.alias("term")).agg(
         F.count("*").cast("long").alias("n_types"),
-        F.round(F.sum("term").cast("decimal(20,12)"), 6)
-        .cast("double")
+        _r(F.sum("term"), 6, "decimal(20,12)")
         .alias("js_bits"),
     )
 
@@ -608,15 +603,8 @@ def agg_bayesian_ab_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("arm").cast("long").alias("arm"),
         n.cast("long").alias("n"),
         c.cast("long").alias("conv"),
-        F.round((a / (2 + n)).cast("decimal(24,12)"), 8)
-        .cast("double")
+        _r(a / (2 + n), 8, "decimal(24,12)")
         .alias("post_mean"),
-        F.round(
-            (a * b / ((2 + n).cast("double") * (2 + n) * (3 + n))).cast(
-                "decimal(24,12)"
-            ),
-            12,
-        )
-        .cast("double")
+        _r(a * b / ((2 + n).cast("double") * (2 + n) * (3 + n)), 12, "decimal(24,12)")
         .alias("post_var"),
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from guidewire_spark.functions import text as T
 from guidewire_spark.functions import vectors as V
+from guidewire_spark.functions.rounding import stable_round
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.plans.scratch import scratch_dir
 from guidewire_spark.registry import query
@@ -395,8 +396,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_spans"),
             F.sum(F.col("e") - F.col("s")).alias("dup_tokens"),
             F.first("n_tokens").alias("n_tokens"),
-            F.round(frac.cast("decimal(24,10)"), 6)
-            .cast("double")
+            stable_round(frac, 6)
             .alias("dup_frac"),
         )
     )
@@ -1238,11 +1238,9 @@ def retrieval_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "hits",
             F.col("label_total").cast("long").alias("label_total"),
-            F.round(ndcg.cast("decimal(24,10)"), 6)
-            .cast("double")
+            stable_round(ndcg, 6)
             .alias("ndcg10"),
-            F.round(F.col("mrr_raw").cast("decimal(24,10)"), 6)
-            .cast("double")
+            stable_round(F.col("mrr_raw"), 6)
             .alias("mrr10"),
         )
     )
@@ -2248,10 +2246,9 @@ def embedding_normalize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "vec_id",
         F.size("embedding").cast("long").alias("dim"),
-        F.round(F.sqrt(sq_sum).cast("decimal(24,10)"), 5)
-        .cast("double")
+        stable_round(F.sqrt(sq_sum), 5)
         .alias("l2_norm"),
-        F.round(max_abs.cast("decimal(24,10)"), 5).cast("double").alias("max_abs"),
+        stable_round(max_abs, 5).alias("max_abs"),
     )
 
 
@@ -2316,7 +2313,7 @@ def multimodal_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "window_idx",
         "n_samples",
-        F.round(F.col("rms").cast("decimal(24,10)"), 4).cast("double").alias("rms"),
+        stable_round(F.col("rms"), 4).alias("rms"),
     )
 
 
@@ -2816,7 +2813,7 @@ def text_lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "actual_lang",
         "predicted_lang",
         "n",
-        F.round(share.cast("decimal(24,10)"), 4).cast("double").alias(
+        stable_round(share, 4).alias(
             "frac_of_actual"
         ),
     )

@@ -8,13 +8,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.registry import query
-
-
-def _r(col: F.Column, dp: int, prec: str = "decimal(24,10)") -> F.Column:
-    """Engine-stable rounding: DECIMAL bridge then round, as double."""
-    return F.round(col.cast(prec), dp).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -81,8 +77,7 @@ def window_exponential_decay_score(
         .groupBy("user_id")
         .agg(
             F.count("*").cast("long").alias("n_events"),
-            F.round((F.sum("term") / 1000).cast("decimal(24,8)"), 4)
-            .cast("double")
+            _r(F.sum("term") / 1000, 4, "decimal(24,8)")
             .alias("decayed_score"),
         )
     )
@@ -216,8 +211,7 @@ def agg_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("decimal(20,12)")
     return e.select(term.alias("term")).agg(
         F.count("*").cast("long").alias("n"),
-        F.round((F.sum("term") / F.count("*")).cast("decimal(20,12)"), 6)
-        .cast("double")
+        _r(F.sum("term") / F.count("*"), 6, "decimal(20,12)")
         .alias("log_loss"),
     )
 

@@ -17,14 +17,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.operators.twophase import two_phase_ordered
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.registry import query
-
-
-def _r(col: F.Column, dp: int, prec: str = "decimal(24,10)") -> F.Column:
-    """Engine-stable rounding: DECIMAL bridge then round, as double."""
-    return F.round(col.cast(prec), dp).cast("double")
 
 
 @query(
@@ -750,13 +746,7 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_tokens",
         "logw_micro",
-        F.round(
-            (
-                F.col("logw_micro") / F.lit(1000000.0) / F.col("n_tokens")
-            ).cast("decimal(24,10)"),
-            6,
-        )
-        .cast("double")
+        _r(F.col("logw_micro") / F.lit(1000000.0) / F.col("n_tokens"), 6)
         .alias("logw_per_token"),
         (F.col("logw_micro") > 0).alias("selected"),
     )

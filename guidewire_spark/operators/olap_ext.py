@@ -15,13 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.plans.catalog import load_table, register_views
 from guidewire_spark.registry import query
-
-
-def _r(col: F.Column, dp: int, prec: str = "decimal(24,10)") -> F.Column:
-    """Engine-stable rounding: DECIMAL bridge then round, as double."""
-    return F.round(col.cast(prec), dp).cast("double")
 
 
 @query(
@@ -311,7 +307,6 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((nij / n) * F.log2(nij * n / (ni * nj))).cast("decimal(20,12)"), 12
     ).cast("decimal(20,12)")
     return margins.select(term.alias("term")).agg(
-        F.round(F.sum("term").cast("decimal(20,12)"), 6)
-        .cast("double")
+        _r(F.sum("term"), 6, "decimal(20,12)")
         .alias("mi_bits")
     )

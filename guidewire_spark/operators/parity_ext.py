@@ -7,13 +7,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.plans.catalog import load_table, register_views
 from guidewire_spark.registry import query
-
-
-def _r(col: F.Column, dp: int, prec: str = "decimal(24,10)") -> F.Column:
-    """Engine-stable rounding: DECIMAL bridge then round, as double."""
-    return F.round(col.cast(prec), dp).cast("double")
 
 
 @query(
@@ -343,7 +339,6 @@ def pandas_api_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sdf.select(
         F.col("o_orderstatus").alias("status"),
         F.col("n").cast("long").alias("n"),
-        F.round(F.col("mean").cast("decimal(24,8)"), 4)
-        .cast("double")
+        _r(F.col("mean"), 4, "decimal(24,8)")
         .alias("mean_price"),
     )

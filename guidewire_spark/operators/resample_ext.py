@@ -6,13 +6,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.registry import query
-
-
-def _r(col: F.Column, dp: int, prec: str = "decimal(24,10)") -> F.Column:
-    """Engine-stable rounding: DECIMAL bridge then round, as double."""
-    return F.round(col.cast(prec), dp).cast("double")
 
 
 @query(
@@ -330,8 +326,7 @@ def agg_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         n.cast("long").alias("n"),
         _r(mu, 6).alias("mu_log"),
         _r(F.sqrt(var), 6).alias("sigma_log"),
-        F.round((F.exp(mu + var / 2)).cast("decimal(24,6)"), 2)
-        .cast("double")
+        _r(F.exp(mu + var / 2), 2, "decimal(24,6)")
         .alias("implied_mean"),
     )
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions.rounding import stable_round
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.registry import query
 
@@ -432,13 +433,7 @@ def func_try_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").where(F.col("event_id") % 25 == 0)
     return e.select(
         "event_id",
-        F.round(
-            F.try_divide(F.col("value"), (F.col("user_id") % 3)).cast(
-                "decimal(24,10)"
-            ),
-            4,
-        )
-        .cast("double")
+        stable_round(F.try_divide(F.col("value"), (F.col("user_id") % 3)), 4)
         .alias("safe_div"),
         F.try_to_number(
             F.regexp_extract("props", "[0-9]+", 0), F.lit("999999")

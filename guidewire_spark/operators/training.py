@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from guidewire_spark.functions import text as T
+from guidewire_spark.functions.rounding import stable_round
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.registry import query
 
@@ -1220,12 +1221,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             weighted.join(ranks, weighted.src == ranks.node)
             .groupBy("dst")
             .agg(
-                F.round(
-                    (F.lit(0.15) + F.lit(0.85) * F.sum(F.col("r") / F.col("deg")))
-                    .cast("decimal(28,12)"),
+                stable_round(
+                    F.lit(0.15) + F.lit(0.85) * F.sum(F.col("r") / F.col("deg")),
                     dp,
+                    "decimal(28,12)",
                 )
-                .cast("double")
                 .alias(out)
             )
             .select(F.col("dst").alias("node"), out)
@@ -1341,13 +1341,11 @@ def contamination_max_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "train_id",
             "bench_id",
-            F.round(
-                (
-                    F.col("bn") / (F.col("st.n") + F.col("sb.n") - F.col("bn"))
-                ).cast("decimal(18,10)"),
+            stable_round(
+                F.col("bn") / (F.col("st.n") + F.col("sb.n") - F.col("bn")),
                 6,
+                "decimal(18,10)",
             )
-            .cast("double")
             .alias("jaccard"),
         )
         .where(F.col("jaccard") >= 0.01)

@@ -66,13 +66,9 @@ def _default_parts(df: DataFrame) -> int:
     job runs with thousands), so tracking it keeps per-partition bytes
     bounded the same way every other shuffle in the job is bounded;
     callers with unusual inputs can still pass ``parts`` explicitly."""
-    try:
-        spark = df.sparkSession
-        shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "16"))
-        cores = spark.sparkContext.defaultParallelism
-        return max(16, cores, shuffle)
-    except Exception:
-        return 16
+    spark = df.sparkSession
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "16"))
+    return max(16, spark.sparkContext.defaultParallelism, shuffle)
 
 
 def _pin_partitioning(parted: DataFrame) -> DataFrame:

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from guidewire_spark.functions.rounding import stable_round
 from guidewire_spark.plans.catalog import load_table, sized_group_partitions
 from guidewire_spark.registry import query
 
@@ -264,8 +265,7 @@ def udf_pandas_iterator(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").where(F.col("event_id") % 25 == 0)
     return e.select(
         "event_id",
-        F.round(score("value").cast("decimal(24,10)"), 4)
-        .cast("double")
+        stable_round(score("value"), 4)
         .alias("scored"),
     )
 
@@ -305,8 +305,7 @@ def udaf_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "event_type",
         "n",
-        F.round(F.col("total_value").cast("decimal(24,8)"), 2)
-        .cast("double")
+        stable_round(F.col("total_value"), 2, "decimal(24,8)")
         .alias("total_value"),
     )
 

@@ -17,14 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.plans.scratch import scratch_dir
 from guidewire_spark.registry import query
-
-
-def _r(col: F.Column, dp: int, prec: str = "decimal(24,10)") -> F.Column:
-    """Engine-stable rounding: DECIMAL bridge then round, as double."""
-    return F.round(col.cast(prec), dp).cast("double")
 
 
 @query(
@@ -195,24 +191,18 @@ def agg_herfindahl_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rnk", rnk)
     )
     return shares.groupBy("o_orderpriority", "n_customers").agg(
-        F.round(
-            (
-                F.sum(F.col("s_ppm") * F.col("s_ppm")).cast("double") / 1e12
-            ).cast("decimal(24,12)"),
+        _r(
+            F.sum(F.col("s_ppm") * F.col("s_ppm")).cast("double") / 1e12,
             6,
+            "decimal(24,12)",
         )
-        .cast("double")
         .alias("hhi"),
-        F.round(
-            (
-                F.sum(
-                    F.when(F.col("rnk") <= 4, F.col("s_ppm")).otherwise(0)
-                ).cast("double")
-                / 1e6
-            ).cast("decimal(24,12)"),
+        _r(
+            F.sum(F.when(F.col("rnk") <= 4, F.col("s_ppm")).otherwise(0)).cast("double")
+            / 1e6,
             6,
+            "decimal(24,12)",
         )
-        .cast("double")
         .alias("cr4"),
     )
 

@@ -137,19 +137,13 @@ def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     ~7 s task).  Routing the rows through a pandas frame makes the
     Arrow path build the relation JVM-side: the plan is a
     LocalTableScan — zero scan tasks, zero Python in the executed plan
-    — and doubles cross Arrow bit-exactly.  Falls back to the plain
-    path when pandas/Arrow is unavailable."""
-    try:
-        import pandas as pd
-        from pyspark.sql.types import StructType
+    — and doubles cross Arrow bit-exactly."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
 
-        names = StructType.fromDDL(schema).fieldNames()
-        pdf = pd.DataFrame(
-            {n: [r[i] for r in rows] for i, n in enumerate(names)}
-        )
-        return spark.createDataFrame(pdf, schema=schema)
-    except Exception:
-        return spark.createDataFrame(rows, schema=schema)
+    names = StructType.fromDDL(schema).fieldNames()
+    pdf = pd.DataFrame({n: [r[i] for r in rows] for i, n in enumerate(names)})
+    return spark.createDataFrame(pdf, schema=schema)
 
 
 _REGISTERED: set[tuple[int, str]] = set()

@@ -390,10 +390,7 @@ def _apply_in_commit_timestamp(
     else:
         from guidewire_spark.sources.writer import table_configuration
 
-        try:
-            if table_configuration(table_path).get(ICT_KEY) != "true":
-                return actions
-        except Exception:
+        if table_configuration(table_path).get(ICT_KEY) != "true":
             return actions
         prev_ict = -1
     info = next((a for a in actions if "commitInfo" in a), None)

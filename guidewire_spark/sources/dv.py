@@ -13,19 +13,15 @@ physical rewrite).
 
 Descriptor shape follows the protocol's inline channel::
 
-    {"storageType": "i", "pathOrInlineDv": "<base85 payload>",
+    {"storageType": "i", "pathOrInlineDv": "<Z85 payload>",
      "sizeInBytes": <len(payload bytes)>, "cardinality": <n rows>}
 
-Payload format: the DEFAULT is the protocol-standard
-RoaringBitmapArray ("portable" 64-bit layout, Z85 text encoding) —
-the byte shape a real delta-spark reader applies, conformance-tested
-against the spec's canonical vectors in test_dv.py — so tables this
-engine MOR-deletes are externally readable out of the box.  A
-compact delta-varint encoding of the sorted row-index set remains
-available per-call / per-session (``DV_FORMAT='varint'``): sequential
-index runs encode in ~1 byte per row, random indexes in ~2-5 bytes.
-Reads auto-detect the format per descriptor, and merges preserve the
-existing table's format, so the two interoperate freely.
+Payload format: the protocol-standard RoaringBitmapArray ("portable"
+64-bit layout, Z85 text encoding) — the byte shape a real delta-spark
+reader applies, conformance-tested against the spec's canonical
+vectors in test_dv.py — so tables this engine MOR-deletes are
+externally readable.  It is the only format: a payload that is not a
+RoaringBitmapArray is rejected on read.
 
 Scale design of the READ side: deleted (file, row_index) pairs join
 against the scan on Spark's parquet ``_metadata.row_index`` /
@@ -41,16 +37,16 @@ is ~1e8 indexes), the inline payloads are decoded EXECUTOR-SIDE — a
 anti-join shuffles, so no index list ever materializes on the driver.
 
 Scale design of the WRITE side: newly deleted row indexes are
-aggregated and varint-ENCODED executor-side (``applyInPandas`` per
+aggregated and roaring-ENCODED executor-side (``applyInPandas`` per
 file); the driver collects one (path, payload, cardinality) row per
-touched file — compressed bytes (~1-5 B/row), never Python row
+touched file — compressed bytes (≤ 2 B/row), never Python row
 objects — because the inline descriptor does ultimately live in the
 commit JSON.
 """
 
 from __future__ import annotations
 
-import base64
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,44 +61,10 @@ META_ROW = "__dv_row"
 _STORAGE_INLINE = "i"
 
 
-def _varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _read_varints(data: bytes):
-    n = 0
-    shift = 0
-    for b in data:
-        n |= (b & 0x7F) << shift
-        if b & 0x80:
-            shift += 7
-        else:
-            yield n
-            n = 0
-            shift = 0
-    if shift:
-        raise ValueError("truncated deletion-vector payload")
-
-
 # ---------------------------------------------------------------------------
 # Protocol-standard payloads: Z85 text encoding + RoaringBitmapArray
 # ("portable" 64-bit format), the byte layout real Delta readers apply.
-# Selected per-table/per-call via the ``fmt`` argument or the module
-# default DV_FORMAT ("roaring", the default, emits protocol-conformant
-# vectors an external delta reader subtracts directly; "varint" keeps
-# this engine's compact historical encoding for sessions that prefer
-# it — reads auto-detect either).
 # ---------------------------------------------------------------------------
-
-DV_FORMAT = "roaring"
 
 # Z85 (ZeroMQ 32/Z85, the alphabet Delta's Base85Codec uses): 4-byte
 # big-endian blocks → 5 chars.  Delta pads undersized tails with zero
@@ -141,7 +103,9 @@ def z85_decode(text: str, true_len: int | None = None) -> bytes:
     for i in range(0, len(text), 5):
         n = 0
         for c in text[i : i + 5]:
-            n = n * 85 + _Z85_INDEX[c]  # KeyError on a non-Z85 char
+            if c not in _Z85_INDEX:
+                raise ValueError(f"{c!r} is not a Z85 character")
+            n = n * 85 + _Z85_INDEX[c]
         if n > 0xFFFFFFFF:
             raise ValueError("Z85 block overflows 32 bits")
         out += n.to_bytes(4, "big")
@@ -203,6 +167,8 @@ def _serialize_roaring32(values: list[int]) -> bytes:
 def deserialize_roaring_array(raw: bytes) -> list[int]:
     import struct
 
+    if len(raw) < 12:
+        raise ValueError(f"not a RoaringBitmapArray payload ({len(raw)} bytes)")
     magic, n_bitmaps = struct.unpack_from("<iq", raw, 0)
     if magic != _ROARING_ARRAY_MAGIC:
         raise ValueError(f"not a RoaringBitmapArray payload (magic {magic})")
@@ -251,95 +217,41 @@ def _deserialize_roaring32(raw: bytes, start: int) -> tuple[list[int], int]:
     return values, end
 
 
-def encode_dv(indexes, fmt: str | None = None) -> dict:
-    """Sorted-unique row indexes → inline descriptor.  ``fmt``
-    (default: module DV_FORMAT) picks the payload encoding:
-    'varint' — this engine's compact delta-varint + b85 (historical
-    default); 'roaring' — protocol-standard RoaringBitmapArray + Z85,
-    the bytes an external Delta reader applies.  Rejects negatives —
-    parquet row indexes are 0-based."""
+def encode_dv(indexes) -> dict:
+    """Sorted-unique row indexes → inline descriptor: a protocol-standard
+    RoaringBitmapArray, Z85-encoded.  Rejects negatives — parquet row
+    indexes are 0-based."""
     idx = sorted(set(int(i) for i in indexes))
     if idx and idx[0] < 0:
         raise ValueError(f"negative row index {idx[0]} in deletion vector")
-    fmt = fmt or DV_FORMAT
-    if fmt == "roaring":
-        raw = serialize_roaring_array(idx)
-        return {
-            "storageType": _STORAGE_INLINE,
-            "pathOrInlineDv": z85_encode(raw),
-            "sizeInBytes": len(raw),
-            "cardinality": len(idx),
-        }
-    if fmt != "varint":
-        raise ValueError(f"unknown deletion-vector format {fmt!r}")
-    payload = bytearray()
-    prev = -1
-    for i in idx:
-        payload += _varint(i - prev - 1)  # gap-1: dense runs → 0x00 bytes
-        prev = i
-    raw = bytes(payload)
+    raw = serialize_roaring_array(idx)
     return {
         "storageType": _STORAGE_INLINE,
-        "pathOrInlineDv": base64.b85encode(raw).decode("ascii"),
+        "pathOrInlineDv": z85_encode(raw),
         "sizeInBytes": len(raw),
         "cardinality": len(idx),
     }
 
 
-def dv_format(descriptor: dict) -> str:
-    """'roaring' when the payload Z85-decodes to the
-    RoaringBitmapArray magic, else 'varint'.  The two text alphabets
-    overlap, so the magic check (4 fixed bytes + a parseable body) is
-    what disambiguates; a varint payload accidentally passing both is
-    astronomically unlikely and would still fail the cardinality
-    check in decode_dv."""
-    try:
-        raw = z85_decode(
-            descriptor["pathOrInlineDv"], descriptor.get("sizeInBytes")
-        )
-        if len(raw) >= 12:
-            import struct
-
-            if struct.unpack_from("<i", raw, 0)[0] == _ROARING_ARRAY_MAGIC:
-                return "roaring"
-    except (KeyError, ValueError):
-        pass
-    return "varint"
-
-
 def decode_dv(descriptor: dict) -> list[int]:
     """Inline descriptor → sorted row-index list (inverse of
-    :func:`encode_dv`); auto-detects the payload format."""
+    :func:`encode_dv`).  Raises ``ValueError`` on a payload that is not
+    a RoaringBitmapArray, or whose row count disagrees with the
+    descriptor's ``cardinality``."""
     if descriptor.get("storageType") != _STORAGE_INLINE:
         raise ValueError(
             f"unsupported deletion-vector storageType "
             f"{descriptor.get('storageType')!r} (this engine writes inline)"
         )
-    if dv_format(descriptor) == "roaring":
-        out = sorted(
-            deserialize_roaring_array(
-                z85_decode(
-                    descriptor["pathOrInlineDv"],
-                    descriptor.get("sizeInBytes"),
-                )
-            )
+    out = sorted(
+        deserialize_roaring_array(
+            z85_decode(descriptor["pathOrInlineDv"], descriptor.get("sizeInBytes"))
         )
-        if len(out) != descriptor.get("cardinality", len(out)):
-            raise ValueError(
-                f"deletion vector cardinality mismatch: payload has "
-                f"{len(out)}, descriptor says {descriptor.get('cardinality')}"
-            )
-        return out
-    raw = base64.b85decode(descriptor["pathOrInlineDv"])
-    out = []
-    prev = -1
-    for gap in _read_varints(raw):
-        prev = prev + gap + 1
-        out.append(prev)
+    )
     if len(out) != descriptor.get("cardinality", len(out)):
         raise ValueError(
-            f"deletion vector cardinality mismatch: payload has {len(out)}, "
-            f"descriptor says {descriptor.get('cardinality')}"
+            f"deletion vector cardinality mismatch: payload has "
+            f"{len(out)}, descriptor says {descriptor.get('cardinality')}"
         )
     return out
 
@@ -347,16 +259,11 @@ def decode_dv(descriptor: dict) -> list[int]:
 def merge_dv(existing: dict | None, new_indexes) -> dict:
     """Union an existing descriptor (or None) with newly deleted row
     indexes — successive MOR deletes on one file accumulate into ONE
-    descriptor (the protocol allows at most one DV per live add).
-    The merged vector keeps the EXISTING descriptor's format, so a
-    roaring table stays readable by external readers across
-    deletes."""
+    descriptor (the protocol allows at most one DV per live add)."""
     idx = set(new_indexes)
-    fmt = None
     if existing is not None:
         idx.update(decode_dv(existing))
-        fmt = dv_format(existing)
-    return encode_dv(idx, fmt=fmt)
+    return encode_dv(idx)
 
 
 def scan_with_row_index(
@@ -460,23 +367,21 @@ def deleted_rows_frame_distributed(
     spark: SparkSession, dvs: dict[str, dict]
 ) -> DataFrame:
     """Executor-side twin of :func:`deleted_rows_frame`: the driver
-    ships only the (path, base85 payload) descriptor rows — one per
-    file, compressed bytes — and each executor decodes its files'
-    varint payloads inside an Arrow-batched ``mapInPandas``.  No
+    ships only the descriptor rows — one per file, compressed bytes —
+    and each executor decodes its files' payloads inside an
+    Arrow-batched ``mapInPandas``, with the same cardinality check.  No
     row-index list ever materializes on the driver, so total DV
     cardinality is bounded by cluster memory, not driver memory.
     Decoded output is chunked so a single dense vector (one file, many
     millions of dead rows) still yields bounded Arrow batches."""
     import pandas as pd
 
-    desc_rows = [
-        (normalize_path(p), d["pathOrInlineDv"]) for p, d in dvs.items()
-    ]
+    desc_rows = [(normalize_path(p), json.dumps(d)) for p, d in dvs.items()]
     n_part = max(
         1, min(len(desc_rows), spark.sparkContext.defaultParallelism)
     )
     desc = spark.createDataFrame(
-        desc_rows, f"{META_FILE} string, __payload string"
+        desc_rows, f"{META_FILE} string, __descriptor string"
     ).repartition(n_part, META_FILE)
 
     out_schema = T.StructType(
@@ -489,11 +394,8 @@ def deleted_rows_frame_distributed(
 
     def _decode(batches):
         for pdf in batches:
-            for path, payload in zip(pdf[META_FILE], pdf["__payload"]):
-                idx = decode_dv(
-                    {"storageType": _STORAGE_INLINE,
-                     "pathOrInlineDv": payload}
-                )
+            for path, desc_json in zip(pdf[META_FILE], pdf["__descriptor"]):
+                idx = decode_dv(json.loads(desc_json))
                 for lo in range(0, len(idx), chunk):
                     part = idx[lo : lo + chunk]
                     yield pd.DataFrame(
@@ -544,7 +446,7 @@ def encode_dead_rows(
     existing descriptors → ``{normalized path: merged inline
     descriptor}`` for every TOUCHED file.
 
-    The union-with-existing and the varint/base85 encode both run
+    The union-with-existing and the roaring/Z85 encode both run
     EXECUTOR-side (``applyInPandas`` keyed by file), so the driver
     never holds a Python list of row indexes — it collects one
     (path, payload, cardinality) row per touched file, compressed
@@ -555,9 +457,7 @@ def encode_dead_rows(
     (the left join keys off the hits side)."""
     import pandas as pd
 
-    exist_rows = [
-        (normalize_path(p), d["pathOrInlineDv"]) for p, d in existing.items()
-    ]
+    exist_rows = [(normalize_path(p), json.dumps(d)) for p, d in existing.items()]
     if exist_rows:
         ex = spark.createDataFrame(
             exist_rows, f"{META_FILE} string, __existing string"
@@ -575,24 +475,12 @@ def encode_dead_rows(
         ]
     )
 
-    # capture the format on the DRIVER: executors re-import this
-    # module, so a session-level DV_FORMAT override must ride the
-    # closure; an existing vector's format always wins (a roaring
-    # table stays roaring across deletes)
-    fmt = DV_FORMAT
-
     def _encode(key, pdf):
-        idx = set(int(i) for i in pdf[META_ROW])
         prior = pdf["__existing"].dropna().unique()
-        use_fmt = fmt
-        if len(prior):
-            prior_desc = {
-                "storageType": _STORAGE_INLINE,
-                "pathOrInlineDv": prior[0],
-            }
-            idx.update(decode_dv(prior_desc))
-            use_fmt = dv_format(prior_desc)
-        d = encode_dv(idx, fmt=use_fmt)
+        d = merge_dv(
+            json.loads(prior[0]) if len(prior) else None,
+            (int(i) for i in pdf[META_ROW]),
+        )
         return pd.DataFrame(
             {
                 META_FILE: [key[0]],

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from guidewire_spark.functions.rounding import stable_round
 from guidewire_spark.plans.scratch import scratch_dir
 from guidewire_spark.registry import query
 
@@ -503,8 +504,7 @@ def stream_merge_to_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("event_id").alias("last_event_id"),
         F.col("event_type").alias("last_event_type"),
-        F.round(F.col("value").cast("decimal(24,8)"), 4)
-        .cast("double")
+        stable_round(F.col("value"), 4, "decimal(24,8)")
         .alias("last_value"),
     )
 
@@ -552,8 +552,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         "c_mktsegment",
-        F.round((F.col("value") * 1.1).cast("decimal(24,10)"), 4)
-        .cast("double")
+        stable_round(F.col("value") * 1.1, 4)
         .alias("adj_value"),
     )
     run_to_parquet(enriched, f"{root}/out", f"{root}/ckpt")
@@ -673,8 +672,7 @@ def stream_complete_mode_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(f"{root}/src")
     counts = stream.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        F.round(F.sum("value").cast("decimal(24,8)"), 2)
-        .cast("double")
+        stable_round(F.sum("value"), 2, "decimal(24,8)")
         .alias("sum_value"),
     )
     name = "gw_complete_" + uuid.uuid4().hex[:8]
@@ -722,8 +720,7 @@ def stream_available_now_backfill(spark: SparkSession, sf_dir: str) -> DataFrame
     out = stream.select(
         "event_id",
         "event_type",
-        F.round(F.col("value").cast("decimal(24,8)"), 4)
-        .cast("double")
+        stable_round(F.col("value"), 4, "decimal(24,8)")
         .alias("value"),
     )
     q = (
@@ -833,8 +830,7 @@ def stream_fanout_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_id",
             "event_type",
-            F.round(F.col("value").cast("decimal(24,8)"), 4)
-            .cast("double")
+            stable_round(F.col("value"), 4, "decimal(24,8)")
             .alias("value"),
         )
     )
@@ -1653,8 +1649,7 @@ def stream_cda_pyds_subscribe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "event_id",
                 "event_type",
-                F.round(F.col("value").cast("decimal(24,8)"), 4)
-                .cast("double")
+                stable_round(F.col("value"), 4, "decimal(24,8)")
                 .alias("value"),
             )
             .writeStream.format("parquet")
@@ -1707,8 +1702,7 @@ def stream_cda_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_id",
             "event_type",
-            F.round(F.col("value").cast("decimal(24,8)"), 4)
-            .cast("double")
+            stable_round(F.col("value"), 4, "decimal(24,8)")
             .alias("value"),
         )
     )
@@ -2097,8 +2091,7 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(chunk_id).cast("long").alias("chunk"),
                 "bin",
                 F.col("nc").alias("n_cur"),
-                F.round(ln_ratio.cast("decimal(24,10)"), 6)
-                .cast("double")
+                stable_round(ln_ratio, 6)
                 .alias("lr"),
                 pc.alias("pc"),
                 pb.alias("pb"),
@@ -2107,13 +2100,7 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "chunk",
                 "bin",
                 "n_cur",
-                F.round(
-                    ((F.col("pc") - F.col("pb")) * F.col("lr")).cast(
-                        "decimal(24,10)"
-                    ),
-                    6,
-                )
-                .cast("double")
+                stable_round((F.col("pc") - F.col("pb")) * F.col("lr"), 6)
                 .alias("psi_term"),
             )
         )
@@ -2173,8 +2160,7 @@ def stream_auto_compact_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_id",
             "event_type",
-            F.round(F.col("value").cast("decimal(24,8)"), 4)
-            .cast("double")
+            stable_round(F.col("value"), 4, "decimal(24,8)")
             .alias("value"),
         )
     )

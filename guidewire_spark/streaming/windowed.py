@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions.rounding import stable_round
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.registry import query
 
@@ -82,8 +83,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             # can land on a .xxxxxx5 half-boundary where Spark (exact
             # binary) and DuckDB (shortest decimal) round apart; an
             # 8dp decimal quantization first makes both deterministic.
-            F.round(F.avg("value").cast("decimal(24,8)"), 6)
-            .cast("double")
+            stable_round(F.avg("value"), 6, "decimal(24,8)")
             .alias("avg_value"),
         )
         .select(

@@ -383,3 +383,25 @@ def test_first_write_features_advertised(spark, sf_dir, tmp_path):
     p2 = load_snapshot(t2).protocol
     assert "timestampNtz" in p2["readerFeatures"]
     assert "timestampNtz" in p2["writerFeatures"]
+
+
+def test_ict_probe_failure_aborts_the_commit(tmp_path, monkeypatch):
+    """When the previous commit's JSON is gone, the in-commit-timestamp
+    step reads the table configuration instead. If that read fails, the
+    commit fails before anything is written: a commit on an ICT table
+    without ``inCommitTimestamp`` would break the protocol."""
+    from guidewire_spark.sources import writer
+
+    table = str(tmp_path / "t")
+    _create_v0(table)
+    write_commit(table, 1, [add_action("f1.parquet", 100, 1000)])
+    log = os.path.join(table, "_delta_log")
+    os.remove(os.path.join(log, f"{1:020d}.json"))
+
+    def boom(path):
+        raise OSError(f"configuration unreadable: {path}")
+
+    monkeypatch.setattr(writer, "table_configuration", boom)
+    with pytest.raises(OSError, match="configuration unreadable"):
+        write_commit(table, 2, [add_action("f2.parquet", 100, 1000)])
+    assert not os.path.exists(os.path.join(log, f"{2:020d}.json"))

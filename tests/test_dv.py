@@ -567,42 +567,94 @@ def test_roaring_bitmap_array_conformance():
     assert len(raw2) == 12 + 4 + 8 + 4 + 4 + 8192
 
 
-def test_roaring_dv_flag_end_to_end(spark, sf_dir, tmp_path, monkeypatch):
-    """DV_FORMAT='roaring' emits protocol-standard vectors; merges
-    keep the format; reads subtract identically to varint tables."""
-    from guidewire_spark.sources import dv as dv_mod
+def test_roaring_dv_flag_end_to_end(spark, sf_dir, tmp_path):
+    """MOR deletes write protocol-standard RoaringBitmapArray vectors;
+    a second delete merges into them; reads subtract both."""
+    import struct
 
-    monkeypatch.setattr(dv_mod, "DV_FORMAT", "roaring")
+    from guidewire_spark.sources.dv import z85_decode
+
+    def magics(snap):
+        return {
+            struct.unpack_from(
+                "<i", z85_decode(d["pathOrInlineDv"], d["sizeInBytes"]), 0
+            )[0]
+            for d in snap.file_dvs.values()
+        }
+
     t = str(tmp_path / "roaring")
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     write_delta(s, t, mode="append")
     delete_from_mor(spark, t, "s_suppkey % 3 = 1")
     snap = load_snapshot(t)
     assert snap.file_dvs
-    for d in snap.file_dvs.values():
-        assert dv_mod.dv_format(d) == "roaring"
-    # merge across a second delete stays roaring — even if the session
-    # default flips back (existing format wins)
-    monkeypatch.setattr(dv_mod, "DV_FORMAT", "varint")
+    assert magics(snap) == {1681511377}  # RoaringBitmapArray magic
     delete_from_mor(spark, t, "s_suppkey % 3 = 2")
     snap2 = load_snapshot(t)
-    for d in snap2.file_dvs.values():
-        assert dv_mod.dv_format(d) == "roaring"
+    assert magics(snap2) == {1681511377}
+    for p, d in snap.file_dvs.items():
+        assert set(decode_dv(d)) < set(decode_dv(snap2.file_dvs[p]))
     want = {r.s_suppkey for r in s.where("s_suppkey % 3 = 0").collect()}
     assert {r.s_suppkey for r in read_delta(spark, t).collect()} == want
 
 
-def test_varint_and_roaring_descriptors_interoperate():
-    from guidewire_spark.sources.dv import decode_dv, encode_dv, merge_dv
+@pytest.mark.parametrize(
+    "gaps",
+    [
+        [3, 3, 3],  # rows 3, 7, 11: text length not a multiple of 5
+        [0] * 12,  # rows 0..11: valid Z85 text, wrong magic
+        list(range(1, 13)),  # text with a character outside Z85
+    ],
+    ids=["short", "dense", "sparse"],
+)
+def test_non_roaring_payload_is_rejected(gaps):
+    """Roaring is the only payload format: a descriptor carrying the
+    old delta-varint + base85 payload (one byte per gap, index minus
+    previous minus 1) fails loudly on read and merge."""
+    import base64
 
-    idx = [3, 7, 11, 100, 65536, 2**33]
-    v = encode_dv(idx, fmt="varint")
-    r = encode_dv(idx, fmt="roaring")
-    assert decode_dv(v) == decode_dv(r) == sorted(idx)
-    # merging new indexes into each keeps its own format
-    mv = merge_dv(v, [1])
-    mr = merge_dv(r, [1])
-    assert decode_dv(mv) == decode_dv(mr) == sorted(idx + [1])
-    from guidewire_spark.sources.dv import dv_format
+    raw = bytes(gaps)
+    varint = {
+        "storageType": "i",
+        "pathOrInlineDv": base64.b85encode(raw).decode("ascii"),
+        "sizeInBytes": len(raw),
+        "cardinality": len(gaps),
+    }
+    with pytest.raises(ValueError):
+        decode_dv(varint)
+    with pytest.raises(ValueError):
+        merge_dv(varint, [1])
 
-    assert dv_format(mv) == "varint" and dv_format(mr) == "roaring"
+
+def test_cardinality_mismatch_raises_on_both_read_routes(spark):
+    """A descriptor whose ``cardinality`` disagrees with its payload is
+    rejected by the driver-side decode AND the executor-side one."""
+    from guidewire_spark.sources.dv import (
+        deleted_rows_frame,
+        deleted_rows_frame_distributed,
+    )
+
+    bad = dict(encode_dv([1, 2, 3]), cardinality=4)
+    dvs = {"/tmp/a.parquet": bad}
+    with pytest.raises(ValueError, match="cardinality mismatch"):
+        deleted_rows_frame(spark, dvs)
+    with pytest.raises(Exception, match="cardinality mismatch"):
+        deleted_rows_frame_distributed(spark, dvs).collect()
+
+
+def test_cardinality_mismatch_raises_on_write_encode(spark):
+    """encode_dead_rows decodes the existing vector with its descriptor
+    fields, so a cardinality mismatch fails the MOR write too."""
+    from guidewire_spark.sources.dv import META_FILE, META_ROW, encode_dead_rows
+
+    bad = dict(encode_dv([1, 2, 3]), cardinality=4)
+    hits = spark.createDataFrame(
+        [("/tmp/a.parquet", 9)], f"{META_FILE} string, {META_ROW} long"
+    )
+    assert decode_dv(
+        encode_dead_rows(spark, hits, {"/tmp/a.parquet": encode_dv([1, 2, 3])})[
+            "/tmp/a.parquet"
+        ]
+    ) == [1, 2, 3, 9]
+    with pytest.raises(Exception, match="cardinality mismatch"):
+        encode_dead_rows(spark, hits, {"/tmp/a.parquet": bad})

@@ -711,7 +711,7 @@ def test_dv_distributed_decode_plan_shape(spark, sf_dir, tmp_path, monkeypatch):
 def test_mor_write_encode_is_executor_side(spark, sf_dir, tmp_path):
     """The MOR write path's descriptor build is an applyInPandas
     (FlatMapGroupsInPandas) keyed by file — indexes aggregate and
-    varint-encode on executors; the driver never receives row lists."""
+    encode on executors; the driver never receives row lists."""
     from guidewire_spark.plans.catalog import load_table
     from guidewire_spark.sources.dv import META_FILE, META_ROW
     from guidewire_spark.sources.writer import (

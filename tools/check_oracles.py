@@ -103,12 +103,23 @@ def main() -> None:
     json_out = os.environ.get("CHECK_JSON_OUT")
     records: dict[str, dict] = {}
 
-    def record(name: str, status: str, rows: int | None, detail: str = ""):
+    def record(
+        name: str,
+        status: str,
+        rows: int | None,
+        detail: str = "",
+        spark_hash: str | None = None,
+    ):
         if json_out is None:
             return
         rec: dict = {"status": status}
         if rows is not None:
             rec["rows"] = rows
+        # The Spark-side value hash lets two sweeps (say, before and
+        # after a refactor) be diffed query by query, rows-only queries
+        # included, which the oracle compare cannot vouch for.
+        if spark_hash is not None:
+            rec["spark_hash"] = spark_hash
         if status == "rows_only":
             rec["err"] = "no_oracle"
         if detail:
@@ -139,14 +150,14 @@ def main() -> None:
             # toPandas()+sorts them too, so an array-valued column or
             # unsortable cell must fail HERE, not in the driver run.
             try:
-                canon_frame(spdf)
+                rows_hash = frame_hash(canon_frame(spdf))
             except Exception as exc:
                 print(f"FAIL  {name}: rows-only CANON ERROR {exc}")
                 record(name, "fail", len(spdf), f"CANON ERROR {exc}")
                 failed += 1
                 continue
             print(f"rows  {name}: {len(spdf)} rows (rows-only)")
-            record(name, "rows_only", len(spdf))
+            record(name, "rows_only", len(spdf), spark_hash=rows_hash)
             rows_only += 1
             continue
         try:
@@ -192,7 +203,7 @@ def main() -> None:
             failed += 1
         else:
             print(f"PASS  {name}: {len(spdf)} rows")
-            record(name, "pass", len(spdf))
+            record(name, "pass", len(spdf), spark_hash=sh)
             passed += 1
     print(f"\n{passed} passed, {failed} failed, {rows_only} rows-only")
     if json_out is not None:
