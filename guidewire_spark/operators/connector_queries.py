@@ -324,12 +324,13 @@ def delta_log_checkpoint_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     see sources/log_checkpoint.py)."""
     from guidewire_spark.sources.deltalog import delta_log_dir, list_versions
     from guidewire_spark.sources.log_checkpoint import write_log_checkpoint
+    from guidewire_spark.sources.snapshot import load_snapshot
 
     table = scratch_dir("gw_dckpt_") + "/nation_delta"
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     for i in range(12):
         write_delta(n.where(F.col("n_nationkey") % 12 == i), table, mode="append")
-    write_log_checkpoint(table)
+    write_log_checkpoint(load_snapshot(table))
     log = delta_log_dir(table)
     for v in list_versions(table):
         os.remove(os.path.join(log, f"{v:020d}.json"))
@@ -353,6 +354,7 @@ def delta_checkpoint_v2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/log_checkpoint.py::write_log_checkpoint_v2)."""
     from guidewire_spark.sources.deltalog import delta_log_dir, list_versions
     from guidewire_spark.sources.log_checkpoint import write_log_checkpoint_v2
+    from guidewire_spark.sources.snapshot import load_snapshot
     from guidewire_spark.sources.writer import delete_from_mor
 
     table = scratch_dir("gw_dckpt2_") + "/supplier_delta"
@@ -360,7 +362,7 @@ def delta_checkpoint_v2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(4):
         write_delta(s.where(F.col("s_suppkey") % 4 == i), table, mode="append")
     delete_from_mor(spark, table, "s_suppkey % 3 = 0")
-    write_log_checkpoint_v2(table, max_adds_per_sidecar=2)
+    write_log_checkpoint_v2(load_snapshot(table), max_adds_per_sidecar=2)
     log = delta_log_dir(table)
     for v in list_versions(table):
         os.remove(os.path.join(log, f"{v:020d}.json"))
@@ -467,9 +469,10 @@ def delta_concurrent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not raced["done"]:
             raced["done"] = True
             write_commit(
-                table,
-                snap.version + 1,
-                [commit_info_action("WRITE", "Append", True, len(winner_adds), 0)]
+                snap,
+                actions=[
+                    commit_info_action("WRITE", "Append", True, len(winner_adds), 0)
+                ]
                 + winner_adds,
             )
         return [

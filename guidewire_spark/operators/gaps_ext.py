@@ -37,9 +37,10 @@ def ts_calendar_spine_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily aggregate so days with NO events materialize as explicit
     zero rows — the prerequisite for any correct moving average or
     gap alarm (absent rows silently skew both). The spine comes from
-    sequence() (executor-side generation, no I/O) and is
-    calendar-sized → broadcast; the fact side is the day-level
-    aggregate, never raw events."""
+    sequence() (executor-side generation, no I/O) and is the preserved
+    side of the outer join, so it cannot be the build side; the
+    broadcast goes on the day-level aggregate (at most 30 rows, never
+    raw events), which a left outer join can build."""
     e = load_table(spark, sf_dir, "events").where(
         (F.col("event_type") == "purchase") & (F.col("user_id") % 50 == 0)
     )
@@ -55,7 +56,7 @@ def ts_calendar_spine_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("day")
     )
-    return F.broadcast(spine).join(daily, "day", "left_outer").select(
+    return spine.join(F.broadcast(daily), "day", "left_outer").select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         F.coalesce("n", F.lit(0)).alias("n_purchases"),
         F.col("n").isNull().alias("was_missing"),

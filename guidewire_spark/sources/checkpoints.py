@@ -23,13 +23,12 @@ from pyspark.sql import types as T
 from guidewire_spark.sources.deltalog import (
     add_action,
     commit_info_action,
-    last_version,
     metadata_action,
     protocol_action,
     remove_action,
     write_commit,
 )
-from guidewire_spark.sources.snapshot import load_snapshot
+from guidewire_spark.sources.snapshot import load_snapshot, load_snapshot_or_empty
 
 CHECKPOINTS_TABLE = "_checkpoints"
 
@@ -86,24 +85,23 @@ def save_checkpoints(
     size = os.path.getsize(data_file)
     mtime = int(os.path.getmtime(data_file) * 1000)
 
-    prev = last_version(table_path)
+    snap = load_snapshot_or_empty(table_path)
     now = int(time.time() * 1000)
     actions: list[dict] = []
-    if prev is None:
+    if snap.version < 0:
         actions.append(protocol_action())
         actions.append(metadata_action(CHECKPOINT_SPARK_SCHEMA, created_time=now))
-        version, mode, blind = 0, "Overwrite", False
+        mode, blind = "Overwrite", False
     elif save_mode == "overwrite":
-        snap = load_snapshot(table_path)
         actions.extend(remove_action(p, now) for p in snap.files)
-        version, mode, blind = prev + 1, "Overwrite", False
+        mode, blind = "Overwrite", False
     else:
-        version, mode, blind = prev + 1, "Append", True
+        mode, blind = "Append", True
     actions.append(add_action(data_file, size, mtime))
     actions.append(
         commit_info_action("WRITE", mode, blind, num_files=1, num_bytes=size, timestamp=now)
     )
-    write_commit(table_path, version, actions)
+    write_commit(snap, actions=actions)
 
 
 def load_checkpoints(database_path: str) -> dict[str, int]:

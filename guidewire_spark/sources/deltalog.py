@@ -371,9 +371,7 @@ def _prev_commit_info(table_path: str, version: int) -> dict | None:
     return None
 
 
-def _apply_in_commit_timestamp(
-    table_path: str, version: int, actions: list[dict]
-) -> list[dict]:
+def _apply_in_commit_timestamp(base, version: int, actions: list[dict]) -> list[dict]:
     """In-commit timestamps (public Delta table feature): when the
     chain is live, stamp this commit's ``commitInfo`` with a
     MONOTONIC ``inCommitTimestamp`` (max(now, prev + 1) — immune to
@@ -381,16 +379,14 @@ def _apply_in_commit_timestamp(
     the FRONT of the action list, both per the protocol.  The chain is
     detected from the PREVIOUS commit's commitInfo carrying the field
     (one file read — never a log replay per commit); a truncated
-    predecessor falls back to the metadata configuration flag."""
-    prev_info = _prev_commit_info(table_path, version)
+    predecessor falls back to the base snapshot's configuration flag."""
+    prev_info = _prev_commit_info(base.table_path, version)
     if prev_info is not None:
         if "inCommitTimestamp" not in prev_info:
             return actions
         prev_ict = int(prev_info["inCommitTimestamp"])
     else:
-        from guidewire_spark.sources.writer import table_configuration
-
-        if table_configuration(table_path).get(ICT_KEY) != "true":
+        if base.configuration.get(ICT_KEY) != "true":
             return actions
         prev_ict = -1
     info = next((a for a in actions if "commitInfo" in a), None)
@@ -403,16 +399,31 @@ def _apply_in_commit_timestamp(
     return [info] + [a for a in actions if a is not info]
 
 
-def write_commit(table_path: str, version: int, actions: list[dict]) -> str:
-    """Atomically write one commit file ``_delta_log/<v>.json``.
+def write_commit(base, actions: list[dict]):
+    """Atomically write ``actions`` as the commit after ``base`` and
+    return the post-commit snapshot.
 
-    O_EXCL create: a concurrent writer committing the same version
+    ``base`` is the ``DeltaSnapshot`` the actions were built against
+    (``snapshot.empty_snapshot`` — version -1 — for a table with no
+    log).  The commit lands at ``base.version + 1`` with an O_EXCL
+    create: a concurrent writer that committed that version first
     raises FileExistsError — optimistic concurrency, resolved by the
-    caller (the indexer serializes per table, so this only fires on
-    misuse)."""
-    actions = _apply_in_commit_timestamp(table_path, version, actions)
-    log_dir = delta_log_dir(table_path)
-    os.makedirs(log_dir, exist_ok=True)
+    caller reloading its base (``commit_transaction``; the indexer
+    serializes per table, so there this only fires on misuse).
+
+    Success proves ``base`` was the latest version, so ``base`` with
+    the written actions applied (``snapshot.advance_snapshot``, after
+    the in-commit-timestamp step stamped and reordered commitInfo) is
+    exactly what a replay of the log would give — callers chain
+    ``snap = write_commit(snap, actions)`` instead of reloading.
+    ``base`` itself is not modified."""
+    from guidewire_spark.sources.snapshot import advance_snapshot
+
+    version = base.version + 1
+    actions = _apply_in_commit_timestamp(base, version, actions)
+    log_dir = delta_log_dir(base.table_path)
+    if base.version < 0:  # any later base was read from, or wrote, this dir
+        os.makedirs(log_dir, exist_ok=True)
     target = os.path.join(log_dir, f"{version:020d}.json")
     payload = "".join(json.dumps(a, separators=(",", ":")) + "\n" for a in actions)
     fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -420,36 +431,34 @@ def write_commit(table_path: str, version: int, actions: list[dict]) -> str:
         os.write(fd, payload.encode("utf-8"))
     finally:
         os.close(fd)
-    _maybe_auto_checkpoint(table_path, version)
-    return target
+    snap = advance_snapshot(base, version, actions)
+    _maybe_auto_checkpoint(snap)
+    return snap
 
 
-def _maybe_auto_checkpoint(table_path: str, version: int) -> None:
+def _maybe_auto_checkpoint(snap) -> None:
     """``delta.checkpointInterval`` (public Delta table property):
     after every Nth commit, materialize a log checkpoint so replay
     cost stays O(interval) instead of O(versions) — at CDA cadence a
     year-old table is ~10⁴ commits, and without this every cold read
-    pays the whole JSON tail. Failure here never fails the commit
-    (the commit is already durable; a missed checkpoint only defers
-    the optimization to the next interval)."""
-    from guidewire_spark.sources.writer import table_configuration
-
+    pays the whole JSON tail.  The interval and the checkpointed state
+    both come from the post-commit snapshot ``snap``.  Failure here
+    never fails the commit (the commit is already durable; a missed
+    checkpoint only defers the optimization to the next interval)."""
     try:
-        interval = int(
-            table_configuration(table_path).get("delta.checkpointInterval", 0)
-        )
-        if interval > 0 and (version + 1) % interval == 0:
+        interval = int(snap.configuration.get("delta.checkpointInterval", 0))
+        if interval > 0 and (snap.version + 1) % interval == 0:
             from guidewire_spark.sources.log_checkpoint import (
                 write_log_checkpoint,
             )
 
-            write_log_checkpoint(table_path, version=version)
+            write_log_checkpoint(snap)
     except Exception:  # pragma: no cover — never poison a durable commit
         import warnings
 
         warnings.warn(
-            f"auto-checkpoint at version {version} of {table_path} failed; "
-            "replay falls back to the JSON log",
+            f"auto-checkpoint at version {snap.version} of "
+            f"{snap.table_path} failed; replay falls back to the JSON log",
             stacklevel=2,
         )
 
@@ -491,18 +500,17 @@ def commit_transaction(table_path, build_actions, max_retries: int = 5) -> int:
     function of the snapshot.  The reference connector sidesteps all
     of this by serializing one writer per table; a 1000-executor
     pipeline cannot."""
-    from guidewire_spark.sources.snapshot import _read_commit, load_snapshot
+    from guidewire_spark.sources.snapshot import (
+        _read_commit,
+        load_snapshot_or_empty,
+    )
 
     for _ in range(max_retries + 1):
+        base = load_snapshot_or_empty(table_path)
+        actions = build_actions(base if base.version >= 0 else None)
+        attempt = base.version + 1
         try:
-            snap = load_snapshot(table_path)
-            base_version = snap.version
-        except FileNotFoundError:
-            snap, base_version = None, -1
-        actions = build_actions(snap)
-        attempt = base_version + 1
-        try:
-            write_commit(table_path, attempt, actions)
+            write_commit(base, actions=actions)
             return attempt
         except FileExistsError:
             ours_removes = {

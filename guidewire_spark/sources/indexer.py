@@ -29,7 +29,6 @@ from guidewire_spark.sources import checkpoints as ckpt
 from guidewire_spark.sources.deltalog import (
     add_action,
     commit_info_action,
-    last_version,
     metadata_action,
     protocol_action,
     remove_action,
@@ -38,11 +37,16 @@ from guidewire_spark.sources.deltalog import (
 from guidewire_spark.sources.fs import FileMeta, list_parquet_files, list_timestamp_dirs
 from guidewire_spark.sources.manifest import ManifestEntry, read_manifest
 from guidewire_spark.sources.schema import infer_schema_from_files
-from guidewire_spark.sources.snapshot import load_snapshot
+from guidewire_spark.sources.log_checkpoint import write_log_checkpoint
+from guidewire_spark.sources.snapshot import load_snapshot_or_empty
 
 logger = logging.getLogger(__name__)
 
 LONG_MAX = (1 << 63) - 1
+
+# Every CHECKPOINT_INTERVAL-th version of an indexed table also gets a
+# log checkpoint (Delta's own default cadence).
+CHECKPOINT_INTERVAL = 10
 
 
 @dataclass(frozen=True)
@@ -133,7 +137,6 @@ def commit_batches(
     table_path: str,
     batches: list[Batch],
     collect_stats: bool = False,
-    checkpoint_interval: int = 10,
 ) -> list[BatchResult]:
     """Generate one Delta version per batch (``Guidewire.scala:211-246``).
 
@@ -142,16 +145,23 @@ def commit_batches(
     append WRITE. Commit shapes match the reference goldens
     (``/root/reference/src/test/resources/delta/*.json``).
 
-    Every ``checkpoint_interval``-th version also writes a
-    ``<v>.checkpoint.parquet`` + ``_last_checkpoint`` (Delta's own
-    cadence), keeping log replay O(1) parquet + a short JSON tail as
-    versions accumulate — CDA syncs commit per table per run, so a
-    year-old table otherwise replays hundreds of JSON files.
+    The table's snapshot is loaded once, and only when there is a
+    batch to commit; each commit then advances it
+    (``snap = write_commit(snap, actions)``), so the log is never
+    replayed between batches — an initial index of N folders writes N
+    commits and reads no commit back.
+
+    Every ``CHECKPOINT_INTERVAL``-th version also writes a
+    ``<v>.checkpoint.parquet`` + ``_last_checkpoint`` from the carried
+    snapshot, keeping a cold reader's replay O(1) parquet + a short
+    JSON tail as versions accumulate — CDA syncs commit per table per
+    run, so a year-old table otherwise replays hundreds of JSON files.
     """
     results: list[BatchResult] = []
+    if not batches:
+        return results
+    snap = load_snapshot_or_empty(table_path)
     for batch in batches:
-        prev = last_version(table_path)
-        version = 0 if prev is None else prev + 1
         now = int(time.time() * 1000)
         actions: list[dict] = []
         # Optional data-skipping stats (SURVEY §4: the reference writes
@@ -167,14 +177,13 @@ def commit_batches(
         ]
         num_bytes = sum(f.size for f in batch.files)
         if batch.schema is not None:
-            if prev is None:
+            if snap.version < 0:
                 # CREATE TABLE: fresh log starts with the protocol action.
                 actions.append(protocol_action())
             else:
                 # UPGRADE SCHEMA: logically overwrite — remove every file
                 # of the current snapshot (Guidewire.scala:221-237).
-                current = load_snapshot(table_path)
-                actions.extend(remove_action(p, now) for p in current.files)
+                actions.extend(remove_action(p, now) for p in snap.files)
             actions.append(metadata_action(batch.schema, created_time=now))
             actions.extend(adds)
             actions.append(
@@ -183,7 +192,7 @@ def commit_batches(
                 )
             )
         else:
-            if prev is None:
+            if snap.version < 0:
                 # Blind append onto a table with no log yet: bootstrap
                 # protocol+metadata from the batch files so the log replays.
                 actions.append(protocol_action())
@@ -196,11 +205,9 @@ def commit_batches(
                     "WRITE", "Append", True, len(batch.files), num_bytes, now
                 )
             )
-        write_commit(table_path, version, actions)
-        if checkpoint_interval and (version + 1) % checkpoint_interval == 0:
-            from guidewire_spark.sources.log_checkpoint import write_log_checkpoint
-
-            write_log_checkpoint(table_path, version)
+        snap = write_commit(snap, actions=actions)
+        if (snap.version + 1) % CHECKPOINT_INTERVAL == 0:
+            write_log_checkpoint(snap)
         results.append(BatchResult(batch.schema_id, batch.commit_timestamp, len(batch.files)))
     return results
 

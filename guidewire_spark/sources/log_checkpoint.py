@@ -225,17 +225,13 @@ def read_last_checkpoint(table_path: str) -> int | None:
         return int(json.load(f)["version"])
 
 
-def _state_rows(table_path: str, version: int | None):
-    """(snapshot, header action rows, add action rows) for a
-    checkpoint of ``version`` — shared by the classic/multi-part and
-    V2 writers."""
-    # Local import: snapshot imports this module for the read path.
-    from guidewire_spark.sources.snapshot import load_snapshot
-
-    from guidewire_spark.sources.writer import table_configuration
-
-    snap = load_snapshot(table_path, version=version)
-    config = table_configuration(table_path)
+def _state_rows(snap):
+    """(header action rows, add action rows) for a checkpoint of the
+    snapshot ``snap`` — shared by the classic/multi-part and V2
+    writers.  Everything, the configuration included, comes from
+    ``snap``: a checkpoint of version v carries v's state, never the
+    latest version's."""
+    config = snap.configuration
     # Column mapping requires a protocol upgrade for external Delta
     # readers (minReader 2 / minWriter 5 per the protocol spec) —
     # advertising (1, 2) would let a reader bind post-RENAME files by
@@ -301,14 +297,10 @@ def _state_rows(table_path: str, version: int | None):
                 }
             }
         )
-    return snap, header, adds
+    return header, adds
 
 
-def write_log_checkpoint_v2(
-    table_path: str,
-    version: int | None = None,
-    max_adds_per_sidecar: int = 10000,
-) -> str:
+def write_log_checkpoint_v2(snap, max_adds_per_sidecar: int = 10000) -> str:
     """Protocol V2 checkpoint: a UUID-named manifest
     (``<v>.checkpoint.<uuid>.parquet`` holding protocol/metaData, a
     checkpointMetadata action and ``sidecar`` references) plus add
@@ -325,7 +317,8 @@ def write_log_checkpoint_v2(
     (checkpoint_files) exactly like a partial multi-part set."""
     import uuid as _uuid
 
-    snap, header, adds = _state_rows(table_path, version)
+    table_path = snap.table_path
+    header, adds = _state_rows(snap)
     scdir = sidecar_dir(table_path)
     os.makedirs(scdir, exist_ok=True)
     token = _uuid.uuid4().hex
@@ -367,13 +360,12 @@ def write_log_checkpoint_v2(
     return manifest
 
 
-def write_log_checkpoint(
-    table_path: str,
-    version: int | None = None,
-    max_actions_per_part: int | None = None,
-) -> str:
-    """Materialize the snapshot state at ``version`` (default: latest)
-    as a checkpoint parquet and point ``_last_checkpoint`` at it.
+def write_log_checkpoint(snap, max_actions_per_part: int | None = None) -> str:
+    """Materialize the state of the snapshot ``snap`` as a checkpoint
+    parquet at ``snap.version`` and point ``_last_checkpoint`` at it.
+    A committer passes the snapshot ``write_commit`` returned; a
+    caller holding only a path passes ``load_snapshot(path,
+    version=v)``.
 
     ``max_actions_per_part`` enables the protocol's MULTI-PART form
     (``<v>.checkpoint.<i>.<n>.parquet``): at 100 TB a table holds
@@ -384,7 +376,8 @@ def write_log_checkpoint(
     ``_last_checkpoint`` marker flips, and an incomplete part set is
     ignored by discovery — the crash-safety order the protocol
     requires."""
-    snap, header, adds = _state_rows(table_path, version)
+    table_path = snap.table_path
+    header, adds = _state_rows(snap)
     rows = header + adds
     marker = os.path.join(delta_log_dir(table_path), LAST_CHECKPOINT)
     if max_actions_per_part is not None and len(rows) > max_actions_per_part:

@@ -103,7 +103,7 @@ def _write_state(
     var_cols=None,
 ) -> None:
     snap = load_snapshot(view_path)
-    config = table_configuration(view_path)
+    config = dict(snap.configuration)
     config[_STATE_KEY] = json.dumps(
         {
             "base_version": base_version,
@@ -128,7 +128,7 @@ def _write_state(
             "MATVIEW STATE", f"base_version={base_version}", False, 0, 0, now
         ),
     ]
-    write_commit(view_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
 
 
 def view_state(view_path: str) -> dict:

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -107,6 +107,14 @@ class DeltaSnapshot:
     def num_files(self) -> int:
         return len(self.files)
 
+    def __fspath__(self) -> str:
+        """The commit file of this version, ``_delta_log/<v>.json`` —
+        a post-commit snapshot stands for the file ``write_commit``
+        wrote (perfbench's commit counter sizes it)."""
+        return os.path.join(
+            delta_log_dir(self.table_path), f"{self.version:020d}.json"
+        )
+
     def metadata_count(self) -> int | None:
         """COUNT(*) answered from add.stats alone — no file is opened.
         Returns None when any live file lacks numRecords (the count
@@ -150,13 +158,116 @@ def _read_commit(table_path: str, version: int) -> list[dict]:
     return actions
 
 
+def empty_snapshot(table_path: str) -> DeltaSnapshot:
+    """The state of a table with no log: version -1, nothing live —
+    the base a table's first commit is built against."""
+    return DeltaSnapshot(table_path=table_path, version=-1, schema=None)
+
+
+def load_snapshot_or_empty(table_path: str) -> DeltaSnapshot:
+    """``load_snapshot(table_path)``, or ``empty_snapshot`` when the
+    table has no log yet."""
+    try:
+        return load_snapshot(table_path)
+    except FileNotFoundError:
+        return empty_snapshot(table_path)
+
+
+def apply_actions(snap: DeltaSnapshot, version: int, actions: list[dict]) -> None:
+    """The replay rule: apply commit ``version``'s actions to ``snap``
+    IN PLACE.  ``snap.files`` is left to the caller, which re-derives
+    it once from ``file_stats`` (sorting per commit would make a long
+    replay quadratic).  ``load_snapshot`` replays every JSON commit
+    through here and ``deltalog.write_commit`` advances its base
+    through here, so both agree by construction."""
+    snap.version = version
+    for action in actions:
+        if "add" in action:
+            add = action["add"]
+            path = add["path"]
+            snap.file_stats[path] = add.get("stats")
+            snap.file_sizes[path] = add.get("size", 0)
+            snap.file_mtimes[path] = add.get("modificationTime", 0)
+            snap.file_partitions[path] = add.get("partitionValues") or {}
+            # re-adding a path REPLACES its DV state (a MOR delete
+            # carries the merged descriptor; a plain re-add after
+            # OPTIMIZE/purge carries none and clears it)
+            dv = add.get("deletionVector")
+            if dv is not None:
+                snap.file_dvs[path] = dv
+            else:
+                snap.file_dvs.pop(path, None)
+            brid = add.get("baseRowId")
+            if brid is not None:
+                snap.file_base_rows[path] = int(brid)
+            else:
+                snap.file_base_rows.pop(path, None)
+        elif "remove" in action:
+            path = action["remove"]["path"]
+            for per_file in (
+                snap.file_stats, snap.file_sizes, snap.file_mtimes,
+                snap.file_partitions, snap.file_dvs, snap.file_base_rows,
+            ):
+                per_file.pop(path, None)
+        elif "metaData" in action:
+            meta = action["metaData"]
+            snap.schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+            snap.metadata_id = meta.get("id")
+            snap.partition_columns = meta.get("partitionColumns") or []
+            snap.configuration = dict(meta.get("configuration") or {})
+        elif "txn" in action:
+            t = action["txn"]
+            if t.get("appId") is not None and t.get("version") is not None:
+                prev_txn = snap.txns.get(t["appId"])
+                if prev_txn is None or t["version"] > prev_txn:
+                    snap.txns[t["appId"]] = int(t["version"])
+        elif "protocol" in action:
+            from guidewire_spark.sources.deltalog import check_reader_protocol
+
+            check_reader_protocol(action["protocol"], snap.table_path)
+            snap.protocol = dict(action["protocol"])
+        elif "domainMetadata" in action:
+            dm = action["domainMetadata"]
+            if dm.get("removed"):
+                snap.domains.pop(dm["domain"], None)
+            else:
+                snap.domains[dm["domain"]] = dm.get("configuration") or ""
+        elif "commitInfo" in action:
+            snap.commit_timestamps[version] = action["commitInfo"].get(
+                "inCommitTimestamp", action["commitInfo"].get("timestamp", 0)
+            )
+
+
+def advance_snapshot(
+    base: DeltaSnapshot, version: int, actions: list[dict]
+) -> DeltaSnapshot:
+    """A new snapshot: ``base`` with commit ``version`` applied.
+    ``base`` itself is left as it was (its dicts are copied, not
+    shared), so a caller still holding it keeps a consistent view."""
+    snap = replace(base, **{
+        f.name: dict(getattr(base, f.name))
+        for f in fields(base)
+        if isinstance(getattr(base, f.name), dict)
+    })
+    apply_actions(snap, version, actions)
+    snap.files = sorted(snap.file_stats)
+    return snap
+
+
 def load_snapshot(
     table_path: str,
     version: int | None = None,
     timestamp: int | None = None,
 ) -> DeltaSnapshot:
     """Replay the log up to ``version`` (or the last commit whose
-    commitInfo timestamp is <= ``timestamp``; default: latest)."""
+    commitInfo timestamp is <= ``timestamp``; default: latest): seed
+    from the newest usable checkpoint at or before it, then apply each
+    later JSON commit with ``apply_actions``.  ``commit_timestamps``
+    holds the replayed JSON commits only.
+
+    This is the cold path — reading a table someone else committed.
+    A writer never reloads to learn what it just committed:
+    ``deltalog.write_commit`` returns the post-commit snapshot."""
     from guidewire_spark.sources.log_checkpoint import (
         checkpoint_files,
         load_checkpoint_state,
@@ -194,113 +305,25 @@ def load_snapshot(
     if version not in versions and version != ckpt_version:
         raise ValueError(f"version {version} not in {table_path} (have {versions})")
 
-    active: dict[str, str | None] = {}
-    sizes: dict[str, int] = {}
-    mtimes: dict[str, int] = {}
-    partitions: dict[str, dict] = {}
-    dvs: dict[str, dict] = {}
-    base_rows: dict[str, int] = {}
-    schema: T.StructType | None = None
-    meta_id: str | None = None
-    part_cols: list[str] = []
-    config: dict[str, str] = {}
-    domains: dict[str, str] = {}
-    txns: dict[str, int] = {}
-    protocol: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
-    commit_ts: dict[int, int] = {}
-    replay_after = -1
+    snap = empty_snapshot(table_path)
     if ckpt_version is not None and ckpt_version <= version:
         # O(1) replay: seed from the checkpoint parquet, then apply
         # only the JSON tail — instead of O(versions) JSON reads.
-        (active, sizes, mtimes, partitions, dvs, base_rows, schema, meta_id,
-         part_cols, config, domains, txns, protocol) = load_checkpoint_state(
-            table_path, ckpt_version
-        )
-        replay_after = ckpt_version
+        (snap.file_stats, snap.file_sizes, snap.file_mtimes,
+         snap.file_partitions, snap.file_dvs, snap.file_base_rows,
+         snap.schema, snap.metadata_id, snap.partition_columns,
+         snap.configuration, snap.domains, snap.txns,
+         snap.protocol) = load_checkpoint_state(table_path, ckpt_version)
+        snap.version = ckpt_version
     for v in versions:
-        if v <= replay_after:
+        if v <= snap.version:
             continue
         if v > version:
             break
-        for action in _read_commit(table_path, v):
-            if "add" in action:
-                path = action["add"]["path"]
-                active[path] = action["add"].get("stats")
-                sizes[path] = action["add"].get("size", 0)
-                mtimes[path] = action["add"].get("modificationTime", 0)
-                partitions[path] = action["add"].get("partitionValues") or {}
-                # re-adding a path REPLACES its DV state (a MOR delete
-                # carries the merged descriptor; a plain re-add after
-                # OPTIMIZE/purge carries none and clears it)
-                dv = action["add"].get("deletionVector")
-                if dv is not None:
-                    dvs[path] = dv
-                else:
-                    dvs.pop(path, None)
-                brid = action["add"].get("baseRowId")
-                if brid is not None:
-                    base_rows[path] = int(brid)
-                else:
-                    base_rows.pop(path, None)
-            elif "remove" in action:
-                active.pop(action["remove"]["path"], None)
-                sizes.pop(action["remove"]["path"], None)
-                mtimes.pop(action["remove"]["path"], None)
-                partitions.pop(action["remove"]["path"], None)
-                dvs.pop(action["remove"]["path"], None)
-                base_rows.pop(action["remove"]["path"], None)
-            elif "metaData" in action:
-                schema = T.StructType.fromJson(
-                    json.loads(action["metaData"]["schemaString"])
-                )
-                meta_id = action["metaData"].get("id")
-                part_cols = action["metaData"].get("partitionColumns") or []
-                config = dict(
-                    action["metaData"].get("configuration") or {}
-                )
-            elif "txn" in action:
-                t = action["txn"]
-                if t.get("appId") is not None and t.get("version") is not None:
-                    prev_txn = txns.get(t["appId"])
-                    if prev_txn is None or t["version"] > prev_txn:
-                        txns[t["appId"]] = int(t["version"])
-            elif "protocol" in action:
-                from guidewire_spark.sources.deltalog import (
-                    check_reader_protocol,
-                )
-
-                check_reader_protocol(action["protocol"], table_path)
-                protocol = dict(action["protocol"])
-            elif "domainMetadata" in action:
-                dm = action["domainMetadata"]
-                if dm.get("removed"):
-                    domains.pop(dm["domain"], None)
-                else:
-                    domains[dm["domain"]] = dm.get("configuration") or ""
-            elif "commitInfo" in action:
-                commit_ts[v] = action["commitInfo"].get(
-                    "inCommitTimestamp",
-                    action["commitInfo"].get("timestamp", 0),
-                )
-    return DeltaSnapshot(
-        table_path=table_path,
-        version=version,
-        schema=schema,
-        files=sorted(active.keys()),
-        commit_timestamps=commit_ts,
-        file_stats=dict(active),
-        file_sizes=sizes,
-        file_mtimes=mtimes,
-        metadata_id=meta_id,
-        partition_columns=part_cols,
-        file_partitions=partitions,
-        file_dvs=dvs,
-        file_base_rows=base_rows,
-        configuration=config,
-        domains=domains,
-        txns=txns,
-        protocol=protocol,
-    )
+        apply_actions(snap, v, _read_commit(table_path, v))
+    snap.version = version
+    snap.files = sorted(snap.file_stats)
+    return snap
 
 
 def _commit_timestamp(table_path: str, version: int) -> int:

@@ -30,7 +30,6 @@ from guidewire_spark.sources.deltalog import (
     add_action,
     commit_info_action,
     delta_log_dir,
-    last_version,
     list_versions,
     metadata_action,
     protocol_action,
@@ -38,7 +37,11 @@ from guidewire_spark.sources.deltalog import (
     write_commit,
 )
 from guidewire_spark.sources.fs import list_parquet_files
-from guidewire_spark.sources.snapshot import load_snapshot
+from guidewire_spark.sources.snapshot import (
+    empty_snapshot,
+    load_snapshot,
+    load_snapshot_or_empty,
+)
 
 
 def _stage_files(
@@ -401,7 +404,7 @@ def add_check_constraint(
             "ADD CONSTRAINT", f"{name} CHECK ({expr})", False, 0, 0, now
         ),
     ] + _feature_upgrade_actions(snap, writer={"checkConstraints"})
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -426,7 +429,7 @@ def drop_check_constraint(table_path: str, name: str) -> int:
         ),
         commit_info_action("DROP CONSTRAINT", name, False, 0, 0, now),
     ]
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -502,7 +505,7 @@ def rename_column(table_path: str, old: str, new: str) -> int:
     ] + _feature_upgrade_actions(
         snap, reader={"columnMapping"}, writer={"columnMapping"}
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -578,7 +581,7 @@ def add_column(
         if default is not None
         else []
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -635,7 +638,7 @@ def widen_column_type(table_path: str, column: str, new_type: str) -> int:
     ] + _feature_upgrade_actions(
         snap, reader={"typeWidening"}, writer={"typeWidening"}
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -677,7 +680,7 @@ def drop_column(table_path: str, name: str) -> int:
     ] + _feature_upgrade_actions(
         snap, reader={"columnMapping"}, writer={"columnMapping"}
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -773,7 +776,10 @@ def write_delta(
         raise ValueError(f"mode {mode!r} not supported (append|overwrite)")
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be set together")
-    prev = last_version(table_path)
+    # the snapshot this write is built against: a commit that lands
+    # while the files stage makes the non-blind commit below collide
+    base = load_snapshot_or_empty(table_path)
+    prev = base.version if base.version >= 0 else None
     if txn_app_id is not None and prev is not None:
         seen = last_txn_version(table_path, txn_app_id)
         if seen is not None and seen >= txn_version:
@@ -897,10 +903,10 @@ def write_delta(
                 },
             )
         )
-        version, op_mode, blind = 0, "Overwrite" if mode == "overwrite" else "Append", False
+        op_mode, blind = "Overwrite" if mode == "overwrite" else "Append", False
     elif mode == "overwrite":
         _reject_on_append_only(table_path, "overwrite")
-        snap = load_snapshot(table_path)
+        snap = base
         actions.append(
             metadata_action(
                 df.schema,
@@ -911,9 +917,9 @@ def write_delta(
             )
         )
         actions.extend(remove_action(p, now) for p in snap.files)
-        version, op_mode, blind = prev + 1, "Overwrite", False
+        op_mode, blind = "Overwrite", False
     else:
-        snap = load_snapshot(table_path)
+        snap = base
         if snap.schema is not None and snap.schema != incoming_schema:
             if not merge_schema:
                 missing = {f.name for f in snap.schema.fields} - {
@@ -951,7 +957,7 @@ def write_delta(
                         )
                     )
         # a schema-evolving commit is not a blind append
-        version, op_mode, blind = prev + 1, "Append", not actions
+        op_mode, blind = "Append", not actions
     from guidewire_spark.sources.stats import footer_stats, stats_spec
     _sspec = stats_spec(table_path)
 
@@ -1015,8 +1021,8 @@ def write_delta(
     )
     if blind:
         # Optimistic concurrency, Delta-style: a blind append conflicts
-        # with nothing — on version collision, re-resolve and re-commit
-        # at the next version (the staged files are untouched).
+        # with nothing — on version collision, reload the base and
+        # re-commit after it (the staged files are untouched).
         for _ in range(50):
             try:
                 # Only write_commit may live in this try: if the
@@ -1024,19 +1030,19 @@ def write_delta(
                 # FileExistsError were caught here, the loop would
                 # re-run write_commit with the SAME append actions and
                 # duplicate every row.
-                write_commit(table_path, version, actions)
+                committed = write_commit(base, actions=actions)
             except FileExistsError:
-                version = last_version(table_path) + 1
+                base = load_snapshot(table_path)
                 continue
             _maybe_auto_compact(df.sparkSession, table_path, mode)
-            return version
+            return committed.version
         raise RuntimeError(f"could not commit after 50 retries at {table_path}")
     # Non-blind commits (create/overwrite/evolution) read table state
     # before writing; a collision means that state is stale → surface
     # the conflict to the caller instead of silently clobbering.
-    write_commit(table_path, version, actions)
+    committed = write_commit(base, actions=actions)
     _maybe_auto_compact(df.sparkSession, table_path, mode)
-    return version
+    return committed.version
 
 
 def _maybe_auto_compact(spark, table_path: str, mode: str) -> None:
@@ -1293,7 +1299,7 @@ def optimize_table(
     # committed in between, write_commit's O_EXCL collides and the
     # conflict surfaces instead of silently resurrecting stale state
     # (Delta's read-version conflict detection).
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     # Self-maintaining bloom index: compaction output files have no
     # sidecars (reads stay sound but stop skipping); on tables with
     # bloom columns configured, re-cover them now — one executor-side
@@ -1450,7 +1456,7 @@ def merge_into(
         )
     )
     # snapshot-version commit: intervening writers collide, not clobber
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -1566,7 +1572,7 @@ def _merge_insert_only(
             sum(f.size for f in files), now,
         )
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -1859,7 +1865,7 @@ def merge_clauses(
             "MERGE", "Merge", False, len(files), sum(f.size for f in files), now
         )
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -1943,7 +1949,7 @@ def delete_from(
         )
     )
     # snapshot-version commit: intervening writers collide, not clobber
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -2064,7 +2070,7 @@ def delete_from_mor(
             "DELETE", f"MOR {predicate}", False, len(merged), 0, now
         )
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -2213,7 +2219,7 @@ def enable_in_commit_timestamps(table_path: str) -> int:
             configuration=config,
         ),
     ] + _feature_upgrade_actions(snap, writer={"inCommitTimestamp"})
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -2284,7 +2290,7 @@ def set_table_properties(table_path: str, props: dict[str, str]) -> int:
             configuration=config,
         ),
     ]
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -2336,7 +2342,7 @@ def set_clustering_columns(table_path: str, columns: list[str]) -> int:
     ] + _feature_upgrade_actions(
         snap, writer={"domainMetadata", "clustering"}
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -2393,7 +2399,7 @@ def enable_row_tracking(table_path: str) -> int:
     actions += _feature_upgrade_actions(
         snap, writer={"rowTracking", "domainMetadata"}
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -2598,7 +2604,7 @@ def purge_deletion_vectors(spark: SparkSession, table_path: str) -> int:
             "REORG", "PURGE", False, len(files), sum(f.size for f in files), now
         )
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -2778,7 +2784,7 @@ def update_table_mor(
             now,
         )
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -2869,7 +2875,7 @@ def replace_where(
             now,
         )
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -2973,7 +2979,7 @@ def update_table(
         )
     )
     # snapshot-version commit: intervening writers collide, not clobber
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -3025,7 +3031,7 @@ def shallow_clone(
             now,
         )
     )
-    write_commit(dst_table, 0, actions)
+    write_commit(empty_snapshot(dst_table), actions=actions)
     return 0
 
 
@@ -3096,7 +3102,7 @@ def deep_clone(
             now,
         )
     )
-    write_commit(dst_table, 0, actions)
+    write_commit(empty_snapshot(dst_table), actions=actions)
     return 0
 
 
@@ -3165,9 +3171,7 @@ def restore_table(table_path: str, version: int) -> int:
             "RESTORE", f"versionAsOf={version}", False, len(old.files), 0, now
         )
     )
-    new_version = cur.version + 1
-    write_commit(table_path, new_version, actions)
-    return new_version
+    return write_commit(cur, actions=actions).version
 
 
 def overwrite_partitions(df: DataFrame, table_path: str) -> int:
@@ -3242,7 +3246,7 @@ def overwrite_partitions(df: DataFrame, table_path: str) -> int:
             now,
         )
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1
 
 
@@ -3302,7 +3306,7 @@ def convert_to_delta(parquet_dir: str) -> int:
             "CONVERT", parquet_dir, False, len(files), sum(f.size for f in files), now
         )
     )
-    write_commit(parquet_dir, 0, actions)
+    write_commit(empty_snapshot(parquet_dir), actions=actions)
     return 0
 
 
@@ -3619,7 +3623,7 @@ def create_identity_table(
             sum(f.size for f in files), now,
         )
     )
-    write_commit(table_path, 0, actions)
+    write_commit(empty_snapshot(table_path), actions=actions)
     return 0
 
 
@@ -3707,5 +3711,5 @@ def append_with_identity(df: DataFrame, table_path: str) -> int:
             sum(f.size for f in files), now,
         )
     )
-    write_commit(table_path, snap.version + 1, actions)
+    write_commit(snap, actions=actions)
     return snap.version + 1

@@ -174,19 +174,20 @@ def test_time_travel_by_timestamp(tmp_path):
         protocol_action,
         write_commit,
     )
+    from guidewire_spark.sources.snapshot import empty_snapshot
 
     table = str(tmp_path / "tt")
     schema = T.StructType([T.StructField("x", T.IntegerType(), True)])
-    write_commit(table, 0, [
+    snap = write_commit(empty_snapshot(table), [
         protocol_action(), metadata_action(schema, created_time=1000),
         add_action("a.parquet", 10, 1000),
         commit_info_action("WRITE", "Overwrite", False, 1, 10, timestamp=1000),
     ])
-    write_commit(table, 1, [
+    snap = write_commit(snap, [
         add_action("b.parquet", 10, 2000),
         commit_info_action("WRITE", "Append", True, 1, 10, timestamp=2000),
     ])
-    write_commit(table, 2, [
+    write_commit(snap, [
         add_action("c.parquet", 10, 3000),
         commit_info_action("WRITE", "Append", True, 1, 10, timestamp=3000),
     ])

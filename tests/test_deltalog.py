@@ -22,7 +22,7 @@ from guidewire_spark.sources.deltalog import (
     remove_action,
     write_commit,
 )
-from guidewire_spark.sources.snapshot import load_snapshot
+from guidewire_spark.sources.snapshot import empty_snapshot, load_snapshot
 
 SCHEMA = T.StructType(
     [
@@ -36,7 +36,7 @@ def _create_v0(table, files=("f0.parquet",)):
     actions = [protocol_action(), metadata_action(SCHEMA, created_time=1)]
     actions += [add_action(f, 100, 1000) for f in files]
     actions.append(commit_info_action("WRITE", "Overwrite", False, len(files), 100, 1))
-    write_commit(table, 0, actions)
+    return write_commit(empty_snapshot(table), actions)
 
 
 def test_action_shapes(tmp_path):
@@ -63,18 +63,16 @@ def test_action_shapes(tmp_path):
 
 def test_replay_add_remove(tmp_path):
     table = str(tmp_path / "t")
-    _create_v0(table, files=("a.parquet", "b.parquet"))
-    write_commit(
-        table,
-        1,
+    snap = _create_v0(table, files=("a.parquet", "b.parquet"))
+    snap = write_commit(
+        snap,
         [
             add_action("c.parquet", 50, 2000),
             commit_info_action("WRITE", "Append", True, 1, 50, 2),
         ],
     )
     write_commit(
-        table,
-        2,
+        snap,
         [
             remove_action("a.parquet", 3),
             commit_info_action("WRITE", "Overwrite", False, 0, 0, 3),
@@ -90,7 +88,7 @@ def test_single_writer_exclusive(tmp_path):
     table = str(tmp_path / "t")
     _create_v0(table)
     with pytest.raises(FileExistsError):
-        write_commit(table, 0, [protocol_action()])
+        write_commit(empty_snapshot(table), [protocol_action()])
 
 
 @settings(max_examples=25, deadline=None)
@@ -102,13 +100,12 @@ def test_version_monotonic_and_file_accounting(tmp_path_factory, n_appends, file
     """Invariants: versions are contiguous; every added-and-not-removed
     file appears in exactly the snapshots from its version on."""
     table = str(tmp_path_factory.mktemp("prop") / "t")
-    _create_v0(table)
+    snap = _create_v0(table)
     expected = {"f0.parquet"}
     for v in range(1, n_appends + 1):
         new_files = [f"v{v}_{i}.parquet" for i in range(files_per[v - 1])]
-        write_commit(
-            table,
-            v,
+        snap = write_commit(
+            snap,
             [add_action(f, 10, v) for f in new_files]
             + [commit_info_action("WRITE", "Append", True, len(new_files), 10, v)],
         )
@@ -214,8 +211,7 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
         calls["n"] += 1
         if calls["n"] == 1:  # sneak a competing blind append in first
             write_commit(
-                t,
-                snap.version + 1,
+                snap,
                 [
                     commit_info_action("WRITE", "Append", True, 1, 0),
                     add_action("/elsewhere/winner.parquet", 1, 0),
@@ -235,8 +231,7 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
 
     def remove_with_conflict(snap):
         write_commit(
-            t,
-            snap.version + 1,
+            snap,
             [
                 commit_info_action("DELETE", "Delete", False, 1, 0),
                 remove_action(data_file),
@@ -252,8 +247,7 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
 
     def append_behind_metadata_change(snap):
         write_commit(
-            t,
-            snap.version + 1,
+            snap,
             [
                 commit_info_action("SET TBLPROPERTIES", "set", False, 0, 0),
                 {
@@ -349,7 +343,7 @@ def test_writer_protocol_gate_refuses_foreign_features(spark, sf_dir, tmp_path):
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     write_delta(n, t, mode="append")
     write_commit(
-        t, 1,
+        load_snapshot(t),
         [{"protocol": {"minReaderVersion": 1, "minWriterVersion": 7,
                        "writerFeatures": ["icebergCompatV2"]}}],
     )
@@ -387,21 +381,38 @@ def test_first_write_features_advertised(spark, sf_dir, tmp_path):
 
 def test_ict_probe_failure_aborts_the_commit(tmp_path, monkeypatch):
     """When the previous commit's JSON is gone, the in-commit-timestamp
-    step reads the table configuration instead. If that read fails, the
-    commit fails before anything is written: a commit on an ICT table
-    without ``inCommitTimestamp`` would break the protocol."""
-    from guidewire_spark.sources import writer
+    step reads the flag from the base snapshot's configuration, so an
+    ICT table still stamps ``inCommitTimestamp``. If reading the
+    previous commitInfo fails, the commit fails before anything is
+    written: a commit on an ICT table without ``inCommitTimestamp``
+    would break the protocol."""
+    from guidewire_spark.sources import deltalog
 
     table = str(tmp_path / "t")
-    _create_v0(table)
-    write_commit(table, 1, [add_action("f1.parquet", 100, 1000)])
+    snap = write_commit(
+        empty_snapshot(table),
+        [
+            protocol_action(),
+            metadata_action(
+                SCHEMA, created_time=1, configuration={deltalog.ICT_KEY: "true"}
+            ),
+            commit_info_action("WRITE", "Overwrite", False, 0, 0, 1),
+        ],
+    )
+    snap = write_commit(snap, [add_action("f1.parquet", 100, 1000)])
     log = os.path.join(table, "_delta_log")
     os.remove(os.path.join(log, f"{1:020d}.json"))
 
-    def boom(path):
-        raise OSError(f"configuration unreadable: {path}")
+    snap = write_commit(snap, [add_action("f2.parquet", 100, 1000)])
+    with open(os.path.join(log, f"{2:020d}.json")) as f:
+        first = json.loads(f.readline())
+    assert "inCommitTimestamp" in first["commitInfo"]
+    assert snap.commit_timestamps[2] == first["commitInfo"]["inCommitTimestamp"]
 
-    monkeypatch.setattr(writer, "table_configuration", boom)
-    with pytest.raises(OSError, match="configuration unreadable"):
-        write_commit(table, 2, [add_action("f2.parquet", 100, 1000)])
-    assert not os.path.exists(os.path.join(log, f"{2:020d}.json"))
+    def boom(path, version):
+        raise OSError(f"commit {version - 1} unreadable")
+
+    monkeypatch.setattr(deltalog, "_prev_commit_info", boom)
+    with pytest.raises(OSError, match="commit 2 unreadable"):
+        write_commit(snap, [add_action("f3.parquet", 100, 1000)])
+    assert not os.path.exists(os.path.join(log, f"{3:020d}.json"))

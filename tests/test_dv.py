@@ -141,7 +141,7 @@ def test_checkpoint_preserves_deletion_vectors(spark, sf_dir, tmp_path):
     t = str(tmp_path / "ckpt")
     write_delta(s, t, mode="append")
     delete_from_mor(spark, t, "s_suppkey % 2 = 0")
-    write_log_checkpoint(t)
+    write_log_checkpoint(load_snapshot(t))
     # drop the JSON commits the checkpoint covers to prove the seed
     # path carries the vectors (snapshot must not need the JSON tail)
     snap = load_snapshot(t)

@@ -29,7 +29,7 @@ from guidewire_spark.sources.log_checkpoint import (
     read_last_checkpoint,
     write_log_checkpoint,
 )
-from guidewire_spark.sources.snapshot import load_snapshot
+from guidewire_spark.sources.snapshot import empty_snapshot, load_snapshot
 
 SCHEMA = T.StructType(
     [
@@ -42,9 +42,8 @@ SCHEMA = T.StructType(
 def _write_table(table_path: str, n_appends: int = 12) -> None:
     """v0 = CREATE_TABLE, then n_appends-1 blind appends of one fake
     file each (log replay never reads data bytes)."""
-    write_commit(
-        table_path,
-        0,
+    snap = write_commit(
+        empty_snapshot(table_path),
         [
             protocol_action(),
             metadata_action(SCHEMA, created_time=1000),
@@ -53,9 +52,8 @@ def _write_table(table_path: str, n_appends: int = 12) -> None:
         ],
     )
     for v in range(1, n_appends):
-        write_commit(
-            table_path,
-            v,
+        snap = write_commit(
+            snap,
             [
                 add_action(f"/data/f{v}.parquet", 100, 1000 + v),
                 commit_info_action("WRITE", "Append", True, 1, 100, 1000 + v),
@@ -67,7 +65,7 @@ def test_checkpoint_roundtrip_matches_full_replay(tmp_path):
     table = str(tmp_path / "t1")
     _write_table(table, 12)
     full = load_snapshot(table)
-    write_log_checkpoint(table)
+    write_log_checkpoint(load_snapshot(table))
     assert read_last_checkpoint(table) == 11
     assert os.path.isfile(checkpoint_path(table, 11))
     seeded = load_snapshot(table)
@@ -84,7 +82,7 @@ def test_replay_from_checkpoint_survives_json_truncation(tmp_path):
     table = str(tmp_path / "t2")
     _write_table(table, 12)
     expected_files = load_snapshot(table).files
-    write_log_checkpoint(table)  # at v11
+    write_log_checkpoint(load_snapshot(table))  # at v11
     log = delta_log_dir(table)
     for v in range(12):
         os.remove(os.path.join(log, f"{v:020d}.json"))
@@ -94,8 +92,7 @@ def test_replay_from_checkpoint_survives_json_truncation(tmp_path):
     assert snap.schema == SCHEMA
     # A fresh commit after truncation lands on top of the checkpoint.
     write_commit(
-        table,
-        12,
+        snap,
         [
             add_action("/data/f12.parquet", 100, 2000),
             commit_info_action("WRITE", "Append", True, 1, 100, 2000),
@@ -109,7 +106,7 @@ def test_replay_from_checkpoint_survives_json_truncation(tmp_path):
 def test_time_travel_before_checkpoint_still_works(tmp_path):
     table = str(tmp_path / "t3")
     _write_table(table, 12)
-    write_log_checkpoint(table)  # at v11
+    write_log_checkpoint(load_snapshot(table))  # at v11
     snap5 = load_snapshot(table, version=5)
     assert snap5.num_files == 6  # v0..v5, one file each
 
@@ -133,7 +130,7 @@ def test_auto_checkpoint_every_10_commits(tmp_path):
 def test_stale_marker_falls_back_to_full_replay(tmp_path):
     table = str(tmp_path / "t5")
     _write_table(table, 4)
-    write_log_checkpoint(table)
+    write_log_checkpoint(load_snapshot(table))
     os.remove(checkpoint_path(table, 3))  # marker now points at nothing
     snap = load_snapshot(table)
     assert snap.version == 3
@@ -173,19 +170,18 @@ def test_random_histories_replay_to_model(tmp_path_factory, steps):
     tmp = tmp_path_factory.mktemp("prop")
     table = str(tmp / "t")
     model: set[str] = set()
-    version = -1
+    snap = empty_snapshot(table)
     fileno = 0
     wrote_meta = False
     for step in steps:
         if step[0] == "ckpt":
-            if version >= 0:
-                write_log_checkpoint(table)
+            if snap.version >= 0:
+                write_log_checkpoint(snap)
             continue
         op, ids = step
         # unique physical names per commit (a real writer never reuses)
         paths = [f"/data/s{fileno}_{i}.parquet" for i in ids]
         fileno += 1
-        version += 1
         actions = []
         if not wrote_meta:
             actions += [protocol_action(), metadata_action(SCHEMA, created_time=1)]
@@ -203,9 +199,10 @@ def test_random_histories_replay_to_model(tmp_path_factory, steps):
                 commit_info_action("WRITE", "Append", True, len(paths), 10, 1)
             )
             model |= set(paths)
-        write_commit(table, version, actions)
-    if version < 0:
+        snap = write_commit(snap, actions)
+    if snap.version < 0:
         return  # only checkpoints drawn; nothing to verify
+    version = snap.version
     snap = load_snapshot(table)
     assert snap.version == version
     assert set(snap.files) == model
@@ -243,7 +240,7 @@ def test_checkpoint_preserves_column_mapping(spark, sf_dir, tmp_path):
     )
     write_delta(s, table, mode="append")
     rename_column(table, "acctbal", "balance")
-    write_log_checkpoint(table)
+    write_log_checkpoint(load_snapshot(table))
     got = read_delta(spark, table)
     assert got.columns == ["s_suppkey", "balance"]
     assert got.agg(F.sum("balance")).collect()[0][0] == \
@@ -278,7 +275,7 @@ def test_checkpoint_carries_configuration_and_protocol_bump(
     add_check_constraint(spark, table, "valid_key", "r_regionkey >= 0")
 
     # plain table: baseline protocol, configuration present
-    write_log_checkpoint(table)
+    write_log_checkpoint(load_snapshot(table))
     snap_v = load_snapshot(table).version
     rows = pq.read_table(checkpoint_path(table, snap_v)).to_pylist()
     proto = next(x["protocol"] for x in rows if x.get("protocol"))
@@ -292,7 +289,7 @@ def test_checkpoint_carries_configuration_and_protocol_bump(
     # column-mapped table: protocol must be upgraded to reader v3 with
     # the columnMapping feature (the table is already in features form)
     rename_column(table, "r_name", "region_name")
-    write_log_checkpoint(table)
+    write_log_checkpoint(load_snapshot(table))
     snap_v = load_snapshot(table).version
     rows = pq.read_table(checkpoint_path(table, snap_v)).to_pylist()
     proto = next(x["protocol"] for x in rows if x.get("protocol"))
@@ -324,7 +321,7 @@ def test_multipart_checkpoint_roundtrip(spark, sf_dir, tmp_path):
     write_delta(s.repartition(4), t, mode="append")
     delete_from_mor(spark, t, "s_suppkey % 2 = 0")
     snap_before = load_snapshot(t)
-    write_log_checkpoint(t, max_actions_per_part=2)
+    write_log_checkpoint(load_snapshot(t), max_actions_per_part=2)
     parts = glob.glob(
         os.path.join(delta_log_dir(t), "*.checkpoint.*.*.parquet")
     )
@@ -356,7 +353,7 @@ def test_partial_multipart_checkpoint_is_ignored(spark, sf_dir, tmp_path):
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     t = str(tmp_path / "partial")
     write_delta(n.repartition(3), t, mode="append")
-    write_log_checkpoint(t, max_actions_per_part=2)
+    write_log_checkpoint(load_snapshot(t), max_actions_per_part=2)
     parts = sorted(
         glob.glob(os.path.join(delta_log_dir(t), "*.checkpoint.*.*.parquet"))
     )
@@ -387,7 +384,7 @@ def test_v2_checkpoint_roundtrip(spark, sf_dir, tmp_path):
     write_delta(s.repartition(4), t, mode="append")
     delete_from_mor(spark, t, "s_suppkey % 2 = 0")
     snap_before = load_snapshot(t)
-    write_log_checkpoint_v2(t, max_adds_per_sidecar=2)
+    write_log_checkpoint_v2(load_snapshot(t), max_adds_per_sidecar=2)
     manifests = [
         p
         for p in glob.glob(os.path.join(delta_log_dir(t), "*.checkpoint.*.parquet"))
@@ -427,7 +424,7 @@ def test_v2_checkpoint_missing_sidecar_is_ignored(spark, sf_dir, tmp_path):
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     t = str(tmp_path / "v2partial")
     write_delta(n.repartition(3), t, mode="append")
-    write_log_checkpoint_v2(t, max_adds_per_sidecar=2)
+    write_log_checkpoint_v2(load_snapshot(t), max_adds_per_sidecar=2)
     lost = sorted(glob.glob(os.path.join(sidecar_dir(t), "*.parquet")))[-1]
     os.remove(lost)
     snap = load_snapshot(t)  # must NOT raise — JSON replay covers it
@@ -536,9 +533,9 @@ def test_expire_log_retains_replayability_and_gcs_sidecars(spark, sf_dir, tmp_pa
     t = str(tmp_path / "expire")
     for i in range(6):
         write_delta(n.where(F.col("n_nationkey") % 6 == i), t, mode="append")
-    write_log_checkpoint(t)  # classic checkpoint at v5 (superseded later)
+    write_log_checkpoint(load_snapshot(t))  # classic checkpoint at v5 (superseded later)
     write_delta(n.limit(0), t, mode="append")  # v6
-    write_log_checkpoint_v2(t, max_adds_per_sidecar=3)  # newest, at v6
+    write_log_checkpoint_v2(load_snapshot(t), max_adds_per_sidecar=3)  # newest, at v6
     orphan = os.path.join(sidecar_dir(t), "orphan-00000.parquet")
     open(orphan, "wb").write(b"not a real sidecar")
     write_delta(n.limit(0), t, mode="append")  # v7 (JSON tail)
@@ -584,7 +581,7 @@ def test_txn_high_water_survives_checkpoint_and_log_expiry(spark, sf_dir, tmp_pa
         txn_version=7,
     )
     count_before = read_delta(spark, t).count()
-    write_log_checkpoint_v2(t)
+    write_log_checkpoint_v2(load_snapshot(t))
     write_delta(n.limit(0), t, mode="append")  # a tail commit to keep
     expire_log(t, keep_versions=1)
     assert last_txn_version(t, "loader") == 7  # seeded from checkpoint
@@ -621,7 +618,7 @@ def test_table_configuration_survives_log_expiry(spark, sf_dir, tmp_path):
     t = str(tmp_path / "cfgret")
     write_delta(n, t, mode="append")
     add_check_constraint(spark, t, "key_bounded", "n_nationkey < 1000")
-    write_log_checkpoint(t)
+    write_log_checkpoint(load_snapshot(t))
     write_delta(n.limit(0), t, mode="append")
     expire_log(t, keep_versions=1)
     cfg = table_configuration(t)
@@ -681,3 +678,31 @@ def test_index_checkpoint_keeps_add_modification_times(tmp_path):
     assert all(mtime >= 10**12 for _, mtime in ckpt_adds.values())  # epoch millis
     snap = load_snapshot(table)
     assert snap.file_mtimes == {p: m for p, (_, m) in json_adds.items()}
+
+
+def test_checkpoint_of_older_version_carries_that_versions_configuration(tmp_path):
+    """A checkpoint of version 1 holds version 1's configuration, not
+    that of a later metaData commit."""
+    table = str(tmp_path / "t")
+    snap = write_commit(
+        empty_snapshot(table),
+        [protocol_action(), metadata_action(SCHEMA, created_time=1, table_id="t")],
+    )
+    snap = write_commit(snap, [add_action("/data/f1.parquet", 100, 1000)])
+    write_commit(
+        snap,
+        [
+            metadata_action(
+                SCHEMA,
+                created_time=1,
+                table_id="t",
+                configuration={"delta.appendOnly": "true"},
+            )
+        ],
+    )
+    write_log_checkpoint(load_snapshot(table, version=1))
+    rows = pq.read_table(checkpoint_path(table, 1)).to_pylist()
+    meta = [r["metaData"] for r in rows if r["metaData"]]
+    assert [m["configuration"] for m in meta] == [[]]
+    assert load_snapshot(table, version=1).configuration == {}
+    assert load_snapshot(table).configuration == {"delta.appendOnly": "true"}

@@ -47,6 +47,26 @@ def test_dim_joins_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in plan2
 
 
+def test_calendar_spine_broadcasts_the_daily_aggregate(spark, sf_dir):
+    """The spine is the preserved side of the left outer join, so the
+    broadcast hint goes on the daily aggregate, the side Spark can
+    build (a hint on the preserved side is dropped). Size-based
+    broadcasting is off here, so only the hint can plan the broadcast."""
+    from guidewire_spark.operators.gaps_ext import ts_calendar_spine_fill
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        tree = plan_of(ts_calendar_spine_fill(spark, sf_dir)).split(
+            "== Physical Plan =="
+        )[1]
+    finally:
+        spark.conf.set(key, before)
+    assert "BroadcastHashJoin LeftOuter BuildRight" in tree
+    assert "SortMergeJoin" not in tree
+
+
 def test_partial_aggregation(spark, sf_dir):
     df = agg_pricing_summary(spark, sf_dir)
     plan = plan_of(df)

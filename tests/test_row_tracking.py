@@ -192,7 +192,7 @@ def test_checkpoint_carries_base_row_ids(spark, sf_dir, tmp_path):
     enable_row_tracking(t)
     delete_from_mor(spark, t, "s_suppkey % 6 = 2")
     before = _ids(spark, t)
-    write_log_checkpoint(t)
+    write_log_checkpoint(load_snapshot(t))
     snap = load_snapshot(t)
     assert snap.file_base_rows  # seeded from the checkpoint parquet
     assert _ids(spark, t) == before
@@ -352,7 +352,7 @@ def test_materialized_ids_survive_log_checkpoint(spark, sf_dir, tmp_path):
     delete_from_mor(spark, t, "n_nationkey % 5 = 0")
     purge_deletion_vectors(spark, t)
     snap = load_snapshot(t)
-    write_log_checkpoint(t, snap.version)
+    write_log_checkpoint(snap)
     # config (incl. the materialized-column name) must survive the
     # checkpoint seed — else post-checkpoint readers lose the coalesce
     reloaded = load_snapshot(t)

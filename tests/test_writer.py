@@ -256,7 +256,7 @@ def test_partitioned_checkpoint_roundtrip(spark, sf_dir, tmp_path):
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     write_delta(d, table, mode="append", partition_by=["lang"])
     full = load_snapshot(table)
-    write_log_checkpoint(table)
+    write_log_checkpoint(load_snapshot(table))
     seeded = load_snapshot(table)
     assert seeded.partition_columns == full.partition_columns
     assert seeded.file_partitions == full.file_partitions
@@ -1568,7 +1568,7 @@ def test_clustering_domain_survives_checkpoint_and_legacy_key_honored(
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     write_delta(n, table, mode="append")
     set_clustering_columns(table, ["n_nationkey"])
-    write_log_checkpoint(table)
+    write_log_checkpoint(load_snapshot(table))
     log = delta_log_dir(table)
     for v in list_versions(table):
         _os.remove(_os.path.join(log, f"{v:020d}.json"))
