@@ -454,14 +454,16 @@ def delta_concurrent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         commit_transaction,
         write_commit,
     )
+    from guidewire_spark.sources.snapshot import load_snapshot
     from guidewire_spark.sources.writer import stage_add_actions
 
     table = scratch_dir("gw_docc_") + "/supplier_delta"
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     write_delta(s.where(F.col("s_suppkey") % 2 == 0), table, mode="append")
 
-    winner_adds = stage_add_actions(s.where(F.col("s_suppkey") % 4 == 1), table)
-    our_adds = stage_add_actions(s.where(F.col("s_suppkey") % 4 == 3), table)
+    base = load_snapshot(table)
+    winner_adds = stage_add_actions(s.where(F.col("s_suppkey") % 4 == 1), base)
+    our_adds = stage_add_actions(s.where(F.col("s_suppkey") % 4 == 3), base)
 
     raced = {"done": False}
 
@@ -479,7 +481,7 @@ def delta_concurrent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             commit_info_action("WRITE", "Append", True, len(our_adds), 0)
         ] + our_adds
 
-    commit_transaction(table, append_with_race)
+    commit_transaction(base, append_with_race)
     return read_delta(spark, table)
 
 

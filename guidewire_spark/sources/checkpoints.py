@@ -4,10 +4,11 @@
 ``(tableName, processedSchema, processedTimestamp, processedFiles)``
 (``Guidewire.scala:248-262``). Unlike the shallow-cloned data tables,
 its parquet files are physically written (pyarrow; tiny metadata).
-``load_checkpoints`` replays it and reduces to the per-table
+``high_water_marks`` reduces a snapshot of it to the per-table
 high-water mark ``max(processedTimestamp)``
 (``Guidewire.scala:264-282``) — the incremental predicate feeding the
-commit filter.
+commit filter.  ``index()`` loads that snapshot once and commits its
+``save_checkpoints`` on it.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from guidewire_spark.sources.deltalog import (
     remove_action,
     write_commit,
 )
-from guidewire_spark.sources.snapshot import load_snapshot, load_snapshot_or_empty
+from guidewire_spark.sources.snapshot import load_snapshot_or_empty
 
 CHECKPOINTS_TABLE = "_checkpoints"
 
@@ -55,13 +56,10 @@ def checkpoints_path(database_path: str) -> str:
     return os.path.join(database_path, CHECKPOINTS_TABLE)
 
 
-def save_checkpoints(
-    results: dict[str, list],
-    database_path: str,
-    save_mode: str = "append",
-) -> None:
+def save_checkpoints(results: dict[str, list], base, save_mode: str = "append") -> None:
     """Flatten per-table BatchResults into one Delta commit
-    (``Guidewire.scala:248-262``)."""
+    (``Guidewire.scala:248-262``) on ``base``, the snapshot of the
+    checkpoint table the caller read its high-water marks from."""
     rows = [
         (table_name, r.schema_id, r.commit_timestamp, r.num_files)
         for table_name, batch_results in results.items()
@@ -69,7 +67,7 @@ def save_checkpoints(
     ]
     if not rows:
         return
-    table_path = checkpoints_path(database_path)
+    table_path = base.table_path
     os.makedirs(table_path, exist_ok=True)
     data_file = os.path.join(table_path, f"part-{uuid.uuid4()}.snappy.parquet")
     arrow_table = pa.table(
@@ -85,15 +83,14 @@ def save_checkpoints(
     size = os.path.getsize(data_file)
     mtime = int(os.path.getmtime(data_file) * 1000)
 
-    snap = load_snapshot_or_empty(table_path)
     now = int(time.time() * 1000)
     actions: list[dict] = []
-    if snap.version < 0:
+    if base.version < 0:
         actions.append(protocol_action())
         actions.append(metadata_action(CHECKPOINT_SPARK_SCHEMA, created_time=now))
         mode, blind = "Overwrite", False
     elif save_mode == "overwrite":
-        actions.extend(remove_action(p, now) for p in snap.files)
+        actions.extend(remove_action(p, now) for p in base.files)
         mode, blind = "Overwrite", False
     else:
         mode, blind = "Append", True
@@ -101,16 +98,17 @@ def save_checkpoints(
     actions.append(
         commit_info_action("WRITE", mode, blind, num_files=1, num_bytes=size, timestamp=now)
     )
-    write_commit(snap, actions=actions)
+    write_commit(base, actions=actions)
 
 
 def load_checkpoints(database_path: str) -> dict[str, int]:
     """Per-table max(processedTimestamp), or {} when the checkpoint
     table does not exist yet (``Guidewire.scala:264-277``)."""
-    table_path = checkpoints_path(database_path)
-    if not os.path.isdir(os.path.join(table_path, "_delta_log")):
-        return {}
-    snap = load_snapshot(table_path)
+    return high_water_marks(load_snapshot_or_empty(checkpoints_path(database_path)))
+
+
+def high_water_marks(snap) -> dict[str, int]:
+    """Per-table max(processedTimestamp) of a checkpoint-table snapshot."""
     high_water: dict[str, int] = {}
     for data_file in snap.files:
         tbl = pq.read_table(data_file, columns=["tableName", "processedTimestamp"])

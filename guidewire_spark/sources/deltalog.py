@@ -407,9 +407,9 @@ def write_commit(base, actions: list[dict]):
     (``snapshot.empty_snapshot`` — version -1 — for a table with no
     log).  The commit lands at ``base.version + 1`` with an O_EXCL
     create: a concurrent writer that committed that version first
-    raises FileExistsError — optimistic concurrency, resolved by the
-    caller reloading its base (``commit_transaction``; the indexer
-    serializes per table, so there this only fires on misuse).
+    raises FileExistsError — optimistic concurrency, resolved by
+    ``commit_transaction`` (the indexer serializes per table, so
+    there this only fires on misuse).
 
     Success proves ``base`` was the latest version, so ``base`` with
     the written actions applied (``snapshot.advance_snapshot``, after
@@ -437,16 +437,20 @@ def write_commit(base, actions: list[dict]):
 
 
 def _maybe_auto_checkpoint(snap) -> None:
-    """``delta.checkpointInterval`` (public Delta table property):
-    after every Nth commit, materialize a log checkpoint so replay
-    cost stays O(interval) instead of O(versions) — at CDA cadence a
-    year-old table is ~10⁴ commits, and without this every cold read
-    pays the whole JSON tail.  The interval and the checkpointed state
-    both come from the post-commit snapshot ``snap``.  Failure here
-    never fails the commit (the commit is already durable; a missed
-    checkpoint only defers the optimization to the next interval)."""
+    """``delta.checkpointInterval`` (public Delta table property,
+    default 10 as in Delta): after every Nth commit, materialize a log
+    checkpoint so replay cost stays O(interval) instead of O(versions)
+    — at CDA cadence a year-old table is ~10⁴ commits, and without
+    this every cold read pays the whole JSON tail.  The one checkpoint
+    rule for every table this engine commits to: indexed tables, the
+    ``_checkpoints`` table, matview state and writer tables alike.
+    The interval and the checkpointed state both come from the
+    post-commit snapshot ``snap``; an interval <= 0 disables it.
+    Failure here never fails the commit (the commit is already
+    durable; a missed checkpoint only defers the optimization to the
+    next interval)."""
     try:
-        interval = int(snap.configuration.get("delta.checkpointInterval", 0))
+        interval = int(snap.configuration.get("delta.checkpointInterval", 10))
         if interval > 0 and (snap.version + 1) % interval == 0:
             from guidewire_spark.sources.log_checkpoint import (
                 write_log_checkpoint,
@@ -480,70 +484,71 @@ class ConcurrentDeleteException(ConcurrentModificationException):
     """A concurrent commit removed (or re-wrote) a file we depend on."""
 
 
-def commit_transaction(table_path, build_actions, max_retries: int = 5) -> int:
-    """Commit with Delta's optimistic-concurrency loop: attempt at
-    snapshot+1; on losing the race (O_EXCL FileExistsError from
-    ``write_commit``), examine every commit that landed since our
-    snapshot and either REBASE (rebuild actions against the new
-    snapshot and retry) or raise a typed conflict:
+# A loser retries once per commit that beat it, so N racing writers
+# need at most N - 1 retries.
+COMMIT_RETRIES = 10
+
+
+def commit_transaction(base, build_actions):
+    """Commit ``build_actions(base)`` on the held snapshot ``base``
+    with Delta's optimistic-concurrency loop and return the committed
+    snapshot.  The first attempt lands at ``base.version + 1`` without
+    touching the log; only after losing the race (O_EXCL
+    FileExistsError from ``write_commit``) is the latest snapshot
+    loaded, and every commit that landed since ``base`` decides
+    between a REBASE (rebuild the actions against the new snapshot
+    and retry) and a typed conflict:
 
     * winner changed ``metaData``/``protocol`` → MetadataChangedException
-      (our actions were built against a schema that no longer holds);
+      (our actions were checked against a schema, constraints or
+      feature flags that no longer hold — a blind append that lost to
+      an ADD CONSTRAINT must not commit rows it never checked);
     * winner ``remove``d or re-``add``ed a file our transaction
       removes → ConcurrentDeleteException (classic write-write
       conflict: both transactions rewrote the same file);
     * otherwise (concurrent blind appends, disjoint removes) → rebase
       and retry, the same resolution delta-spark applies.
 
-    ``build_actions(snapshot)`` is called fresh per attempt so the
-    rebase re-reads current state — the caller's logic must be a pure
-    function of the snapshot.  The reference connector sidesteps all
-    of this by serializing one writer per table; a 1000-executor
-    pipeline cannot."""
-    from guidewire_spark.sources.snapshot import (
-        _read_commit,
-        load_snapshot_or_empty,
-    )
+    ``build_actions(snapshot)`` is called fresh per attempt, so the
+    caller's logic must be a pure function of the snapshot.  The
+    reference connector sidesteps all of this by serializing one
+    writer per table; a 1000-executor pipeline cannot."""
+    from guidewire_spark.sources.snapshot import _read_commit, load_snapshot
 
-    for _ in range(max_retries + 1):
-        base = load_snapshot_or_empty(table_path)
-        actions = build_actions(base if base.version >= 0 else None)
-        attempt = base.version + 1
+    table_path = base.table_path
+    for _ in range(COMMIT_RETRIES + 1):
+        actions = build_actions(base)
         try:
-            write_commit(base, actions=actions)
-            return attempt
+            return write_commit(base, actions=actions)
         except FileExistsError:
-            ours_removes = {
-                a["remove"]["path"] for a in actions if "remove" in a
-            }
-            ours_meta = any(
-                "metaData" in a or "protocol" in a for a in actions
-            )
-            current = last_version(table_path)
-            for v in range(attempt, (current or attempt) + 1):
-                for won in _read_commit(table_path, v):
-                    if "metaData" in won or "protocol" in won:
-                        raise MetadataChangedException(
-                            f"version {v} changed table metadata during "
-                            f"our transaction at {table_path}"
-                        )
-                    if ours_meta:
-                        raise MetadataChangedException(
-                            f"metadata transaction lost the race to "
-                            f"version {v} at {table_path}; not rebasing "
-                            "schema changes automatically"
-                        )
-                    touched = None
-                    if "remove" in won:
-                        touched = won["remove"]["path"]
-                    elif "add" in won:
-                        touched = won["add"]["path"]
-                    if touched is not None and touched in ours_removes:
-                        raise ConcurrentDeleteException(
-                            f"version {v} rewrote {touched!r}, which our "
-                            f"transaction removes, at {table_path}"
-                        )
-            continue  # disjoint: rebase and retry
+            pass
+        ours_removes = {a["remove"]["path"] for a in actions if "remove" in a}
+        ours_meta = any("metaData" in a or "protocol" in a for a in actions)
+        latest = load_snapshot(table_path)
+        for v in range(base.version + 1, latest.version + 1):
+            for won in _read_commit(table_path, v):
+                if "metaData" in won or "protocol" in won:
+                    raise MetadataChangedException(
+                        f"version {v} changed table metadata during "
+                        f"our transaction at {table_path}"
+                    )
+                if ours_meta:
+                    raise MetadataChangedException(
+                        f"metadata transaction lost the race to "
+                        f"version {v} at {table_path}; not rebasing "
+                        "schema changes automatically"
+                    )
+                touched = None
+                if "remove" in won:
+                    touched = won["remove"]["path"]
+                elif "add" in won:
+                    touched = won["add"]["path"]
+                if touched is not None and touched in ours_removes:
+                    raise ConcurrentDeleteException(
+                        f"version {v} rewrote {touched!r}, which our "
+                        f"transaction removes, at {table_path}"
+                    )
+        base = latest  # disjoint: rebase and retry
     raise ConcurrentModificationException(
-        f"could not commit to {table_path} after {max_retries + 1} attempts"
+        f"could not commit to {table_path} after {COMMIT_RETRIES + 1} attempts"
     )

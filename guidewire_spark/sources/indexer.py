@@ -37,16 +37,11 @@ from guidewire_spark.sources.deltalog import (
 from guidewire_spark.sources.fs import FileMeta, list_parquet_files, list_timestamp_dirs
 from guidewire_spark.sources.manifest import ManifestEntry, read_manifest
 from guidewire_spark.sources.schema import infer_schema_from_files
-from guidewire_spark.sources.log_checkpoint import write_log_checkpoint
 from guidewire_spark.sources.snapshot import load_snapshot_or_empty
 
 logger = logging.getLogger(__name__)
 
 LONG_MAX = (1 << 63) - 1
-
-# Every CHECKPOINT_INTERVAL-th version of an indexed table also gets a
-# log checkpoint (Delta's own default cadence).
-CHECKPOINT_INTERVAL = 10
 
 
 @dataclass(frozen=True)
@@ -149,13 +144,13 @@ def commit_batches(
     batch to commit; each commit then advances it
     (``snap = write_commit(snap, actions)``), so the log is never
     replayed between batches — an initial index of N folders writes N
-    commits and reads no commit back.
+    commits and reads no commit back.  The stats spec comes from the
+    carried snapshot too.
 
-    Every ``CHECKPOINT_INTERVAL``-th version also writes a
-    ``<v>.checkpoint.parquet`` + ``_last_checkpoint`` from the carried
-    snapshot, keeping a cold reader's replay O(1) parquet + a short
-    JSON tail as versions accumulate — CDA syncs commit per table per
-    run, so a year-old table otherwise replays hundreds of JSON files.
+    Log checkpoints follow ``write_commit``'s one rule
+    (``delta.checkpointInterval``, default every 10th version), so a
+    cold reader's replay stays one parquet + a short JSON tail as CDA
+    syncs accumulate versions.
     """
     results: list[BatchResult] = []
     if not batches:
@@ -170,7 +165,7 @@ def commit_batches(
         if collect_stats:
             from guidewire_spark.sources.stats import stats_for_files, stats_spec
 
-            stats = stats_for_files(batch.files, stats_spec(table_path))
+            stats = stats_for_files(batch.files, stats_spec(snap.configuration))
         adds = [
             add_action(f.path, f.size, f.modification_time, stats=stats.get(f.path))
             for f in batch.files
@@ -206,8 +201,6 @@ def commit_batches(
                 )
             )
         snap = write_commit(snap, actions=actions)
-        if (snap.version + 1) % CHECKPOINT_INTERVAL == 0:
-            write_log_checkpoint(snap)
         results.append(BatchResult(batch.schema_id, batch.commit_timestamp, len(batch.files)))
     return results
 
@@ -257,9 +250,10 @@ def index(
     if save_mode not in ("append", "overwrite"):
         raise ValueError(f"save mode {save_mode!r} not supported (append|overwrite)")
 
-    checkpoints = (
-        ckpt.load_checkpoints(database_path) if save_mode == "append" else {}
-    )
+    # one snapshot of the checkpoint table: the high-water marks read
+    # here and the save commit at the end both use it
+    ckpt_base = load_snapshot_or_empty(ckpt.checkpoints_path(database_path))
+    checkpoints = ckpt.high_water_marks(ckpt_base) if save_mode == "append" else {}
     manifest = read_manifest(manifest_uri)
     os.makedirs(database_path, exist_ok=True)
 
@@ -282,5 +276,5 @@ def index(
         ]
         results = dict(f.result() for f in futures)
 
-    ckpt.save_checkpoints(results, database_path, save_mode)
+    ckpt.save_checkpoints(results, ckpt_base, save_mode)
     return results

@@ -98,12 +98,10 @@ class StatsSpec:
         return True
 
 
-def stats_spec(table_path: str) -> StatsSpec | None:
-    """Read the table's stats-collection config; None = collect all
-    (the default, and always the case before the first commit)."""
-    from guidewire_spark.sources.writer import table_configuration
-
-    config = table_configuration(table_path)
+def stats_spec(config: dict[str, str]) -> StatsSpec | None:
+    """The stats-collection spec of a table configuration (a writer
+    passes its snapshot's ``configuration``); None = collect all (the
+    default, and always the case before the first commit)."""
     cols_raw = config.get("delta.dataSkippingStatsColumns")
     n_raw = config.get("delta.dataSkippingNumIndexedCols")
     if cols_raw is None and n_raw is None:

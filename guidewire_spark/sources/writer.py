@@ -15,6 +15,12 @@ operations the reference documents — ``README.md:39-51``).
   data files are untouchable, mirroring the reference's warning that
   vacuuming a shallow clone would destroy source data
   (``README.md:45-49``).
+
+Every writer operation loads its table's snapshot once, checks
+everything (protocol gate, appendOnly, identity, constraints,
+generated columns, defaults, row tracking, stats spec) against that
+snapshot, and commits on it with ``write_commit(snap, ...)``: the
+helpers take the snapshot, never a path to reload.
 """
 
 from __future__ import annotations
@@ -29,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from guidewire_spark.sources.deltalog import (
     add_action,
     commit_info_action,
+    commit_transaction,
     delta_log_dir,
     list_versions,
     metadata_action,
@@ -278,29 +285,34 @@ def table_configuration(table_path: str) -> dict[str, str]:
     the trail was never deleted; after ``expire_log`` that walk would
     silently return {} and drop constraints, defaults and feature
     flags from enforcement. Empty for tables that never set
-    configuration (and for paths with no log yet — writers probe
-    before the first commit)."""
+    configuration and for paths with no log yet.
+
+    The one path-keyed reader, for callers that hold only a path
+    (matview, bloom, connector queries, tests).  Writer operations
+    never call it: each loads its snapshot once and every check reads
+    that snapshot, so what is checked is what the commit is built on
+    (``write_commit`` collides if the table moved in between)."""
     try:
         return dict(load_snapshot(table_path).configuration)
     except FileNotFoundError:
         return {}
 
 
-def table_constraints(table_path: str) -> dict[str, str]:
+def table_constraints(snap) -> dict[str, str]:
     """CHECK constraints stored Delta-style as
-    ``delta.constraints.<name> = <sql expr>`` in the table
-    configuration."""
+    ``delta.constraints.<name> = <sql expr>`` in the configuration of
+    the snapshot ``snap``."""
     prefix = "delta.constraints."
     return {
         k[len(prefix):]: v
-        for k, v in table_configuration(table_path).items()
+        for k, v in snap.configuration.items()
         if k.startswith(prefix)
     }
 
 
 def _enforce_constraints(
     df: DataFrame,
-    table_path: str,
+    snap,
     absent_exempt: frozenset[str] | set[str] = frozenset(),
     require_all: bool = True,
 ) -> None:
@@ -310,19 +322,9 @@ def _enforce_constraints(
     column the table schema declares non-nullable — Delta treats
     schema nullability as an invariant, not a hint. One combined
     predicate pass over the incoming DataFrame — the same work Delta's
-    CheckDeltaInvariant exec node does inline."""
-    # one snapshot load serves both the constraint config and the
-    # schema nullability (this used to be two full metadata replays)
-    try:
-        snap = load_snapshot(table_path)
-    except FileNotFoundError:
-        return
-    prefix = "delta.constraints."
-    constraints = {
-        k[len(prefix):]: v
-        for k, v in snap.configuration.items()
-        if k.startswith(prefix)
-    }
+    CheckDeltaInvariant exec node does inline.  Constraints and
+    nullability come from ``snap``, the snapshot the write commits on."""
+    constraints = table_constraints(snap)
     schema = snap.schema
     # A write that simply OMITS a non-nullable column is as much a
     # NOT NULL violation as writing literal NULLs: the append path
@@ -340,7 +342,7 @@ def _enforce_constraints(
     ]
     if require_all and absent:
         raise ValueError(
-            f"NOT NULL violation writing to {table_path}: non-nullable "
+            f"NOT NULL violation writing to {snap.table_path}: non-nullable "
             f"column(s) {absent} absent from the incoming DataFrame"
         )
     not_null = [
@@ -362,7 +364,7 @@ def _enforce_constraints(
             + (["NOT NULL violation"] if not_null else [])
         )
         raise ValueError(
-            f"{kinds} writing to {table_path}: "
+            f"{kinds} writing to {snap.table_path}: "
             + "; ".join(
                 [f"{n}: {e}" for n, e in constraints.items()]
                 + [f"NOT NULL: {c}" for c in not_null]
@@ -380,16 +382,16 @@ def add_check_constraint(
     from guidewire_spark.sources.snapshot import read_delta
 
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _gate_write(snap)
     from pyspark.sql import functions as F
 
-    if snap.files and read_delta(spark, table_path).where(
+    if snap.files and read_delta(spark, table_path, version=snap.version).where(
         ~F.expr(expr)
     ).limit(1).count() > 0:
         raise ValueError(
             f"existing rows violate CHECK ({expr}); constraint not added"
         )
-    config = table_configuration(table_path)
+    config = dict(snap.configuration)
     config[f"delta.constraints.{name}"] = expr
     now = int(time.time() * 1000)
     actions = [
@@ -412,12 +414,12 @@ def drop_check_constraint(table_path: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT: removes the configuration key
     in a new metadata commit."""
     key = f"delta.constraints.{name}"
-    config = table_configuration(table_path)
+    snap = load_snapshot(table_path)
+    config = dict(snap.configuration)
     if key not in config:
         raise KeyError(f"no CHECK constraint {name!r} on {table_path}")
     del config[key]
-    snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _gate_write(snap)
     now = int(time.time() * 1000)
     actions = [
         metadata_action(
@@ -464,7 +466,7 @@ def rename_column(table_path: str, old: str, new: str) -> int:
     from guidewire_spark.sources.snapshot import PHYSICAL_NAME_KEY, physical_name
 
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _gate_write(snap)
     names = [f.name for f in snap.schema.fields]
     if old not in names:
         raise KeyError(f"no column {old!r} in {names}")
@@ -473,8 +475,8 @@ def rename_column(table_path: str, old: str, new: str) -> int:
     if old in (snap.partition_columns or []):
         raise ValueError("renaming a partition column is not supported")
     for label, exprs in (
-        ("CHECK constraint", table_constraints(table_path)),
-        ("generated column", table_generated_columns(table_path)),
+        ("CHECK constraint", table_constraints(snap)),
+        ("generated column", table_generated_columns(snap)),
     ):
         for cname, expr in exprs.items():
             if old in expr or old == cname:
@@ -490,7 +492,7 @@ def rename_column(table_path: str, old: str, new: str) -> int:
             fields.append(T.StructField(new, f.dataType, f.nullable, md))
         else:
             fields.append(f)
-    config = table_configuration(table_path)
+    config = dict(snap.configuration)
     config["delta.columnMapping.mode"] = "name"
     now = int(time.time() * 1000)
     actions = [
@@ -509,14 +511,13 @@ def rename_column(table_path: str, old: str, new: str) -> int:
     return snap.version + 1
 
 
-def _apply_column_defaults(df: DataFrame, table_path: str) -> DataFrame:
-    """Write-time half of column DEFAULTs: any table column the
-    incoming frame OMITS that declares a ``CURRENT_DEFAULT`` is
-    materialized from its default expression before staging (Spark's
-    own INSERT-with-defaults contract)."""
+def _apply_column_defaults(df: DataFrame, snap) -> DataFrame:
+    """Write-time half of column DEFAULTs: any column of ``snap``'s
+    schema the incoming frame OMITS that declares a
+    ``CURRENT_DEFAULT`` is materialized from its default expression
+    before staging (Spark's own INSERT-with-defaults contract)."""
     from pyspark.sql import functions as F
 
-    snap = load_snapshot(table_path)
     if snap.schema is None:
         return df
     for f in snap.schema.fields:
@@ -550,7 +551,7 @@ def add_column(
     from pyspark.sql import types as T
 
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _gate_write(snap)
     if snap.schema is None:
         raise ValueError(f"{table_path} has no schema to evolve")
     if name in snap.schema.fieldNames():
@@ -571,7 +572,7 @@ def add_column(
             partition_columns=snap.partition_columns or None,
             created_time=now,
             table_id=snap.metadata_id,
-            configuration=table_configuration(table_path),
+            configuration=snap.configuration,
         ),
         commit_info_action(
             "ADD COLUMNS", f"{name} {type_str}", False, 0, 0, now
@@ -598,7 +599,7 @@ def widen_column_type(table_path: str, column: str, new_type: str) -> int:
     from pyspark.sql import types as T
 
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _gate_write(snap)
     names = [f.name for f in snap.schema.fields]
     if column not in names:
         raise KeyError(f"no column {column!r} in {names}")
@@ -624,7 +625,7 @@ def widen_column_type(table_path: str, column: str, new_type: str) -> int:
             partition_columns=snap.partition_columns or None,
             created_time=now,
             table_id=snap.metadata_id,
-            configuration=table_configuration(table_path),
+            configuration=snap.configuration,
         ),
         commit_info_action(
             "ALTER COLUMN",
@@ -649,15 +650,15 @@ def drop_column(table_path: str, name: str) -> int:
     from pyspark.sql import types as T
 
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _gate_write(snap)
     names = [f.name for f in snap.schema.fields]
     if name not in names:
         raise KeyError(f"no column {name!r} in {names}")
     if name in (snap.partition_columns or []):
         raise ValueError("dropping a partition column is not supported")
     for label, exprs in (
-        ("CHECK constraint", table_constraints(table_path)),
-        ("generated column", table_generated_columns(table_path)),
+        ("CHECK constraint", table_constraints(snap)),
+        ("generated column", table_generated_columns(snap)),
     ):
         for cname, expr in exprs.items():
             if name in expr or name == cname:
@@ -665,7 +666,7 @@ def drop_column(table_path: str, name: str) -> int:
                     f"column {name!r} is referenced by {label} {cname!r}; "
                     "drop it first"
                 )
-    config = table_configuration(table_path)
+    config = dict(snap.configuration)
     config["delta.columnMapping.mode"] = "name"
     now = int(time.time() * 1000)
     actions = [
@@ -684,25 +685,25 @@ def drop_column(table_path: str, name: str) -> int:
     return snap.version + 1
 
 
-def table_generated_columns(table_path: str) -> dict[str, str]:
+def table_generated_columns(snap) -> dict[str, str]:
     """Generated columns stored Delta-style as
-    ``delta.generatedColumns.<col> = <sql expr>`` in the table
-    configuration (Delta proper keeps the expression in schema field
-    metadata; the configuration keeps this engine's log replay
-    simple while preserving the semantics)."""
+    ``delta.generatedColumns.<col> = <sql expr>`` in the configuration
+    of the snapshot ``snap`` (Delta proper keeps the expression in
+    schema field metadata; the configuration keeps this engine's log
+    replay simple while preserving the semantics)."""
     prefix = "delta.generatedColumns."
     return {
         k[len(prefix):]: v
-        for k, v in table_configuration(table_path).items()
+        for k, v in snap.configuration.items()
         if k.startswith(prefix)
     }
 
 
-def _apply_generated_columns(df: DataFrame, table_path: str) -> DataFrame:
+def _apply_generated_columns(df: DataFrame, snap) -> DataFrame:
     """Compute absent generated columns; validate supplied ones (a
     provided value that disagrees with its generation expression is
     rejected, matching Delta's generated-column write check)."""
-    gen = table_generated_columns(table_path)
+    gen = table_generated_columns(snap)
     if not gen:
         return df
     from pyspark.sql import functions as F
@@ -720,17 +721,6 @@ def _apply_generated_columns(df: DataFrame, table_path: str) -> DataFrame:
                     f"that contradict its expression ({expr})"
                 )
     return df
-
-
-def last_txn_version(table_path: str, app_id: str) -> int | None:
-    """Latest SetTransaction (``txn``) version committed for
-    ``app_id``, or None — read through the snapshot, which seeds txn
-    high-water marks from the newest CHECKPOINT and replays only the
-    JSON tail. The previous raw-JSON walk assumed the trail was never
-    deleted; log retention (expire_log) broke that assumption, and a
-    retried loader batch would have silently re-committed."""
-    latest = load_snapshot(table_path).txns.get(app_id)
-    return latest
 
 
 def write_delta(
@@ -770,18 +760,25 @@ def write_delta(
     current version) — so a failed-then-retried loader batch commits
     its rows exactly once, the property every at-least-once upstream
     (the reference's CDA batch fan-out included) needs from its sink.
+
+    The table's snapshot is loaded once, before anything else: the
+    txn, identity, generated-column, default, constraint, partition,
+    protocol, schema, stats and row-tracking checks all read it, and
+    the commit is built on it.  A blind append that loses the commit
+    race rebases through ``deltalog.commit_transaction`` only when the
+    winning commits changed no metadata (a concurrent ADD CONSTRAINT or
+    row-tracking enablement raises MetadataChangedException); every
+    other write collides with FileExistsError.
     """
     mode = mode.lower()
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode {mode!r} not supported (append|overwrite)")
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be set together")
-    # the snapshot this write is built against: a commit that lands
-    # while the files stage makes the non-blind commit below collide
     base = load_snapshot_or_empty(table_path)
     prev = base.version if base.version >= 0 else None
     if txn_app_id is not None and prev is not None:
-        seen = last_txn_version(table_path, txn_app_id)
+        seen = base.txns.get(txn_app_id)
         if seen is not None and seen >= txn_version:
             return prev  # already committed by this app at this version
     if prev is None:
@@ -801,7 +798,7 @@ def write_delta(
         # semantics: the table definition outlives its data), so both
         # are enforced on every write into an existing table before any
         # file is staged.
-        idents = _identity_specs(table_path)
+        idents = _identity_specs(base)
         if idents:
             # GENERATED ALWAYS AS IDENTITY: only the identity writer
             # may append (it assigns values and bumps the high-water
@@ -811,17 +808,19 @@ def write_delta(
                 f"table has identity column(s) {sorted(idents)}; write "
                 "through append_with_identity, not write_delta"
             )
-        df = _apply_generated_columns(df, table_path)
-        df = _apply_column_defaults(df, table_path)
+        df = _apply_generated_columns(df, base)
+        df = _apply_column_defaults(df, base)
         # The absent-non-nullable-column rule applies to APPENDS only:
         # an overwrite replaces the table's metadata with df.schema in
         # the same commit, so the old schema's non-nullable columns
         # leave with the old rows (value-level CHECK constraints still
         # apply — the table definition outlives its data; nullability
         # does not survive a schema-replacing overwrite).
-        _enforce_constraints(df, table_path, require_all=(mode == "append"))
+        _enforce_constraints(df, base, require_all=(mode == "append"))
+        if mode == "overwrite":
+            _reject_on_append_only(base, "overwrite")
     if prev is not None:
-        existing = load_snapshot(table_path).partition_columns
+        existing = base.partition_columns
         if partition_by:
             if existing != partition_by:
                 raise ValueError(
@@ -836,17 +835,11 @@ def write_delta(
     if prev is not None:
         # gate BEFORE staging: a refused write must not first dump the
         # whole dataset into the table directory as orphan files
-        _gate_write(load_snapshot(table_path), table_path)
+        _gate_write(base)
     if prev is not None and mode == "append":
         # mapped tables stage files under physical column names
-        df = _to_physical(df, load_snapshot(table_path).schema)
-    if (
-        prev is not None
-        and table_configuration(table_path).get(
-            "delta.autoOptimize.optimizeWrite"
-        )
-        == "true"
-    ):
+        df = _to_physical(df, base.schema)
+    if base.configuration.get("delta.autoOptimize.optimizeWrite") == "true":
         # Optimized writes (Delta's autoOptimize.optimizeWrite): the
         # small-files cure applied at write time — one exchange —
         # rather than later, where it is a rewrite.
@@ -905,7 +898,6 @@ def write_delta(
         )
         op_mode, blind = "Overwrite" if mode == "overwrite" else "Append", False
     elif mode == "overwrite":
-        _reject_on_append_only(table_path, "overwrite")
         snap = base
         actions.append(
             metadata_action(
@@ -913,7 +905,7 @@ def write_delta(
                 partition_columns=partition_by,
                 created_time=now,
                 table_id=snap.metadata_id,
-                configuration=table_configuration(table_path),
+                configuration=snap.configuration,
             )
         )
         actions.extend(remove_action(p, now) for p in snap.files)
@@ -953,23 +945,22 @@ def write_delta(
                             partition_columns=snap.partition_columns or None,
                             created_time=now,
                             table_id=snap.metadata_id,
-                            configuration=table_configuration(table_path),
+                            configuration=snap.configuration,
                         )
                     )
         # a schema-evolving commit is not a blind append
         op_mode, blind = "Append", not actions
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(base.configuration)
 
     base_ids: dict[str, int] = {}
-    if prev is not None and _row_tracking_enabled(table_path):
+    if _row_tracking_enabled(base):
         # row tracking: fresh ids above the high-water mark, assigned
         # in the same commit that adds the files; the bumped mark
         # rides a metadata action, and the commit pins the snapshot
         # version (blind-append retry could interleave two writers'
         # id ranges)
-        config = table_configuration(table_path)
-        base_ids, config = _assign_base_row_ids(table_path, files, config)
+        base_ids, config = _assign_base_row_ids(files, base.configuration)
         existing_meta = next((a for a in actions if "metaData" in a), None)
         if existing_meta is not None:
             # a schema-evolution metadata action is already in this
@@ -977,13 +968,12 @@ def write_delta(
             # would win the replay and clobber the evolved schema)
             existing_meta["metaData"]["configuration"] = config
         else:
-            snap2 = load_snapshot(table_path)
             actions.append(
                 metadata_action(
-                    snap2.schema,
-                    partition_columns=snap2.partition_columns or None,
+                    base.schema,
+                    partition_columns=base.partition_columns or None,
                     created_time=now,
-                    table_id=snap2.metadata_id,
+                    table_id=base.metadata_id,
                     configuration=config,
                 )
             )
@@ -1020,32 +1010,19 @@ def write_delta(
         )
     )
     if blind:
-        # Optimistic concurrency, Delta-style: a blind append conflicts
-        # with nothing — on version collision, reload the base and
-        # re-commit after it (the staged files are untouched).
-        for _ in range(50):
-            try:
-                # Only write_commit may live in this try: if the
-                # follow-up auto-compact commit collided and ITS
-                # FileExistsError were caught here, the loop would
-                # re-run write_commit with the SAME append actions and
-                # duplicate every row.
-                committed = write_commit(base, actions=actions)
-            except FileExistsError:
-                base = load_snapshot(table_path)
-                continue
-            _maybe_auto_compact(df.sparkSession, table_path, mode)
-            return committed.version
-        raise RuntimeError(f"could not commit after 50 retries at {table_path}")
-    # Non-blind commits (create/overwrite/evolution) read table state
-    # before writing; a collision means that state is stale → surface
-    # the conflict to the caller instead of silently clobbering.
-    committed = write_commit(base, actions=actions)
-    _maybe_auto_compact(df.sparkSession, table_path, mode)
+        # a blind append rebases past concurrent appends (the staged
+        # files are untouched) but not past a metadata change
+        committed = commit_transaction(base, lambda _: actions)
+    else:
+        # create/overwrite/evolution/row-id commits were built from
+        # table state; a collision means that state is stale →
+        # surface the conflict instead of silently clobbering
+        committed = write_commit(base, actions=actions)
+    _maybe_auto_compact(df.sparkSession, committed, mode)
     return committed.version
 
 
-def _maybe_auto_compact(spark, table_path: str, mode: str) -> None:
+def _maybe_auto_compact(spark, snap, mode: str) -> None:
     """Auto compaction (Delta's ``delta.autoOptimize.autoCompact``):
     after a successful APPEND, bin-pack accumulated small files
     (< ``gw.autoCompact.minFileSize`` bytes, default 16 MiB) in a
@@ -1064,28 +1041,29 @@ def _maybe_auto_compact(spark, table_path: str, mode: str) -> None:
     committed by the time this runs, so any maintenance failure
     (version collision with a concurrent writer, optimize error) is
     swallowed with a warning — the caller's returned version must not
-    depend on the maintenance commit succeeding."""
+    depend on the maintenance commit succeeding.  ``snap`` is the
+    snapshot the write's commit returned."""
     if mode != "append":
         return
     try:
-        _auto_compact_once(spark, table_path)
+        _auto_compact_once(spark, snap)
     except Exception as exc:  # noqa: BLE001 — maintenance is best-effort
         import warnings
 
         warnings.warn(
-            f"auto-compact skipped at {table_path}: {exc!r}", stacklevel=2
+            f"auto-compact skipped at {snap.table_path}: {exc!r}", stacklevel=2
         )
 
 
-def _auto_compact_once(spark, table_path: str) -> None:
-    config = table_configuration(table_path)
+def _auto_compact_once(spark, snap) -> None:
+    config = snap.configuration
     if config.get("delta.autoOptimize.autoCompact") != "true":
         return
     min_files = int(config.get("gw.autoCompact.minNumFiles", "8"))
     small_cut = int(
         config.get("gw.autoCompact.minFileSize", str(16 * 1024 * 1024))
     )
-    snap = load_snapshot(table_path)
+    table_path = snap.table_path
     small = [p for p in snap.files if snap.file_sizes.get(p, 0) < small_cut]
     pcols = list(snap.partition_columns or [])
     if not pcols:
@@ -1156,15 +1134,15 @@ def optimize_table(
     """
     if zorder_by and hilbert_by:
         raise ValueError("zorder_by and hilbert_by are mutually exclusive")
+    snap = load_snapshot(table_path)
     if not zorder_by and not hilbert_by:
-        cols = clustering_columns(table_path)
+        cols = clustering_columns(snap)
         if cols:
             if len(cols) == 2:
                 hilbert_by = cols
             else:
                 zorder_by = cols
-    snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _gate_write(snap)
     if not snap.files:
         raise ValueError(f"nothing to optimize at {table_path}")
     # Incremental bin-packing (Delta's minFileSize behavior): only
@@ -1221,15 +1199,14 @@ def optimize_table(
     if where_partitions and len(victims) < 2 and not zorder_by and not hilbert_by:
         return snap.version  # a single in-scope file is already compact
     pcols = list(snap.partition_columns or [])
-    tracked = _row_tracking_enabled(table_path)
+    tracked = _row_tracking_enabled(snap)
     if tracked:
         # id-preserving compaction (Delta's materialized row ids):
         # every row's stable id rides the rewrite as a physical
         # column; readers coalesce it ahead of baseRowId + index
         from guidewire_spark.sources.snapshot import MATERIALIZED_ROW_ID_KEY
 
-        opt_config = table_configuration(table_path)
-        mat_col = _materialized_row_id_col(opt_config)
+        mat_col = _materialized_row_id_col(snap.configuration)
         df = _read_with_partitions_row_ids(
             spark, snap, victims
         ).withColumnRenamed("_row_id", mat_col)
@@ -1254,14 +1231,12 @@ def optimize_table(
     )
     now = int(time.time() * 1000)
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
     actions = []
     base_ids: dict[str, int] = {}
     if tracked:
-        base_ids, opt_config = _assign_base_row_ids(
-            table_path, files, opt_config
-        )
+        base_ids, opt_config = _assign_base_row_ids(files, snap.configuration)
         opt_config[MATERIALIZED_ROW_ID_KEY] = mat_col
         actions.append(
             metadata_action(
@@ -1306,12 +1281,12 @@ def optimize_table(
     # pass over just the new files, plus sidecar GC for the removed
     # ones.  Unconfigured tables skip both calls entirely.
     from guidewire_spark.sources.bloom import (
-        bloom_columns,
+        CONFIG_COLUMNS,
         reindex_bloom,
         vacuum_bloom_sidecars,
     )
 
-    if bloom_columns(table_path):
+    if any(snap.configuration.get(CONFIG_COLUMNS, "").split(",")):
         reindex_bloom(spark, table_path)
         vacuum_bloom_sidecars(table_path)
     return snap.version + 1
@@ -1347,11 +1322,11 @@ def merge_into(
     must not silently widen a table).
     """
     keys = [on] if isinstance(on, str) else list(on)
-    _reject_identity_dml(table_path, "MERGE")
-    _reject_rewrite_on_row_tracking(table_path, "MERGE")
-    _reject_on_append_only(table_path, "MERGE")
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _reject_identity_dml(snap, "MERGE")
+    _reject_rewrite_on_row_tracking(snap, "MERGE")
+    _reject_on_append_only(snap, "MERGE")
+    _gate_write(snap)
     if not snap.files:
         raise ValueError(f"nothing to merge into at {table_path}")
     pcols = list(snap.partition_columns or [])
@@ -1363,11 +1338,11 @@ def merge_into(
     # whole merge before any file is staged (mirrors write_delta /
     # update_table / overwrite_partitions). Only the source needs the
     # pass — kept target rows were validated when they were written.
-    source = _apply_generated_columns(source, table_path)
+    source = _apply_generated_columns(source, snap)
     # A narrower source is legal for MERGE (updates may touch a column
     # subset); the full-width merged output is constraint-checked
     # before staging, so only value-level enforcement runs here.
-    _enforce_constraints(source, table_path, require_all=False)
+    _enforce_constraints(source, snap, require_all=False)
 
     target_names = {f.name for f in snap.schema.fields}
     extra = [f.name for f in source.schema.fields if f.name not in target_names]
@@ -1423,7 +1398,7 @@ def merge_into(
     )
 
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
     now = int(time.time() * 1000)
     actions = []
@@ -1434,7 +1409,7 @@ def merge_into(
                 partition_columns=snap.partition_columns or None,
                 created_time=now,
                 table_id=snap.metadata_id,
-                configuration=table_configuration(table_path),
+                configuration=snap.configuration,
             )
         )
     actions += [remove_action(p, now) for p in candidates]
@@ -1506,7 +1481,7 @@ def _merge_insert_only(
         fresh = source.alias("s")
 
     src_names = set(source.columns)
-    gen_cols = table_generated_columns(table_path)
+    gen_cols = table_generated_columns(snap)
     pieces = []
     earlier = F.lit(False)
     for c in not_matched:
@@ -1531,18 +1506,18 @@ def _merge_insert_only(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in out_schema.fields]
     )
     merged = _to_physical(merged, out_schema)
-    _enforce_constraints(merged, table_path)
+    _enforce_constraints(merged, snap)
 
     files, commit_dir = _stage_files(merged, table_path, pcols or None)
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
     now = int(time.time() * 1000)
     actions: list[dict] = []
-    config = table_configuration(table_path)
+    config = snap.configuration
     base_ids: dict[str, int] = {}
-    if _row_tracking_enabled(table_path):
-        base_ids, config = _assign_base_row_ids(table_path, files, config)
+    if _row_tracking_enabled(snap):
+        base_ids, config = _assign_base_row_ids(files, config)
     if evolved is not None or base_ids:
         actions.append(
             metadata_action(
@@ -1628,13 +1603,14 @@ def merge_clauses(
     removes_rows = any(
         c.get("delete") or c.get("update") for c in clauses
     )
-    _reject_identity_dml(table_path, "MERGE")
+    snap = load_snapshot(table_path)
+    _reject_identity_dml(snap, "MERGE")
     if removes_rows:
         # insert-only merges move no existing row: legal on row-tracked
         # AND append-only tables (Delta parity); anything that
         # updates/deletes is a rewrite and takes the guards
-        _reject_rewrite_on_row_tracking(table_path, "MERGE")
-        _reject_on_append_only(table_path, "MERGE (with update/delete clauses)")
+        _reject_rewrite_on_row_tracking(snap, "MERGE")
+        _reject_on_append_only(snap, "MERGE (with update/delete clauses)")
     if not clauses:
         raise ValueError("MERGE requires at least one clause")
     for c in clauses:
@@ -1652,14 +1628,13 @@ def merge_clauses(
         ):
             raise ValueError(f"WHEN {when} clause needs 'update' or 'delete'")
 
-    snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _gate_write(snap)
     if not snap.files:
         raise ValueError(f"nothing to merge into at {table_path}")
     pcols = list(snap.partition_columns or [])
 
-    source = _apply_generated_columns(source, table_path)
-    gen_cols = table_generated_columns(table_path)
+    source = _apply_generated_columns(source, snap)
+    gen_cols = table_generated_columns(snap)
     for c in clauses:
         assigned = set(c.get("update") or {}) | set(c.get("insert") or {})
         bad = assigned & set(gen_cols)
@@ -1829,11 +1804,11 @@ def merge_clauses(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in out_schema.fields]
     )
     merged = _to_physical(merged, out_schema)
-    _enforce_constraints(merged, table_path)
+    _enforce_constraints(merged, snap)
 
     files, commit_dir = _stage_files(merged, table_path, pcols or None)
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
     now = int(time.time() * 1000)
     actions = []
@@ -1844,7 +1819,7 @@ def merge_clauses(
                 partition_columns=snap.partition_columns or None,
                 created_time=now,
                 table_id=snap.metadata_id,
-                configuration=table_configuration(table_path),
+                configuration=snap.configuration,
             )
         )
     actions += [remove_action(p, now) for p in candidates]
@@ -1889,10 +1864,10 @@ def delete_from(
     At 100 TB a targeted delete (GDPR erasure, bad-batch rollback)
     rewrites a handful of files, never the table.
     """
-    _reject_rewrite_on_row_tracking(table_path, "copy-on-write DELETE")
-    _reject_on_append_only(table_path, "DELETE")
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _reject_rewrite_on_row_tracking(snap, "copy-on-write DELETE")
+    _reject_on_append_only(snap, "DELETE")
+    _gate_write(snap)
     if not snap.files:
         raise ValueError(f"nothing to delete from at {table_path}")
     pcols = list(snap.partition_columns or [])
@@ -1927,7 +1902,7 @@ def delete_from(
     )
 
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
     now = int(time.time() * 1000)
     actions = [remove_action(p, now) for p in rewrite]
@@ -2026,9 +2001,9 @@ def delete_from_mor(
         subtract_dead_rows,
     )
 
-    _reject_on_append_only(table_path, "DELETE (merge-on-read)")
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _reject_on_append_only(snap, "DELETE (merge-on-read)")
+    _gate_write(snap)
     if not snap.files:
         raise ValueError(f"nothing to delete from at {table_path}")
     candidates = (
@@ -2078,11 +2053,11 @@ _ROW_TRACKING_KEY = "delta.enableRowTracking"
 _ROW_HWM_KEY = "delta.rowTracking.rowIdHighWaterMark"
 
 
-def _row_tracking_enabled(table_path: str) -> bool:
-    return table_configuration(table_path).get(_ROW_TRACKING_KEY) == "true"
+def _row_tracking_enabled(snap) -> bool:
+    return snap.configuration.get(_ROW_TRACKING_KEY) == "true"
 
 
-def _reject_rewrite_on_row_tracking(table_path: str, op: str) -> None:
+def _reject_rewrite_on_row_tracking(snap, op: str) -> None:
     """Row-tracked tables accept merge-on-read DML (plus the
     id-PRESERVING rewrites: OPTIMIZE, REORG PURGE and MOR UPDATE, which
     materialize each row's id through the rewrite — writer paths at
@@ -2090,14 +2065,14 @@ def _reject_rewrite_on_row_tracking(table_path: str, op: str) -> None:
     remaining copy-on-write paths (DELETE/UPDATE/MERGE / replaceWhere /
     partition overwrite) move rows to new files without carrying ids
     and would reassign them, so they are refused."""
-    if _row_tracking_enabled(table_path):
+    if _row_tracking_enabled(snap):
         raise ValueError(
             f"{op} would reassign stable row ids on a row-tracked table; "
             "use merge-on-read DML (delete_from_mor / update_table_mor)"
         )
 
 
-def _reject_on_append_only(table_path: str, op: str) -> None:
+def _reject_on_append_only(snap, op: str) -> None:
     """``delta.appendOnly=true`` (the protocol's appendOnly writer
     feature, PROTOCOL.md "Append-only Tables"): the table accepts only
     commits that ADD rows — any operation that deletes or rewrites
@@ -2106,21 +2081,20 @@ def _reject_on_append_only(table_path: str, op: str) -> None:
     table), matching delta-spark's enforcement.  The property arrives
     through the generic SET TBLPROPERTIES path; enforcement is
     writer-side, the same place CHECK constraints live."""
-    conf = table_configuration(table_path)
-    if conf.get("delta.appendOnly", "").strip().lower() == "true":
+    if snap.configuration.get("delta.appendOnly", "").strip().lower() == "true":
         raise ValueError(
-            f"{op} is not allowed on append-only table {table_path} "
+            f"{op} is not allowed on append-only table {snap.table_path} "
             "(delta.appendOnly=true); unset the property to run DML"
         )
 
 
-def _gate_write(snap, table_path: str) -> None:
+def _gate_write(snap) -> None:
     """Writer-protocol gate at every mutation head: a table demanding
     writer features this engine doesn't implement is refused BEFORE
     any action is staged (deltalog.check_writer_protocol)."""
     from guidewire_spark.sources.deltalog import check_writer_protocol
 
-    check_writer_protocol(snap.protocol, table_path)
+    check_writer_protocol(snap.protocol, snap.table_path)
 
 
 def _feature_upgrade_actions(snap, reader=(), writer=()) -> list[dict]:
@@ -2161,14 +2135,14 @@ _CLUSTERING_KEY = "delta.clusteringColumns"  # legacy config spelling
 _CLUSTERING_DOMAIN = "delta.clustering"  # protocol domainMetadata domain
 
 
-def clustering_columns(table_path: str) -> list[str]:
-    """Declared liquid-clustering columns: the protocol's
-    ``delta.clustering`` domainMetadata (current writer), falling back
-    to the legacy ``delta.clusteringColumns`` config key so tables
-    written before the domain migration keep their layout contract."""
+def clustering_columns(snap) -> list[str]:
+    """Declared liquid-clustering columns of the snapshot ``snap``: the
+    protocol's ``delta.clustering`` domainMetadata (current writer),
+    falling back to the legacy ``delta.clusteringColumns`` config key
+    so tables written before the domain migration keep their layout
+    contract."""
     import json as _json
 
-    snap = load_snapshot(table_path)
     dconf = snap.domains.get(_CLUSTERING_DOMAIN)
     if dconf:
         try:
@@ -2193,8 +2167,8 @@ def enable_in_commit_timestamps(table_path: str) -> int:
     from guidewire_spark.sources.deltalog import ICT_KEY
 
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
-    config = table_configuration(table_path)
+    _gate_write(snap)
+    config = dict(snap.configuration)
     if config.get(ICT_KEY) == "true":
         raise ValueError(f"in-commit timestamps already enabled at {table_path}")
     now = int(time.time() * 1000)
@@ -2231,17 +2205,18 @@ _FEATURE_MANAGED_KEYS = {
 }
 
 
-def stage_add_actions(df: DataFrame, table_path: str) -> list[dict]:
-    """Stage ``df`` as parquet files under the table (unique per-call
-    subdirectory — concurrent stagers never collide) and return their
-    ``add`` actions WITHOUT committing. The building block for
-    optimistic-concurrency flows (deltalog.commit_transaction): data
-    lands first, the log race is fought over metadata only, and a
-    losing transaction's rebase re-commits the SAME staged files."""
+def stage_add_actions(df: DataFrame, snap) -> list[dict]:
+    """Stage ``df`` as parquet files under the table of the snapshot
+    ``snap`` (unique per-call subdirectory — concurrent stagers never
+    collide) and return their ``add`` actions WITHOUT committing. The
+    building block for optimistic-concurrency flows
+    (deltalog.commit_transaction on the same ``snap``): data lands
+    first, the log race is fought over metadata only, and a losing
+    transaction's rebase re-commits the SAME staged files."""
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
-    files, _ = _stage_files(df, table_path, None)
+    files, _ = _stage_files(df, snap.table_path, None)
     now = int(time.time() * 1000)
     return [
         add_action(
@@ -2270,10 +2245,10 @@ def set_table_properties(table_path: str, props: dict[str, str]) -> int:
                 f"writer.{_FEATURE_MANAGED_KEYS[key]}() instead"
             )
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _gate_write(snap)
     if snap.schema is None:
         raise ValueError(f"no table at {table_path}")
-    config = table_configuration(table_path)
+    config = dict(snap.configuration)
     for key, value in props.items():
         if value in (None, ""):
             config.pop(key, None)
@@ -2309,7 +2284,7 @@ def set_clustering_columns(table_path: str, columns: list[str]) -> int:
     the domain migration are still honored via the legacy
     configuration key (see ``clustering_columns``)."""
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _gate_write(snap)
     pcols = set(snap.partition_columns or [])
     known = set(snap.schema.fieldNames()) if snap.schema else set()
     for c in columns:
@@ -2356,12 +2331,12 @@ def enable_row_tracking(table_path: str) -> int:
     feed stays silent); subsequent appends assign ids above the mark
     in the same commit that adds the files."""
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
-    if _row_tracking_enabled(table_path):
+    _gate_write(snap)
+    if _row_tracking_enabled(snap):
         raise ValueError(f"row tracking already enabled at {table_path}")
     counts = _file_record_counts(snap.files, "enable_row_tracking")
     now = int(time.time() * 1000)
-    config = table_configuration(table_path)
+    config = dict(snap.configuration)
     config[_ROW_TRACKING_KEY] = "true"
     base = 0
     adds = []
@@ -2403,9 +2378,7 @@ def enable_row_tracking(table_path: str) -> int:
     return snap.version + 1
 
 
-def _assign_base_row_ids(
-    table_path: str, files, config: dict
-) -> tuple[dict[str, int], dict]:
+def _assign_base_row_ids(files, config: dict) -> tuple[dict[str, int], dict]:
     """Base row ids for newly staged files, above the recorded
     high-water mark; returns ({path: base}, updated config).  The
     caller must commit the updated config's metadata action in the
@@ -2449,12 +2422,13 @@ def delete_auto(
     columns.  Callers that already know their delete shape should
     call delete_from / delete_from_mor directly; this router is for
     the generic entry point where the shape is unknown."""
-    _reject_on_append_only(table_path, "DELETE")
     import json as _json
 
     from pyspark.sql import functions as F
 
-    if _row_tracking_enabled(table_path):
+    snap = load_snapshot(table_path)
+    _reject_on_append_only(snap, "DELETE")
+    if _row_tracking_enabled(snap):
         # forced routing: copy-on-write would reassign stable row ids,
         # so a row-tracked table always takes merge-on-read — and the
         # damage-ratio measurement pass is skipped (outcome is fixed)
@@ -2466,7 +2440,6 @@ def delete_auto(
             ),
             "mor",
         )
-    snap = load_snapshot(table_path)
     if not snap.files:
         raise ValueError(f"nothing to delete from at {table_path}")
     candidates = (
@@ -2540,17 +2513,16 @@ def purge_deletion_vectors(spark: SparkSession, table_path: str) -> int:
     the baseRowId+index default — so vectors no longer stack forever
     on tracked tables (the round-6 gap)."""
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _gate_write(snap)
     if not snap.file_dvs:
         raise ValueError(f"no deletion vectors to purge at {table_path}")
-    tracked = _row_tracking_enabled(table_path)
+    tracked = _row_tracking_enabled(snap)
     rewrite = [p for p in snap.files if p in snap.file_dvs]
     pcols = list(snap.partition_columns or [])
     from guidewire_spark.sources.snapshot import MATERIALIZED_ROW_ID_KEY
 
     if tracked:
-        config = table_configuration(table_path)
-        mat_col = _materialized_row_id_col(config)
+        mat_col = _materialized_row_id_col(snap.configuration)
         survivors = _read_with_partitions_row_ids(
             spark, snap, rewrite
         ).withColumnRenamed("_row_id", mat_col)
@@ -2561,7 +2533,7 @@ def purge_deletion_vectors(spark: SparkSession, table_path: str) -> int:
     )
 
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
     now = int(time.time() * 1000)
     actions = []
@@ -2570,7 +2542,7 @@ def purge_deletion_vectors(spark: SparkSession, table_path: str) -> int:
         # fresh bases above the mark keep the protocol invariant
         # (every tracked add carries one); the materialized column
         # wins on read, so survivor ids are unchanged
-        base_ids, config = _assign_base_row_ids(table_path, files, config)
+        base_ids, config = _assign_base_row_ids(files, snap.configuration)
         config[MATERIALIZED_ROW_ID_KEY] = mat_col
         actions.append(
             metadata_action(
@@ -2643,12 +2615,12 @@ def update_table_mor(
         subtract_dead_rows,
     )
 
-    _reject_on_append_only(table_path, "UPDATE (merge-on-read)")
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _reject_on_append_only(snap, "UPDATE (merge-on-read)")
+    _gate_write(snap)
     if not snap.files:
         raise ValueError(f"nothing to update at {table_path}")
-    ident_hit = set(assignments) & set(_identity_specs(table_path))
+    ident_hit = set(assignments) & set(_identity_specs(snap))
     if ident_hit:
         raise ValueError(
             f"identity column(s) {sorted(ident_hit)} are GENERATED "
@@ -2662,14 +2634,13 @@ def update_table_mor(
                 "use MERGE to move rows between partitions"
             )
     candidates = list(snap.files)
-    tracked = _row_tracking_enabled(table_path)
+    tracked = _row_tracking_enabled(snap)
     mat_col = None
     extra_fields = None
     if tracked:
         from guidewire_spark.sources.snapshot import MATERIALIZED_ROW_ID_KEY
 
-        upd_config = table_configuration(table_path)
-        mat_col = _materialized_row_id_col(upd_config)
+        mat_col = _materialized_row_id_col(snap.configuration)
         extra_fields = [T.StructField(mat_col, T.LongType(), True)]
         missing = [p for p in candidates if p not in snap.file_base_rows]
         if missing:
@@ -2709,7 +2680,7 @@ def update_table_mor(
             for c in out_cols
         ]
     )
-    _enforce_constraints(updated, table_path)
+    _enforce_constraints(updated, snap)
     # Indexes aggregate + encode executor-side (dv.encode_dead_rows):
     # the driver collects one descriptor per touched file, not rows.
     merged = encode_dead_rows(
@@ -2723,7 +2694,7 @@ def update_table_mor(
     by_path = {normalize_path(p): p for p in candidates}
 
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
     now = int(time.time() * 1000)
     actions = _feature_upgrade_actions(
@@ -2734,9 +2705,7 @@ def update_table_mor(
         # the updated images carry their OLD ids in the materialized
         # column (read-side coalesce wins); the fresh bases below only
         # keep the every-tracked-add-has-a-base protocol invariant
-        base_ids, upd_config = _assign_base_row_ids(
-            table_path, files, upd_config
-        )
+        base_ids, upd_config = _assign_base_row_ids(files, snap.configuration)
         upd_config[MATERIALIZED_ROW_ID_KEY] = mat_col
         actions.append(
             metadata_action(
@@ -2806,11 +2775,11 @@ def replace_where(
     copy-on-write as ``delete_from``: untouched files stay metadata-
     only; only files actually containing matches are rewritten.
     """
-    _reject_identity_dml(table_path, "replaceWhere")
-    _reject_rewrite_on_row_tracking(table_path, "replaceWhere")
-    _reject_on_append_only(table_path, "replaceWhere")
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _reject_identity_dml(snap, "replaceWhere")
+    _reject_rewrite_on_row_tracking(snap, "replaceWhere")
+    _reject_on_append_only(snap, "replaceWhere")
+    _gate_write(snap)
     if not snap.files:
         raise ValueError(f"nothing to replace at {table_path}")
     violating = new_df.where(f"NOT ({predicate})").count()
@@ -2849,7 +2818,7 @@ def replace_where(
     commit_dirs += [new_dir] * len(new_files)
 
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
     now = int(time.time() * 1000)
     actions = [remove_action(p, now) for p in rewrite]
@@ -2898,17 +2867,17 @@ def update_table(
     Updated rows re-check CHECK constraints — an UPDATE may not
     invalidate the table's invariants.
     """
-    _reject_rewrite_on_row_tracking(table_path, "copy-on-write UPDATE")
-    _reject_on_append_only(table_path, "UPDATE")
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _reject_rewrite_on_row_tracking(snap, "copy-on-write UPDATE")
+    _reject_on_append_only(snap, "UPDATE")
+    _gate_write(snap)
     if not snap.files:
         raise ValueError(f"nothing to update at {table_path}")
     # UPDATE of non-identity columns preserves the existing identity
     # values (copy-on-write rewrites rows wholesale), so uniqueness
     # holds; only an assignment TARGETING the identity column could
     # mint duplicates — reject exactly that.
-    ident_hit = set(assignments) & set(_identity_specs(table_path))
+    ident_hit = set(assignments) & set(_identity_specs(snap))
     if ident_hit:
         raise ValueError(
             f"identity column(s) {sorted(ident_hit)} are GENERATED "
@@ -2951,13 +2920,13 @@ def update_table(
             for c in base.columns
         ]
     )
-    _enforce_constraints(updated, table_path)
+    _enforce_constraints(updated, snap)
     files, commit_dir = _stage_files(
         _to_physical(updated, snap.schema), table_path, pcols or None
     )
 
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
     now = int(time.time() * 1000)
     actions = [remove_action(p, now) for p in rewrite]
@@ -3007,7 +2976,7 @@ def shallow_clone(
                 snap.schema,
                 partition_columns=snap.partition_columns or None,
                 created_time=now,
-                configuration=table_configuration(src_table),
+                configuration=snap.configuration,
             )
         )
     actions.extend(
@@ -3065,7 +3034,7 @@ def deep_clone(
                 snap.schema,
                 partition_columns=snap.partition_columns or None,
                 created_time=now,
-                configuration=table_configuration(src_table),
+                configuration=snap.configuration,
             )
         )
     src_root = os.path.abspath(src_table)
@@ -3118,10 +3087,10 @@ def restore_table(table_path: str, version: int) -> int:
     old version contained), and files returning from the old snapshot
     carry its recorded deletionVector so purged-then-restored dead
     rows never resurrect."""
-    _reject_on_append_only(table_path, "RESTORE")
-    old = load_snapshot(table_path, version=version)
     cur = load_snapshot(table_path)
-    _gate_write(cur, table_path)
+    _reject_on_append_only(cur, "RESTORE")
+    old = load_snapshot(table_path, version=version)
+    _gate_write(cur)
     now = int(time.time() * 1000)
     actions: list[dict] = []
     if old.schema is not None:
@@ -3187,16 +3156,16 @@ def overwrite_partitions(df: DataFrame, table_path: str) -> int:
     """
     import time as _time
 
-    _reject_identity_dml(table_path, "dynamic partition overwrite")
-    _reject_rewrite_on_row_tracking(table_path, "dynamic partition overwrite")
-    _reject_on_append_only(table_path, "dynamic partition overwrite")
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
+    _reject_identity_dml(snap, "dynamic partition overwrite")
+    _reject_rewrite_on_row_tracking(snap, "dynamic partition overwrite")
+    _reject_on_append_only(snap, "dynamic partition overwrite")
+    _gate_write(snap)
     pcols = list(snap.partition_columns or [])
     if not pcols:
         raise ValueError(f"{table_path} is not partitioned")
-    df = _apply_generated_columns(df, table_path)
-    _enforce_constraints(df, table_path)
+    df = _apply_generated_columns(df, snap)
+    _enforce_constraints(df, snap)
     from pyspark.sql import functions as F
 
     # Encode incoming partition tuples Spark-side (cast to string) so
@@ -3222,7 +3191,7 @@ def overwrite_partitions(df: DataFrame, table_path: str) -> int:
         _to_physical(df, snap.schema), table_path, pcols
     )
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
     now = int(_time.time() * 1000)
     actions = [remove_action(p, now) for p in doomed]
@@ -3266,8 +3235,7 @@ def convert_to_delta(parquet_dir: str) -> int:
 
     from guidewire_spark.sources.fs import FileMeta
     from guidewire_spark.sources.schema import infer_schema_from_files
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(parquet_dir)
+    from guidewire_spark.sources.stats import footer_stats
 
     if os.path.isdir(os.path.join(parquet_dir, "_delta_log")):
         raise FileExistsError(f"{parquet_dir} is already a Delta table")
@@ -3298,7 +3266,7 @@ def convert_to_delta(parquet_dir: str) -> int:
     now = int(_time.time() * 1000)
     actions: list[dict] = [protocol_action(), metadata_action(schema, created_time=now)]
     actions += [
-        add_action(f.path, f.size, f.modification_time, stats=footer_stats(f.path, _sspec))
+        add_action(f.path, f.size, f.modification_time, stats=footer_stats(f.path))
         for f in sorted(files, key=lambda f: f.path)
     ]
     actions.append(
@@ -3315,7 +3283,6 @@ def table_detail(table_path: str) -> dict:
     file is opened. Mirrors Delta's column set where this engine has
     the information."""
     snap = load_snapshot(table_path)
-    config = table_configuration(table_path)
     return {
         "format": "delta",
         "id": snap.metadata_id,
@@ -3324,7 +3291,7 @@ def table_detail(table_path: str) -> dict:
         "sizeInBytes": sum(snap.file_sizes.get(p, 0) for p in snap.files),
         "partitionColumns": list(snap.partition_columns or []),
         "version": snap.version,
-        "properties": config,
+        "properties": dict(snap.configuration),
         "numRecords": snap.metadata_count(),  # None if any file lacks stats
     }
 
@@ -3400,7 +3367,7 @@ def vacuum_table(
         # vacuumProtocolCheck's contract: deleting files from a table
         # whose writer rules we don't understand is the most
         # destructive write there is — check before touching anything
-        _gate_write(snap, table_path)
+        _gate_write(snap)
     live = set(os.path.realpath(p) for p in snap.files) | recently_removed
     table_real = os.path.realpath(table_path)
     doomed: list[str] = []
@@ -3495,7 +3462,7 @@ def generate_symlink_manifest(table_path: str) -> list[str]:
     return out
 
 
-def _reject_identity_dml(table_path: str, op: str) -> None:
+def _reject_identity_dml(snap, op: str) -> None:
     """GENERATED ALWAYS AS IDENTITY uniqueness guard for the DML
     writers that INSERT rows (merge / replaceWhere / dynamic partition
     overwrite): they would accept user-supplied identity values and
@@ -3505,7 +3472,7 @@ def _reject_identity_dml(table_path: str, op: str) -> None:
     ``append_with_identity``.  (DELETE stays allowed — removing rows
     cannot duplicate values; UPDATE is guarded per-assignment at its
     call site.)"""
-    idents = _identity_specs(table_path)
+    idents = _identity_specs(snap)
     if idents:
         raise ValueError(
             f"table has identity column(s) {sorted(idents)}; {op} would "
@@ -3514,14 +3481,14 @@ def _reject_identity_dml(table_path: str, op: str) -> None:
         )
 
 
-def _identity_specs(table_path: str) -> dict[str, dict]:
-    """Identity column specs recorded in the table configuration."""
+def _identity_specs(snap) -> dict[str, dict]:
+    """Identity column specs recorded in the configuration of ``snap``."""
     import json as _json
 
     prefix = "delta.identity."
     return {
         k[len(prefix):]: _json.loads(v)
-        for k, v in table_configuration(table_path).items()
+        for k, v in snap.configuration.items()
         if k.startswith(prefix)
     }
 
@@ -3598,8 +3565,7 @@ def create_identity_table(
     if hw is None:
         hw = start - step  # empty create: the first append starts at start
 
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    from guidewire_spark.sources.stats import footer_stats
 
     now = int(time.time() * 1000)
     spec = {"start": start, "step": step, "highWaterMark": int(hw)}
@@ -3614,7 +3580,7 @@ def create_identity_table(
         ),
     ]
     actions += [
-        add_action(f.path, f.size, f.modification_time, stats=footer_stats(f.path, _sspec))
+        add_action(f.path, f.size, f.modification_time, stats=footer_stats(f.path))
         for f in files
     ]
     actions.append(
@@ -3645,9 +3611,9 @@ def append_with_identity(df: DataFrame, table_path: str) -> int:
     from pyspark.sql import functions as F
 
     snap = load_snapshot(table_path)
-    _gate_write(snap, table_path)
-    config = table_configuration(table_path)
-    idents = _identity_specs(table_path)
+    _gate_write(snap)
+    config = dict(snap.configuration)
+    idents = _identity_specs(snap)
     if not idents:
         raise ValueError(f"{table_path} has no identity columns")
     (name, spec), = idents.items()
@@ -3662,10 +3628,10 @@ def append_with_identity(df: DataFrame, table_path: str) -> int:
         raise ValueError(
             f"schema mismatch on identity append (extra={extra})"
         )
-    df = _apply_generated_columns(df, table_path)
+    df = _apply_generated_columns(df, snap)
     # the identity column is non-nullable but assigned BELOW — exempt
     # it from the absent-column NOT NULL rule
-    _enforce_constraints(df, table_path, absent_exempt={name})
+    _enforce_constraints(df, snap, absent_exempt={name})
     pcols = list(snap.partition_columns or [])
     base = spec["highWaterMark"] + spec["step"]
     assigned = df.withColumn(
@@ -3679,7 +3645,7 @@ def append_with_identity(df: DataFrame, table_path: str) -> int:
         hw = spec["highWaterMark"]  # empty batch: mark unchanged
 
     from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(table_path)
+    _sspec = stats_spec(snap.configuration)
 
     now = int(time.time() * 1000)
     new_spec = dict(spec, highWaterMark=int(hw))

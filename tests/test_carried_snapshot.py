@@ -8,7 +8,9 @@ what they just wrote.
 * equivalence — after every commit of a sequence that exercises each
   replay rule, the returned snapshot equals a cold ``load_snapshot``;
 * checkpoint rows — a checkpoint written from the carried snapshot is
-  row-for-row the one a replay would write.
+  row-for-row the one a replay would write;
+* one snapshot per writer operation — each loads the table it writes
+  once and checks and commits on that snapshot.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import types as T
 
 # Imported up front so no module binds a wrapper while one is installed.
@@ -248,3 +251,106 @@ def test_indexer_checkpoint_rows_equal_replay_checkpoint(tmp_path):
     assert pq.read_table(target).to_pylist() == carried_rows
     assert any(r["metaData"] for r in carried_rows)
     assert sum(1 for r in carried_rows if r["add"]) == 4
+
+
+def test_checkpoint_table_is_log_checkpointed_every_tenth_index(tmp_path):
+    """``_checkpoints`` follows the one checkpoint rule: after ten
+    ``index()`` runs (versions 0..9) it has a log checkpoint at 9."""
+    from guidewire_spark.sources.log_checkpoint import read_last_checkpoint
+
+    folders = {"claims": [("fpa", _BASE_TS)]}
+    manifest, db = _tree(tmp_path, folders, _BASE_TS + 1)
+    index(manifest, db, save_mode="overwrite")
+    for i in range(1, 10):
+        folders["claims"].append(("fpa", _BASE_TS + i))
+        manifest, db = _tree(tmp_path, folders, _BASE_TS + i + 1)
+        index(manifest, db, save_mode="append")
+    ckpt_table = os.path.join(db, CHECKPOINTS)
+    assert list_versions(ckpt_table) == list(range(10))
+    assert read_last_checkpoint(ckpt_table) == 9
+    assert checkpoints.load_checkpoints(db) == {"claims": _BASE_TS + 9}
+
+
+def _writer_ops():
+    """(name, setup(spark, t), op(spark, t, rows), max loads of ``t``)."""
+    from guidewire_spark.sources import writer as w
+
+    def nothing(spark, t):
+        pass
+
+    return [
+        ("append", nothing,
+         lambda spark, t, rows: w.write_delta(rows, t, mode="append"), 1),
+        ("append_row_tracked", lambda spark, t: w.enable_row_tracking(t),
+         lambda spark, t, rows: w.write_delta(rows, t, mode="append"), 1),
+        ("overwrite", nothing,
+         lambda spark, t, rows: w.write_delta(rows, t, mode="overwrite"), 1),
+        ("merge_into", nothing,
+         lambda spark, t, rows: w.merge_into(spark, t, rows, on="n_nationkey"), 1),
+        ("update_table_mor", nothing,
+         lambda spark, t, rows: w.update_table_mor(
+             spark, t, "n_nationkey = 1", {"n_name": "'X'"}), 1),
+        ("update_table", nothing,
+         lambda spark, t, rows: w.update_table(
+             spark, t, "n_nationkey = 1", {"n_name": "'X'"}), 1),
+        ("optimize_table", nothing,
+         lambda spark, t, rows: w.optimize_table(spark, t), 1),
+        ("delete_from", nothing,
+         lambda spark, t, rows: w.delete_from(spark, t, "n_nationkey = 2"), 1),
+        ("delete_from_mor", nothing,
+         lambda spark, t, rows: w.delete_from_mor(spark, t, "n_nationkey = 2"), 1),
+        ("set_table_properties", nothing,
+         lambda spark, t, rows: w.set_table_properties(t, {"k": "v"}), 1),
+        # its existing-rows check reads the table through read_delta
+        ("add_check_constraint", nothing,
+         lambda spark, t, rows: w.add_check_constraint(
+             spark, t, "key", "n_nationkey >= 0"), 2),
+    ]
+
+
+@pytest.mark.parametrize("name", [op[0] for op in _writer_ops()])
+def test_writer_operation_loads_its_table_once(
+    spark, sf_dir, tmp_path, monkeypatch, name
+):
+    """Every check of a writer operation reads the one snapshot its
+    commit is built on: the table is loaded at most once (twice for
+    ADD CONSTRAINT, whose data check is a ``read_delta``)."""
+    from pyspark.sql import functions as F
+
+    from guidewire_spark.plans.catalog import load_table
+    from guidewire_spark.sources.writer import write_delta
+
+    (_, setup, op, limit), = [o for o in _writer_ops() if o[0] == name]
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    t = str(tmp_path / "t")
+    write_delta(n.where(F.col("n_nationkey") < 10), t, mode="append")
+    write_delta(n.where(F.col("n_nationkey") >= 10), t, mode="append")
+    setup(spark, t)
+    version = load_snapshot(t).version
+    loads = _count_calls(monkeypatch, snapshot_mod.load_snapshot)
+
+    op(spark, t, n.where(F.col("n_nationkey") < 5))
+
+    assert loads.count("t") <= limit, loads
+    assert list_versions(t)[-1] == version + 1
+
+
+def test_index_with_stats_loads_each_table_once(tmp_path, monkeypatch):
+    """``index(collect_stats=True)`` takes the stats spec from the
+    carried snapshot, and reads its high-water marks from the same
+    ``_checkpoints`` snapshot it commits on: every table, the
+    checkpoint table included, is loaded at most once."""
+    folders = _initial_folders()
+    manifest, db = _tree(tmp_path, folders, _BASE_TS + 100)
+    index(manifest, db, save_mode="overwrite", collect_stats=True)
+    folders["claims"] += [("fpb", _BASE_TS + 200 + i) for i in range(3)]
+    folders["policies"] += [("fpc", _BASE_TS + 200 + i) for i in range(2)]
+    manifest, db = _tree(tmp_path, folders, _BASE_TS + 300)
+    loads = _count_calls(monkeypatch, snapshot_mod.load_snapshot)
+
+    index(manifest, db, save_mode="append", collect_stats=True)
+
+    assert sorted(loads) == ["_checkpoints", "claims", "policies"]
+    assert list_versions(os.path.join(db, "claims")) == list(range(15))
+    claims = load_snapshot(os.path.join(db, "claims"))
+    assert all(claims.file_stats[p] for p in claims.files)

@@ -222,7 +222,7 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
             add_action("/elsewhere/ours.parquet", 1, 0),
         ]
 
-    v = commit_transaction(t, append_with_race)
+    v = commit_transaction(base, append_with_race).version
     assert v == base.version + 2  # rebased past the winner
     assert calls["n"] == 2  # actions rebuilt against the fresh snapshot
     snap = load_snapshot(t)
@@ -243,7 +243,7 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
         ]
 
     with _pytest.raises(ConcurrentDeleteException, match="rewrote"):
-        commit_transaction(t, remove_with_conflict)
+        commit_transaction(load_snapshot(t), remove_with_conflict)
 
     def append_behind_metadata_change(snap):
         write_commit(
@@ -267,7 +267,7 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
         ]
 
     with _pytest.raises(MetadataChangedException, match="changed table metadata"):
-        commit_transaction(t, append_behind_metadata_change)
+        commit_transaction(load_snapshot(t), append_behind_metadata_change)
     final = load_snapshot(t)
     # the losing transactions never half-landed: the conflicted DELETE
     # did not re-remove, the conflicted append's file is absent, and

@@ -568,7 +568,7 @@ def test_txn_high_water_survives_checkpoint_and_log_expiry(spark, sf_dir, tmp_pa
         write_log_checkpoint_v2,
     )
     from guidewire_spark.sources.snapshot import load_snapshot, read_delta
-    from guidewire_spark.sources.writer import last_txn_version, write_delta
+    from guidewire_spark.sources.writer import write_delta
 
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     t = str(tmp_path / "txnret")
@@ -584,8 +584,7 @@ def test_txn_high_water_survives_checkpoint_and_log_expiry(spark, sf_dir, tmp_pa
     write_log_checkpoint_v2(load_snapshot(t))
     write_delta(n.limit(0), t, mode="append")  # a tail commit to keep
     expire_log(t, keep_versions=1)
-    assert last_txn_version(t, "loader") == 7  # seeded from checkpoint
-    assert load_snapshot(t).txns == {"loader": 7}
+    assert load_snapshot(t).txns == {"loader": 7}  # seeded from checkpoint
     # the retry: same app at same version — MUST be a no-op
     v = write_delta(
         n, t, mode="append", txn_app_id="loader", txn_version=7
@@ -706,3 +705,39 @@ def test_checkpoint_of_older_version_carries_that_versions_configuration(tmp_pat
     assert [m["configuration"] for m in meta] == [[]]
     assert load_snapshot(table, version=1).configuration == {}
     assert load_snapshot(table).configuration == {"delta.appendOnly": "true"}
+
+
+def test_writer_tables_checkpoint_every_tenth_version_by_default(
+    spark, sf_dir, tmp_path
+):
+    """Delta's default ``delta.checkpointInterval`` of 10 applies to a
+    table that never set it: 12 appends leave a checkpoint at version
+    9, and the checkpoint-seeded replay equals a JSON-only replay."""
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
+    from guidewire_spark.plans.catalog import load_table
+    from guidewire_spark.sources.snapshot import (
+        _read_commit,
+        apply_actions,
+        empty_snapshot,
+        load_snapshot,
+    )
+    from guidewire_spark.sources.writer import write_delta
+
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    t = str(tmp_path / "default_interval")
+    for i in range(12):
+        write_delta(n.where(F.col("n_nationkey") % 12 == i), t, mode="append")
+    assert read_last_checkpoint(t) == 9
+    assert os.path.isfile(checkpoint_path(t, 9))
+    json_replay = empty_snapshot(t)
+    for v in list_versions(t):
+        apply_actions(json_replay, v, _read_commit(t, v))
+    json_replay.files = sorted(json_replay.file_stats)
+    seeded = load_snapshot(t)
+    assert seeded.version == json_replay.version == 11
+    assert dataclasses.replace(seeded, commit_timestamps={}) == (
+        dataclasses.replace(json_replay, commit_timestamps={})
+    )

@@ -16,8 +16,8 @@ from guidewire_spark.operators.warehouse_ext import (
 )
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.sources.deltalog import last_version
-from guidewire_spark.sources.snapshot import read_delta
-from guidewire_spark.sources.writer import last_txn_version, write_delta
+from guidewire_spark.sources.snapshot import load_snapshot, read_delta
+from guidewire_spark.sources.writer import write_delta
 
 
 def test_idempotent_write_retry_is_noop(spark, sf_dir):
@@ -38,9 +38,10 @@ def test_idempotent_write_retry_is_noop(spark, sf_dir):
     assert v4 == v1 + 1
     v5 = write_delta(r, table, mode="append", txn_app_id="other", txn_version=1)
     assert v5 == v4 + 1
-    assert last_txn_version(table, "app") == 8
-    assert last_txn_version(table, "other") == 1
-    assert last_txn_version(table, "absent") is None
+    txns = load_snapshot(table).txns
+    assert txns.get("app") == 8
+    assert txns.get("other") == 1
+    assert txns.get("absent") is None
 
 
 def test_bootstrap_ci_brackets_clt_interval(spark, sf_dir):

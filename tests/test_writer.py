@@ -448,6 +448,43 @@ def test_concurrent_blind_appends_all_land(spark, sf_dir, tmp_path):
     assert read_delta(spark, table).count() == r.count() + 6
 
 
+@pytest.mark.parametrize("winner", ["check_constraint", "row_tracking"])
+def test_blind_append_does_not_rebase_past_a_metadata_change(
+    spark, tmp_path, monkeypatch, winner
+):
+    """A blind append whose commit loses to a metadata change that
+    landed while its files were staging must not rebase: its rows were
+    checked against the old snapshot (no CHECK constraint, no row
+    tracking). It raises MetadataChangedException and commits
+    nothing."""
+    from guidewire_spark.sources import writer
+    from guidewire_spark.sources.deltalog import MetadataChangedException
+    from guidewire_spark.sources.writer import (
+        add_check_constraint,
+        enable_row_tracking,
+    )
+
+    table = str(tmp_path / "race")
+    write_delta(spark.range(5), table, mode="append")
+    real_stage = writer._stage_files
+
+    def stage_then_race(df, table_path, partition_by=None):
+        staged = real_stage(df, table_path, partition_by)
+        monkeypatch.setattr(writer, "_stage_files", real_stage)
+        if winner == "check_constraint":
+            add_check_constraint(spark, table, "small_id", "id < 100")
+        else:
+            enable_row_tracking(table)
+        return staged
+
+    monkeypatch.setattr(writer, "_stage_files", stage_then_race)
+    with pytest.raises(MetadataChangedException):
+        write_delta(spark.range(500, 505), table, mode="append")
+    assert list_versions(table) == [0, 1]  # only the winner committed
+    assert read_delta(spark, table).where("id >= 500").count() == 0
+    assert read_delta(spark, table).count() == 5
+
+
 def test_vacuum_retention_protects_recent_removes(spark, sf_dir, tmp_path):
     table = str(tmp_path / "vac_ret")
     r = load_table(spark, sf_dir, "region")
@@ -634,7 +671,7 @@ def test_check_constraints_enforced_on_write(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="existing rows violate"):
         add_check_constraint(spark, table, "huge_bal", "acctbal > 100000")
     add_check_constraint(spark, table, "valid_key", "s_suppkey >= 0")
-    assert table_constraints(table) == {"valid_key": "s_suppkey >= 0"}
+    assert table_constraints(load_snapshot(table)) == {"valid_key": "s_suppkey >= 0"}
 
     bad = spark.createDataFrame(
         [(-1, "BAD", 1.0)], "s_suppkey long, s_name string, acctbal double"
@@ -651,12 +688,12 @@ def test_check_constraints_enforced_on_write(spark, sf_dir, tmp_path):
     # constraint survives a schema-evolving append
     evolved = ok.withColumn("note", F.lit("x"))
     write_delta(evolved, table, mode="append", merge_schema=True)
-    assert table_constraints(table) == {"valid_key": "s_suppkey >= 0"}
+    assert table_constraints(load_snapshot(table)) == {"valid_key": "s_suppkey >= 0"}
     with pytest.raises(ValueError, match="CHECK constraint violation"):
         write_delta(bad, table, mode="append")
 
     drop_check_constraint(table, "valid_key")
-    assert table_constraints(table) == {}
+    assert table_constraints(load_snapshot(table)) == {}
     write_delta(bad, table, mode="append")  # no longer enforced
     assert read_delta(spark, table).where(F.col("s_suppkey") == -1).count() == 1
 
@@ -678,7 +715,7 @@ def test_generated_columns(spark, sf_dir, tmp_path):
         partition_by=["order_year"],
         generated_columns={"order_year": "year(o_orderdate)"},
     )
-    assert table_generated_columns(table) == {"order_year": "year(o_orderdate)"}
+    assert table_generated_columns(load_snapshot(table)) == {"order_year": "year(o_orderdate)"}
     got = read_delta(spark, table)
     assert "order_year" in got.columns
     assert got.where("order_year = year(o_orderdate)").count() == got.count()
@@ -827,6 +864,31 @@ def test_update_rewrites_only_hit_files(spark, sf_dir, tmp_path):
         update_table(spark, table, f"s_suppkey = {mid_key}", {"acctbal": "2000000"})
     with pytest.raises(ValueError, match="matches no rows"):
         update_table(spark, table, "s_suppkey = -42", {"acctbal": "0"})
+
+
+def test_time_travel_clone_carries_that_versions_configuration(
+    spark, sf_dir, tmp_path
+):
+    """A clone of version 0 carries version 0's table configuration,
+    not a property set later (both clone kinds)."""
+    from guidewire_spark.sources.writer import (
+        deep_clone,
+        set_table_properties,
+        shallow_clone,
+    )
+
+    src = str(tmp_path / "src")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    write_delta(n, src, mode="append")
+    set_table_properties(src, {"delta.appendOnly": "true"})
+    shallow_clone(src, str(tmp_path / "shallow0"), version=0)
+    deep_clone(spark, src, str(tmp_path / "deep0"), version=0)
+    assert load_snapshot(str(tmp_path / "shallow0")).configuration == {}
+    assert load_snapshot(str(tmp_path / "deep0")).configuration == {}
+    shallow_clone(src, str(tmp_path / "shallow1"))
+    assert load_snapshot(str(tmp_path / "shallow1")).configuration == {
+        "delta.appendOnly": "true"
+    }
 
 
 def test_shallow_clone_zero_copy(spark, sf_dir, tmp_path):
@@ -1431,7 +1493,7 @@ def test_cluster_by_declares_and_optimize_maintains(spark, sf_dir, tmp_path):
     assert _json.loads(mid.domains["delta.clustering"]) == {
         "clusteringColumns": ["o_orderkey", "o_totalprice"]
     }
-    assert clustering_columns(table) == ["o_orderkey", "o_totalprice"]
+    assert clustering_columns(load_snapshot(table)) == ["o_orderkey", "o_totalprice"]
     optimize_table(spark, table, target_files=16)       # no explicit cols
     after = load_snapshot(table)
     assert read_delta(spark, table).count() == o.count()
@@ -1449,7 +1511,7 @@ def test_cluster_by_declares_and_optimize_maintains(spark, sf_dir, tmp_path):
     # CLUSTER BY NONE: the next OPTIMIZE is a plain compaction again
     set_clustering_columns(table, [])
     assert "delta.clustering" not in load_snapshot(table).domains
-    assert clustering_columns(table) == []
+    assert clustering_columns(load_snapshot(table)) == []
     # validation: unknown / partition columns rejected
     import pytest as _pytest
 
@@ -1576,7 +1638,7 @@ def test_clustering_domain_survives_checkpoint_and_legacy_key_honored(
     assert _json.loads(snap.domains["delta.clustering"]) == {
         "clusteringColumns": ["n_nationkey"]
     }
-    assert clustering_columns(table) == ["n_nationkey"]
+    assert clustering_columns(load_snapshot(table)) == ["n_nationkey"]
 
     # legacy spelling: config key only, no domain
     legacy = str(tmp_path / "legacy")
@@ -1597,7 +1659,7 @@ def test_clustering_domain_survives_checkpoint_and_legacy_key_honored(
         W._FEATURE_MANAGED_KEYS["delta.clusteringColumns"] = (
             "set_clustering_columns"
         )
-    assert clustering_columns(legacy) == ["n_nationkey"]
+    assert clustering_columns(load_snapshot(legacy)) == ["n_nationkey"]
 
 
 def test_append_only_refuses_row_removal_everywhere(spark, sf_dir, tmp_path):
