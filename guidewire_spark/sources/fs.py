@@ -139,3 +139,13 @@ def list_parquet_files(directory: str) -> list[FileMeta]:
                     )
                 )
     return sorted(out, key=lambda f: f.path)
+
+
+def walk_parquet_files(directory: str) -> list[FileMeta]:
+    """``list_parquet_files`` over a local directory and every directory
+    below it (hive-style ``col=value`` partition trees), sorted by
+    path."""
+    out: list[FileMeta] = []
+    for root, _dirs, _names in os.walk(directory):
+        out += list_parquet_files(root)
+    return sorted(out, key=lambda f: f.path)

@@ -21,6 +21,15 @@ everything (protocol gate, appendOnly, identity, constraints,
 generated columns, defaults, row tracking, stats spec) against that
 snapshot, and commits on it with ``write_commit(snap, ...)``: the
 helpers take the snapshot, never a path to reload.
+
+``stage_add_actions(df, snap, ...)`` is the only way an operation turns
+the data it writes into ``add`` actions (``convert_to_delta``, which
+writes nothing, hands its listed files to the same
+``_new_file_adds``): stats under the snapshot's stats spec, hive
+``partitionValues``, and on row-tracked tables ``baseRowId``s above the
+high-water mark, whose bumped configuration the operation commits in
+the same commit.  ``tests/test_staging_guard.py`` fails on a hand-built
+copy.
 """
 
 from __future__ import annotations
@@ -43,7 +52,7 @@ from guidewire_spark.sources.deltalog import (
     remove_action,
     write_commit,
 )
-from guidewire_spark.sources.fs import list_parquet_files
+from guidewire_spark.sources.fs import walk_parquet_files
 from guidewire_spark.sources.snapshot import (
     empty_snapshot,
     load_snapshot,
@@ -56,32 +65,14 @@ def _stage_files(
 ) -> tuple[list, str]:
     """Physically write df as parquet into a per-commit subdirectory of
     the table (unique name → concurrent commits never collide).
-    Returns (files, commit_dir); partitioned writes walk the hive-style
-    ``col=value`` tree."""
+    Returns (files, commit_dir); partitioned writes land in the
+    hive-style ``col=value`` tree below it."""
     commit_dir = os.path.join(table_path, f"data-{uuid.uuid4().hex[:12]}")
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(commit_dir)
-    if not partition_by:
-        return list_parquet_files(commit_dir), commit_dir
-    from guidewire_spark.sources.fs import FileMeta
-
-    out = []
-    for root, _dirs, names in os.walk(commit_dir):
-        for name in names:
-            if name.endswith(".parquet") and not name.startswith("."):
-                full = os.path.join(root, name)
-                st = os.stat(full)
-                if st.st_size > 0:
-                    out.append(
-                        FileMeta(
-                            path=os.path.abspath(full),
-                            size=st.st_size,
-                            modification_time=int(st.st_mtime * 1000),
-                        )
-                    )
-    return out, commit_dir
+    return walk_parquet_files(commit_dir), commit_dir
 
 
 def _partition_values(
@@ -100,6 +91,146 @@ def _partition_values(
             )
     return {c: values.get(c) for c in partition_by}
 
+
+class _StagedAdds(list):
+    """The ``add`` actions of newly written data files, plus
+    ``configuration``: the table configuration their commit carries —
+    the snapshot's own, or on a row-tracked table a copy whose id
+    high-water mark moved past the files' ``baseRowId`` ranges (ids and
+    mark land in ONE commit, the identity-column discipline)."""
+
+    def __init__(self, adds: list[dict], configuration: dict):
+        super().__init__(adds)
+        self.configuration = configuration
+
+
+def _new_file_adds(
+    snap,
+    files,
+    partition_by: list[str] | None = None,
+    commit_dir: str | None = None,
+    data_change: bool = True,
+) -> _StagedAdds:
+    """The one way a newly written data file becomes an ``add`` action
+    of the table of ``snap``: footer stats under the snapshot's stats
+    spec, hive ``partitionValues`` recovered from the file's path below
+    ``commit_dir``, and on a row-tracked snapshot a fresh ``baseRowId``
+    above the high-water mark (the bumped mark is the returned
+    ``configuration``)."""
+    from guidewire_spark.sources.stats import footer_stats, stats_spec
+
+    spec = stats_spec(snap.configuration)
+    base_ids: dict[str, int] = {}
+    config = snap.configuration
+    if _row_tracking_enabled(snap):
+        base_ids, config = _assign_base_row_ids(files, config)
+    adds = []
+    for f in files:
+        add = add_action(
+            f.path,
+            f.size,
+            f.modification_time,
+            stats=footer_stats(f.path, spec),
+            partition_values=(
+                _partition_values(f.path, commit_dir, partition_by)
+                if partition_by
+                else None
+            ),
+            base_row_id=base_ids.get(f.path),
+        )
+        add["add"]["dataChange"] = data_change
+        adds.append(add)
+    return _StagedAdds(adds, config)
+
+
+def stage_add_actions(
+    df: DataFrame,
+    snap,
+    partition_by: list[str] | None = None,
+    *,
+    data_change: bool = True,
+) -> _StagedAdds:
+    """Stage ``df`` as parquet files under the table of the snapshot
+    ``snap`` (unique per-call subdirectory — concurrent stagers never
+    collide) and return their ``add`` actions WITHOUT committing.
+    Every writer operation builds the adds of the files it writes
+    here; the commit goes on the same ``snap`` and carries the returned
+    ``configuration`` when the table is row-tracked.  Also the building
+    block for optimistic-concurrency flows
+    (deltalog.commit_transaction on the same ``snap``): data lands
+    first, the log race is fought over metadata only, and a losing
+    transaction's rebase re-commits the SAME staged files."""
+    files, commit_dir = _stage_files(df, snap.table_path, partition_by)
+    return _new_file_adds(snap, files, partition_by, commit_dir, data_change)
+
+
+def _commit_info(
+    operation: str, mode: str, adds: list[dict], now: int, blind: bool = False
+) -> dict:
+    """commitInfo whose operationMetrics count the commit's new files."""
+    return commit_info_action(
+        operation,
+        mode,
+        blind,
+        len(adds),
+        sum(a["add"]["size"] for a in adds),
+        now,
+    )
+
+
+def _table_metadata(snap, now: int, schema=None, configuration=None) -> dict:
+    """metaData action re-recording the table of ``snap`` (same id and
+    partitioning) with ``schema`` / ``configuration`` replacing the
+    snapshot's own."""
+    return metadata_action(
+        snap.schema if schema is None else schema,
+        partition_columns=snap.partition_columns or None,
+        created_time=now,
+        table_id=snap.metadata_id,
+        configuration=snap.configuration if configuration is None else configuration,
+    )
+
+
+def _removes(paths, now: int, data_change: bool = True) -> list[dict]:
+    """``remove`` actions for ``paths``; compaction passes
+    ``data_change=False`` (same rows before and after)."""
+    out = [remove_action(p, now) for p in paths]
+    for r in out:
+        r["remove"]["dataChange"] = data_change
+    return out
+
+
+def _live_add(snap, path: str, now: int, data_change: bool = True, **changes) -> dict:
+    """``add`` re-recording the live file ``path`` of ``snap`` with its
+    recorded size, stats, partition values, deletion vector and base
+    row id, ``changes`` (``deletion_vector=``, ``base_row_id=``)
+    replacing them."""
+    fields = {
+        "stats": snap.file_stats.get(path),
+        "partition_values": snap.file_partitions.get(path),
+        "deletion_vector": snap.file_dvs.get(path),
+        "base_row_id": snap.file_base_rows.get(path),
+        **changes,
+    }
+    add = add_action(path, snap.file_sizes.get(path, 0), now, **fields)
+    add["add"]["dataChange"] = data_change
+    return add
+
+
+def _vector_swaps(snap, scanned, vectors: dict[str, dict], now: int) -> list[dict]:
+    """remove + re-add of every file whose deletion vector changed:
+    ``vectors`` maps the normalized path of each touched file among the
+    ``scanned`` live files of ``snap`` to its new descriptor
+    (dv.encode_dead_rows)."""
+    from guidewire_spark.sources.dv import normalize_path
+
+    by_path = {normalize_path(p): p for p in scanned}
+    out = []
+    for key, descriptor in sorted(vectors.items()):
+        path = by_path[key]
+        out.append(remove_action(path, now, size=snap.file_sizes.get(path)))
+        out.append(_live_add(snap, path, now, deletion_vector=descriptor))
+    return out
 
 
 def _uri_file_key(uri: str) -> str:
@@ -391,17 +522,10 @@ def add_check_constraint(
         raise ValueError(
             f"existing rows violate CHECK ({expr}); constraint not added"
         )
-    config = dict(snap.configuration)
-    config[f"delta.constraints.{name}"] = expr
+    config = {**snap.configuration, f"delta.constraints.{name}": expr}
     now = int(time.time() * 1000)
     actions = [
-        metadata_action(
-            snap.schema,
-            partition_columns=snap.partition_columns or None,
-            created_time=now,
-            table_id=snap.metadata_id,
-            configuration=config,
-        ),
+        _table_metadata(snap, now, configuration=config),
         commit_info_action(
             "ADD CONSTRAINT", f"{name} CHECK ({expr})", False, 0, 0, now
         ),
@@ -422,13 +546,7 @@ def drop_check_constraint(table_path: str, name: str) -> int:
     _gate_write(snap)
     now = int(time.time() * 1000)
     actions = [
-        metadata_action(
-            snap.schema,
-            partition_columns=snap.partition_columns or None,
-            created_time=now,
-            table_id=snap.metadata_id,
-            configuration=config,
-        ),
+        _table_metadata(snap, now, configuration=config),
         commit_info_action("DROP CONSTRAINT", name, False, 0, 0, now),
     ]
     write_commit(snap, actions=actions)
@@ -492,17 +610,10 @@ def rename_column(table_path: str, old: str, new: str) -> int:
             fields.append(T.StructField(new, f.dataType, f.nullable, md))
         else:
             fields.append(f)
-    config = dict(snap.configuration)
-    config["delta.columnMapping.mode"] = "name"
+    config = {**snap.configuration, "delta.columnMapping.mode": "name"}
     now = int(time.time() * 1000)
     actions = [
-        metadata_action(
-            T.StructType(fields),
-            partition_columns=snap.partition_columns or None,
-            created_time=now,
-            table_id=snap.metadata_id,
-            configuration=config,
-        ),
+        _table_metadata(snap, now, T.StructType(fields), config),
         commit_info_action("RENAME COLUMN", f"{old} -> {new}", False, 0, 0, now),
     ] + _feature_upgrade_actions(
         snap, reader={"columnMapping"}, writer={"columnMapping"}
@@ -567,13 +678,7 @@ def add_column(
     )
     now = int(time.time() * 1000)
     actions = [
-        metadata_action(
-            new_schema,
-            partition_columns=snap.partition_columns or None,
-            created_time=now,
-            table_id=snap.metadata_id,
-            configuration=snap.configuration,
-        ),
+        _table_metadata(snap, now, new_schema),
         commit_info_action(
             "ADD COLUMNS", f"{name} {type_str}", False, 0, 0, now
         ),
@@ -620,13 +725,7 @@ def widen_column_type(table_path: str, column: str, new_type: str) -> int:
     ]
     now = int(time.time() * 1000)
     actions = [
-        metadata_action(
-            T.StructType(fields),
-            partition_columns=snap.partition_columns or None,
-            created_time=now,
-            table_id=snap.metadata_id,
-            configuration=snap.configuration,
-        ),
+        _table_metadata(snap, now, T.StructType(fields)),
         commit_info_action(
             "ALTER COLUMN",
             f"{column}: {old_f.dataType.simpleString()} -> "
@@ -666,16 +765,14 @@ def drop_column(table_path: str, name: str) -> int:
                     f"column {name!r} is referenced by {label} {cname!r}; "
                     "drop it first"
                 )
-    config = dict(snap.configuration)
-    config["delta.columnMapping.mode"] = "name"
+    config = {**snap.configuration, "delta.columnMapping.mode": "name"}
     now = int(time.time() * 1000)
     actions = [
-        metadata_action(
+        _table_metadata(
+            snap,
+            now,
             T.StructType([f for f in snap.schema.fields if f.name != name]),
-            partition_columns=snap.partition_columns or None,
-            created_time=now,
-            table_id=snap.metadata_id,
-            configuration=config,
+            config,
         ),
         commit_info_action("DROP COLUMN", name, False, 0, 0, now),
     ] + _feature_upgrade_actions(
@@ -857,7 +954,7 @@ def write_delta(
             # — exactly Delta's binPacking-at-write behavior, and a
             # no-op degradation when AQE is off (hint ignored)
             df = df.hint("rebalance")
-    files, commit_dir = _stage_files(df, table_path, partition_by)
+    adds = stage_add_actions(df, base, partition_by)
     now = int(time.time() * 1000)
     actions: list[dict] = []
     if prev is None:
@@ -898,102 +995,52 @@ def write_delta(
         )
         op_mode, blind = "Overwrite" if mode == "overwrite" else "Append", False
     elif mode == "overwrite":
-        snap = base
         actions.append(
             metadata_action(
                 df.schema,
                 partition_columns=partition_by,
                 created_time=now,
-                table_id=snap.metadata_id,
-                configuration=snap.configuration,
+                table_id=base.metadata_id,
+                configuration=adds.configuration,
             )
         )
-        actions.extend(remove_action(p, now) for p in snap.files)
+        actions.extend(_removes(base.files, now))
         op_mode, blind = "Overwrite", False
     else:
-        snap = base
-        if snap.schema is not None and snap.schema != incoming_schema:
+        schema = base.schema
+        if schema is not None and schema != incoming_schema:
             if not merge_schema:
-                missing = {f.name for f in snap.schema.fields} - {
+                missing = {f.name for f in schema.fields} - {
                     f.name for f in incoming_schema.fields
                 }
                 extra = {f.name for f in incoming_schema.fields} - {
-                    f.name for f in snap.schema.fields
+                    f.name for f in schema.fields
                 }
                 # narrower incoming types into a previously-widened
                 # table are fine without merge_schema (read-time
                 # upcast); anything else mismatched still raises
                 if extra or any(
                     f.name not in missing
-                    and snap.schema[f.name].dataType != f.dataType
-                    and not _is_widening(
-                        f.dataType, snap.schema[f.name].dataType
-                    )
+                    and schema[f.name].dataType != f.dataType
+                    and not _is_widening(f.dataType, schema[f.name].dataType)
                     for f in incoming_schema.fields
-                    if f.name in {g.name for g in snap.schema.fields}
+                    if f.name in {g.name for g in schema.fields}
                 ):
                     raise ValueError(
                         f"schema mismatch on append (extra={sorted(extra)}); "
                         "pass merge_schema=True for additive evolution"
                     )
             else:
-                merged = _merged_schema(snap.schema, incoming_schema)
-                if merged != snap.schema:
-                    actions.append(
-                        metadata_action(
-                            merged,
-                            partition_columns=snap.partition_columns or None,
-                            created_time=now,
-                            table_id=snap.metadata_id,
-                            configuration=snap.configuration,
-                        )
-                    )
-        # a schema-evolving commit is not a blind append
+                schema = _merged_schema(schema, incoming_schema)
+        if schema != base.schema or _row_tracking_enabled(base):
+            # one metaData carries the evolved schema and the row-id
+            # high-water mark the staged adds moved (a second metaData
+            # would win the replay and clobber the first)
+            actions.append(_table_metadata(base, now, schema, adds.configuration))
+        # an evolving or row-id-assigning commit is not a blind append:
+        # it was built from table state, so it must not rebase
         op_mode, blind = "Append", not actions
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(base.configuration)
-
-    base_ids: dict[str, int] = {}
-    if _row_tracking_enabled(base):
-        # row tracking: fresh ids above the high-water mark, assigned
-        # in the same commit that adds the files; the bumped mark
-        # rides a metadata action, and the commit pins the snapshot
-        # version (blind-append retry could interleave two writers'
-        # id ranges)
-        base_ids, config = _assign_base_row_ids(files, base.configuration)
-        existing_meta = next((a for a in actions if "metaData" in a), None)
-        if existing_meta is not None:
-            # a schema-evolution metadata action is already in this
-            # commit: carry the bumped mark on IT (a second metaData
-            # would win the replay and clobber the evolved schema)
-            existing_meta["metaData"]["configuration"] = config
-        else:
-            actions.append(
-                metadata_action(
-                    base.schema,
-                    partition_columns=base.partition_columns or None,
-                    created_time=now,
-                    table_id=base.metadata_id,
-                    configuration=config,
-                )
-            )
-        blind = False
-
-    actions.extend(
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=(
-                _partition_values(f.path, commit_dir, partition_by)
-                if partition_by
-                else None
-            ),
-            base_row_id=base_ids.get(f.path),
-        )
-        for f in files
-    )
+    actions.extend(adds)
     if txn_app_id is not None:
         actions.append(
             {
@@ -1004,11 +1051,7 @@ def write_delta(
                 }
             }
         )
-    actions.append(
-        commit_info_action(
-            "WRITE", op_mode, blind, len(files), sum(f.size for f in files), now
-        )
-    )
+    actions.append(_commit_info("WRITE", op_mode, adds, now, blind))
     if blind:
         # a blind append rebases past concurrent appends (the staged
         # files are untouched) but not past a metadata change
@@ -1226,50 +1269,22 @@ def optimize_table(
         df = df.repartition(*pcols)
     else:
         df = df.coalesce(target_files)
-    files, commit_dir = _stage_files(
-        _to_physical(df, snap.schema), table_path, pcols or None
+    adds = stage_add_actions(
+        _to_physical(df, snap.schema), snap, pcols or None, data_change=False
     )
     now = int(time.time() * 1000)
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
     actions = []
-    base_ids: dict[str, int] = {}
     if tracked:
-        base_ids, opt_config = _assign_base_row_ids(files, snap.configuration)
-        opt_config[MATERIALIZED_ROW_ID_KEY] = mat_col
         actions.append(
-            metadata_action(
-                snap.schema,
-                partition_columns=snap.partition_columns or None,
-                created_time=now,
-                table_id=snap.metadata_id,
-                configuration=opt_config,
+            _table_metadata(
+                snap,
+                now,
+                configuration={**adds.configuration, MATERIALIZED_ROW_ID_KEY: mat_col},
             )
         )
-    actions += [remove_action(p, now) for p in victims]
-    actions += [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=(
-                _partition_values(f.path, commit_dir, pcols) if pcols else None
-            ),
-            base_row_id=base_ids.get(f.path),
-        )
-        for f in files
-    ]
-    for a in actions:
-        key = "add" if "add" in a else ("remove" if "remove" in a else None)
-        if key:
-            a[key]["dataChange"] = False
-    actions.append(
-        commit_info_action(
-            "OPTIMIZE", "Compaction", False, len(files), sum(f.size for f in files), now
-        )
-    )
+    actions += _removes(victims, now, data_change=False)
+    actions += adds
+    actions.append(_commit_info("OPTIMIZE", "Compaction", adds, now))
     # Commit at the version AFTER the snapshot we read: if anything
     # committed in between, write_commit's O_EXCL collides and the
     # conflict surfaces instead of silently resurrecting stale state
@@ -1393,43 +1408,12 @@ def merge_into(
                         f.name, F.lit(None).cast(f.dataType)
                     )
             merged = merged.select(*out_cols)
-    files, commit_dir = _stage_files(
-        _to_physical(merged, out_schema), table_path, pcols or None
-    )
-
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
+    adds = stage_add_actions(_to_physical(merged, out_schema), snap, pcols or None)
     now = int(time.time() * 1000)
-    actions = []
-    if evolved is not None:
-        actions.append(
-            metadata_action(
-                evolved,
-                partition_columns=snap.partition_columns or None,
-                created_time=now,
-                table_id=snap.metadata_id,
-                configuration=snap.configuration,
-            )
-        )
-    actions += [remove_action(p, now) for p in candidates]
-    actions += [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=(
-                _partition_values(f.path, commit_dir, pcols) if pcols else None
-            ),
-        )
-        for f in files
-    ]
-    actions.append(
-        commit_info_action(
-            "MERGE", "Upsert", False, len(files), sum(f.size for f in files), now
-        )
-    )
+    actions = [_table_metadata(snap, now, evolved)] if evolved is not None else []
+    actions += _removes(candidates, now)
+    actions += adds
+    actions.append(_commit_info("MERGE", "Upsert", adds, now))
     # snapshot-version commit: intervening writers collide, not clobber
     write_commit(snap, actions=actions)
     return snap.version + 1
@@ -1508,45 +1492,13 @@ def _merge_insert_only(
     merged = _to_physical(merged, out_schema)
     _enforce_constraints(merged, snap)
 
-    files, commit_dir = _stage_files(merged, table_path, pcols or None)
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
+    adds = stage_add_actions(merged, snap, pcols or None)
     now = int(time.time() * 1000)
     actions: list[dict] = []
-    config = snap.configuration
-    base_ids: dict[str, int] = {}
-    if _row_tracking_enabled(snap):
-        base_ids, config = _assign_base_row_ids(files, config)
-    if evolved is not None or base_ids:
-        actions.append(
-            metadata_action(
-                evolved or snap.schema,
-                partition_columns=snap.partition_columns or None,
-                created_time=now,
-                table_id=snap.metadata_id,
-                configuration=config,
-            )
-        )
-    actions += [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=(
-                _partition_values(f.path, commit_dir, pcols) if pcols else None
-            ),
-            base_row_id=base_ids.get(f.path),
-        )
-        for f in files
-    ]
-    actions.append(
-        commit_info_action(
-            "MERGE", "Insert-only", False, len(files),
-            sum(f.size for f in files), now,
-        )
-    )
+    if evolved is not None or (adds and _row_tracking_enabled(snap)):
+        actions.append(_table_metadata(snap, now, evolved, adds.configuration))
+    actions += adds
+    actions.append(_commit_info("MERGE", "Insert-only", adds, now))
     write_commit(snap, actions=actions)
     return snap.version + 1
 
@@ -1806,40 +1758,12 @@ def merge_clauses(
     merged = _to_physical(merged, out_schema)
     _enforce_constraints(merged, snap)
 
-    files, commit_dir = _stage_files(merged, table_path, pcols or None)
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
+    adds = stage_add_actions(merged, snap, pcols or None)
     now = int(time.time() * 1000)
-    actions = []
-    if evolved is not None:
-        actions.append(
-            metadata_action(
-                evolved,
-                partition_columns=snap.partition_columns or None,
-                created_time=now,
-                table_id=snap.metadata_id,
-                configuration=snap.configuration,
-            )
-        )
-    actions += [remove_action(p, now) for p in candidates]
-    actions += [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=(
-                _partition_values(f.path, commit_dir, pcols) if pcols else None
-            ),
-        )
-        for f in files
-    ]
-    actions.append(
-        commit_info_action(
-            "MERGE", "Merge", False, len(files), sum(f.size for f in files), now
-        )
-    )
+    actions = [_table_metadata(snap, now, evolved)] if evolved is not None else []
+    actions += _removes(candidates, now)
+    actions += adds
+    actions.append(_commit_info("MERGE", "Merge", adds, now))
     write_commit(snap, actions=actions)
     return snap.version + 1
 
@@ -1864,12 +1788,18 @@ def delete_from(
     At 100 TB a targeted delete (GDPR erasure, bad-batch rollback)
     rewrites a handful of files, never the table.
     """
-    snap = load_snapshot(table_path)
+    return _delete_cow(
+        spark, load_snapshot(table_path), predicate, prune_column, prune_lo, prune_hi
+    )
+
+
+def _delete_cow(spark, snap, predicate, prune_column, prune_lo, prune_hi) -> int:
+    """Copy-on-write DELETE on the snapshot ``snap`` (``delete_from``)."""
     _reject_rewrite_on_row_tracking(snap, "copy-on-write DELETE")
     _reject_on_append_only(snap, "DELETE")
     _gate_write(snap)
     if not snap.files:
-        raise ValueError(f"nothing to delete from at {table_path}")
+        raise ValueError(f"nothing to delete from at {snap.table_path}")
     pcols = list(snap.partition_columns or [])
     candidates = (
         snap.pruned_files(prune_column, prune_lo, prune_hi)
@@ -1897,32 +1827,12 @@ def delete_from(
     survivors = _read_with_partitions(spark, snap, rewrite).where(
         f"NOT ({predicate})"
     )
-    files, commit_dir = _stage_files(
-        _to_physical(survivors, snap.schema), table_path, pcols or None
+    adds = stage_add_actions(
+        _to_physical(survivors, snap.schema), snap, pcols or None
     )
-
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
     now = int(time.time() * 1000)
-    actions = [remove_action(p, now) for p in rewrite]
-    actions += [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=(
-                _partition_values(f.path, commit_dir, pcols) if pcols else None
-            ),
-        )
-        for f in files
-    ]
-    actions.append(
-        commit_info_action(
-            "DELETE", predicate, False, len(files), sum(f.size for f in files), now
-        )
-    )
+    actions = _removes(rewrite, now) + adds
+    actions.append(_commit_info("DELETE", predicate, adds, now))
     # snapshot-version commit: intervening writers collide, not clobber
     write_commit(snap, actions=actions)
     return snap.version + 1
@@ -1993,19 +1903,24 @@ def delete_from_mor(
     the add (the protocol's tightBounds=false reading: min/max remain
     valid bounds, numRecords is corrected by cardinality at
     ``metadata_count``)."""
+    return _delete_mor(
+        spark, load_snapshot(table_path), predicate, prune_column, prune_lo, prune_hi
+    )
+
+
+def _delete_mor(spark, snap, predicate, prune_column, prune_lo, prune_hi) -> int:
+    """Merge-on-read DELETE on the snapshot ``snap`` (``delete_from_mor``)."""
     from guidewire_spark.sources.dv import (
         META_FILE,
         META_ROW,
         encode_dead_rows,
-        normalize_path,
         subtract_dead_rows,
     )
 
-    snap = load_snapshot(table_path)
     _reject_on_append_only(snap, "DELETE (merge-on-read)")
     _gate_write(snap)
     if not snap.files:
-        raise ValueError(f"nothing to delete from at {table_path}")
+        raise ValueError(f"nothing to delete from at {snap.table_path}")
     candidates = (
         snap.pruned_files(prune_column, prune_lo, prune_hi)
         if prune_column
@@ -2020,26 +1935,10 @@ def delete_from_mor(
     merged = encode_dead_rows(spark, hits, existing)
     if not merged:
         raise ValueError("predicate matches no rows; nothing to delete")
-    by_path = {normalize_path(p): p for p in candidates}
-
     now = int(time.time() * 1000)
     actions = _feature_upgrade_actions(
         snap, reader={"deletionVectors"}, writer={"deletionVectors"}
-    )
-    for key, descriptor in sorted(merged.items()):
-        path = by_path[key]
-        actions.append(remove_action(path, now, size=snap.file_sizes.get(path)))
-        actions.append(
-            add_action(
-                path,
-                snap.file_sizes.get(path, 0),
-                now,
-                stats=snap.file_stats.get(path),
-                partition_values=snap.file_partitions.get(path) or None,
-                deletion_vector=descriptor,
-                base_row_id=snap.file_base_rows.get(path),
-            )
-        )
+    ) + _vector_swaps(snap, candidates, merged, now)
     actions.append(
         commit_info_action(
             "DELETE", f"MOR {predicate}", False, len(merged), 0, now
@@ -2185,13 +2084,7 @@ def enable_in_commit_timestamps(table_path: str) -> int:
     info["commitInfo"]["timestamp"] = ict
     actions = [
         info,
-        metadata_action(
-            snap.schema,
-            partition_columns=snap.partition_columns or None,
-            created_time=now,
-            table_id=snap.metadata_id,
-            configuration=config,
-        ),
+        _table_metadata(snap, now, configuration=config),
     ] + _feature_upgrade_actions(snap, writer={"inCommitTimestamp"})
     write_commit(snap, actions=actions)
     return snap.version + 1
@@ -2203,30 +2096,6 @@ _FEATURE_MANAGED_KEYS = {
     "delta.columnMapping.mode": "rename_column/drop_column",
     "delta.clusteringColumns": "set_clustering_columns",
 }
-
-
-def stage_add_actions(df: DataFrame, snap) -> list[dict]:
-    """Stage ``df`` as parquet files under the table of the snapshot
-    ``snap`` (unique per-call subdirectory — concurrent stagers never
-    collide) and return their ``add`` actions WITHOUT committing. The
-    building block for optimistic-concurrency flows
-    (deltalog.commit_transaction on the same ``snap``): data lands
-    first, the log race is fought over metadata only, and a losing
-    transaction's rebase re-commits the SAME staged files."""
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
-    files, _ = _stage_files(df, snap.table_path, None)
-    now = int(time.time() * 1000)
-    return [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-        )
-        for f in files
-    ]
 
 
 def set_table_properties(table_path: str, props: dict[str, str]) -> int:
@@ -2257,13 +2126,7 @@ def set_table_properties(table_path: str, props: dict[str, str]) -> int:
     now = int(time.time() * 1000)
     actions = [
         commit_info_action("SET TBLPROPERTIES", "setProperties", False, 0, 0, now),
-        metadata_action(
-            snap.schema,
-            partition_columns=snap.partition_columns or None,
-            created_time=now,
-            table_id=snap.metadata_id,
-            configuration=config,
-        ),
+        _table_metadata(snap, now, configuration=config),
     ]
     write_commit(snap, actions=actions)
     return snap.version + 1
@@ -2336,36 +2199,17 @@ def enable_row_tracking(table_path: str) -> int:
         raise ValueError(f"row tracking already enabled at {table_path}")
     counts = _file_record_counts(snap.files, "enable_row_tracking")
     now = int(time.time() * 1000)
-    config = dict(snap.configuration)
-    config[_ROW_TRACKING_KEY] = "true"
     base = 0
     adds = []
     for p, n in counts:
-        adds.append(
-            add_action(
-                p,
-                snap.file_sizes.get(p, 0),
-                now,
-                stats=snap.file_stats.get(p),
-                partition_values=snap.file_partitions.get(p) or None,
-                deletion_vector=snap.file_dvs.get(p),
-                base_row_id=base,
-            )
-        )
+        adds.append(_live_add(snap, p, now, data_change=False, base_row_id=base))
         base += n
-    config[_ROW_HWM_KEY] = str(base - 1)
-    actions = [
-        metadata_action(
-            snap.schema,
-            partition_columns=snap.partition_columns or None,
-            created_time=now,
-            table_id=snap.metadata_id,
-            configuration=config,
-        )
-    ]
-    for a in adds:
-        a["add"]["dataChange"] = False
-    actions += adds
+    config = {
+        **snap.configuration,
+        _ROW_TRACKING_KEY: "true",
+        _ROW_HWM_KEY: str(base - 1),
+    }
+    actions = [_table_metadata(snap, now, configuration=config)] + adds
     actions.append(
         commit_info_action(
             "SET TBLPROPERTIES", "rowTracking", False, 0, 0, now
@@ -2419,7 +2263,8 @@ def delete_auto(
     Cost note: the routing measurement is itself a predicate scan of
     the candidate files, and the routed DELETE scans them again — the
     decision costs one extra pass over the touched files' matching
-    columns.  Callers that already know their delete shape should
+    columns.  The routed DELETE runs on the snapshot the router
+    measured (one load per call).  Callers that already know their delete shape should
     call delete_from / delete_from_mor directly; this router is for
     the generic entry point where the shape is unknown."""
     import json as _json
@@ -2433,11 +2278,7 @@ def delete_auto(
         # so a row-tracked table always takes merge-on-read — and the
         # damage-ratio measurement pass is skipped (outcome is fixed)
         return (
-            delete_from_mor(
-                spark, table_path, predicate,
-                prune_column=prune_column, prune_lo=prune_lo,
-                prune_hi=prune_hi,
-            ),
+            _delete_mor(spark, snap, predicate, prune_column, prune_lo, prune_hi),
             "mor",
         )
     if not snap.files:
@@ -2482,21 +2323,10 @@ def delete_auto(
             total += max(n, 0)
     ratio = matched / max(total, 1)
     if ratio >= mor_threshold:
-        return (
-            delete_from(
-                spark, table_path, predicate,
-                prune_column=prune_column, prune_lo=prune_lo,
-                prune_hi=prune_hi,
-            ),
-            "cow",
-        )
-    return (
-        delete_from_mor(
-            spark, table_path, predicate,
-            prune_column=prune_column, prune_lo=prune_lo, prune_hi=prune_hi,
-        ),
-        "mor",
-    )
+        route, delete = "cow", _delete_cow
+    else:
+        route, delete = "mor", _delete_mor
+    return delete(spark, snap, predicate, prune_column, prune_lo, prune_hi), route
 
 
 def purge_deletion_vectors(spark: SparkSession, table_path: str) -> int:
@@ -2528,54 +2358,25 @@ def purge_deletion_vectors(spark: SparkSession, table_path: str) -> int:
         ).withColumnRenamed("_row_id", mat_col)
     else:
         survivors = _read_with_partitions(spark, snap, rewrite)  # DV-aware
-    files, commit_dir = _stage_files(
-        _to_physical(survivors, snap.schema), table_path, pcols or None
+    adds = stage_add_actions(
+        _to_physical(survivors, snap.schema), snap, pcols or None, data_change=False
     )
-
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
     now = int(time.time() * 1000)
     actions = []
-    base_ids: dict[str, int] = {}
     if tracked:
         # fresh bases above the mark keep the protocol invariant
         # (every tracked add carries one); the materialized column
         # wins on read, so survivor ids are unchanged
-        base_ids, config = _assign_base_row_ids(files, snap.configuration)
-        config[MATERIALIZED_ROW_ID_KEY] = mat_col
         actions.append(
-            metadata_action(
-                snap.schema,
-                partition_columns=snap.partition_columns or None,
-                created_time=now,
-                table_id=snap.metadata_id,
-                configuration=config,
+            _table_metadata(
+                snap,
+                now,
+                configuration={**adds.configuration, MATERIALIZED_ROW_ID_KEY: mat_col},
             )
         )
-    actions += [remove_action(p, now) for p in rewrite]
-    actions += [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=(
-                _partition_values(f.path, commit_dir, pcols) if pcols else None
-            ),
-            base_row_id=base_ids.get(f.path),
-        )
-        for f in files
-    ]
-    for a in actions:
-        key = "add" if "add" in a else ("remove" if "remove" in a else None)
-        if key:
-            a[key]["dataChange"] = False
-    actions.append(
-        commit_info_action(
-            "REORG", "PURGE", False, len(files), sum(f.size for f in files), now
-        )
-    )
+    actions += _removes(rewrite, now, data_change=False)
+    actions += adds
+    actions.append(_commit_info("REORG", "PURGE", adds, now))
     write_commit(snap, actions=actions)
     return snap.version + 1
 
@@ -2688,71 +2489,25 @@ def update_table_mor(
     )
     if not merged:
         raise ValueError("predicate matches no rows; nothing to update")
-    files, commit_dir = _stage_files(
-        _to_physical(updated, snap.schema), table_path, pcols or None
-    )
-    by_path = {normalize_path(p): p for p in candidates}
-
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
+    adds = stage_add_actions(_to_physical(updated, snap.schema), snap, pcols or None)
     now = int(time.time() * 1000)
     actions = _feature_upgrade_actions(
         snap, reader={"deletionVectors"}, writer={"deletionVectors"}
     )
-    base_ids: dict[str, int] = {}
     if tracked:
         # the updated images carry their OLD ids in the materialized
-        # column (read-side coalesce wins); the fresh bases below only
-        # keep the every-tracked-add-has-a-base protocol invariant
-        base_ids, upd_config = _assign_base_row_ids(files, snap.configuration)
-        upd_config[MATERIALIZED_ROW_ID_KEY] = mat_col
+        # column (read-side coalesce wins); the fresh bases of the new
+        # file only keep the every-tracked-add-has-a-base invariant
         actions.append(
-            metadata_action(
-                snap.schema,
-                partition_columns=snap.partition_columns or None,
-                created_time=now,
-                table_id=snap.metadata_id,
-                configuration=upd_config,
-            )
-        )
-    for key, descriptor in sorted(merged.items()):
-        path = by_path[key]
-        actions.append(remove_action(path, now, size=snap.file_sizes.get(path)))
-        actions.append(
-            add_action(
-                path,
-                snap.file_sizes.get(path, 0),
+            _table_metadata(
+                snap,
                 now,
-                stats=snap.file_stats.get(path),
-                partition_values=snap.file_partitions.get(path) or None,
-                deletion_vector=descriptor,
-                base_row_id=snap.file_base_rows.get(path),
+                configuration={**adds.configuration, MATERIALIZED_ROW_ID_KEY: mat_col},
             )
         )
-    actions += [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=(
-                _partition_values(f.path, commit_dir, pcols) if pcols else None
-            ),
-            base_row_id=base_ids.get(f.path),
-        )
-        for f in files
-    ]
-    actions.append(
-        commit_info_action(
-            "UPDATE",
-            f"MOR {predicate}",
-            False,
-            len(files),
-            sum(f.size for f in files),
-            now,
-        )
-    )
+    actions += _vector_swaps(snap, candidates, merged, now)
+    actions += adds
+    actions.append(_commit_info("UPDATE", f"MOR {predicate}", adds, now))
     write_commit(snap, actions=actions)
     return snap.version + 1
 
@@ -2800,50 +2555,18 @@ def replace_where(
         for r in with_file.where(predicate).select("__file").distinct().collect()
     }
     rewrite = [p for p in snap.files if normalize_path(p) in hit_files]
-    staged = []
-    commit_dirs = []
+    adds = []
     if rewrite:
         survivors = _read_with_partitions(spark, snap, rewrite).where(
             f"NOT ({predicate})"
         )
-        files, commit_dir = _stage_files(
-            _to_physical(survivors, snap.schema), table_path, pcols or None
+        adds += stage_add_actions(
+            _to_physical(survivors, snap.schema), snap, pcols or None
         )
-        staged += files
-        commit_dirs += [commit_dir] * len(files)
-    new_files, new_dir = _stage_files(
-        _to_physical(new_df, snap.schema), table_path, pcols or None
-    )
-    staged += new_files
-    commit_dirs += [new_dir] * len(new_files)
-
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
+    adds += stage_add_actions(_to_physical(new_df, snap.schema), snap, pcols or None)
     now = int(time.time() * 1000)
-    actions = [remove_action(p, now) for p in rewrite]
-    actions += [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=(
-                _partition_values(f.path, cdir, pcols) if pcols else None
-            ),
-        )
-        for f, cdir in zip(staged, commit_dirs)
-    ]
-    actions.append(
-        commit_info_action(
-            "WRITE",
-            f"ReplaceWhere({predicate})",
-            False,
-            len(staged),
-            sum(f.size for f in staged),
-            now,
-        )
-    )
+    actions = _removes(rewrite, now) + adds
+    actions.append(_commit_info("WRITE", f"ReplaceWhere({predicate})", adds, now))
     write_commit(snap, actions=actions)
     return snap.version + 1
 
@@ -2921,32 +2644,10 @@ def update_table(
         ]
     )
     _enforce_constraints(updated, snap)
-    files, commit_dir = _stage_files(
-        _to_physical(updated, snap.schema), table_path, pcols or None
-    )
-
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
+    adds = stage_add_actions(_to_physical(updated, snap.schema), snap, pcols or None)
     now = int(time.time() * 1000)
-    actions = [remove_action(p, now) for p in rewrite]
-    actions += [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=(
-                _partition_values(f.path, commit_dir, pcols) if pcols else None
-            ),
-        )
-        for f in files
-    ]
-    actions.append(
-        commit_info_action(
-            "UPDATE", predicate, False, len(files), sum(f.size for f in files), now
-        )
-    )
+    actions = _removes(rewrite, now) + adds
+    actions.append(_commit_info("UPDATE", predicate, adds, now))
     # snapshot-version commit: intervening writers collide, not clobber
     write_commit(snap, actions=actions)
     return snap.version + 1
@@ -3102,9 +2803,7 @@ def restore_table(table_path: str, version: int) -> int:
             )
         )
     old_set, cur_set = set(old.files), set(cur.files)
-    actions.extend(
-        remove_action(p, now) for p in cur.files if p not in old_set
-    )
+    actions.extend(_removes([p for p in cur.files if p not in old_set], now))
     # files to (re-)add: absent from the current snapshot, OR present
     # but with a different deletion-vector state.  The DV-change case
     # commits as a remove+add PAIR of the same path: a bare add would
@@ -3118,23 +2817,9 @@ def restore_table(table_path: str, version: int) -> int:
         or old.file_dvs.get(p) != cur.file_dvs.get(p)
         or old.file_base_rows.get(p) != cur.file_base_rows.get(p)
     ]
-    actions.extend(
-        remove_action(p, now)
-        for p in readd
-        if p in cur_set  # in-place DV-state change: pair the add
-    )
-    actions.extend(
-        add_action(
-            p,
-            old.file_sizes.get(p, 0),
-            now,
-            stats=old.file_stats.get(p),
-            partition_values=old.file_partitions.get(p),
-            deletion_vector=old.file_dvs.get(p),
-            base_row_id=old.file_base_rows.get(p),
-        )
-        for p in readd
-    )
+    # in-place DV-state change: pair the add
+    actions.extend(_removes([p for p in readd if p in cur_set], now))
+    actions.extend(_live_add(old, p, now) for p in readd)
     actions.append(
         commit_info_action(
             "RESTORE", f"versionAsOf={version}", False, len(old.files), 0, now
@@ -3154,8 +2839,6 @@ def overwrite_partitions(df: DataFrame, table_path: str) -> int:
     partitions become remove actions and the staged files are added in
     one commit at snapshot-version+1.
     """
-    import time as _time
-
     snap = load_snapshot(table_path)
     _reject_identity_dml(snap, "dynamic partition overwrite")
     _reject_rewrite_on_row_tracking(snap, "dynamic partition overwrite")
@@ -3187,31 +2870,14 @@ def overwrite_partitions(df: DataFrame, table_path: str) -> int:
         if tuple((snap.file_partitions.get(p) or {}).get(c) for c in pcols)
         in incoming
     ]
-    files, commit_dir = _stage_files(
-        _to_physical(df, snap.schema), table_path, pcols
-    )
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
-    now = int(_time.time() * 1000)
-    actions = [remove_action(p, now) for p in doomed]
-    actions += [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=_partition_values(f.path, commit_dir, pcols),
-        )
-        for f in files
-    ]
+    adds = stage_add_actions(_to_physical(df, snap.schema), snap, pcols)
+    now = int(time.time() * 1000)
+    actions = _removes(doomed, now) + adds
     actions.append(
-        commit_info_action(
+        _commit_info(
             "WRITE",
             f"dynamic partition overwrite ({len(incoming)} partitions)",
-            False,
-            len(files),
-            sum(f.size for f in files),
+            adds,
             now,
         )
     )
@@ -3231,50 +2897,29 @@ def convert_to_delta(parquet_dir: str) -> int:
     partition columns live in directory names, not file footers) —
     convert those by re-writing through ``write_delta(partition_by=)``.
     """
-    import time as _time
-
-    from guidewire_spark.sources.fs import FileMeta
     from guidewire_spark.sources.schema import infer_schema_from_files
-    from guidewire_spark.sources.stats import footer_stats
 
     if os.path.isdir(os.path.join(parquet_dir, "_delta_log")):
         raise FileExistsError(f"{parquet_dir} is already a Delta table")
-    files: list[FileMeta] = []
-    for root, _dirs, names in os.walk(parquet_dir):
-        if any("=" in seg for seg in os.path.relpath(root, parquet_dir).split(os.sep)):
+    files = walk_parquet_files(parquet_dir)
+    for f in files:
+        rel = os.path.relpath(os.path.dirname(f.path), parquet_dir)
+        if any("=" in seg for seg in rel.split(os.sep)):
             raise ValueError(
                 "hive-partitioned layout detected; re-write through "
                 "write_delta(partition_by=) instead"
             )
-        for name in names:
-            if name.endswith(".parquet") and not name.startswith("."):
-                full = os.path.join(root, name)
-                st = os.stat(full)
-                if st.st_size > 0:
-                    files.append(
-                        FileMeta(
-                            path=os.path.abspath(full),
-                            size=st.st_size,
-                            modification_time=int(st.st_mtime * 1000),
-                        )
-                    )
     if not files:
         raise ValueError(f"no parquet files under {parquet_dir}")
     schema = infer_schema_from_files(files)
     if schema is None:
         raise ValueError(f"no non-empty parquet files under {parquet_dir}")
-    now = int(_time.time() * 1000)
-    actions: list[dict] = [protocol_action(), metadata_action(schema, created_time=now)]
-    actions += [
-        add_action(f.path, f.size, f.modification_time, stats=footer_stats(f.path))
-        for f in sorted(files, key=lambda f: f.path)
-    ]
-    actions.append(
-        commit_info_action(
-            "CONVERT", parquet_dir, False, len(files), sum(f.size for f in files), now
-        )
-    )
-    write_commit(empty_snapshot(parquet_dir), actions=actions)
+    now = int(time.time() * 1000)
+    base = empty_snapshot(parquet_dir)
+    adds = _new_file_adds(base, files)
+    actions = [protocol_action(), metadata_action(schema, created_time=now)] + adds
+    actions.append(_commit_info("CONVERT", parquet_dir, adds, now))
+    write_commit(base, actions=actions)
     return 0
 
 
@@ -3493,7 +3138,7 @@ def _identity_specs(snap) -> dict[str, dict]:
     }
 
 
-def _staged_identity_max(files, name: str) -> int | None:
+def _staged_identity_max(adds: list[dict], name: str) -> int | None:
     """High-water mark from the STAGED files' footer statistics — read
     after the physical write, so the recorded mark always reflects the
     values actually on disk (a driver-side pre-computation would both
@@ -3510,14 +3155,14 @@ def _staged_identity_max(files, name: str) -> int | None:
     from guidewire_spark.sources.stats import footer_stats
 
     hw = None
-    for f in files:
-        raw = footer_stats(f.path)
+    for path in (a["add"]["path"] for a in adds):
+        raw = footer_stats(path)
         stats = _json.loads(raw) if raw else {}
         v = stats.get("maxValues", {}).get(name)
         if v is None:
             if raw is None or stats.get("numRecords", 0) > 0:
                 raise ValueError(
-                    f"staged file {f.path} has rows but no max statistic "
+                    f"staged file {path} has rows but no max statistic "
                     f"for identity column {name!r}; refusing to record a "
                     "stale high-water mark (next append would reuse "
                     "identity values)"
@@ -3560,17 +3205,15 @@ def create_identity_table(
     assigned = df.withColumn(
         name, F.lit(start) + F.monotonically_increasing_id() * step
     )
-    files, commit_dir = _stage_files(assigned, table_path, None)
-    hw = _staged_identity_max(files, name)
+    base = empty_snapshot(table_path)
+    adds = stage_add_actions(assigned, base)
+    hw = _staged_identity_max(adds, name)
     if hw is None:
         hw = start - step  # empty create: the first append starts at start
-
-    from guidewire_spark.sources.stats import footer_stats
+    from guidewire_spark.sources.deltalog import feature_upgrade_action
 
     now = int(time.time() * 1000)
     spec = {"start": start, "step": step, "highWaterMark": int(hw)}
-    from guidewire_spark.sources.deltalog import feature_upgrade_action
-
     actions = [
         feature_upgrade_action(None, writer_features={"identityColumns"}),
         metadata_action(
@@ -3578,18 +3221,9 @@ def create_identity_table(
             created_time=now,
             configuration={f"delta.identity.{name}": _json.dumps(spec)},
         ),
-    ]
-    actions += [
-        add_action(f.path, f.size, f.modification_time, stats=footer_stats(f.path))
-        for f in files
-    ]
-    actions.append(
-        commit_info_action(
-            "CREATE TABLE", "IdentityCreate", False, len(files),
-            sum(f.size for f in files), now,
-        )
-    )
-    write_commit(empty_snapshot(table_path), actions=actions)
+    ] + adds
+    actions.append(_commit_info("CREATE TABLE", "IdentityCreate", adds, now))
+    write_commit(base, actions=actions)
     return 0
 
 
@@ -3612,7 +3246,6 @@ def append_with_identity(df: DataFrame, table_path: str) -> int:
 
     snap = load_snapshot(table_path)
     _gate_write(snap)
-    config = dict(snap.configuration)
     idents = _identity_specs(snap)
     if not idents:
         raise ValueError(f"{table_path} has no identity columns")
@@ -3637,45 +3270,18 @@ def append_with_identity(df: DataFrame, table_path: str) -> int:
     assigned = df.withColumn(
         name, F.lit(base) + F.monotonically_increasing_id() * spec["step"]
     ).select(*[f.name for f in snap.schema.fields])
-    files, commit_dir = _stage_files(
-        _to_physical(assigned, snap.schema), table_path, pcols or None
+    # on a row-tracked table the adds take fresh row ids, and the moved
+    # row-id mark rides the same metaData as the identity mark
+    adds = stage_add_actions(
+        _to_physical(assigned, snap.schema), snap, pcols or None
     )
-    hw = _staged_identity_max(files, name)
+    hw = _staged_identity_max(adds, name)
     if hw is None:
         hw = spec["highWaterMark"]  # empty batch: mark unchanged
-
-    from guidewire_spark.sources.stats import footer_stats, stats_spec
-    _sspec = stats_spec(snap.configuration)
-
     now = int(time.time() * 1000)
     new_spec = dict(spec, highWaterMark=int(hw))
-    config[f"delta.identity.{name}"] = _json.dumps(new_spec)
-    actions = [
-        metadata_action(
-            snap.schema,
-            partition_columns=snap.partition_columns or None,
-            created_time=now,
-            table_id=snap.metadata_id,
-            configuration=config,
-        )
-    ]
-    actions += [
-        add_action(
-            f.path,
-            f.size,
-            f.modification_time,
-            stats=footer_stats(f.path, _sspec),
-            partition_values=(
-                _partition_values(f.path, commit_dir, pcols) if pcols else None
-            ),
-        )
-        for f in files
-    ]
-    actions.append(
-        commit_info_action(
-            "WRITE", "IdentityAppend", False, len(files),
-            sum(f.size for f in files), now,
-        )
-    )
+    config = {**adds.configuration, f"delta.identity.{name}": _json.dumps(new_spec)}
+    actions = [_table_metadata(snap, now, configuration=config)] + adds
+    actions.append(_commit_info("WRITE", "IdentityAppend", adds, now))
     write_commit(snap, actions=actions)
     return snap.version + 1

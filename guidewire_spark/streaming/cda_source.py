@@ -266,51 +266,30 @@ def _entry_claims_table(entry, table_dir: str, table_name: str) -> bool:
 
 
 def _list_commit_ts(root: str) -> list[int]:
-    """Timestamp folders under the fingerprint dir (same digit-name
-    rule as the batch connector's fs.list_timestamp_dirs), gated on
-    the sink marker manifest when one governs the tree.  Remote
-    (object-store) roots delegate to the connector's fsspec listing —
-    driver-side metadata either way."""
-    if _is_remote(root):
-        from guidewire_spark.sources.fs import list_timestamp_dirs
+    """Timestamp folders under the fingerprint dir (the batch
+    connector's fs.list_timestamp_dirs, local or object store), gated
+    on the sink marker manifest when one governs the tree."""
+    from guidewire_spark.sources.fs import list_timestamp_dirs
 
-        out = list_timestamp_dirs(root)
-    else:
-        if not os.path.isdir(root):
-            return []
-        out = []
-        for name in os.listdir(root):
-            if name.isdigit() and os.path.isdir(os.path.join(root, name)):
-                out.append(int(name))
+    out = list_timestamp_dirs(root)
     marker = _sink_marker_ts(root)
     if marker is not None:
         out = [t for t in out if t <= marker]
-    return sorted(out)
+    return out
 
 
 def _list_parquet(folder: str) -> list[str]:
-    """Non-hidden, non-empty .parquet files (S3Access.scala:39-41
-    rules, same as the batch connector).  The underscore rule also
-    excludes marker/staging artifacts (_SUCCESS-style files, and any
-    stray object under a sink's ``_staging`` tree)."""
-    if _is_remote(folder):
-        from guidewire_spark.sources.fs import list_parquet_files
+    """Non-hidden, non-empty .parquet files (the batch connector's
+    fs.list_parquet_files, S3Access.scala:39-41 rules).  The underscore
+    rule also excludes marker/staging artifacts (_SUCCESS-style files,
+    and any stray object under a sink's ``_staging`` tree)."""
+    from guidewire_spark.sources.fs import list_parquet_files
 
-        return [
-            f.path
-            for f in list_parquet_files(folder)
-            if not f.path.rsplit("/", 1)[-1].startswith("_")
-        ]
-    out = []
-    for name in sorted(os.listdir(folder)):
-        if name.startswith(".") or name.startswith("_"):
-            continue
-        if not name.endswith(".parquet"):
-            continue
-        full = os.path.join(folder, name)
-        if os.path.getsize(full) > 0:
-            out.append(full)
-    return out
+    return [
+        f.path
+        for f in list_parquet_files(folder)
+        if not f.path.rsplit("/", 1)[-1].startswith("_")
+    ]
 
 
 def _join(root: str, name) -> str:

@@ -278,6 +278,12 @@ def _writer_ops():
     def nothing(spark, t):
         pass
 
+    def delete_auto(predicate, route):
+        def op(spark, t, rows):
+            assert w.delete_auto(spark, t, predicate)[1] == route
+
+        return op
+
     return [
         ("append", nothing,
          lambda spark, t, rows: w.write_delta(rows, t, mode="append"), 1),
@@ -299,6 +305,10 @@ def _writer_ops():
          lambda spark, t, rows: w.delete_from(spark, t, "n_nationkey = 2"), 1),
         ("delete_from_mor", nothing,
          lambda spark, t, rows: w.delete_from_mor(spark, t, "n_nationkey = 2"), 1),
+        # the routed delete runs on the snapshot the router measured
+        ("delete_auto_dense", nothing, delete_auto("n_nationkey < 8", "cow"), 1),
+        ("delete_auto_row_tracked", lambda spark, t: w.enable_row_tracking(t),
+         delete_auto("n_nationkey = 2", "mor"), 1),
         ("set_table_properties", nothing,
          lambda spark, t, rows: w.set_table_properties(t, {"k": "v"}), 1),
         # its existing-rows check reads the table through read_delta

@@ -436,3 +436,49 @@ def test_id_preserving_rewrites_on_partitioned_and_zordered_tables(
     before2 = _ids(spark, t2)
     optimize_table(spark, t2, target_files=4, zorder_by=["n_chars"])
     assert _ids(spark, t2) == before2           # reshuffled, ids intact
+
+
+def test_identity_append_on_tracked_table_takes_fresh_row_ids(
+    spark, sf_dir, tmp_path
+):
+    """``append_with_identity`` stages through the same path as every
+    other write: on a row-tracked table its files take ``baseRowId``s
+    above the high-water mark, and the mark moves in the append's own
+    commit, next to the identity mark."""
+    import json as _json
+    import os
+
+    from guidewire_spark.sources.writer import (
+        append_with_identity,
+        create_identity_table,
+    )
+
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    t = str(tmp_path / "rt_ident")
+    create_identity_table(n.where("n_nationkey < 10"), t, "id")
+    enable_row_tracking(t)
+    before = load_snapshot(t)
+    mark = int(before.configuration["delta.rowTracking.rowIdHighWaterMark"])
+    assert mark == 9
+
+    v = append_with_identity(n.where("n_nationkey >= 10"), t)
+
+    snap = load_snapshot(t)
+    assert all(p in snap.file_base_rows for p in snap.files)
+    new = [p for p in snap.files if p not in before.files]
+    assert new
+    assert min(snap.file_base_rows[p] for p in new) == mark + 1
+    with open(os.path.join(t, "_delta_log", f"{v:020d}.json")) as fh:
+        metas = [
+            a["metaData"] for a in map(_json.loads, fh) if "metaData" in a
+        ]
+    assert len(metas) == 1
+    config = metas[0]["configuration"]
+    assert config["delta.rowTracking.rowIdHighWaterMark"] == str(mark + 15)
+    assert _json.loads(config["delta.identity.id"])["highWaterMark"] >= 25
+    ids = _ids(spark, t)
+    assert len(ids) == 25
+    assert sorted(ids.values()) == list(range(25))
+
+    update_table_mor(spark, t, "n_nationkey = 12", {"n_name": "'X'"})
+    assert _ids(spark, t) == ids

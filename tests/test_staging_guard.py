@@ -1,0 +1,67 @@
+"""Every data file a writer operation writes becomes an ``add`` action
+through one function, ``writer._new_file_adds``: it alone reads the
+stats spec off the snapshot, recovers hive partition values and assigns
+row-tracking base ids.  An AST scan of ``sources/writer.py`` keeps
+hand-built copies from growing back (a copy that skips one of the three
+is how identity appends once committed files without ``baseRowId``)."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+WRITER = (
+    Path(__file__).resolve().parent.parent
+    / "guidewire_spark"
+    / "sources"
+    / "writer.py"
+)
+HOME = "_new_file_adds"
+GUARDED = ("stats_spec", "_assign_base_row_ids", "_partition_values")
+
+
+def _guarded_calls(source: str) -> list[tuple[str, str, int]]:
+    """(callee, enclosing top-level definition, line) for every call of
+    a guarded name, bare or as an attribute (``stats.stats_spec``)."""
+    out = []
+    for top in ast.parse(source).body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = getattr(fn, "id", None) or getattr(fn, "attr", None)
+            if name in GUARDED:
+                out.append((name, owner, node.lineno))
+    return sorted(out, key=lambda call: call[2])
+
+
+def test_detector_finds_calls_and_their_owner():
+    src = (
+        "from guidewire_spark.sources import stats\n"
+        "def _new_file_adds(snap, files):\n"
+        "    spec = stats_spec(snap.configuration)\n"
+        "def merge(snap):\n"
+        "    def inner():\n"
+        "        return stats.stats_spec(snap.configuration)\n"
+        "    ids, cfg = _assign_base_row_ids([], {})\n"
+        "x = _partition_values('p', 'd', ['c'])\n"
+        "y = stats_spec\n"
+    )
+    assert _guarded_calls(src) == [
+        ("stats_spec", "_new_file_adds", 3),
+        ("stats_spec", "merge", 6),
+        ("_assign_base_row_ids", "merge", 7),
+        ("_partition_values", "<module>", 8),
+    ]
+
+
+def test_writer_builds_new_file_adds_in_one_place():
+    calls = _guarded_calls(WRITER.read_text(encoding="utf-8"))
+    offenders = [
+        f"{name} in {owner} (line {line})"
+        for name, owner, line in calls
+        if owner != HOME
+    ]
+    assert offenders == []
+    assert sorted(name for name, _, _ in calls) == sorted(GUARDED)
