@@ -1101,8 +1101,8 @@ def delta_partition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap = load_snapshot(table)
     per_part: dict[str, int] = {}
     for path in snap.files:
-        lang = snap.file_partitions.get(path, {}).get("lang")
-        raw = snap.file_stats.get(path)
+        lang = snap.adds[path]["partitionValues"].get("lang")
+        raw = snap.adds[path].get("stats")
         n = _json.loads(raw)["numRecords"] if raw else None
         if lang is None or n is None:
             raise ValueError(f"file {path} missing partition value or stats")
@@ -1382,8 +1382,8 @@ def delta_file_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="append",
         )
     snap = load_snapshot(table)
-    sizes = [snap.file_sizes.get(p, 0) for p in snap.files]
-    stats_complete = all(snap.file_stats.get(p) for p in snap.files)
+    sizes = [snap.adds[p].get("size", 0) for p in snap.files]
+    stats_complete = all(snap.adds[p].get("stats") for p in snap.files)
     return spark.createDataFrame(
         [
             (
@@ -1436,7 +1436,7 @@ def delta_stats_null_rate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_rows = 0
     n_nulls = 0
     for p in snap.files:
-        st = _json.loads(snap.file_stats[p])
+        st = _json.loads(snap.adds[p]["stats"])
         n_rows += st["numRecords"]
         n_nulls += st["nullCount"]["acctbal"]
     return spark.createDataFrame(
@@ -1472,7 +1472,7 @@ def delta_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     before = set(load_snapshot(table).files)
     delete_from_mor(spark, table, "s_suppkey % 7 = 2")
     after = load_snapshot(table)
-    if set(after.files) != before or not after.file_dvs:
+    if set(after.files) != before or not after.deletion_vectors():
         raise AssertionError("MOR delete must not rewrite data files")
     return read_delta(spark, table)
 
@@ -1505,7 +1505,7 @@ def delta_dv_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete_from_mor(spark, table, "n_nationkey % 5 = 1")
     delete_from_mor(spark, table, "n_nationkey % 5 = 3")
     purge_deletion_vectors(spark, table)
-    if load_snapshot(table).file_dvs:
+    if load_snapshot(table).deletion_vectors():
         raise AssertionError("purge must clear every deletion vector")
     return read_delta(spark, table)
 
@@ -1645,11 +1645,11 @@ def delta_delete_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     before = set(load_snapshot(table).files)
     _, strat1 = delete_auto(spark, table, "doc_id % 40 = 11")   # ~2.5%
     mid = load_snapshot(table)
-    if strat1 != "mor" or set(mid.files) != before or not mid.file_dvs:
+    if strat1 != "mor" or set(mid.files) != before or not mid.deletion_vectors():
         raise AssertionError("sparse delete must route merge-on-read")
     _, strat2 = delete_auto(spark, table, "doc_id % 4 <> 2")    # ~75%
     after = load_snapshot(table)
-    if strat2 != "cow" or after.file_dvs:
+    if strat2 != "cow" or after.deletion_vectors():
         raise AssertionError("dense delete must route copy-on-write")
     return read_delta(spark, table)
 
@@ -2505,9 +2505,9 @@ def delta_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections import Counter
 
     per_part = Counter(
-        tuple(sorted((compacted.file_partitions.get(p) or {}).items()))
+        tuple(sorted(compacted.adds[p]["partitionValues"].items()))
         for p in compacted.files
-        if compacted.file_sizes.get(p, 0) < 16 * 1024 * 1024
+        if compacted.adds[p].get("size", 0) < 16 * 1024 * 1024
     )
     worst = max(per_part.values(), default=0)
     if worst >= 3:

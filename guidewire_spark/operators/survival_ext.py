@@ -319,7 +319,7 @@ def delta_stats_columns_config(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap = load_snapshot(table)
     shapes = set()
     for p in snap.files:
-        st = _json.loads(snap.file_stats[p])
+        st = _json.loads(snap.adds[p]["stats"])
         if st["numRecords"]:  # zero-row task outputs carry no bounds
             shapes.add(tuple(sorted(st["minValues"])))
     if shapes != {("l_orderkey",), ("l_orderkey", "l_quantity", "l_suppkey")}:

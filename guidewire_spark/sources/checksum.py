@@ -38,9 +38,9 @@ def _snapshot_checksum(table_path: str, version: int | None) -> tuple[int, dict]
     from guidewire_spark.sources.snapshot import load_snapshot
 
     snap = load_snapshot(table_path, version=version)
-    dvs = [dv for dv in snap.file_dvs.values() if dv]
+    dvs = list(snap.deletion_vectors().values())
     return snap.version, {
-        "tableSizeBytes": sum(snap.file_sizes.get(p, 0) for p in snap.files),
+        "tableSizeBytes": sum(add.get("size", 0) for add in snap.adds.values()),
         "numFiles": len(snap.files),
         "numDeletedRecordsOpt": sum(int(dv.get("cardinality", 0)) for dv in dvs),
         "numDeletionVectorsOpt": len(dvs),

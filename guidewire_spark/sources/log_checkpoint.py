@@ -25,8 +25,6 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import types as T
-
 from guidewire_spark.sources.deltalog import delta_log_dir
 
 LAST_CHECKPOINT = "_last_checkpoint"
@@ -257,11 +255,11 @@ def _state_rows(snap):
         header.append(
             {
                 "metaData": {
-                    "id": snap.metadata_id or "",
+                    "id": snap.metadata_id,
                     "format": {"provider": "parquet"},
                     "schemaString": snap.schema.json(),
                     "partitionColumns": snap.partition_columns,
-                    "configuration": list(config.items()),
+                    "configuration": config,
                     "createdTime": None,
                 }
             }
@@ -278,25 +276,9 @@ def _state_rows(snap):
         )
     for app_id, txv in sorted(snap.txns.items()):
         header.append({"txn": {"appId": app_id, "version": int(txv)}})
-    adds: list[dict] = []
-    for path in snap.files:
-        adds.append(
-            {
-                "add": {
-                    "path": path,
-                    "size": snap.file_sizes.get(path, 0),
-                    "modificationTime": snap.file_mtimes.get(path, 0),
-                    "dataChange": True,
-                    "stats": snap.file_stats.get(path),
-                    "partitionValues": [
-                        (k, v)
-                        for k, v in (snap.file_partitions.get(path) or {}).items()
-                    ],
-                    "deletionVector": snap.file_dvs.get(path),
-                    "baseRowId": snap.file_base_rows.get(path),
-                }
-            }
-        )
+    # the records are the adds as committed (pyarrow writes a dict
+    # into a map column and ignores keys the schema lacks)
+    adds = [{"add": {**snap.adds[p], "dataChange": True}} for p in snap.files]
     return header, adds
 
 
@@ -308,13 +290,15 @@ def write_log_checkpoint_v2(snap, max_adds_per_sidecar: int = 10000) -> str:
 
     Why V2 over multi-part at 100 TB: multi-part parts are a single
     atomic SET (all-or-nothing, one naming scheme per attempt), while
-    V2 sidecars are independently written immutable files a later
-    checkpoint can REUSE — an incremental checkpointer re-links
-    unchanged sidecars and writes only the delta, so checkpoint cost
-    tracks churn, not table size.  Crash-safety order: sidecars land
-    first, then the manifest, then ``_last_checkpoint`` flips; a
-    manifest referencing a missing sidecar is ignored by discovery
-    (checkpoint_files) exactly like a partial multi-part set."""
+    V2 sidecars are independently written immutable files, so the
+    protocol lets a later checkpoint re-link unchanged sidecars and
+    write only the delta.  This writer does not: every call writes
+    fresh sidecars holding every live ``add``, so its cost tracks
+    table size, the same as the classic and multi-part forms.
+    Crash-safety order: sidecars land first, then the manifest, then
+    ``_last_checkpoint`` flips; a manifest referencing a missing
+    sidecar is ignored by discovery (checkpoint_files) exactly like a
+    partial multi-part set."""
     import uuid as _uuid
 
     table_path = snap.table_path
@@ -407,29 +391,26 @@ def write_log_checkpoint(snap, max_actions_per_part: int | None = None) -> str:
     return target
 
 
-def load_checkpoint_state(
-    table_path: str, version: int
-) -> tuple[
-    dict[str, str | None],
-    dict[str, int],
-    dict[str, int],
-    dict[str, dict],
-    dict[str, dict],
-    dict[str, int],
-    T.StructType | None,
-    str | None,
-    list[str],
-    dict[str, str],
-    dict[str, str],
-    dict[str, int],
-    dict,
-]:
-    """Read ``<version>.checkpoint.parquet`` (single-file or all
-    parts of the multi-part form) → (active file → stats, file →
-    size, file → modificationTime, file → partitionValues, file →
-    deletionVector, file → baseRowId, schema, metadata id, partition
-    columns, configuration, live domainMetadata, txn high-water
-    marks, protocol) to seed log replay."""
+# (action, field) pairs stored as parquet maps, which pyarrow reads
+# back as (key, value) pair lists
+_MAP_FIELDS = {
+    (action.name, f.name)
+    for action in _V2_MANIFEST_SCHEMA
+    for f in action.type
+    if pa.types.is_map(f.type)
+}
+
+
+def load_checkpoint_state(table_path: str, version: int):
+    """The ``DeltaSnapshot`` at ``version`` seeded from its checkpoint
+    (single-file, all parts of the multi-part form, or a V2 manifest
+    and its sidecars): each row becomes the action it stores — null
+    fields dropped, map columns back to dicts — and the rows replay
+    through ``snapshot.apply_actions``, the rule JSON commits replay
+    through, so a checkpoint-seeded snapshot equals a JSON replay.
+    ``files`` is left to the caller, as after ``apply_actions``."""
+    from guidewire_spark.sources.snapshot import apply_actions, empty_snapshot
+
     files = checkpoint_files(table_path, version)
     if not files:
         raise FileNotFoundError(
@@ -439,61 +420,21 @@ def load_checkpoint_state(
         # V2: header/checkpointMetadata rows live in the manifest, the
         # add actions in the referenced sidecars (existence already
         # validated by checkpoint_files).
-        action_rows = pq.read_table(files[0]).to_pylist()
-        for sc in _v2_sidecar_paths(table_path, files[0]):
-            action_rows.extend(pq.read_table(sc).to_pylist())
-    else:
-        action_rows = []
-        for f in files:
-            action_rows.extend(pq.read_table(f).to_pylist())
-    active: dict[str, str | None] = {}
-    sizes: dict[str, int] = {}
-    mtimes: dict[str, int] = {}
-    partitions: dict[str, dict] = {}
-    dvs: dict[str, dict] = {}
-    base_rows: dict[str, int] = {}
-    schema: T.StructType | None = None
-    meta_id: str | None = None
-    part_cols: list[str] = []
-    config: dict[str, str] = {}
-    domains: dict[str, str] = {}
-    txns: dict[str, int] = {}
-    protocol: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
-    for row in action_rows:
-        t = row.get("txn")
-        if t and t.get("appId") is not None and t.get("version") is not None:
-            prev = txns.get(t["appId"])
-            if prev is None or t["version"] > prev:
-                txns[t["appId"]] = int(t["version"])
-        proto = row.get("protocol")
-        if proto and proto.get("minReaderVersion") is not None:
-            from guidewire_spark.sources.deltalog import check_reader_protocol
-
-            check_reader_protocol(proto, table_path)
-            protocol = {k: v for k, v in proto.items() if v is not None}
-        dm = row.get("domainMetadata")
-        if dm and dm.get("domain") and not dm.get("removed"):
-            domains[dm["domain"]] = dm.get("configuration") or ""
-
-        add = row.get("add")
-        if add and add.get("path"):
-            active[add["path"]] = add.get("stats")
-            sizes[add["path"]] = add.get("size") or 0
-            mtimes[add["path"]] = add.get("modificationTime") or 0
-            partitions[add["path"]] = dict(add.get("partitionValues") or [])
-            dv = add.get("deletionVector")
-            if dv and dv.get("storageType"):
-                dvs[add["path"]] = dv
-            if add.get("baseRowId") is not None:
-                base_rows[add["path"]] = int(add["baseRowId"])
-        meta = row.get("metaData")
-        if meta and meta.get("schemaString"):
-            schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-            meta_id = meta.get("id") or None
-            part_cols = list(meta.get("partitionColumns") or [])
-            config = dict(meta.get("configuration") or [])
-    return (active, sizes, mtimes, partitions, dvs, base_rows, schema,
-            meta_id, part_cols, config, domains, txns, protocol)
+        files = files + _v2_sidecar_paths(table_path, files[0])
+    actions = [
+        {name: {
+            k: dict(v) if (name, k) in _MAP_FIELDS else v
+            for k, v in body.items()
+            if v is not None
+        }}
+        for f in files
+        for row in pq.read_table(f).to_pylist()
+        for name, body in row.items()
+        if body is not None
+    ]
+    snap = empty_snapshot(table_path)
+    apply_actions(snap, version, actions)
+    return snap
 
 
 def expire_log(table_path: str, keep_versions: int) -> dict:

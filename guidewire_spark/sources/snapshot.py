@@ -75,18 +75,14 @@ class DeltaSnapshot:
     schema: T.StructType | None
     files: list[str] = field(default_factory=list)
     commit_timestamps: dict[int, int] = field(default_factory=dict)
-    file_stats: dict[str, str | None] = field(default_factory=dict)
-    file_sizes: dict[str, int] = field(default_factory=dict)
-    # add.modificationTime (epoch millis) by file path — carried so a
-    # log checkpoint rewrites the adds it replaces faithfully
-    file_mtimes: dict[str, int] = field(default_factory=dict)
+    # the one per-file record: each live file's add action body by
+    # path, as committed minus the per-commit dataChange flag, with
+    # partitionValues always a dict (size, modificationTime, stats,
+    # deletionVector, baseRowId ride along; a log checkpoint rewrites
+    # it verbatim)
+    adds: dict[str, dict] = field(default_factory=dict)
     metadata_id: str | None = None
     partition_columns: list[str] = field(default_factory=list)
-    file_partitions: dict[str, dict] = field(default_factory=dict)
-    # merge-on-read: live add.deletionVector descriptors by file path
-    file_dvs: dict[str, dict] = field(default_factory=dict)
-    # row tracking: live add.baseRowId per file path
-    file_base_rows: dict[str, int] = field(default_factory=dict)
     # latest metaData.configuration AS OF this snapshot's version —
     # version-pinned, so time travel sees the config of its era
     configuration: dict[str, str] = field(default_factory=dict)
@@ -115,6 +111,17 @@ class DeltaSnapshot:
             delta_log_dir(self.table_path), f"{self.version:020d}.json"
         )
 
+    def deletion_vectors(self, paths=None) -> dict[str, dict]:
+        """Live deletion-vector descriptors by path, over ``paths``
+        (default: every live file) — the map ``sources.dv`` applies.
+        Built on each call: hoist it out of per-file loops."""
+        out = {}
+        for p in self.files if paths is None else paths:
+            dv = self.adds[p].get("deletionVector")
+            if dv is not None:
+                out[p] = dv
+        return out
+
     def metadata_count(self) -> int | None:
         """COUNT(*) answered from add.stats alone — no file is opened.
         Returns None when any live file lacks numRecords (the count
@@ -124,18 +131,14 @@ class DeltaSnapshot:
         Deletion-vector rows are subtracted via the descriptor's
         cardinality — still metadata-only."""
         total = 0
-        import json as _json
-
         for path in self.files:
-            raw = self.file_stats.get(path)
-            if not raw:
-                return None
-            n = _json.loads(raw).get("numRecords")
+            add = self.adds[path]
+            raw = add.get("stats")
+            n = json.loads(raw).get("numRecords") if raw else None
             if n is None:
                 return None
-            total += n
-        for dv in self.file_dvs.values():
-            total -= int(dv.get("cardinality", 0))
+            dv = add.get("deletionVector") or {}
+            total += n - int(dv.get("cardinality", 0))
         return total
 
     def pruned_files(self, column: str, lo=None, hi=None) -> list[str]:
@@ -144,7 +147,8 @@ class DeltaSnapshot:
         stats are always kept — skipping is sound, never lossy)."""
         from guidewire_spark.sources.stats import prune_files
 
-        return prune_files(self.file_stats, self.files, column, lo, hi)
+        stats = {p: self.adds[p].get("stats") for p in self.files}
+        return prune_files(stats, self.files, column, lo, hi)
 
 
 def _read_commit(table_path: str, version: int) -> list[dict]:
@@ -176,39 +180,24 @@ def load_snapshot_or_empty(table_path: str) -> DeltaSnapshot:
 def apply_actions(snap: DeltaSnapshot, version: int, actions: list[dict]) -> None:
     """The replay rule: apply commit ``version``'s actions to ``snap``
     IN PLACE.  ``snap.files`` is left to the caller, which re-derives
-    it once from ``file_stats`` (sorting per commit would make a long
-    replay quadratic).  ``load_snapshot`` replays every JSON commit
-    through here and ``deltalog.write_commit`` advances its base
-    through here, so both agree by construction."""
+    it once from ``snap.adds`` (sorting per commit would make a long
+    replay quadratic).  It is the only rule: ``load_snapshot`` replays
+    every JSON commit through here, a log checkpoint's rows seed the
+    state through here (``log_checkpoint.load_checkpoint_state``), and
+    ``deltalog.write_commit`` advances its base through here, so all
+    three agree by construction."""
     snap.version = version
     for action in actions:
         if "add" in action:
-            add = action["add"]
-            path = add["path"]
-            snap.file_stats[path] = add.get("stats")
-            snap.file_sizes[path] = add.get("size", 0)
-            snap.file_mtimes[path] = add.get("modificationTime", 0)
-            snap.file_partitions[path] = add.get("partitionValues") or {}
-            # re-adding a path REPLACES its DV state (a MOR delete
-            # carries the merged descriptor; a plain re-add after
-            # OPTIMIZE/purge carries none and clears it)
-            dv = add.get("deletionVector")
-            if dv is not None:
-                snap.file_dvs[path] = dv
-            else:
-                snap.file_dvs.pop(path, None)
-            brid = add.get("baseRowId")
-            if brid is not None:
-                snap.file_base_rows[path] = int(brid)
-            else:
-                snap.file_base_rows.pop(path, None)
+            # re-adding a path REPLACES its record, deletion vector and
+            # baseRowId included (a MOR delete carries the merged
+            # descriptor; a plain re-add after OPTIMIZE/purge carries
+            # none and clears it)
+            add = {k: v for k, v in action["add"].items() if k != "dataChange"}
+            add["partitionValues"] = add.get("partitionValues") or {}
+            snap.adds[add["path"]] = add
         elif "remove" in action:
-            path = action["remove"]["path"]
-            for per_file in (
-                snap.file_stats, snap.file_sizes, snap.file_mtimes,
-                snap.file_partitions, snap.file_dvs, snap.file_base_rows,
-            ):
-                per_file.pop(path, None)
+            snap.adds.pop(action["remove"]["path"], None)
         elif "metaData" in action:
             meta = action["metaData"]
             snap.schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
@@ -250,7 +239,7 @@ def advance_snapshot(
         if isinstance(getattr(base, f.name), dict)
     })
     apply_actions(snap, version, actions)
-    snap.files = sorted(snap.file_stats)
+    snap.files = sorted(snap.adds)
     return snap
 
 
@@ -305,16 +294,12 @@ def load_snapshot(
     if version not in versions and version != ckpt_version:
         raise ValueError(f"version {version} not in {table_path} (have {versions})")
 
-    snap = empty_snapshot(table_path)
     if ckpt_version is not None and ckpt_version <= version:
         # O(1) replay: seed from the checkpoint parquet, then apply
         # only the JSON tail — instead of O(versions) JSON reads.
-        (snap.file_stats, snap.file_sizes, snap.file_mtimes,
-         snap.file_partitions, snap.file_dvs, snap.file_base_rows,
-         snap.schema, snap.metadata_id, snap.partition_columns,
-         snap.configuration, snap.domains, snap.txns,
-         snap.protocol) = load_checkpoint_state(table_path, ckpt_version)
-        snap.version = ckpt_version
+        snap = load_checkpoint_state(table_path, ckpt_version)
+    else:
+        snap = empty_snapshot(table_path)
     for v in versions:
         if v <= snap.version:
             continue
@@ -322,7 +307,7 @@ def load_snapshot(
             break
         apply_actions(snap, v, _read_commit(table_path, v))
     snap.version = version
-    snap.files = sorted(snap.file_stats)
+    snap.files = sorted(snap.adds)
     return snap
 
 
@@ -426,8 +411,20 @@ def read_delta_changes(
     # empty partitionValues, so removes of files added BEFORE the
     # window resolve through a snapshot at from_version (checkpoint
     # truncation of that version degrades to the latest snapshot's map,
-    # which still covers every currently-live file).
-    pv_map: dict[str, dict] = dict(latest.file_partitions)
+    # which still covers every currently-live file).  Base-row-id
+    # state replays alongside dv_state so every frame can resolve ids
+    # as of ITS version; pre-window removes fall back to the latest
+    # snapshot's ids the same way.
+    pv_map: dict[str, dict] = {}
+    base_map: dict[str, int] = {}
+
+    def seed(snap: DeltaSnapshot) -> None:
+        for p, add in snap.adds.items():
+            pv_map[p] = add["partitionValues"]
+            if "baseRowId" in add:
+                base_map[p] = add["baseRowId"]
+
+    seed(latest)
     # dv_state seeds unconditionally (not only for partitioned
     # tables): the per-version DV diff needs the vectors live AT
     # from_version or already-dead rows re-emit as deletes.  A
@@ -439,17 +436,12 @@ def read_delta_changes(
     # already-dead rows as fresh deletes.
     dv_state: dict[str, dict] = {}
     dv_seed_failed = False
-    # base-row-id state replays alongside dv_state so every frame can
-    # resolve ids as of ITS version; pre-window removes fall back to
-    # the latest snapshot's map the same way pv_map does
-    base_map: dict[str, int] = dict(latest.file_base_rows)
     mat_col = (latest.configuration or {}).get(MATERIALIZED_ROW_ID_KEY)
     if from_version >= 0:
         try:
             start_snap = load_snapshot(table_path, version=from_version)
-            pv_map.update(start_snap.file_partitions)
-            dv_state = dict(start_snap.file_dvs)
-            base_map.update(start_snap.file_base_rows)
+            seed(start_snap)
+            dv_state = start_snap.deletion_vectors()
         except (ValueError, FileNotFoundError):
             dv_seed_failed = True
 
@@ -618,6 +610,27 @@ def read_delta_changes(
         )
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
 
+def read_live_files(
+    spark: SparkSession, snap: DeltaSnapshot, schema, paths: list[str]
+) -> DataFrame:
+    """Scan the live files ``paths`` of ``snap`` under ``schema`` with
+    their deletion vectors applied: plain files through the stock scan,
+    vectored files with (file, row_index) metadata broadcast-anti-joined
+    against the dead set (bounded by the deleted-row count)."""
+    from functools import reduce
+
+    dvs = snap.deletion_vectors(paths)
+    plain = [p for p in paths if p not in dvs]
+    frames = []
+    if plain:
+        frames.append(read_files_with_schema(spark, schema, plain))
+    if dvs:
+        from guidewire_spark.sources.dv import apply_dv, scan_with_row_index
+
+        frames.append(
+            apply_dv(scan_with_row_index(spark, schema, list(dvs)), spark, dvs)
+        )
+    return reduce(DataFrame.unionByName, frames)
 
 
 def _scan_with_row_ids(spark, snap, files, schema):
@@ -642,7 +655,7 @@ def _scan_with_row_ids(spark, snap, files, schema):
         scan_with_row_index,
     )
 
-    missing = [p for p in files if p not in snap.file_base_rows]
+    missing = [p for p in files if "baseRowId" not in snap.adds[p]]
     if missing:
         raise ValueError(
             f"{len(missing)} file(s) have no baseRowId — enable row "
@@ -656,7 +669,7 @@ def _scan_with_row_ids(spark, snap, files, schema):
         )
     df = scan_with_row_index(spark, scan_schema, files)
     bases = spark.createDataFrame(
-        [(normalize_path(p), int(snap.file_base_rows[p])) for p in files],
+        [(normalize_path(p), int(snap.adds[p]["baseRowId"])) for p in files],
         f"{META_FILE} string, __base long",
     )
     default_id = F.col("__base") + F.col(META_ROW)
@@ -670,7 +683,7 @@ def _scan_with_row_ids(spark, snap, files, schema):
     )
     if mat_col:
         df = df.drop(mat_col)
-    return apply_dv(df, spark, {p: snap.file_dvs[p] for p in files if p in snap.file_dvs})
+    return apply_dv(df, spark, snap.deletion_vectors(files))
 
 
 def read_delta(
@@ -703,23 +716,7 @@ def read_delta(
             return spark.createDataFrame([], base)
         if with_row_ids:
             return _scan_with_row_ids(spark, snap, snap.files, snap.schema)
-        if not snap.file_dvs:
-            return read_files_with_schema(spark, snap.schema, snap.files)
-        # merge-on-read: plain files scan as usual; DV'd files scan
-        # with (file, row_index) metadata and broadcast-anti-join the
-        # dead set (bounded by deleted-row count) out
-        from guidewire_spark.sources.dv import apply_dv, scan_with_row_index
-
-        plain = [p for p in snap.files if p not in snap.file_dvs]
-        dvd = [p for p in snap.files if p in snap.file_dvs]
-        live = apply_dv(
-            scan_with_row_index(spark, snap.schema, dvd), spark, snap.file_dvs
-        )
-        if plain:
-            live = read_files_with_schema(spark, snap.schema, plain).unionByName(
-                live
-            )
-        return live
+        return read_live_files(spark, snap, snap.schema, snap.files)
 
     from functools import reduce
 
@@ -728,7 +725,7 @@ def read_delta(
     pcols = snap.partition_columns
     groups: dict[tuple, list[str]] = {}
     for path in snap.files:
-        pv = snap.file_partitions.get(path, {})
+        pv = snap.adds[path]["partitionValues"]
         if partition_filter and any(
             pv.get(k) != (None if v is None else str(v))
             for k, v in partition_filter.items()
@@ -747,31 +744,9 @@ def read_delta(
         groups.items(), key=lambda kv: tuple((v is None, v or "") for v in kv[0])
     ):
         if with_row_ids:
-            group_parts = [
-                _scan_with_row_ids(spark, snap, files, data_schema)
-            ]
+            df = _scan_with_row_ids(spark, snap, files, data_schema)
         else:
-            plain = [p for p in files if p not in snap.file_dvs]
-            dvd = [p for p in files if p in snap.file_dvs]
-            group_parts = []
-            if plain:
-                group_parts.append(
-                    read_files_with_schema(spark, data_schema, plain)
-                )
-            if dvd:
-                from guidewire_spark.sources.dv import (
-                    apply_dv,
-                    scan_with_row_index,
-                )
-
-                group_parts.append(
-                    apply_dv(
-                        scan_with_row_index(spark, data_schema, dvd),
-                        spark,
-                        {p: snap.file_dvs[p] for p in dvd},
-                    )
-                )
-        df = reduce(lambda a, b: a.unionByName(b), group_parts)
+            df = read_live_files(spark, snap, data_schema, files)
         for col, val in zip(pcols, pv):
             dtype = schema[col].dataType if col in schema.fieldNames() else T.StringType()
             df = df.withColumn(col, F.lit(val).cast(dtype))

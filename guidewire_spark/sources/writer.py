@@ -28,8 +28,10 @@ writes nothing, hands its listed files to the same
 ``_new_file_adds``): stats under the snapshot's stats spec, hive
 ``partitionValues``, and on row-tracked tables ``baseRowId``s above the
 high-water mark, whose bumped configuration the operation commits in
-the same commit.  ``tests/test_staging_guard.py`` fails on a hand-built
-copy.
+the same commit.  A file that is already live (a deletion-vector
+change, row-tracking enablement, RESTORE, clones) is re-recorded from
+its snapshot record through ``_live_add``.  ``tests/test_staging_guard.py``
+fails on a hand-built copy of either.
 """
 
 from __future__ import annotations
@@ -200,21 +202,25 @@ def _removes(paths, now: int, data_change: bool = True) -> list[dict]:
     return out
 
 
-def _live_add(snap, path: str, now: int, data_change: bool = True, **changes) -> dict:
-    """``add`` re-recording the live file ``path`` of ``snap`` with its
-    recorded size, stats, partition values, deletion vector and base
-    row id, ``changes`` (``deletion_vector=``, ``base_row_id=``)
-    replacing them."""
+def _live_add(snap, path: str, now: int, /, data_change: bool = True, **changes) -> dict:
+    """``add`` re-recording the live file ``path`` of ``snap`` from its
+    record — size, stats, partition values, deletion vector and base
+    row id — with ``changes`` (``deletion_vector=``, ``base_row_id=``,
+    or ``path=`` for a copy of the file) replacing them."""
+    add = snap.adds[path]
     fields = {
-        "stats": snap.file_stats.get(path),
-        "partition_values": snap.file_partitions.get(path),
-        "deletion_vector": snap.file_dvs.get(path),
-        "base_row_id": snap.file_base_rows.get(path),
+        "path": path,
+        "size": add.get("size", 0),
+        "modification_time": now,
+        "stats": add.get("stats"),
+        "partition_values": add["partitionValues"],
+        "deletion_vector": add.get("deletionVector"),
+        "base_row_id": add.get("baseRowId"),
         **changes,
     }
-    add = add_action(path, snap.file_sizes.get(path, 0), now, **fields)
-    add["add"]["dataChange"] = data_change
-    return add
+    out = add_action(**fields)
+    out["add"]["dataChange"] = data_change
+    return out
 
 
 def _vector_swaps(snap, scanned, vectors: dict[str, dict], now: int) -> list[dict]:
@@ -228,7 +234,7 @@ def _vector_swaps(snap, scanned, vectors: dict[str, dict], now: int) -> list[dic
     out = []
     for key, descriptor in sorted(vectors.items()):
         path = by_path[key]
-        out.append(remove_action(path, now, size=snap.file_sizes.get(path)))
+        out.append(remove_action(path, now, size=snap.adds[path].get("size")))
         out.append(_live_add(snap, path, now, deletion_vector=descriptor))
     return out
 
@@ -245,60 +251,58 @@ def _uri_file_key(uri: str) -> str:
     return re.sub("^file:/+", "/", uri)
 
 
-def _read_with_partitions(spark: SparkSession, snap, paths: list[str]) -> DataFrame:
-    """Read data files, materializing partition columns from the log's
+def _scan_by_partition(snap, paths: list[str], scan, tail=None) -> DataFrame:
+    """``scan(schema, files)`` over the live files ``paths`` of
+    ``snap`` with the partition columns materialized from the log's
     ``add.partitionValues`` (hive-layout files don't store them).
 
-    Files are grouped by partition tuple and each group's columns are
-    filled with cast literals, then unioned — the plan has one scan per
-    touched partition, which matches the copy-on-write contract (MERGE/
-    DELETE/OPTIMIZE read only the partitions they rewrite).
-
-    Deletion-vector aware: files carrying a live DV scan through the
-    row-index anti-join, so every copy-on-write rewrite (DELETE /
-    UPDATE / MERGE / OPTIMIZE) reads only LIVE rows — a rewrite of a
-    DV'd file folds the vector in and must never resurrect dead
-    rows."""
+    Files are grouped by partition tuple, each group scanned under the
+    data schema and its columns filled with cast literals, then
+    unioned — the plan has one scan per touched partition, which
+    matches the copy-on-write contract (MERGE/DELETE/OPTIMIZE read
+    only the partitions they rewrite).  With ``tail`` (a list) each
+    group selects the table's columns followed by ``tail``."""
     from functools import reduce
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from guidewire_spark.sources.snapshot import read_files_with_schema
-
-    def read_live(schema, ps):
-        dvd = {p: snap.file_dvs[p] for p in ps if p in snap.file_dvs}
-        plain = [p for p in ps if p not in dvd]
-        frames = []
-        if plain:
-            frames.append(read_files_with_schema(spark, schema, plain))
-        if dvd:
-            from guidewire_spark.sources.dv import apply_dv, scan_with_row_index
-
-            frames.append(
-                apply_dv(
-                    scan_with_row_index(spark, schema, list(dvd)), spark, dvd
-                )
-            )
-        return reduce(DataFrame.unionByName, frames)
-
     if not snap.partition_columns:
-        return read_live(snap.schema, paths)
+        return scan(snap.schema, paths)
     pcols = list(snap.partition_columns)
     data_schema = T.StructType(
         [f for f in snap.schema.fields if f.name not in set(pcols)]
     )
     groups: dict[tuple, list[str]] = {}
     for p in paths:
-        pv = snap.file_partitions.get(p) or {}
+        pv = snap.adds[p]["partitionValues"]
         groups.setdefault(tuple(pv.get(c) for c in pcols), []).append(p)
     parts = []
     for key, ps in groups.items():
-        df = read_live(data_schema, ps)
+        df = scan(data_schema, ps)
         for c, v in zip(pcols, key):
             df = df.withColumn(c, F.lit(v).cast(snap.schema[c].dataType))
-        parts.append(df.select([f.name for f in snap.schema.fields]))
+        if tail is not None:
+            df = df.select(snap.schema.fieldNames() + tail)
+        parts.append(df)
     return reduce(DataFrame.unionByName, parts)
+
+
+def _read_with_partitions(spark: SparkSession, snap, paths: list[str]) -> DataFrame:
+    """Read data files with their partition columns
+    (:func:`_scan_by_partition`), deletion-vector aware: files
+    carrying a live DV scan through the row-index anti-join, so every
+    copy-on-write rewrite (DELETE / UPDATE / MERGE / OPTIMIZE) reads
+    only LIVE rows — a rewrite of a DV'd file folds the vector in and
+    must never resurrect dead rows."""
+    from guidewire_spark.sources.snapshot import read_live_files
+
+    return _scan_by_partition(
+        snap,
+        paths,
+        lambda schema, ps: read_live_files(spark, snap, schema, ps),
+        [],
+    )
 
 
 def _read_with_partitions_row_ids(
@@ -309,31 +313,14 @@ def _read_with_partitions_row_ids(
     ``_row_id`` (materialized-or-default, snapshot._scan_with_row_ids).
     The read side of id-preserving rewrites (REORG PURGE / OPTIMIZE on
     tracked tables)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     from guidewire_spark.sources.snapshot import _scan_with_row_ids
 
-    if not snap.partition_columns:
-        return _scan_with_row_ids(spark, snap, paths, snap.schema)
-    pcols = list(snap.partition_columns)
-    data_schema = T.StructType(
-        [f for f in snap.schema.fields if f.name not in set(pcols)]
+    return _scan_by_partition(
+        snap,
+        paths,
+        lambda schema, ps: _scan_with_row_ids(spark, snap, ps, schema),
+        ["_row_id"],
     )
-    groups: dict[tuple, list[str]] = {}
-    for p in paths:
-        pv = snap.file_partitions.get(p) or {}
-        groups.setdefault(tuple(pv.get(c) for c in pcols), []).append(p)
-    parts = []
-    order = [f.name for f in snap.schema.fields] + ["_row_id"]
-    for key, ps in groups.items():
-        df = _scan_with_row_ids(spark, snap, ps, data_schema)
-        for c, v in zip(pcols, key):
-            df = df.withColumn(c, F.lit(v).cast(snap.schema[c].dataType))
-        parts.append(df.select(order))
-    return reduce(DataFrame.unionByName, parts)
 
 
 def _materialized_row_id_col(config: dict) -> str:
@@ -1107,7 +1094,7 @@ def _auto_compact_once(spark, snap) -> None:
         config.get("gw.autoCompact.minFileSize", str(16 * 1024 * 1024))
     )
     table_path = snap.table_path
-    small = [p for p in snap.files if snap.file_sizes.get(p, 0) < small_cut]
+    small = [p for p in snap.files if snap.adds[p].get("size", 0) < small_cut]
     pcols = list(snap.partition_columns or [])
     if not pcols:
         if len(small) >= min_files:
@@ -1118,8 +1105,7 @@ def _auto_compact_once(spark, snap) -> None:
     from collections import Counter
 
     per_part: Counter = Counter(
-        tuple(sorted((snap.file_partitions.get(p) or {}).items()))
-        for p in small
+        tuple(sorted(snap.adds[p]["partitionValues"].items())) for p in small
     )
     tripped = [dict(pv) for pv, count in per_part.items() if count >= min_files]
     if tripped:
@@ -1222,7 +1208,7 @@ def optimize_table(
             for p in victims
             if any(
                 all(
-                    (snap.file_partitions.get(p) or {}).get(c) == v
+                    snap.adds[p]["partitionValues"].get(c) == v
                     for c, v in scope.items()
                 )
                 for scope in scopes
@@ -1235,7 +1221,7 @@ def optimize_table(
         # rebuilding from snap.files would silently escape the
         # where_partitions scope
         victims = [
-            p for p in victims if snap.file_sizes.get(p, 0) < min_file_size
+            p for p in victims if snap.adds[p].get("size", 0) < min_file_size
         ]
         if len(victims) < 2:
             return snap.version  # nothing worth packing
@@ -1843,39 +1829,21 @@ def _scan_rowindex_with_partitions(
 ) -> DataFrame:
     """Scan ``paths`` carrying (file base name, row index) metadata
     (dv.scan_with_row_index) with the table's partition columns
-    materialized from the log, so DML predicates may reference
-    them.  ``extra_fields`` appends physical-only StructFields to the
-    scan schema (e.g. the materialized-row-id column on row-tracked
-    tables — NULL for files that don't carry it)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
+    materialized from the log (:func:`_scan_by_partition`), so DML
+    predicates may reference them.  ``extra_fields`` appends
+    physical-only StructFields to the scan schema (e.g. the
+    materialized-row-id column on row-tracked tables — NULL for files
+    that don't carry it)."""
     from pyspark.sql import types as T
 
     from guidewire_spark.sources.dv import scan_with_row_index
 
-    def with_extras(schema):
-        if not extra_fields:
-            return schema
-        return T.StructType(list(schema.fields) + list(extra_fields))
+    def scan(schema, ps):
+        if extra_fields:
+            schema = T.StructType(list(schema.fields) + list(extra_fields))
+        return scan_with_row_index(spark, schema, ps)
 
-    if not snap.partition_columns:
-        return scan_with_row_index(spark, with_extras(snap.schema), paths)
-    pcols = list(snap.partition_columns)
-    data_schema = T.StructType(
-        [f for f in snap.schema.fields if f.name not in set(pcols)]
-    )
-    groups: dict[tuple, list[str]] = {}
-    for p in paths:
-        pv = snap.file_partitions.get(p) or {}
-        groups.setdefault(tuple(pv.get(c) for c in pcols), []).append(p)
-    parts = []
-    for key, ps in groups.items():
-        df = scan_with_row_index(spark, with_extras(data_schema), ps)
-        for c, v in zip(pcols, key):
-            df = df.withColumn(c, F.lit(v).cast(snap.schema[c].dataType))
-        parts.append(df)
-    return reduce(DataFrame.unionByName, parts)
+    return _scan_by_partition(snap, paths, scan)
 
 
 def delete_from_mor(
@@ -1927,7 +1895,7 @@ def _delete_mor(spark, snap, predicate, prune_column, prune_lo, prune_hi) -> int
         else list(snap.files)
     )
     scan = _scan_rowindex_with_partitions(spark, snap, candidates)
-    existing = {p: snap.file_dvs[p] for p in candidates if p in snap.file_dvs}
+    existing = snap.deletion_vectors(candidates)
     scan = subtract_dead_rows(scan, spark, existing)
     # Indexes aggregate + encode executor-side; the driver sees one
     # (path, payload) descriptor per touched file, never a row list.
@@ -2306,7 +2274,8 @@ def delete_auto(
     total = 0
     for p in candidates:
         if normalize_path(p) in per_file:
-            raw = snap.file_stats.get(p)
+            add = snap.adds[p]
+            raw = add.get("stats")
             n = _json.loads(raw).get("numRecords") if raw else None
             if n is None:
                 # stats missing: be conservative, assume dense (CoW)
@@ -2317,7 +2286,7 @@ def delete_auto(
             # without the correction a previously-vectored file's
             # density is understated and dense deletes keep stacking
             # vectors on exactly the files that most need a rewrite
-            dv = snap.file_dvs.get(p)
+            dv = add.get("deletionVector")
             if dv:
                 n -= int(dv.get("cardinality", 0))
             total += max(n, 0)
@@ -2344,10 +2313,10 @@ def purge_deletion_vectors(spark: SparkSession, table_path: str) -> int:
     on tracked tables (the round-6 gap)."""
     snap = load_snapshot(table_path)
     _gate_write(snap)
-    if not snap.file_dvs:
+    rewrite = list(snap.deletion_vectors())
+    if not rewrite:
         raise ValueError(f"no deletion vectors to purge at {table_path}")
     tracked = _row_tracking_enabled(snap)
-    rewrite = [p for p in snap.files if p in snap.file_dvs]
     pcols = list(snap.partition_columns or [])
     from guidewire_spark.sources.snapshot import MATERIALIZED_ROW_ID_KEY
 
@@ -2443,7 +2412,7 @@ def update_table_mor(
 
         mat_col = _materialized_row_id_col(snap.configuration)
         extra_fields = [T.StructField(mat_col, T.LongType(), True)]
-        missing = [p for p in candidates if p not in snap.file_base_rows]
+        missing = [p for p in candidates if "baseRowId" not in snap.adds[p]]
         if missing:
             raise ValueError(
                 f"{len(missing)} file(s) have no baseRowId — row "
@@ -2452,7 +2421,7 @@ def update_table_mor(
     scan = _scan_rowindex_with_partitions(
         spark, snap, candidates, extra_fields=extra_fields
     )
-    existing = {p: snap.file_dvs[p] for p in candidates if p in snap.file_dvs}
+    existing = snap.deletion_vectors(candidates)
     scan = subtract_dead_rows(scan, spark, existing)
     matched = scan.where(predicate)
     if tracked:
@@ -2460,7 +2429,7 @@ def update_table_mor(
         # image carries it forward (materialized wins over default)
         bases = spark.createDataFrame(
             [
-                (normalize_path(p), int(snap.file_base_rows[p]))
+                (normalize_path(p), int(snap.adds[p]["baseRowId"]))
                 for p in candidates
             ],
             f"{META_FILE} string, __base long",
@@ -2653,24 +2622,16 @@ def update_table(
     return snap.version + 1
 
 
-def shallow_clone(
-    src_table: str, dst_table: str, version: int | None = None
-) -> int:
-    """SHALLOW CLONE (the reference's core concept, generalized): a new
-    Delta table whose log references the source snapshot's data files
-    in place — zero bytes copied, exactly how the connector interprets
-    CDA trees as Delta tables (``/root/reference/README.md:22-28``).
-    Optionally clones a historical ``version`` (time-travel clone).
-    The clone's history starts fresh at version 0; VACUUM on the clone
-    never touches the source's files (they live outside the clone's
-    directory — the guard the reference documents at README.md:45-49).
-    """
-    snap = load_snapshot(src_table, version=version)
+def _clone_header(snap, dst_table: str, now: int) -> list[dict]:
+    """Create the directory of a clone of ``snap`` and return its
+    version-0 header: the source's protocol (the features its files
+    use — deletion vectors, row tracking — come along) and a metaData
+    with a fresh id and the source's schema, partitioning and
+    configuration."""
     if os.path.isdir(os.path.join(dst_table, "_delta_log")):
         raise FileExistsError(f"destination {dst_table} is already a table")
     os.makedirs(dst_table, exist_ok=True)
-    now = int(time.time() * 1000)
-    actions: list[dict] = [protocol_action()]
+    actions: list[dict] = [{"protocol": dict(snap.protocol)}]
     if snap.schema is not None:
         actions.append(
             metadata_action(
@@ -2680,16 +2641,27 @@ def shallow_clone(
                 configuration=snap.configuration,
             )
         )
-    actions.extend(
-        add_action(
-            p,
-            snap.file_sizes.get(p, 0),
-            now,
-            stats=snap.file_stats.get(p),
-            partition_values=snap.file_partitions.get(p),
-        )
-        for p in snap.files
-    )
+    return actions
+
+
+def shallow_clone(
+    src_table: str, dst_table: str, version: int | None = None
+) -> int:
+    """SHALLOW CLONE (the reference's core concept, generalized): a new
+    Delta table whose log references the source snapshot's data files
+    in place — zero bytes copied, exactly how the connector interprets
+    CDA trees as Delta tables (the reference's ``README.md:22-28``).
+    Optionally clones a historical ``version`` (time-travel clone).
+    Each file is re-recorded as the source records it, deletion
+    vector and ``baseRowId`` included.  The clone's history starts
+    fresh at version 0; VACUUM on the clone never touches the source's
+    files (they live outside the clone's directory — the guard the
+    reference documents at README.md:45-49).
+    """
+    snap = load_snapshot(src_table, version=version)
+    now = int(time.time() * 1000)
+    actions = _clone_header(snap, dst_table, now)
+    actions.extend(_live_add(snap, p, now) for p in snap.files)
     actions.append(
         commit_info_action(
             "CLONE",
@@ -2715,7 +2687,8 @@ def deep_clone(
 
     Data files are copied (parquet bytes, never decoded) into the
     clone's directory and a fresh version-0 log written with the
-    source's schema, per-file stats, and partition values — so unlike
+    source's schema and each file's record (stats, partition values,
+    deletion vector, ``baseRowId``) — so unlike
     :func:`shallow_clone`, whose add paths point into the source,
     VACUUM or destructive rewrites on the source can never break the
     clone.  The per-file loop is metadata-scale (the file list, same
@@ -2724,20 +2697,9 @@ def deep_clone(
     object-store server-side copy, not through compute.
     """
     snap = load_snapshot(src_table, version=version)
-    if os.path.isdir(os.path.join(dst_table, "_delta_log")):
-        raise FileExistsError(f"destination {dst_table} is already a table")
-    os.makedirs(dst_table, exist_ok=True)
     now = int(time.time() * 1000)
-    actions: list[dict] = [protocol_action()]
-    if snap.schema is not None:
-        actions.append(
-            metadata_action(
-                snap.schema,
-                partition_columns=snap.partition_columns or None,
-                created_time=now,
-                configuration=snap.configuration,
-            )
-        )
+    actions = _clone_header(snap, dst_table, now)
+    adds = []
     src_root = os.path.abspath(src_table)
     for p in snap.files:
         src_path = p if os.path.isabs(p) else os.path.join(src_table, p)
@@ -2752,23 +2714,15 @@ def deep_clone(
         dst_path = os.path.join(dst_table, rel)
         os.makedirs(os.path.dirname(dst_path), exist_ok=True)
         shutil.copy2(src_path, dst_path)
-        actions.append(
-            add_action(
-                os.path.abspath(dst_path),  # log convention: absolute
-                snap.file_sizes.get(p, os.path.getsize(dst_path)),
-                now,
-                stats=snap.file_stats.get(p),
-                partition_values=snap.file_partitions.get(p),
-            )
-        )
+        # log convention: absolute paths
+        adds.append(_live_add(snap, p, now, path=os.path.abspath(dst_path)))
+    actions += adds
     actions.append(
-        commit_info_action(
+        _commit_info(
             "CLONE",
             f"deep from {src_table}"
             + (f"@v{version}" if version is not None else ""),
-            False,
-            len(snap.files),
-            sum(snap.file_sizes.get(p, 0) for p in snap.files),
+            adds,
             now,
         )
     )
@@ -2787,7 +2741,13 @@ def restore_table(table_path: str, version: int) -> int:
     versions otherwise survives the restore and keeps hiding rows the
     old version contained), and files returning from the old snapshot
     carry its recorded deletionVector so purged-then-restored dead
-    rows never resurrect."""
+    rows never resurrect.
+
+    The metaData re-records the old version's (id, schema,
+    partitioning and configuration: constraints, appendOnly, column
+    mapping, row tracking), except that the row-id high-water mark
+    never moves below the current one — ids issued since ``version``
+    are never issued again."""
     cur = load_snapshot(table_path)
     _reject_on_append_only(cur, "RESTORE")
     old = load_snapshot(table_path, version=version)
@@ -2795,13 +2755,11 @@ def restore_table(table_path: str, version: int) -> int:
     now = int(time.time() * 1000)
     actions: list[dict] = []
     if old.schema is not None:
-        actions.append(
-            metadata_action(
-                old.schema,
-                partition_columns=old.partition_columns,
-                created_time=now,
-            )
-        )
+        config = dict(old.configuration)
+        mark = cur.configuration.get(_ROW_HWM_KEY)
+        if mark is not None and int(mark) > int(config.get(_ROW_HWM_KEY, "-1")):
+            config[_ROW_HWM_KEY] = mark
+        actions.append(_table_metadata(old, now, configuration=config))
     old_set, cur_set = set(old.files), set(cur.files)
     actions.extend(_removes([p for p in cur.files if p not in old_set], now))
     # files to (re-)add: absent from the current snapshot, OR present
@@ -2814,8 +2772,10 @@ def restore_table(table_path: str, version: int) -> int:
         p
         for p in old.files
         if p not in cur_set
-        or old.file_dvs.get(p) != cur.file_dvs.get(p)
-        or old.file_base_rows.get(p) != cur.file_base_rows.get(p)
+        or any(
+            old.adds[p].get(k) != cur.adds[p].get(k)
+            for k in ("deletionVector", "baseRowId")
+        )
     ]
     # in-place DV-state change: pair the add
     actions.extend(_removes([p for p in readd if p in cur_set], now))
@@ -2867,7 +2827,7 @@ def overwrite_partitions(df: DataFrame, table_path: str) -> int:
     doomed = [
         p
         for p in snap.files
-        if tuple((snap.file_partitions.get(p) or {}).get(c) for c in pcols)
+        if tuple(snap.adds[p]["partitionValues"].get(c) for c in pcols)
         in incoming
     ]
     adds = stage_add_actions(_to_physical(df, snap.schema), snap, pcols)
@@ -2933,7 +2893,7 @@ def table_detail(table_path: str) -> dict:
         "id": snap.metadata_id,
         "location": os.path.abspath(table_path),
         "numFiles": len(snap.files),
-        "sizeInBytes": sum(snap.file_sizes.get(p, 0) for p in snap.files),
+        "sizeInBytes": sum(add.get("size", 0) for add in snap.adds.values()),
         "partitionColumns": list(snap.partition_columns or []),
         "version": snap.version,
         "properties": dict(snap.configuration),
@@ -3066,13 +3026,14 @@ def generate_symlink_manifest(table_path: str) -> list[str]:
     is metadata-scale (the file list); returns the manifest paths.
     """
     snap = load_snapshot(table_path)
-    if snap.file_dvs:
+    dvs = snap.deletion_vectors()
+    if dvs:
         # manifest readers scan the listed parquet verbatim and would
         # silently see every merge-on-read-deleted row (a GDPR-erasure
         # leak); Delta's own GENERATE refuses on DV tables likewise —
         # purge first, then export
         raise ValueError(
-            f"table has deletion vectors on {len(snap.file_dvs)} file(s); "
+            f"table has deletion vectors on {len(dvs)} file(s); "
             "external manifest readers cannot apply them — run "
             "purge_deletion_vectors (REORG APPLY PURGE) before GENERATE"
         )
@@ -3086,7 +3047,7 @@ def generate_symlink_manifest(table_path: str) -> list[str]:
             os.path.join(table_path, p)
         )
         if pcols:
-            pv = snap.file_partitions.get(p, {})
+            pv = snap.adds[p]["partitionValues"]
             # Hive/Presto/Trino spell a null partition value
             # __HIVE_DEFAULT_PARTITION__, not the Python repr.
             sub = "/".join(

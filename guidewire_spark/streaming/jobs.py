@@ -2190,7 +2190,7 @@ def stream_auto_compact_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     snap = load_snapshot(table)
     small = [
-        p for p in snap.files if snap.file_sizes.get(p, 0) < 16 * 1024 * 1024
+        p for p in snap.files if snap.adds[p].get("size", 0) < 16 * 1024 * 1024
     ]
     if len(small) >= 4:
         raise AssertionError(

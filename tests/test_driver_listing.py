@@ -69,7 +69,7 @@ def test_read_delta_deletion_vectors_build_without_jobs(spark, tmp_path):
     t = str(tmp_path / "dv")
     write_delta(_staged(spark), t)
     delete_from_mor(spark, t, "k % 2 = 0")
-    assert len(load_snapshot(t).file_dvs) == N_FILES
+    assert len(load_snapshot(t).deletion_vectors()) == N_FILES
     df, jobs = _build_jobs(spark, "listing-dv", lambda: read_delta(spark, t))
     assert jobs == 0
     assert _keys(df) == list(range(1, N_ROWS, 2))
@@ -81,7 +81,7 @@ def test_read_delta_partitioned_builds_without_jobs(spark, tmp_path):
     write_delta(_staged(spark), t, partition_by=["p"])
     snap = load_snapshot(t)
     for value in ("0", "1"):
-        group = [f for f in snap.files if snap.file_partitions[f]["p"] == value]
+        group = [f for f in snap.files if snap.adds[f]["partitionValues"]["p"] == value]
         assert len(group) == N_FILES
     df, jobs = _build_jobs(spark, "listing-part", lambda: read_delta(spark, t))
     assert jobs == 0

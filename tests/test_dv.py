@@ -55,7 +55,7 @@ def test_mor_delete_matches_copy_on_write(spark, sf_dir, tmp_path):
     after = load_snapshot(mor)
     # the data files are untouched — only the log changed
     assert set(after.files) == set(before.files)
-    assert after.file_dvs
+    assert after.deletion_vectors()
     want = {r.s_suppkey for r in s.where("s_suppkey % 3 <> 1").collect()}
     got = {r.s_suppkey for r in read_delta(spark, mor).collect()}
     assert got == want
@@ -72,7 +72,7 @@ def test_mor_deletes_merge_and_dead_rows_are_invisible(spark, sf_dir, tmp_path):
     delete_from_mor(spark, t, "n_nationkey < 5")
     delete_from_mor(spark, t, "n_nationkey < 10")  # overlap: 5..9 fresh
     snap = load_snapshot(t)
-    (dv,) = snap.file_dvs.values()
+    (dv,) = snap.deletion_vectors().values()
     assert dv["cardinality"] == 10  # merged, not double-counted
     assert read_delta(spark, t).count() == n.count() - 10
     # a predicate matching only already-dead rows is a no-op DELETE
@@ -89,7 +89,7 @@ def test_purge_rewrites_without_dead_rows_and_stays_silent_in_cdf(
     delete_from_mor(spark, t, "r_regionkey = 2")
     v = purge_deletion_vectors(spark, t)
     snap = load_snapshot(t)
-    assert not snap.file_dvs
+    assert not snap.deletion_vectors()
     got = {x.r_regionkey for x in read_delta(spark, t).collect()}
     assert got == {x.r_regionkey for x in r.where("r_regionkey <> 2").collect()}
     # dataChange=false: the purge emits NO change events
@@ -127,7 +127,7 @@ def test_copy_on_write_dml_never_resurrects_dv_rows(spark, sf_dir, tmp_path):
     # row 7 dead and clear the vector on the rewritten file
     update_table(spark, t, "n_nationkey = 3", {"n_name": "'PATCHED'"})
     snap = load_snapshot(t)
-    assert not snap.file_dvs
+    assert not snap.deletion_vectors()
     got = {r.n_nationkey: r.n_name for r in read_delta(spark, t).collect()}
     assert 7 not in got
     assert got[3] == "PATCHED"
@@ -145,7 +145,7 @@ def test_checkpoint_preserves_deletion_vectors(spark, sf_dir, tmp_path):
     # drop the JSON commits the checkpoint covers to prove the seed
     # path carries the vectors (snapshot must not need the JSON tail)
     snap = load_snapshot(t)
-    assert snap.file_dvs
+    assert snap.deletion_vectors()
     want = {r.s_suppkey for r in s.where("s_suppkey % 2 <> 0").collect()}
     assert {r.s_suppkey for r in read_delta(spark, t).collect()} == want
 
@@ -182,7 +182,7 @@ def test_mor_update_marks_dead_and_appends_new_images(spark, sf_dir, tmp_path):
     assert set(before.files) <= set(after.files)   # nothing rewritten
     # image files added (one per matched-scan partition), none removed
     assert len(after.files) > len(before.files)
-    assert after.file_dvs
+    assert after.deletion_vectors()
     got = {r.s_suppkey: r.s_name for r in read_delta(spark, t).collect()}
     want = {
         r.s_suppkey: (r.s_name + "!" if r.s_suppkey % 4 == 1 else r.s_name)
@@ -248,7 +248,7 @@ def test_optimize_folds_deletion_vectors_in(spark, sf_dir, tmp_path):
     want = {r.s_suppkey for r in s.where("s_suppkey % 5 <> 2").collect()}
     optimize_table(spark, t)
     snap = load_snapshot(t)
-    assert not snap.file_dvs
+    assert not snap.deletion_vectors()
     assert {r.s_suppkey for r in read_delta(spark, t).collect()} == want
     ch = read_delta_changes(spark, t, from_version=snap.version - 1)
     assert ch.count() == 0  # compaction emits no change events
@@ -269,14 +269,14 @@ def test_restore_is_deletion_vector_aware(spark, sf_dir, tmp_path):
     n_after_delete = read_delta(spark, t).count()
 
     restore_table(t, 0)                                 # v2: undo delete
-    assert not load_snapshot(t).file_dvs
+    assert not load_snapshot(t).deletion_vectors()
     assert read_delta(spark, t).count() == s.count()
 
     delete_from_mor(spark, t, "s_suppkey % 4 = 0")      # v3: DV again
     purge_deletion_vectors(spark, t)                    # v4: rewritten
     restore_table(t, 3)                                 # v5: back to DV era
     snap = load_snapshot(t)
-    assert snap.file_dvs                                # vector restored
+    assert snap.deletion_vectors()                      # vector restored
     assert read_delta(spark, t).count() == n_after_delete
     assert read_delta(spark, t).where("s_suppkey % 4 = 0").count() == 0
 
@@ -349,14 +349,14 @@ def test_delete_auto_picks_strategy_by_damage_ratio(spark, sf_dir, tmp_path):
     v, strat = delete_auto(spark, t1, "doc_id % 50 = 7")  # ~2% of rows
     assert strat == "mor"
     assert set(load_snapshot(t1).files) == files_before
-    assert load_snapshot(t1).file_dvs
+    assert load_snapshot(t1).deletion_vectors()
     assert read_delta(spark, t1).count() == d.where("doc_id % 50 <> 7").count()
 
     t2 = str(tmp_path / "auto_dense")
     write_delta(d, t2, mode="append")
     v, strat = delete_auto(spark, t2, "doc_id % 10 <> 3")  # ~90% of rows
     assert strat == "cow"
-    assert not load_snapshot(t2).file_dvs
+    assert not load_snapshot(t2).deletion_vectors()
     assert read_delta(spark, t2).count() == d.where("doc_id % 10 = 3").count()
 
 
@@ -431,7 +431,7 @@ def test_delete_auto_ratio_uses_live_rows_on_vectored_files(
     # only 16% of PHYSICAL: must still route CoW
     _, strat = delete_auto(spark, t, "n_nationkey IN (0, 5, 10, 15)")
     assert strat == "cow"
-    assert not load_snapshot(t).file_dvs
+    assert not load_snapshot(t).deletion_vectors()
     assert {r.n_nationkey for r in read_delta(spark, t).collect()} == {20}
 
 
@@ -472,7 +472,7 @@ def test_dv_read_guard_routes_large_vectors_off_the_driver(
     assert "UnresolvedHint" not in logical
     assert "ResolvedHint" not in df._jdf.queryExecution().analyzed().toString()
     snap = snap_mod.load_snapshot(t)
-    dead, small = dv_mod.dead_rows_for_join(spark, snap.file_dvs)
+    dead, small = dv_mod.dead_rows_for_join(spark, snap.deletion_vectors())
     assert not small
     # the decode stage is the Arrow-batched executor-side one
     assert "MapInPandas" in dead._jdf.queryExecution().executedPlan().toString()
@@ -509,11 +509,11 @@ def test_mor_write_path_encodes_executor_side(spark, sf_dir, tmp_path):
     write_delta(s, t, mode="append")
     delete_from_mor(spark, t, "s_suppkey % 5 = 0")
     first = {
-        p: set(decode_dv(d)) for p, d in load_snapshot(t).file_dvs.items()
+        p: set(decode_dv(d)) for p, d in load_snapshot(t).deletion_vectors().items()
     }
     delete_from_mor(spark, t, "s_suppkey % 5 = 1")
     merged = {
-        p: set(decode_dv(d)) for p, d in load_snapshot(t).file_dvs.items()
+        p: set(decode_dv(d)) for p, d in load_snapshot(t).deletion_vectors().items()
     }
     # second pass strictly grows each touched file's vector
     for p, idx in first.items():
@@ -579,7 +579,7 @@ def test_roaring_dv_flag_end_to_end(spark, sf_dir, tmp_path):
             struct.unpack_from(
                 "<i", z85_decode(d["pathOrInlineDv"], d["sizeInBytes"]), 0
             )[0]
-            for d in snap.file_dvs.values()
+            for d in snap.deletion_vectors().values()
         }
 
     t = str(tmp_path / "roaring")
@@ -587,13 +587,13 @@ def test_roaring_dv_flag_end_to_end(spark, sf_dir, tmp_path):
     write_delta(s, t, mode="append")
     delete_from_mor(spark, t, "s_suppkey % 3 = 1")
     snap = load_snapshot(t)
-    assert snap.file_dvs
+    assert snap.deletion_vectors()
     assert magics(snap) == {1681511377}  # RoaringBitmapArray magic
     delete_from_mor(spark, t, "s_suppkey % 3 = 2")
     snap2 = load_snapshot(t)
     assert magics(snap2) == {1681511377}
-    for p, d in snap.file_dvs.items():
-        assert set(decode_dv(d)) < set(decode_dv(snap2.file_dvs[p]))
+    for p, d in snap.deletion_vectors().items():
+        assert set(decode_dv(d)) < set(decode_dv(snap2.adds[p]["deletionVector"]))
     want = {r.s_suppkey for r in s.where("s_suppkey % 3 = 0").collect()}
     assert {r.s_suppkey for r in read_delta(spark, t).collect()} == want
 

@@ -72,7 +72,7 @@ def test_checkpoint_roundtrip_matches_full_replay(tmp_path):
     assert seeded.version == full.version
     assert seeded.files == full.files
     assert seeded.schema == full.schema
-    assert seeded.file_sizes == full.file_sizes
+    assert seeded.adds == full.adds
 
 
 def test_replay_from_checkpoint_survives_json_truncation(tmp_path):
@@ -333,9 +333,65 @@ def test_multipart_checkpoint_roundtrip(spark, sf_dir, tmp_path):
     # seeded replay equals the pre-checkpoint state, DVs included
     snap = load_snapshot(t)
     assert set(snap.files) == set(snap_before.files)
-    assert snap.file_dvs == snap_before.file_dvs
+    assert snap.deletion_vectors() == snap_before.deletion_vectors()
     want = {r.s_suppkey for r in s.where("s_suppkey % 2 <> 0").collect()}
     assert {r.s_suppkey for r in read_delta(spark, t).collect()} == want
+
+
+@pytest.mark.parametrize("form", ["classic", "multi_part", "v2"])
+def test_checkpoint_seeded_snapshot_equals_json_replay(
+    spark, sf_dir, tmp_path, form
+):
+    """One replay rule: the snapshot each checkpoint form seeds equals
+    a replay of the JSON commits alone through ``apply_actions``, as a
+    whole dataclass, on a table with hive partitions, a merge-on-read
+    deletion vector, row tracking, a domainMetadata and a txn."""
+    import dataclasses
+
+    from guidewire_spark.plans.catalog import load_table
+    from guidewire_spark.sources.log_checkpoint import write_log_checkpoint_v2
+    from guidewire_spark.sources.snapshot import _read_commit, apply_actions
+    from guidewire_spark.sources.writer import (
+        delete_from_mor,
+        enable_row_tracking,
+        set_clustering_columns,
+        write_delta,
+    )
+
+    n = load_table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name", "n_regionkey"
+    )
+    t = str(tmp_path / form)
+    write_delta(n, t, mode="append", partition_by=["n_regionkey"])
+    delete_from_mor(spark, t, "n_nationkey % 5 = 0")
+    enable_row_tracking(t)
+    write_delta(
+        n.where("n_nationkey < 3"), t, mode="append",
+        txn_app_id="app", txn_version=1,
+    )
+    set_clustering_columns(t, ["n_nationkey"])
+    json_replay = empty_snapshot(t)
+    for v in list_versions(t):
+        apply_actions(json_replay, v, _read_commit(t, v))
+    json_replay.files = sorted(json_replay.adds)
+    assert json_replay.deletion_vectors()
+    assert all("baseRowId" in a for a in json_replay.adds.values())
+    assert all(a["partitionValues"] for a in json_replay.adds.values())
+    assert json_replay.domains and json_replay.txns == {"app": 1}
+
+    snap = load_snapshot(t)
+    if form == "v2":
+        write_log_checkpoint_v2(snap, max_adds_per_sidecar=2)
+    else:
+        write_log_checkpoint(
+            snap, max_actions_per_part=2 if form == "multi_part" else None
+        )
+    for v in list_versions(t):  # the checkpoint alone seeds the state
+        os.remove(os.path.join(delta_log_dir(t), f"{v:020d}.json"))
+    seeded = load_snapshot(t)
+    assert dataclasses.replace(seeded, commit_timestamps={}) == (
+        dataclasses.replace(json_replay, commit_timestamps={})
+    )
 
 
 def test_partial_multipart_checkpoint_is_ignored(spark, sf_dir, tmp_path):
@@ -402,7 +458,7 @@ def test_v2_checkpoint_roundtrip(spark, sf_dir, tmp_path):
             os.remove(commit)
     snap = load_snapshot(t)
     assert set(snap.files) == set(snap_before.files)
-    assert snap.file_dvs == snap_before.file_dvs
+    assert snap.deletion_vectors() == snap_before.deletion_vectors()
     want = {r.s_suppkey for r in s.where("s_suppkey % 2 <> 0").collect()}
     assert {r.s_suppkey for r in read_delta(spark, t).collect()} == want
 
@@ -676,7 +732,9 @@ def test_index_checkpoint_keeps_add_modification_times(tmp_path):
     assert ckpt_adds == json_adds
     assert all(mtime >= 10**12 for _, mtime in ckpt_adds.values())  # epoch millis
     snap = load_snapshot(table)
-    assert snap.file_mtimes == {p: m for p, (_, m) in json_adds.items()}
+    assert {p: a["modificationTime"] for p, a in snap.adds.items()} == {
+        p: m for p, (_, m) in json_adds.items()
+    }
 
 
 def test_checkpoint_of_older_version_carries_that_versions_configuration(tmp_path):
@@ -735,7 +793,7 @@ def test_writer_tables_checkpoint_every_tenth_version_by_default(
     json_replay = empty_snapshot(t)
     for v in list_versions(t):
         apply_actions(json_replay, v, _read_commit(t, v))
-    json_replay.files = sorted(json_replay.file_stats)
+    json_replay.files = sorted(json_replay.adds)
     seeded = load_snapshot(t)
     assert seeded.version == json_replay.version == 11
     assert dataclasses.replace(seeded, commit_timestamps={}) == (

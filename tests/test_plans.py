@@ -721,7 +721,7 @@ def test_dv_distributed_decode_plan_shape(spark, sf_dir, tmp_path, monkeypatch):
     delete_from_mor(spark, t, "s_suppkey % 3 = 0")
     monkeypatch.setattr(dv_mod, "BROADCAST_DV_MAX_ROWS", 0)
     snap = load_snapshot(t)
-    dead, small = dv_mod.dead_rows_for_join(spark, snap.file_dvs)
+    dead, small = dv_mod.dead_rows_for_join(spark, snap.deletion_vectors())
     assert not small
     assert "MapInPandas" in plan_of(dead)
     plan = plan_of(read_delta(spark, t))

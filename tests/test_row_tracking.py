@@ -179,7 +179,7 @@ def test_delete_auto_forces_mor_on_tracked_tables(spark, sf_dir, tmp_path):
     _, strat = delete_auto(spark, t, "doc_id % 10 <> 3")
     assert strat == "mor"
     snap = load_snapshot(t)
-    assert snap.file_dvs
+    assert snap.deletion_vectors()
     assert read_delta(spark, t).count() == d.where("doc_id % 10 = 3").count()
 
 
@@ -194,7 +194,8 @@ def test_checkpoint_carries_base_row_ids(spark, sf_dir, tmp_path):
     before = _ids(spark, t)
     write_log_checkpoint(load_snapshot(t))
     snap = load_snapshot(t)
-    assert snap.file_base_rows  # seeded from the checkpoint parquet
+    # seeded from the checkpoint parquet
+    assert any("baseRowId" in a for a in snap.adds.values())
     assert _ids(spark, t) == before
 
 
@@ -209,6 +210,48 @@ def test_restore_restores_base_row_state(spark, sf_dir, tmp_path):
     delete_from_mor(spark, t, "s_suppkey % 4 = 0")             # v2
     restore_table(t, 1)                                        # v3
     assert _ids(spark, t) == ids_v1
+
+
+def test_restore_never_lowers_the_high_water_mark(spark, sf_dir, tmp_path):
+    """RESTORE to a version before an append keeps that version's
+    configuration but not its lower row-id high-water mark: the next
+    append takes ids above every id the table ever issued."""
+    from guidewire_spark.sources.writer import _ROW_HWM_KEY, restore_table
+
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    t = str(tmp_path / "rt_restore_mark")
+    write_delta(_one_file(s, "s_suppkey"), t, mode="append")   # v0
+    enable_row_tracking(t)                                     # v1
+    write_delta(_one_file(s, "s_suppkey"), t, mode="append")   # v2
+    mark = load_snapshot(t).configuration[_ROW_HWM_KEY]
+    restore_table(t, 1)                                        # v3
+    assert load_snapshot(t).configuration[_ROW_HWM_KEY] == mark
+    write_delta(_one_file(s, "s_suppkey"), t, mode="append")   # v4
+    ids = [r["_row_id"] for r in read_delta(spark, t, with_row_ids=True).collect()]
+    n, top = s.count(), int(mark)
+    assert sorted(ids) == list(range(n)) + list(range(top + 1, top + 1 + n))
+
+
+def test_shallow_clone_keeps_row_ids(spark, sf_dir, tmp_path):
+    """A shallow clone of a row-tracked table re-records each file's
+    ``baseRowId`` (and the source's protocol): it reads the same row
+    ids as its source."""
+    from guidewire_spark.sources.writer import shallow_clone
+
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    t = str(tmp_path / "rt_clone_src")
+    write_delta(_one_file(s, "s_suppkey"), t, mode="append")
+    enable_row_tracking(t)
+    write_delta(_one_file(s.where("s_suppkey % 3 = 0"), "s_suppkey"), t, mode="append")
+    dst = str(tmp_path / "rt_clone_dst")
+    shallow_clone(t, dst)
+    assert load_snapshot(dst).protocol == load_snapshot(t).protocol
+    got = sorted(
+        tuple(r) for r in read_delta(spark, dst, with_row_ids=True).collect()
+    )
+    assert got == sorted(
+        tuple(r) for r in read_delta(spark, t, with_row_ids=True).collect()
+    )
 
 
 def test_enable_on_vectored_table_skips_dead_ids(spark, sf_dir, tmp_path):
@@ -302,7 +345,7 @@ def test_purge_preserves_ids_on_tracked_tables(spark, sf_dir, tmp_path):
     purge_deletion_vectors(spark, t)
     snap = load_snapshot(t)
     # vectors folded in, survivors keep their EXACT stable ids
-    assert not snap.file_dvs
+    assert not snap.deletion_vectors()
     after = _ids(spark, t)
     assert after == {k: v for k, v in before.items() if k % 3 != 1}
     # purge stays dataChange=false: the change feed is silent
@@ -464,10 +507,10 @@ def test_identity_append_on_tracked_table_takes_fresh_row_ids(
     v = append_with_identity(n.where("n_nationkey >= 10"), t)
 
     snap = load_snapshot(t)
-    assert all(p in snap.file_base_rows for p in snap.files)
+    assert all("baseRowId" in snap.adds[p] for p in snap.files)
     new = [p for p in snap.files if p not in before.files]
     assert new
-    assert min(snap.file_base_rows[p] for p in new) == mark + 1
+    assert min(snap.adds[p]["baseRowId"] for p in new) == mark + 1
     with open(os.path.join(t, "_delta_log", f"{v:020d}.json")) as fh:
         metas = [
             a["metaData"] for a in map(_json.loads, fh) if "metaData" in a

@@ -60,7 +60,7 @@ def test_write_delta_stats_and_snapshot_prune(spark, sf_dir, tmp_path):
             mode="append",
         )
     snap = load_snapshot(table)
-    assert all(snap.file_stats[p] for p in snap.files)
+    assert all(snap.adds[p]["stats"] for p in snap.files)
     probe_lo, probe_hi = third + third // 2, third + third // 2 + 50
     kept = snap.pruned_files("l_orderkey", probe_lo, probe_hi)
     assert len(kept) < snap.num_files
@@ -101,13 +101,13 @@ def test_indexer_collect_stats_flag(spark, sf_dir, tmp_path):
     db1 = str(tmp_path / "db_nostats")
     index(mpath, db1, save_mode="overwrite")
     snap = load_snapshot(os.path.join(db1, "t"))
-    assert all(v is None for v in snap.file_stats.values())  # reference parity
+    assert all(a.get("stats") is None for a in snap.adds.values())  # reference parity
 
     db2 = str(tmp_path / "db_stats")
     index(mpath, db2, save_mode="overwrite", collect_stats=True)
     snap2 = load_snapshot(os.path.join(db2, "t"))
-    assert all(v for v in snap2.file_stats.values())
-    stats = _json.loads(next(iter(snap2.file_stats.values())))
+    assert all(a.get("stats") for a in snap2.adds.values())
+    stats = _json.loads(next(iter(snap2.adds.values()))["stats"])
     assert stats["numRecords"] == read_delta(spark, os.path.join(db2, "t")).count()
 
 
@@ -129,7 +129,7 @@ def test_stats_columns_config(spark, sf_dir, tmp_path):
     snap = load_snapshot(table)
     by_version: dict[str, dict] = {}
     for p in snap.files:
-        by_version[p] = json.loads(snap.file_stats[p])
+        by_version[p] = json.loads(snap.adds[p]["stats"])
     wide = [s for s in by_version.values() if "l_suppkey" in s["minValues"]]
     narrow = [s for s in by_version.values() if "l_suppkey" not in s["minValues"]]
     assert wide and narrow, "pre-config file keeps wide stats; post-config is narrow"
@@ -144,7 +144,7 @@ def test_stats_columns_config(spark, sf_dir, tmp_path):
     kept = set(snap.pruned_files("l_suppkey", 10**15, 10**15))
     narrow_paths = {
         p for p in snap.files
-        if "l_suppkey" not in json.loads(snap.file_stats[p])["minValues"]
+        if "l_suppkey" not in json.loads(snap.adds[p]["stats"])["minValues"]
     }
     assert narrow_paths <= kept
 
@@ -165,7 +165,7 @@ def test_stats_num_indexed_cols(spark, sf_dir, tmp_path):
     write_delta(li.limit(10), table, mode="append")
     snap = load_snapshot(table)
     keysets = sorted(
-        tuple(sorted(json.loads(snap.file_stats[p])["minValues"]))
+        tuple(sorted(json.loads(snap.adds[p]["stats"])["minValues"]))
         for p in snap.files
     )
     assert keysets == sorted([

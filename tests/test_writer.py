@@ -210,6 +210,36 @@ def test_restore_and_history(spark, sf_dir, tmp_path):
     assert ops == ["RESTORE", "WRITE", "WRITE"]
 
 
+def test_restore_keeps_table_id_and_configuration(spark, sf_dir, tmp_path):
+    """RESTORE re-records the restored version's metaData: the table
+    id and its configuration (a CHECK constraint, the checkpoint
+    interval) survive, and the constraint still guards appends."""
+    from guidewire_spark.sources.writer import (
+        add_check_constraint,
+        restore_table,
+        set_table_properties,
+    )
+
+    table = str(tmp_path / "rst_cfg")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    write_delta(n.where(F.col("n_nationkey") < 10), table, mode="append")
+    add_check_constraint(spark, table, "pos", "n_nationkey >= 0")
+    set_table_properties(table, {"delta.checkpointInterval": "100"})
+    write_delta(n.where(F.col("n_nationkey") >= 10), table, mode="append")
+    before = load_snapshot(table)
+    restore_table(table, 2)
+    after = load_snapshot(table)
+    assert after.metadata_id == before.metadata_id
+    assert after.configuration == {
+        "delta.constraints.pos": "n_nationkey >= 0",
+        "delta.checkpointInterval": "100",
+    }
+    assert read_delta(spark, table).count() == 10
+    bad = n.limit(1).withColumn("n_nationkey", F.col("n_nationkey") - 100)
+    with pytest.raises(ValueError, match="CHECK constraint violation"):
+        write_delta(bad, table, mode="append")
+
+
 def test_partitioned_write_read_prune(spark, sf_dir, tmp_path):
     """Partitioned Delta: hive-layout staging, partitionValues in the
     log, partition-column reconstruction on read, metadata-only
@@ -224,7 +254,7 @@ def test_partitioned_write_read_prune(spark, sf_dir, tmp_path):
     snap = load_snapshot(table)
     assert snap.partition_columns == ["lang"]
     langs = {r.lang for r in d.select("lang").distinct().collect()}
-    assert {pv["lang"] for pv in snap.file_partitions.values()} == langs
+    assert {a["partitionValues"]["lang"] for a in snap.adds.values()} == langs
 
     # full read reconstructs the partition column with correct values
     got = read_delta(spark, table)
@@ -238,7 +268,7 @@ def test_partitioned_write_read_prune(spark, sf_dir, tmp_path):
     en = read_delta(spark, table, partition_filter={"lang": "en"})
     assert en.count() == d.where(F.col("lang") == "en").count()
     en_files = [
-        p for p, pv in snap.file_partitions.items() if pv["lang"] == "en"
+        p for p, a in snap.adds.items() if a["partitionValues"]["lang"] == "en"
     ]
     scanned = en.inputFiles()
     assert set(scanned) <= {f"file://{p}" for p in en_files} | set(en_files)
@@ -259,7 +289,7 @@ def test_partitioned_checkpoint_roundtrip(spark, sf_dir, tmp_path):
     write_log_checkpoint(load_snapshot(table))
     seeded = load_snapshot(table)
     assert seeded.partition_columns == full.partition_columns
-    assert seeded.file_partitions == full.file_partitions
+    assert seeded.adds == full.adds
     assert read_delta(spark, table).count() == d.count()
 
 
@@ -516,7 +546,7 @@ def test_incremental_optimize_leaves_big_files(spark, sf_dir, tmp_path):
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     write_delta(li, table, mode="append")  # one big file
     snap0 = load_snapshot(table)
-    big = max(snap0.files, key=lambda p: snap0.file_sizes[p])
+    big = max(snap0.files, key=lambda p: snap0.adds[p]["size"])
     r = load_table(spark, sf_dir, "region")
     for i in range(3):  # three tiny appends
         write_delta(
@@ -529,14 +559,14 @@ def test_incremental_optimize_leaves_big_files(spark, sf_dir, tmp_path):
     total = read_delta(spark, table).count()
 
     optimize_table(spark, table, target_files=1,
-                   min_file_size=before.file_sizes[big])
+                   min_file_size=before.adds[big]["size"])
     after = load_snapshot(table)
     assert big in after.files          # the big file was not rewritten
     assert after.num_files == 2        # big + one packed file
     assert read_delta(spark, table).count() == total
     # nothing left to pack → no-op, version unchanged
     v = optimize_table(spark, table, target_files=1,
-                       min_file_size=before.file_sizes[big])
+                       min_file_size=before.adds[big]["size"])
     assert v == after.version
 
 
@@ -575,7 +605,7 @@ def test_partitioned_merge_upsert(spark, sf_dir, tmp_path):
     } == exp
     snap = load_snapshot(table)
     assert all(
-        snap.file_partitions.get(p, {}).get("region_bucket") is not None
+        snap.adds[p]["partitionValues"].get("region_bucket") is not None
         for p in snap.files
     )
 
@@ -591,7 +621,7 @@ def test_partitioned_delete_rows(spark, sf_dir, tmp_path):
     doomed_files = [
         p
         for p in before.files
-        if before.file_partitions.get(p, {}).get("region_bucket") == "1"
+        if before.adds[p]["partitionValues"].get("region_bucket") == "1"
     ]
     assert doomed_files
     delete_from(spark, table, "region_bucket = 1")
@@ -625,7 +655,7 @@ def test_partitioned_optimize_compacts_within_partitions(spark, sf_dir, tmp_path
     after = load_snapshot(table)
     assert len(after.files) == 3  # one per region_bucket
     assert {
-        after.file_partitions.get(p, {}).get("region_bucket") for p in after.files
+        after.adds[p]["partitionValues"].get("region_bucket") for p in after.files
     } == {"0", "1", "2"}
     got = read_delta(spark, table)
     assert got.count() == s.count()
@@ -729,7 +759,7 @@ def test_generated_columns(spark, sf_dir, tmp_path):
     assert got.where("order_year = year(o_orderdate)").count() == got.count()
     snap = load_snapshot(table)
     assert all(
-        snap.file_partitions.get(p, {}).get("order_year") is not None
+        snap.adds[p]["partitionValues"].get("order_year") is not None
         for p in snap.files
     )
 
@@ -924,6 +954,29 @@ def test_shallow_clone_zero_copy(spark, sf_dir, tmp_path):
         shallow_clone(src, dst)
 
 
+def test_clones_keep_deletion_vectors(spark, tmp_path):
+    """Both clone kinds re-record each file as the source records it,
+    deletion vector included, and commit the source's protocol: rows a
+    merge-on-read delete removed stay deleted in the clones."""
+    from guidewire_spark.sources.writer import (
+        deep_clone,
+        delete_from_mor,
+        shallow_clone,
+    )
+
+    src = str(tmp_path / "src")
+    write_delta(spark.range(10).repartition(1), src, mode="append")
+    delete_from_mor(spark, src, "id < 3")
+    assert read_delta(spark, src).count() == 7
+    shallow_clone(src, str(tmp_path / "shallow"))
+    deep_clone(spark, src, str(tmp_path / "deep"))
+    for name in ("shallow", "deep"):
+        clone = str(tmp_path / name)
+        rows = read_delta(spark, clone).collect()
+        assert sorted(r.id for r in rows) == list(range(3, 10))
+        assert load_snapshot(clone).protocol == load_snapshot(src).protocol
+
+
 def test_partitioned_zorder_optimize(spark, sf_dir, tmp_path):
     """OPTIMIZE zorder_by on a partitioned table: rows and partition
     values survive, and files keep their hive partition assignment."""
@@ -942,7 +995,7 @@ def test_partitioned_zorder_optimize(spark, sf_dir, tmp_path):
     after = load_snapshot(table)
     assert read_delta(spark, table).count() == total
     assert all(
-        after.file_partitions.get(p, {}).get("bucket") in {"0", "1"}
+        after.adds[p]["partitionValues"].get("bucket") in {"0", "1"}
         for p in after.files
     )
     got = read_delta(spark, table, partition_filter={"bucket": 0})
@@ -990,7 +1043,7 @@ def test_convert_to_delta_in_place(spark, sf_dir, tmp_path):
     )
     assert before == after  # zero data movement
     snap = load_snapshot(d)
-    assert all(snap.file_stats.get(p) for p in snap.files)  # skipping works
+    assert all(snap.adds[p].get("stats") for p in snap.files)  # skipping works
     with pytest.raises(FileExistsError):
         convert_to_delta(d)
     # appends keep working on the converted table
@@ -1009,7 +1062,7 @@ def test_overwrite_partitions_replaces_only_incoming(spark, sf_dir, tmp_path):
     before = load_snapshot(table)
     en_files = [
         p for p in before.files
-        if before.file_partitions.get(p, {}).get("lang") == "en"
+        if before.adds[p]["partitionValues"].get("lang") == "en"
     ]
     other_files = set(before.files) - set(en_files)
 
@@ -1084,7 +1137,7 @@ def test_overwrite_partitions_boolean_partition_column(spark, sf_dir, tmp_path):
     before = load_snapshot(table)
     true_files = [
         p for p in before.files
-        if before.file_partitions.get(p, {}).get("is_long") == "true"
+        if before.adds[p]["partitionValues"].get("is_long") == "true"
     ]
     assert true_files  # the partition under test exists
 
@@ -1229,7 +1282,7 @@ def test_optimize_where_partition_scoped(spark, sf_dir, tmp_path):
     before = load_snapshot(table)
     en_before = [
         p for p in before.files
-        if (before.file_partitions.get(p) or {}).get("lang") == "en"
+        if before.adds[p]["partitionValues"].get("lang") == "en"
     ]
     other_before = set(before.files) - set(en_before)
     assert len(en_before) >= 2
@@ -1238,7 +1291,7 @@ def test_optimize_where_partition_scoped(spark, sf_dir, tmp_path):
     after = load_snapshot(table)
     en_after = [
         p for p in after.files
-        if (after.file_partitions.get(p) or {}).get("lang") == "en"
+        if after.adds[p]["partitionValues"].get("lang") == "en"
     ]
     assert set(en_after).isdisjoint(en_before)  # en compacted
     assert other_before <= set(after.files)     # others untouched
@@ -1423,7 +1476,7 @@ def test_decimal_widening_end_to_end(spark, sf_dir, tmp_path):
     write_delta(n, t, mode="append")
     snap = load_snapshot(t)
     # stats exist and carry numeric decimal bounds
-    stats = _json.loads(next(iter(snap.file_stats.values())))
+    stats = _json.loads(next(iter(snap.adds.values()))["stats"])
     assert stats["minValues"]["amt"] <= 0.25
     assert stats["maxValues"]["amt"] >= 2400.25
     files_before = set(snap.files)
@@ -2336,7 +2389,7 @@ def test_auto_compaction_counts_per_partition(spark, sf_dir, tmp_path):
     snap = load_snapshot(table)
     by_part = {}
     for p in snap.files:
-        pv = (snap.file_partitions.get(p) or {}).get("n_regionkey")
+        pv = snap.adds[p]["partitionValues"].get("n_regionkey")
         by_part.setdefault(pv, []).append(p)
     # hot partition compacted (1 base + 3 appends -> threshold tripped)
     assert len(by_part["1"]) < 3, by_part["1"]
