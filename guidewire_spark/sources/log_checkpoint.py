@@ -392,7 +392,8 @@ def write_log_checkpoint(snap, max_actions_per_part: int | None = None) -> str:
 
 
 # (action, field) pairs stored as parquet maps, which pyarrow reads
-# back as (key, value) pair lists
+# back as (key, value) pair lists (pyarrow 16's to_pylist has no
+# maps_as_pydicts option)
 _MAP_FIELDS = {
     (action.name, f.name)
     for action in _V2_MANIFEST_SCHEMA

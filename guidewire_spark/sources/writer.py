@@ -2622,26 +2622,44 @@ def update_table(
     return snap.version + 1
 
 
-def _clone_header(snap, dst_table: str, now: int) -> list[dict]:
-    """Create the directory of a clone of ``snap`` and return its
-    version-0 header: the source's protocol (the features its files
-    use — deletion vectors, row tracking — come along) and a metaData
-    with a fresh id and the source's schema, partitioning and
-    configuration."""
+def _new_clone_dir(dst_table: str) -> None:
+    """Create the directory of a new clone; an existing table there is
+    refused."""
     if os.path.isdir(os.path.join(dst_table, "_delta_log")):
         raise FileExistsError(f"destination {dst_table} is already a table")
     os.makedirs(dst_table, exist_ok=True)
-    actions: list[dict] = [{"protocol": dict(snap.protocol)}]
+
+
+def _commit_clone(snap, dst_table: str, adds: list[dict], info: dict) -> None:
+    """Commit version 0 of a clone of ``snap``: the commitInfo
+    ``info``, the source's protocol (the features its files use —
+    deletion vectors, row tracking — come along), a metaData with a
+    fresh id and the source's schema, partitioning and configuration,
+    the source's domainMetadata (clustering columns among them), then
+    ``adds``.  A source with in-commit timestamps restarts its chain at
+    the clone's version 0, which is stamped and recorded as the
+    enablement version, as ``enable_in_commit_timestamps`` records its
+    own commit."""
+    from guidewire_spark.sources.deltalog import ICT_KEY, domain_metadata_action
+
+    now = info["commitInfo"]["timestamp"]
+    config = dict(snap.configuration)
+    if config.get(ICT_KEY) == "true":
+        info["commitInfo"]["inCommitTimestamp"] = now
+        config["delta.inCommitTimestampEnablementVersion"] = "0"
+        config["delta.inCommitTimestampEnablementTimestamp"] = str(now)
+    actions: list[dict] = [info, {"protocol": dict(snap.protocol)}]
     if snap.schema is not None:
         actions.append(
             metadata_action(
                 snap.schema,
                 partition_columns=snap.partition_columns or None,
                 created_time=now,
-                configuration=snap.configuration,
+                configuration=config,
             )
         )
-    return actions
+    actions.extend(domain_metadata_action(d, c) for d, c in snap.domains.items())
+    write_commit(empty_snapshot(dst_table), actions=actions + adds)
 
 
 def shallow_clone(
@@ -2659,21 +2677,18 @@ def shallow_clone(
     reference documents at README.md:45-49).
     """
     snap = load_snapshot(src_table, version=version)
+    _new_clone_dir(dst_table)
     now = int(time.time() * 1000)
-    actions = _clone_header(snap, dst_table, now)
-    actions.extend(_live_add(snap, p, now) for p in snap.files)
-    actions.append(
-        commit_info_action(
-            "CLONE",
-            f"shallow from {src_table}"
-            + (f"@v{version}" if version is not None else ""),
-            False,
-            len(snap.files),
-            0,
-            now,
-        )
+    info = commit_info_action(
+        "CLONE",
+        f"shallow from {src_table}"
+        + (f"@v{version}" if version is not None else ""),
+        False,
+        len(snap.files),
+        0,
+        now,
     )
-    write_commit(empty_snapshot(dst_table), actions=actions)
+    _commit_clone(snap, dst_table, [_live_add(snap, p, now) for p in snap.files], info)
     return 0
 
 
@@ -2697,8 +2712,8 @@ def deep_clone(
     object-store server-side copy, not through compute.
     """
     snap = load_snapshot(src_table, version=version)
+    _new_clone_dir(dst_table)
     now = int(time.time() * 1000)
-    actions = _clone_header(snap, dst_table, now)
     adds = []
     src_root = os.path.abspath(src_table)
     for p in snap.files:
@@ -2716,17 +2731,13 @@ def deep_clone(
         shutil.copy2(src_path, dst_path)
         # log convention: absolute paths
         adds.append(_live_add(snap, p, now, path=os.path.abspath(dst_path)))
-    actions += adds
-    actions.append(
-        _commit_info(
-            "CLONE",
-            f"deep from {src_table}"
-            + (f"@v{version}" if version is not None else ""),
-            adds,
-            now,
-        )
+    info = _commit_info(
+        "CLONE",
+        f"deep from {src_table}" + (f"@v{version}" if version is not None else ""),
+        adds,
+        now,
     )
-    write_commit(empty_snapshot(dst_table), actions=actions)
+    _commit_clone(snap, dst_table, adds, info)
     return 0
 
 

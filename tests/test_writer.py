@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -957,16 +958,24 @@ def test_shallow_clone_zero_copy(spark, sf_dir, tmp_path):
 def test_clones_keep_deletion_vectors(spark, tmp_path):
     """Both clone kinds re-record each file as the source records it,
     deletion vector included, and commit the source's protocol: rows a
-    merge-on-read delete removed stay deleted in the clones."""
+    merge-on-read delete removed stay deleted in the clones.  The
+    state the protocol's features need comes along too: the clustering
+    domain, and an in-commit-timestamp chain that restarts at the
+    clone's version 0 and continues on its next commit."""
     from guidewire_spark.sources.writer import (
+        clustering_columns,
         deep_clone,
         delete_from_mor,
+        enable_in_commit_timestamps,
+        set_clustering_columns,
         shallow_clone,
     )
 
     src = str(tmp_path / "src")
     write_delta(spark.range(10).repartition(1), src, mode="append")
     delete_from_mor(spark, src, "id < 3")
+    enable_in_commit_timestamps(src)
+    set_clustering_columns(src, ["id"])
     assert read_delta(spark, src).count() == 7
     shallow_clone(src, str(tmp_path / "shallow"))
     deep_clone(spark, src, str(tmp_path / "deep"))
@@ -974,7 +983,23 @@ def test_clones_keep_deletion_vectors(spark, tmp_path):
         clone = str(tmp_path / name)
         rows = read_delta(spark, clone).collect()
         assert sorted(r.id for r in rows) == list(range(3, 10))
-        assert load_snapshot(clone).protocol == load_snapshot(src).protocol
+        snap = load_snapshot(clone)
+        assert snap.protocol == load_snapshot(src).protocol
+        assert clustering_columns(snap) == ["id"]
+        assert snap.configuration[
+            "delta.inCommitTimestampEnablementVersion"
+        ] == "0"
+        write_delta(spark.range(10, 11), clone, mode="append")
+        log = os.path.join(clone, "_delta_log")
+        stamps = []
+        for v in (0, 1):
+            with open(os.path.join(log, f"{v:020d}.json")) as f:
+                first = json.loads(f.readline())
+            stamps.append(first["commitInfo"]["inCommitTimestamp"])
+        assert stamps[0] == int(
+            snap.configuration["delta.inCommitTimestampEnablementTimestamp"]
+        )
+        assert stamps[1] > stamps[0]
 
 
 def test_partitioned_zorder_optimize(spark, sf_dir, tmp_path):
