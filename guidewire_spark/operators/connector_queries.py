@@ -724,7 +724,7 @@ def delta_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE into a hive-partitioned table: partition columns are not
     stored in the data files, so the copy-on-write rewrite
     rematerializes them from the log's partitionValues
-    (writer.py::_read_with_partitions) and stages updated rows back
+    (snapshot.py::scan_live_files) and stages updated rows back
     into their partitions."""
     table = scratch_dir("gw_dpmrg_") + "/supplier_part"
     s = load_table(spark, sf_dir, "supplier").select(

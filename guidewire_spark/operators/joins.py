@@ -620,10 +620,7 @@ def join_dynamic_file_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the equi-join re-applies the exact key match — so the oracle
     is the plain two-table join."""
 
-    from guidewire_spark.sources.snapshot import (
-        load_snapshot,
-        read_files_with_schema,
-    )
+    from guidewire_spark.sources.snapshot import load_snapshot, scan_live_files
     from guidewire_spark.sources.writer import optimize_table, write_delta
 
     fact = scratch_dir("gw_dfp_") + "/li"
@@ -658,7 +655,7 @@ def join_dynamic_file_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"dynamic file pruning kept {len(kept)}/{snap.num_files} files"
         )
     return (
-        read_files_with_schema(spark, snap.schema, kept)
+        scan_live_files(spark, snap, kept)
         .join(F.broadcast(dim), F.col("l_orderkey") == F.col("o_orderkey"))
         # Output-type contract: DECIMAL stays internal (exact rounding
         # above); the final select emits DOUBLE so the driver's pandas
@@ -705,8 +702,8 @@ def join_bloom_dynamic_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_kept_files,
         create_bloom_index,
     )
-    from guidewire_spark.sources.snapshot import load_snapshot
-    from guidewire_spark.sources.writer import _read_with_partitions, write_delta
+    from guidewire_spark.sources.snapshot import load_snapshot, scan_live_files
+    from guidewire_spark.sources.writer import write_delta
 
     fact = scratch_dir("gw_bdfp_") + "/orders"
     o = load_table(spark, sf_dir, "orders").select(
@@ -736,7 +733,7 @@ def join_bloom_dynamic_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"bloom DFP kept {len(kept)}/{snap.num_files} files"
         )
     return (
-        _read_with_partitions(spark, snap, kept)
+        scan_live_files(spark, snap, kept)
         .join(F.broadcast(probe), F.col("o_orderkey") == F.col("l_orderkey"))
         .select("o_orderkey", "o_orderstatus", "sum_qty")
     )

@@ -267,7 +267,7 @@ def delta_stats_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle enforces; the skipping RATIO is asserted in
     tests/test_stats_skipping.py."""
 
-    from guidewire_spark.sources.snapshot import load_snapshot, read_files_with_schema
+    from guidewire_spark.sources.snapshot import load_snapshot, scan_live_files
     from guidewire_spark.sources.writer import optimize_table, write_delta
 
     table = scratch_dir("gw_skip_") + "/li"
@@ -279,7 +279,7 @@ def delta_stats_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap = load_snapshot(table)
     files = snap.pruned_files("l_orderkey", 5000, 6000)
     assert len(files) < len(snap.files), "skipping must prune files"
-    return read_files_with_schema(spark, snap.schema, files).where(
+    return scan_live_files(spark, snap, files).where(
         F.col("l_orderkey").between(5000, 6000)
     )
 

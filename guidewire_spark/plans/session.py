@@ -15,14 +15,15 @@ cluster and merely *also* work on local[N]:
   query exists specifically to cover the scalar-UDF API surface).
 * ``spark.sql.sources.parallelPartitionDiscovery.threshold`` at its
   maximum — every file scan lists on the driver, never in a Spark
-  job. ``read_delta`` (plain, deletion-vector, partitioned and
-  row-id reads), ``dv.scan_with_row_index``, the writer's rewrite
-  reads, ``bloom`` and ``joins`` all hand ``spark.read.parquet`` an
-  explicit path list resolved from the Delta log. Above the default
-  threshold (32 paths) ``InMemoryFileIndex`` starts a job with one
-  task per path just to stat files whose paths and sizes the log
-  already holds. Measured on 4 cores: building a 38–47-file
-  ``read_delta`` frame 233–306 → 32–43 ms (one listing job gone;
+  job. ``snapshot.scan_live_files`` (every ``read_delta``, writer
+  rewrite and DML match pass, and the ``bloom``/``joins`` reads),
+  ``read_delta_changes`` and bloom's sidecar build all hand
+  ``spark.read.parquet`` an explicit path list resolved from the
+  Delta log. Above the default threshold (32 paths)
+  ``InMemoryFileIndex`` starts a job with one task per path just to
+  stat files whose paths and sizes the log already holds. Measured
+  on 4 cores: building a 38–47-file ``read_delta`` frame 233–306 →
+  32–43 ms (one listing job gone;
   builds under 32 files are unchanged), and the benchmark's
   ``cda_sync`` read-back 0.735 → 0.529 s per round (median of 10
   pairs, see PERF.md).

@@ -453,16 +453,11 @@ def read_bloom_filtered(
     the kept files through the partition- and DV-aware scan, with the
     exact predicate re-applied as the residual filter (blooms admit
     false positives; the residual keeps the result exact)."""
-    from guidewire_spark.sources.snapshot import load_snapshot
-    from guidewire_spark.sources.writer import _read_with_partitions
+    from guidewire_spark.sources.snapshot import load_snapshot, scan_live_files
 
     snap = load_snapshot(table_path)
     kept = bloom_kept_files(spark, table_path, column, values, snap=snap)
-    if not kept:
-        return spark.createDataFrame([], snap.schema or T.StructType([]))
-    return _read_with_partitions(spark, snap, kept).where(
-        F.col(column).isin(values)
-    )
+    return scan_live_files(spark, snap, kept).where(F.col(column).isin(values))
 
 
 def vacuum_bloom_sidecars(table_path: str) -> list[str]:

@@ -421,22 +421,15 @@ def subtract_dead_rows(
 ) -> DataFrame:
     """LEFT ANTI the dead (file, row) pairs out of a
     :func:`scan_with_row_index`-shaped frame, keeping the metadata
-    columns.  The one DV-subtraction code path for every reader and
-    MOR writer — so the cardinality guard holds everywhere."""
+    columns: broadcast below the cardinality guard, shuffled above it.
+    Live reads call it through ``snapshot.scan_live_files`` (the change
+    feed diffs vectors itself), so the guard holds on every read and
+    rewrite."""
     if not dvs:
         return df
     dead, small = dead_rows_for_join(spark, dvs)
     dead = F.broadcast(dead) if small else dead
     return df.join(dead, [META_FILE, META_ROW], "left_anti")
-
-
-def apply_dv(
-    df: DataFrame, spark: SparkSession, dvs: dict[str, dict]
-) -> DataFrame:
-    """Subtract dead rows from a :func:`scan_with_row_index` frame and
-    strip the metadata columns.  LEFT ANTI on (file path, row index),
-    broadcast below the cardinality guard, shuffled above it."""
-    return subtract_dead_rows(df, spark, dvs).drop(META_FILE, META_ROW)
 
 
 def encode_dead_rows(

@@ -610,80 +610,123 @@ def read_delta_changes(
         )
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
 
-def read_live_files(
-    spark: SparkSession, snap: DeltaSnapshot, schema, paths: list[str]
+
+def scan_live_files(
+    spark: SparkSession,
+    snap: DeltaSnapshot,
+    paths: list[str],
+    *,
+    row_ids: bool = False,
+    file_keys: bool = False,
 ) -> DataFrame:
-    """Scan the live files ``paths`` of ``snap`` under ``schema`` with
-    their deletion vectors applied: plain files through the stock scan,
-    vectored files with (file, row_index) metadata broadcast-anti-joined
-    against the dead set (bounded by the deleted-row count)."""
+    """The live files ``paths`` of ``snap`` as a DataFrame of the
+    table's columns, deletion vectors applied — the one reader every
+    read and rewrite goes through.
+
+    Hive-layout files don't store partition columns: files are grouped
+    by ``partitionValues`` (groups in sorted order, a None value — the
+    Hive default partition — last), each group scanned under the data
+    schema with its partition columns filled as cast literals, and the
+    groups unioned, so the plan has one scan per partition read.  Plain
+    files go through the stock scan, vectored ones through the
+    (file, row index) scan anti-joined against their dead rows.
+
+    ``row_ids=True`` adds the stable ``_row_id`` (Delta row tracking):
+    ``coalesce(materialized, baseRowId + row index)`` — files that
+    carry the materialized column named by the table configuration
+    (written by id-preserving rewrites) keep their preserved ids, the
+    rest read NULL there and fall back to the default.  Every file must
+    carry a ``baseRowId``.  ``file_keys=True`` keeps ``dv.META_FILE``
+    and ``dv.META_ROW`` (normalized path, row index) on the live rows:
+    columns of the scan itself, so they survive a shuffle above it
+    (Spark's file-name expression reads empty there).  No paths give a
+    typed empty frame of the same columns."""
     from functools import reduce
 
-    dvs = snap.deletion_vectors(paths)
-    plain = [p for p in paths if p not in dvs]
-    frames = []
-    if plain:
-        frames.append(read_files_with_schema(spark, schema, plain))
-    if dvs:
-        from guidewire_spark.sources.dv import apply_dv, scan_with_row_index
-
-        frames.append(
-            apply_dv(scan_with_row_index(spark, schema, list(dvs)), spark, dvs)
-        )
-    return reduce(DataFrame.unionByName, frames)
-
-
-def _scan_with_row_ids(spark, snap, files, schema):
-    """Scan ``files`` carrying the stable ``_row_id`` column (the
-    public Delta row-tracking identity), with deletion vectors applied
-    — dead rows' ids simply never appear.
-
-    The id is ``coalesce(materialized, baseRowId + row index)``: when
-    the table configuration names a materialized-row-id column
-    (written by REORG PURGE / OPTIMIZE on tracked tables), files that
-    physically carry it yield the preserved ids and files that don't
-    read NULL for the extra schema field and fall back to the default
-    identity.  Requires every file to carry a base (tracking must be
-    fully enabled)."""
     from pyspark.sql import functions as F
 
-    from guidewire_spark.sources.dv import (
-        META_FILE,
-        META_ROW,
-        apply_dv,
-        normalize_path,
-        scan_with_row_index,
-    )
+    from guidewire_spark.sources import dv
 
-    missing = [p for p in files if "baseRowId" not in snap.adds[p]]
-    if missing:
-        raise ValueError(
-            f"{len(missing)} file(s) have no baseRowId — enable row "
-            "tracking (enable_row_tracking) before reading row ids"
-        )
+    if row_ids:
+        missing = [p for p in paths if "baseRowId" not in snap.adds[p]]
+        if missing:
+            raise ValueError(
+                f"{len(missing)} file(s) have no baseRowId — enable row "
+                "tracking (enable_row_tracking) before reading row ids"
+            )
+    schema = snap.schema or T.StructType([])
+    extra = []
+    if row_ids:
+        extra.append(T.StructField("_row_id", T.LongType(), True))
+    if file_keys:
+        extra.append(T.StructField(dv.META_FILE, T.StringType(), True))
+        extra.append(T.StructField(dv.META_ROW, T.LongType(), True))
+    if not paths:
+        return spark.createDataFrame([], T.StructType(schema.fields + extra))
     mat_col = (snap.configuration or {}).get(MATERIALIZED_ROW_ID_KEY)
-    scan_schema = schema
-    if mat_col:
-        scan_schema = T.StructType(
-            list(schema.fields) + [T.StructField(mat_col, T.LongType(), True)]
-        )
-    df = scan_with_row_index(spark, scan_schema, files)
-    bases = spark.createDataFrame(
-        [(normalize_path(p), int(snap.adds[p]["baseRowId"])) for p in files],
-        f"{META_FILE} string, __base long",
-    )
-    default_id = F.col("__base") + F.col(META_ROW)
-    df = (
-        df.join(F.broadcast(bases), META_FILE)
-        .withColumn(
-            "_row_id",
-            F.coalesce(F.col(mat_col), default_id) if mat_col else default_id,
-        )
-        .drop("__base")
-    )
-    if mat_col:
-        df = df.drop(mat_col)
-    return apply_dv(df, spark, snap.deletion_vectors(files))
+
+    def scan(data_schema, files):
+        dvs = snap.deletion_vectors(files)
+        frames = []
+        if not (row_ids or file_keys):
+            # only vectored files need the (file, row index) scan
+            plain = [p for p in files if p not in dvs]
+            if plain:
+                frames.append(read_files_with_schema(spark, data_schema, plain))
+            files = list(dvs)
+        if files:
+            if row_ids and mat_col:
+                data_schema = T.StructType(
+                    data_schema.fields + [T.StructField(mat_col, T.LongType(), True)]
+                )
+            df = dv.scan_with_row_index(spark, data_schema, files)
+            if row_ids:
+                bases = spark.createDataFrame(
+                    [(dv.normalize_path(p), int(snap.adds[p]["baseRowId"])) for p in files],
+                    f"{dv.META_FILE} string, __base long",
+                )
+                default_id = F.col("__base") + F.col(dv.META_ROW)
+                df = (
+                    df.join(F.broadcast(bases), dv.META_FILE)
+                    .withColumn(
+                        "_row_id",
+                        F.coalesce(F.col(mat_col), default_id) if mat_col else default_id,
+                    )
+                    .drop("__base", *([mat_col] if mat_col else []))
+                )
+            df = dv.subtract_dead_rows(df, spark, dvs)
+            frames.append(df if file_keys else df.drop(dv.META_FILE, dv.META_ROW))
+        return reduce(DataFrame.unionByName, frames)
+
+    pcols = snap.partition_columns
+    if not pcols:
+        out = scan(snap.schema, paths)
+        if not (row_ids or file_keys):
+            return out
+    else:
+        groups: dict[tuple, list[str]] = {}
+        for path in paths:
+            pv = snap.adds[path]["partitionValues"]
+            groups.setdefault(tuple(pv.get(c) for c in pcols), []).append(path)
+        data_schema = T.StructType([f for f in schema.fields if f.name not in pcols])
+        parts = []
+        for key, files in sorted(
+            groups.items(), key=lambda kv: tuple((v is None, v or "") for v in kv[0])
+        ):
+            df = scan(data_schema, files)
+            for col, val in zip(pcols, key):
+                df = df.withColumn(col, F.lit(val).cast(schema[col].dataType))
+            parts.append(df)
+        out = reduce(DataFrame.unionByName, parts)
+    return out.select(*schema.fieldNames(), *[f.name for f in extra])
+
+
+def _partition_literal(value) -> str | None:
+    """A ``partition_filter`` value as ``partitionValues`` stores it:
+    booleans lower-case (``"true"``), everything else ``str()``."""
+    if value is None:
+        return None
+    return str(value).lower() if isinstance(value, bool) else str(value)
 
 
 def read_delta(
@@ -694,65 +737,21 @@ def read_delta(
     partition_filter: dict | None = None,
     with_row_ids: bool = False,
 ) -> DataFrame:
-    """Snapshot → DataFrame. The explicit schema makes the scan skip
-    footer inference, and empty snapshots yield a typed empty frame.
+    """Snapshot → DataFrame through :func:`scan_live_files`. The
+    explicit schema makes the scan skip footer inference, and empty
+    snapshots yield a typed empty frame.
 
-    Partitioned tables: partition columns are not stored in the data
-    files (hive layout); they are reconstructed as literals per
-    partition group from ``add.partitionValues``. ``partition_filter``
-    (e.g. ``{"lang": "en"}``) prunes whole file groups from the log
-    BEFORE Spark ever sees a path — metadata-only partition pruning,
-    the same mechanism Delta uses.
+    ``partition_filter`` (e.g. ``{"lang": "en"}``) prunes whole
+    partitions from the log BEFORE Spark ever sees a path —
+    metadata-only partition pruning, the same mechanism Delta uses.
     """
     snap = load_snapshot(table_path, version=version, timestamp=timestamp)
-    if not snap.partition_columns:
-        if not snap.files:
-            base = snap.schema or T.StructType([])
-            if with_row_ids:
-                base = T.StructType(
-                    list(base.fields)
-                    + [T.StructField("_row_id", T.LongType(), True)]
-                )
-            return spark.createDataFrame([], base)
-        if with_row_ids:
-            return _scan_with_row_ids(spark, snap, snap.files, snap.schema)
-        return read_live_files(spark, snap, snap.schema, snap.files)
-
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    pcols = snap.partition_columns
-    groups: dict[tuple, list[str]] = {}
-    for path in snap.files:
-        pv = snap.adds[path]["partitionValues"]
-        if partition_filter and any(
-            pv.get(k) != (None if v is None else str(v))
-            for k, v in partition_filter.items()
-        ):
-            continue
-        groups.setdefault(tuple(pv.get(c) for c in pcols), []).append(path)
-
-    schema = snap.schema or T.StructType([])
-    data_schema = T.StructType([f for f in schema.fields if f.name not in pcols])
-    if not groups:
-        return spark.createDataFrame([], schema)
-    parts = []
-    # Deterministic group order; None partition values (Hive default
-    # partition) sort last rather than crashing the tuple compare.
-    for pv, files in sorted(
-        groups.items(), key=lambda kv: tuple((v is None, v or "") for v in kv[0])
-    ):
-        if with_row_ids:
-            df = _scan_with_row_ids(spark, snap, files, data_schema)
-        else:
-            df = read_live_files(spark, snap, data_schema, files)
-        for col, val in zip(pcols, pv):
-            dtype = schema[col].dataType if col in schema.fieldNames() else T.StringType()
-            df = df.withColumn(col, F.lit(val).cast(dtype))
-        parts.append(df)
-    out = reduce(lambda a, b: a.unionByName(b), parts)
-    if not schema.fields:
-        return out
-    keep = list(schema.fieldNames()) + (["_row_id"] if with_row_ids else [])
-    return out.select(*keep)
+    paths = snap.files
+    if partition_filter and snap.partition_columns:
+        want = {k: _partition_literal(v) for k, v in partition_filter.items()}
+        paths = [
+            p
+            for p in paths
+            if all(snap.adds[p]["partitionValues"].get(k) == v for k, v in want.items())
+        ]
+    return scan_live_files(spark, snap, paths, row_ids=with_row_ids)

@@ -32,6 +32,9 @@ the same commit.  A file that is already live (a deletion-vector
 change, row-tracking enablement, RESTORE, clones) is re-recorded from
 its snapshot record through ``_live_add``.  ``tests/test_staging_guard.py``
 fails on a hand-built copy of either.
+
+Every read of live files (rewrites, MERGE targets, DML match passes)
+goes through ``snapshot.scan_live_files``.
 """
 
 from __future__ import annotations
@@ -59,6 +62,7 @@ from guidewire_spark.sources.snapshot import (
     empty_snapshot,
     load_snapshot,
     load_snapshot_or_empty,
+    scan_live_files,
 )
 
 
@@ -239,88 +243,20 @@ def _vector_swaps(snap, scanned, vectors: dict[str, dict], now: int) -> list[dic
     return out
 
 
-def _uri_file_key(uri: str) -> str:
-    """Match key for ``input_file_name()`` output: scheme stripped,
-    URI percent-encoding KEPT (input_file_name renders paths encoded —
-    'my table' appears as 'my%20table' — so the log-path side must be
-    encoded identically via dv.normalize_path, never realpath'd raw;
-    the old raw-realpath compare silently matched nothing on any table
-    path containing an encodable character)."""
-    import re
+def _matches_by_file(
+    spark: SparkSession, snap, paths: list[str], predicate: str
+) -> dict[str, int]:
+    """Live rows matching ``predicate`` per file, over the live files
+    ``paths`` of ``snap`` (files without a match are absent) — the
+    copy-on-write match pass: only these files get rewritten.  Files
+    are keyed by the scan's own ``dv.META_FILE`` column, which survives
+    the deletion-vector anti-join even when it shuffles."""
+    from guidewire_spark.sources.dv import META_FILE, normalize_path
 
-    return re.sub("^file:/+", "/", uri)
-
-
-def _scan_by_partition(snap, paths: list[str], scan, tail=None) -> DataFrame:
-    """``scan(schema, files)`` over the live files ``paths`` of
-    ``snap`` with the partition columns materialized from the log's
-    ``add.partitionValues`` (hive-layout files don't store them).
-
-    Files are grouped by partition tuple, each group scanned under the
-    data schema and its columns filled with cast literals, then
-    unioned — the plan has one scan per touched partition, which
-    matches the copy-on-write contract (MERGE/DELETE/OPTIMIZE read
-    only the partitions they rewrite).  With ``tail`` (a list) each
-    group selects the table's columns followed by ``tail``."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    if not snap.partition_columns:
-        return scan(snap.schema, paths)
-    pcols = list(snap.partition_columns)
-    data_schema = T.StructType(
-        [f for f in snap.schema.fields if f.name not in set(pcols)]
-    )
-    groups: dict[tuple, list[str]] = {}
-    for p in paths:
-        pv = snap.adds[p]["partitionValues"]
-        groups.setdefault(tuple(pv.get(c) for c in pcols), []).append(p)
-    parts = []
-    for key, ps in groups.items():
-        df = scan(data_schema, ps)
-        for c, v in zip(pcols, key):
-            df = df.withColumn(c, F.lit(v).cast(snap.schema[c].dataType))
-        if tail is not None:
-            df = df.select(snap.schema.fieldNames() + tail)
-        parts.append(df)
-    return reduce(DataFrame.unionByName, parts)
-
-
-def _read_with_partitions(spark: SparkSession, snap, paths: list[str]) -> DataFrame:
-    """Read data files with their partition columns
-    (:func:`_scan_by_partition`), deletion-vector aware: files
-    carrying a live DV scan through the row-index anti-join, so every
-    copy-on-write rewrite (DELETE / UPDATE / MERGE / OPTIMIZE) reads
-    only LIVE rows — a rewrite of a DV'd file folds the vector in and
-    must never resurrect dead rows."""
-    from guidewire_spark.sources.snapshot import read_live_files
-
-    return _scan_by_partition(
-        snap,
-        paths,
-        lambda schema, ps: read_live_files(spark, snap, schema, ps),
-        [],
-    )
-
-
-def _read_with_partitions_row_ids(
-    spark: SparkSession, snap, paths: list[str]
-) -> DataFrame:
-    """Row-tracking twin of :func:`_read_with_partitions`: the same
-    grouped, DV-aware read, but every row carries its stable
-    ``_row_id`` (materialized-or-default, snapshot._scan_with_row_ids).
-    The read side of id-preserving rewrites (REORG PURGE / OPTIMIZE on
-    tracked tables)."""
-    from guidewire_spark.sources.snapshot import _scan_with_row_ids
-
-    return _scan_by_partition(
-        snap,
-        paths,
-        lambda schema, ps: _scan_with_row_ids(spark, snap, ps, schema),
-        ["_row_id"],
-    )
+    hits = scan_live_files(spark, snap, paths, file_keys=True).where(predicate)
+    counts = dict(hits.groupBy(META_FILE).count().collect())
+    keys = {p: normalize_path(p) for p in paths}
+    return {p: counts[k] for p, k in keys.items() if k in counts}
 
 
 def _materialized_row_id_col(config: dict) -> str:
@@ -1236,11 +1172,11 @@ def optimize_table(
         from guidewire_spark.sources.snapshot import MATERIALIZED_ROW_ID_KEY
 
         mat_col = _materialized_row_id_col(snap.configuration)
-        df = _read_with_partitions_row_ids(
-            spark, snap, victims
+        df = scan_live_files(
+            spark, snap, victims, row_ids=True
         ).withColumnRenamed("_row_id", mat_col)
     else:
-        df = _read_with_partitions(spark, snap, victims)
+        df = scan_live_files(spark, snap, victims)
     if zorder_by:
         from guidewire_spark.sources.zorder import cluster_by_zorder
 
@@ -1377,7 +1313,7 @@ def merge_into(
     candidates = snap.pruned_files(keys[0], bounds["lo"], bounds["hi"])
 
     if candidates:
-        target = _read_with_partitions(spark, snap, candidates)
+        target = scan_live_files(spark, snap, candidates)
         kept = target.join(source.select(*keys), keys, "left_anti")
         if evolved is not None:
             merged = kept.unionByName(
@@ -1445,7 +1381,7 @@ def _merge_insert_only(
     from pyspark.sql import functions as F
 
     if candidates:
-        target_keys = _read_with_partitions(spark, snap, candidates).select(*keys)
+        target_keys = scan_live_files(spark, snap, candidates).select(*keys)
         fresh = source.alias("s").join(target_keys, keys, "left_anti")
     else:
         fresh = source.alias("s")
@@ -1630,7 +1566,7 @@ def merge_clauses(
         dup_keys = (
             source.groupBy(*keys).count().where(F.col("count") > 1).drop("count")
         )
-        target_keys = _read_with_partitions(spark, snap, candidates).select(*keys)
+        target_keys = scan_live_files(spark, snap, candidates).select(*keys)
         if dup_keys.join(target_keys, keys, "left_semi").limit(1).count():
             raise ValueError(
                 "MERGE source has multiple rows matching one target row; "
@@ -1651,11 +1587,7 @@ def merge_clauses(
             candidates, evolved, out_schema, out_cols, pcols,
         )
 
-    t = (
-        _read_with_partitions(spark, snap, candidates)
-        if candidates
-        else spark.createDataFrame([], snap.schema)
-    ).withColumn("__tp", F.lit(1)).alias("t")
+    t = scan_live_files(spark, snap, candidates).withColumn("__tp", F.lit(1)).alias("t")
     s = source.withColumn("__sp", F.lit(1)).alias("s")
     joined = t.join(
         s, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys], "full_outer"
@@ -1792,27 +1724,12 @@ def _delete_cow(spark, snap, predicate, prune_column, prune_lo, prune_hi) -> int
         if prune_column
         else list(snap.files)
     )
-    from pyspark.sql import functions as F
-
-    # Which candidate files actually contain matches? One pass with
-    # the file name attached (partition columns materialized from the
-    # log, so predicates may reference them); only those files get
-    # rewritten.
-    with_file = _read_with_partitions(spark, snap, candidates).withColumn(
-        "__file", F.input_file_name()
-    )
-    from guidewire_spark.sources.dv import normalize_path
-
-    hit_files = {
-        _uri_file_key(r["__file"])
-        for r in with_file.where(predicate).select("__file").distinct().collect()
-    }
-    rewrite = [p for p in candidates if normalize_path(p) in hit_files]
+    # partition columns are materialized from the log, so predicates
+    # may reference them
+    rewrite = list(_matches_by_file(spark, snap, candidates, predicate))
     if not rewrite:
         raise ValueError("predicate matches no rows; nothing to delete")
-    survivors = _read_with_partitions(spark, snap, rewrite).where(
-        f"NOT ({predicate})"
-    )
+    survivors = scan_live_files(spark, snap, rewrite).where(f"NOT ({predicate})")
     adds = stage_add_actions(
         _to_physical(survivors, snap.schema), snap, pcols or None
     )
@@ -1822,28 +1739,6 @@ def _delete_cow(spark, snap, predicate, prune_column, prune_lo, prune_hi) -> int
     # snapshot-version commit: intervening writers collide, not clobber
     write_commit(snap, actions=actions)
     return snap.version + 1
-
-
-def _scan_rowindex_with_partitions(
-    spark: SparkSession, snap, paths: list[str], extra_fields=None
-) -> DataFrame:
-    """Scan ``paths`` carrying (file base name, row index) metadata
-    (dv.scan_with_row_index) with the table's partition columns
-    materialized from the log (:func:`_scan_by_partition`), so DML
-    predicates may reference them.  ``extra_fields`` appends
-    physical-only StructFields to the scan schema (e.g. the
-    materialized-row-id column on row-tracked tables — NULL for files
-    that don't carry it)."""
-    from pyspark.sql import types as T
-
-    from guidewire_spark.sources.dv import scan_with_row_index
-
-    def scan(schema, ps):
-        if extra_fields:
-            schema = T.StructType(list(schema.fields) + list(extra_fields))
-        return scan_with_row_index(spark, schema, ps)
-
-    return _scan_by_partition(snap, paths, scan)
 
 
 def delete_from_mor(
@@ -1878,12 +1773,7 @@ def delete_from_mor(
 
 def _delete_mor(spark, snap, predicate, prune_column, prune_lo, prune_hi) -> int:
     """Merge-on-read DELETE on the snapshot ``snap`` (``delete_from_mor``)."""
-    from guidewire_spark.sources.dv import (
-        META_FILE,
-        META_ROW,
-        encode_dead_rows,
-        subtract_dead_rows,
-    )
+    from guidewire_spark.sources.dv import META_FILE, META_ROW, encode_dead_rows
 
     _reject_on_append_only(snap, "DELETE (merge-on-read)")
     _gate_write(snap)
@@ -1894,13 +1784,11 @@ def _delete_mor(spark, snap, predicate, prune_column, prune_lo, prune_hi) -> int
         if prune_column
         else list(snap.files)
     )
-    scan = _scan_rowindex_with_partitions(spark, snap, candidates)
-    existing = snap.deletion_vectors(candidates)
-    scan = subtract_dead_rows(scan, spark, existing)
+    scan = scan_live_files(spark, snap, candidates, file_keys=True)
     # Indexes aggregate + encode executor-side; the driver sees one
     # (path, payload) descriptor per touched file, never a row list.
     hits = scan.where(predicate).select(META_FILE, META_ROW)
-    merged = encode_dead_rows(spark, hits, existing)
+    merged = encode_dead_rows(spark, hits, snap.deletion_vectors(candidates))
     if not merged:
         raise ValueError("predicate matches no rows; nothing to delete")
     now = int(time.time() * 1000)
@@ -2237,8 +2125,6 @@ def delete_auto(
     the generic entry point where the shape is unknown."""
     import json as _json
 
-    from pyspark.sql import functions as F
-
     snap = load_snapshot(table_path)
     _reject_on_append_only(snap, "DELETE")
     if _row_tracking_enabled(snap):
@@ -2256,40 +2142,28 @@ def delete_auto(
         if prune_column
         else list(snap.files)
     )
-    with_file = _read_with_partitions(spark, snap, candidates).withColumn(
-        "__file", F.input_file_name()
-    )
-    from guidewire_spark.sources.dv import normalize_path
-
-    per_file = {
-        _uri_file_key(r["__file"]): r["n"]
-        for r in with_file.where(predicate)
-        .groupBy("__file")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
+    per_file = _matches_by_file(spark, snap, candidates, predicate)
     if not per_file:
         raise ValueError("predicate matches no rows; nothing to delete")
     matched = sum(per_file.values())
     total = 0
-    for p in candidates:
-        if normalize_path(p) in per_file:
-            add = snap.adds[p]
-            raw = add.get("stats")
-            n = _json.loads(raw).get("numRecords") if raw else None
-            if n is None:
-                # stats missing: be conservative, assume dense (CoW)
-                total = matched
-                break
-            # the denominator must be LIVE rows: stats count physical
-            # rows, but the matched side scanned DV-subtracted rows —
-            # without the correction a previously-vectored file's
-            # density is understated and dense deletes keep stacking
-            # vectors on exactly the files that most need a rewrite
-            dv = add.get("deletionVector")
-            if dv:
-                n -= int(dv.get("cardinality", 0))
-            total += max(n, 0)
+    for p in per_file:
+        add = snap.adds[p]
+        raw = add.get("stats")
+        n = _json.loads(raw).get("numRecords") if raw else None
+        if n is None:
+            # stats missing: be conservative, assume dense (CoW)
+            total = matched
+            break
+        # the denominator must be LIVE rows: stats count physical
+        # rows, but the matched side scanned DV-subtracted rows —
+        # without the correction a previously-vectored file's
+        # density is understated and dense deletes keep stacking
+        # vectors on exactly the files that most need a rewrite
+        dv = add.get("deletionVector")
+        if dv:
+            n -= int(dv.get("cardinality", 0))
+        total += max(n, 0)
     ratio = matched / max(total, 1)
     if ratio >= mor_threshold:
         route, delete = "cow", _delete_cow
@@ -2322,11 +2196,11 @@ def purge_deletion_vectors(spark: SparkSession, table_path: str) -> int:
 
     if tracked:
         mat_col = _materialized_row_id_col(snap.configuration)
-        survivors = _read_with_partitions_row_ids(
-            spark, snap, rewrite
+        survivors = scan_live_files(
+            spark, snap, rewrite, row_ids=True
         ).withColumnRenamed("_row_id", mat_col)
     else:
-        survivors = _read_with_partitions(spark, snap, rewrite)  # DV-aware
+        survivors = scan_live_files(spark, snap, rewrite)
     adds = stage_add_actions(
         _to_physical(survivors, snap.schema), snap, pcols or None, data_change=False
     )
@@ -2375,15 +2249,8 @@ def update_table_mor(
     new file (readers coalesce it ahead of baseRowId + index), so a
     row's id survives UPDATE — Delta's row-tracking contract."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    from guidewire_spark.sources.dv import (
-        META_FILE,
-        META_ROW,
-        encode_dead_rows,
-        normalize_path,
-        subtract_dead_rows,
-    )
+    from guidewire_spark.sources.dv import META_FILE, META_ROW, encode_dead_rows
 
     snap = load_snapshot(table_path)
     _reject_on_append_only(snap, "UPDATE (merge-on-read)")
@@ -2405,56 +2272,26 @@ def update_table_mor(
             )
     candidates = list(snap.files)
     tracked = _row_tracking_enabled(snap)
-    mat_col = None
-    extra_fields = None
+    # a tracked row's CURRENT stable id rides along so the updated
+    # image carries it forward
+    matched = scan_live_files(
+        spark, snap, candidates, row_ids=tracked, file_keys=True
+    ).where(predicate)
+    out = [
+        F.expr(assignments[c]).alias(c) if c in assignments else F.col(c)
+        for c in snap.schema.fieldNames()
+    ]
     if tracked:
         from guidewire_spark.sources.snapshot import MATERIALIZED_ROW_ID_KEY
 
         mat_col = _materialized_row_id_col(snap.configuration)
-        extra_fields = [T.StructField(mat_col, T.LongType(), True)]
-        missing = [p for p in candidates if "baseRowId" not in snap.adds[p]]
-        if missing:
-            raise ValueError(
-                f"{len(missing)} file(s) have no baseRowId — row "
-                "tracking is not fully enabled"
-            )
-    scan = _scan_rowindex_with_partitions(
-        spark, snap, candidates, extra_fields=extra_fields
-    )
-    existing = snap.deletion_vectors(candidates)
-    scan = subtract_dead_rows(scan, spark, existing)
-    matched = scan.where(predicate)
-    if tracked:
-        # resolve each matched row's CURRENT stable id so the updated
-        # image carries it forward (materialized wins over default)
-        bases = spark.createDataFrame(
-            [
-                (normalize_path(p), int(snap.adds[p]["baseRowId"]))
-                for p in candidates
-            ],
-            f"{META_FILE} string, __base long",
-        )
-        matched = (
-            matched.join(F.broadcast(bases), META_FILE)
-            .withColumn(
-                mat_col,
-                F.coalesce(F.col(mat_col), F.col("__base") + F.col(META_ROW)),
-            )
-            .drop("__base")
-        )
-    data_cols = [f.name for f in snap.schema.fields]
-    out_cols = data_cols + ([mat_col] if tracked else [])
-    updated = matched.select(
-        *[
-            F.expr(assignments[c]).alias(c) if c in assignments else F.col(c)
-            for c in out_cols
-        ]
-    )
+        out.append(F.col("_row_id").alias(mat_col))
+    updated = matched.select(*out)
     _enforce_constraints(updated, snap)
     # Indexes aggregate + encode executor-side (dv.encode_dead_rows):
     # the driver collects one descriptor per touched file, not rows.
     merged = encode_dead_rows(
-        spark, matched.select(META_FILE, META_ROW), existing
+        spark, matched.select(META_FILE, META_ROW), snap.deletion_vectors(candidates)
     )
     if not merged:
         raise ValueError("predicate matches no rows; nothing to update")
@@ -2512,21 +2349,10 @@ def replace_where(
             f"replace_where: {violating} incoming rows violate {predicate!r}"
         )
     pcols = list(snap.partition_columns or [])
-    from pyspark.sql import functions as F
-
-    with_file = _read_with_partitions(spark, snap, list(snap.files)).withColumn(
-        "__file", F.input_file_name()
-    )
-    from guidewire_spark.sources.dv import normalize_path
-
-    hit_files = {
-        _uri_file_key(r["__file"])
-        for r in with_file.where(predicate).select("__file").distinct().collect()
-    }
-    rewrite = [p for p in snap.files if normalize_path(p) in hit_files]
+    rewrite = list(_matches_by_file(spark, snap, snap.files, predicate))
     adds = []
     if rewrite:
-        survivors = _read_with_partitions(spark, snap, rewrite).where(
+        survivors = scan_live_files(spark, snap, rewrite).where(
             f"NOT ({predicate})"
         )
         adds += stage_add_actions(
@@ -2589,19 +2415,10 @@ def update_table(
     )
     from pyspark.sql import functions as F
 
-    with_file = _read_with_partitions(spark, snap, candidates).withColumn(
-        "__file", F.input_file_name()
-    )
-    from guidewire_spark.sources.dv import normalize_path
-
-    hit_files = {
-        _uri_file_key(r["__file"])
-        for r in with_file.where(predicate).select("__file").distinct().collect()
-    }
-    rewrite = [p for p in candidates if normalize_path(p) in hit_files]
+    rewrite = list(_matches_by_file(spark, snap, candidates, predicate))
     if not rewrite:
         raise ValueError("predicate matches no rows; nothing to update")
-    base = _read_with_partitions(spark, snap, rewrite)
+    base = scan_live_files(spark, snap, rewrite)
     updated = base.select(
         *[
             F.when(F.expr(predicate), F.expr(assignments[c]))

@@ -394,7 +394,7 @@ def test_restore_cdf_emits_row_level_diffs_not_whole_files(
 
 
 def test_cow_dml_on_table_path_with_space(spark, sf_dir, tmp_path):
-    """The copy-on-write hit-file detection compares input_file_name()
+    """The copy-on-write hit-file detection compares the scan's file key
     (URI-encoded) against log paths — with the normalize_path key both
     sides agree on encodable table paths (second-review finding: the
     old raw-realpath compare matched nothing and the DELETE raised)."""
@@ -476,6 +476,48 @@ def test_dv_read_guard_routes_large_vectors_off_the_driver(
     assert not small
     # the decode stage is the Arrow-batched executor-side one
     assert "MapInPandas" in dead._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "op", ["delete_from", "update_table", "replace_where", "delete_auto"]
+)
+def test_cow_dml_finds_matches_above_a_shuffled_dv_join(
+    spark, tmp_path, monkeypatch, op
+):
+    """Copy-on-write DML over a vectored table whose dead rows are past
+    the broadcast guard: the DV anti-join shuffles, and the match pass
+    must still name the files holding matches.  A file-name expression
+    evaluated above that shuffle reads empty — DELETE then raised
+    'matches no rows' and replaceWhere kept every replaced row."""
+    from guidewire_spark.sources import dv as dv_mod
+    from guidewire_spark.sources import writer
+
+    t = str(tmp_path / "shuffled")
+    write_delta(spark.range(1000).repartition(4), t, mode="append")
+    delete_from_mor(spark, t, "id % 10 = 0")
+    monkeypatch.setattr(dv_mod, "BROADCAST_DV_MAX_ROWS", 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        if op == "update_table":
+            writer.update_table(spark, t, "id < 500", {"id": "id + 1000"})
+        elif op == "replace_where":
+            writer.replace_where(spark, t, "id < 500", spark.range(5))
+        else:
+            getattr(writer, op)(spark, t, "id < 500")
+        got = sorted(r.id for r in read_delta(spark, t).collect())
+    finally:
+        spark.conf.set(key, before)
+    kept = [i for i in range(500, 1000) if i % 10]
+    hit = [i for i in range(500) if i % 10]
+    want = {
+        "delete_from": kept,
+        "delete_auto": kept,
+        "update_table": kept + [i + 1000 for i in hit],
+        "replace_where": list(range(5)) + kept,
+    }[op]
+    assert got == want
 
 
 def test_dv_distributed_decode_matches_driver_decode(spark):

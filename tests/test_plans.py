@@ -734,17 +734,14 @@ def test_mor_write_encode_is_executor_side(spark, sf_dir, tmp_path):
     encode on executors; the driver never receives row lists."""
     from guidewire_spark.plans.catalog import load_table
     from guidewire_spark.sources.dv import META_FILE, META_ROW
-    from guidewire_spark.sources.writer import (
-        _scan_rowindex_with_partitions,
-        write_delta,
-    )
-    from guidewire_spark.sources.snapshot import load_snapshot
+    from guidewire_spark.sources.snapshot import load_snapshot, scan_live_files
+    from guidewire_spark.sources.writer import write_delta
 
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     t = str(tmp_path / "enc_plan")
     write_delta(s, t, mode="append")
     snap = load_snapshot(t)
-    scan = _scan_rowindex_with_partitions(spark, snap, list(snap.files))
+    scan = scan_live_files(spark, snap, list(snap.files), file_keys=True)
     hits = scan.where("s_suppkey % 3 = 0").select(META_FILE, META_ROW)
     # build the encode stage exactly as encode_dead_rows does and
     # assert its plan shape without collecting

@@ -281,6 +281,13 @@ def test_partitioned_table_row_ids(spark, sf_dir, tmp_path):
     n = d.count()
     ids = [r._row_id for r in got.select("_row_id").collect()]
     assert sorted(ids) == list(range(n))
+    # a partition filter matching nothing keeps the _row_id column,
+    # as an empty unpartitioned read does
+    empty = read_delta(
+        spark, t, with_row_ids=True, partition_filter={"lang": "nope"}
+    )
+    assert empty.columns == ["doc_id", "lang", "_row_id"]
+    assert empty.count() == 0
     delete_from_mor(spark, t, "lang = 'en' AND doc_id % 2 = 0")
     before = {
         r.doc_id: r._row_id

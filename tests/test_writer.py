@@ -1027,6 +1027,18 @@ def test_partitioned_zorder_optimize(spark, sf_dir, tmp_path):
     assert got.where(F.col("l_orderkey") % 2 != 0).count() == 0
 
 
+def test_partition_filter_on_boolean_partition(spark, tmp_path):
+    """partition_filter values compare as partitionValues store them:
+    a bool matches the lower-case "true"/"false" Spark writes."""
+    table = str(tmp_path / "pflag")
+    df = spark.range(10).select("id", (F.col("id") % 2 == 0).alias("flag"))
+    write_delta(df, table, mode="append", partition_by=["flag"])
+    for flag, want in ((True, [0, 2, 4, 6, 8]), ("true", [0, 2, 4, 6, 8]),
+                       (False, [1, 3, 5, 7, 9])):
+        got = read_delta(spark, table, partition_filter={"flag": flag})
+        assert sorted(r.id for r in got.collect()) == want
+
+
 def test_table_detail_metadata_only(spark, sf_dir, tmp_path):
     """DESCRIBE DETAIL from the log alone: files, bytes, partitions,
     version, properties, and a stats-derived record count."""
