@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from guidewire_spark.functions import text as T
 from guidewire_spark.functions.rounding import stable_round as _r
-from guidewire_spark.plans.catalog import load_table, register_views
+from guidewire_spark.plans.catalog import load_table, local_df, register_views
 from guidewire_spark.registry import query
 
 
@@ -446,7 +446,8 @@ def _bpe_encode_oracle(rounds: int = 8) -> str:
     train layers, then apply the ``rounds`` merges IN ORDER to every
     corpus word as nested ``replace()`` calls over the one-char-per-
     symbol encoding (replace = greedy left-to-right merge, and merge k
-    runs on merge k-1's output exactly like the chained Spark folds).
+    runs on merge k-1's output exactly like the trainer's rounds, whose
+    final symbols the Spark side looks up per word).
     Token count after BPE = length of the encoded string, because
     every symbol is one character."""
     prefix, bs = _bpe_layers_sql(rounds)
@@ -486,11 +487,12 @@ def _bpe_encode_oracle(rounds: int = 8) -> str:
 _BPE_TRAIN_ORACLE = _bpe_train_oracle()
 
 
-def _train_bpe_merges(spark: SparkSession, sf_dir: str) -> list:
-    """The merge list of _train_bpe_merges_uncached, memoized per
-    corpus fingerprint via plans.artifact_cache: a tokenizer is
-    trained once per corpus snapshot and applied everywhere, so train,
-    encode and bench repeats in one session share one training run."""
+def _train_bpe_merges(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
+    """(merge list, encoded vocabulary) of _train_bpe_merges_uncached,
+    memoized per corpus fingerprint via plans.artifact_cache: a
+    tokenizer is trained once per corpus snapshot and applied
+    everywhere, so train, encode and bench repeats in one session share
+    one training run."""
     from guidewire_spark.plans.artifact_cache import (
         corpus_fingerprint,
         get_or_train,
@@ -517,12 +519,16 @@ def _merge_pair(symbols: list, left: str, right: str, merged: str) -> list:
     return out
 
 
-def _train_bpe_merges_uncached(spark: SparkSession, sf_dir: str) -> list:
+def _train_bpe_merges_uncached(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list, list]:
     """Eight rounds of pair count -> exact-integer argmax -> greedy
-    merge (Sennrich et al.'s public algorithm); returns the ordered
-    merge list as (rank, left, right, merged, freq) tuples.
+    merge (Sennrich et al.'s public algorithm).  Returns the ordered
+    merge list as (rank, left, right, merged, freq) tuples, and the
+    encoded vocabulary: one (word, chars, toks) row per distinct word,
+    its symbol count before the first merge and after the last one.
 
-    Spark runs ONE corpus aggregation into the (symbols, n) word
+    Spark runs ONE corpus aggregation into the (word, symbols, n) word
     vocabulary, with the tokenization vocab_bpe_encode_corpus applies
     (T.words, then split(w, "")), and collects it; the rounds then run
     on the driver.  The argmax key is (-freq, left, right): Python
@@ -536,17 +542,18 @@ def _train_bpe_merges_uncached(spark: SparkSession, sf_dir: str) -> list:
     0.38 s at 10^4 words, 4.8 s at 10^5 and 37 s at 8x10^5 (CPython
     3.11, one thread of a 4-core VM)."""
     d = load_table(spark, sf_dir, "documents")
-    vocab = [
-        (r.symbols, r.n)
-        for r in d.select(F.explode(T.words(F.col("text"))).alias("w"))
+    rows = (
+        d.select(F.explode(T.words(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("n"))
         .select(
+            "w",
             F.filter(F.split("w", ""), lambda c: c != "").alias("symbols"),
             "n",
         )
         .collect()
-    ]
+    )
+    vocab = [(r.symbols, r.n) for r in rows]
     merges = []
     for rnd in range(8):
         pairs: dict = {}
@@ -561,7 +568,10 @@ def _train_bpe_merges_uncached(spark: SparkSession, sf_dir: str) -> list:
         merged = left + right
         merges.append((rnd, left, right, merged, freq))
         vocab = [(_merge_pair(s, left, right, merged), n) for s, n in vocab]
-    return merges
+    encoded = [
+        (r.w, len(r.symbols), len(symbols)) for r, (symbols, _n) in zip(rows, vocab)
+    ]
+    return merges, encoded
 
 
 @query("vocab_bpe_train_merges", oracle=_BPE_TRAIN_ORACLE)
@@ -575,7 +585,7 @@ def vocab_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver; the algorithm and its driver-memory bound live on the
     (memoized) trainer, _train_bpe_merges/_train_bpe_merges_uncached."""
     return spark.createDataFrame(
-        _train_bpe_merges(spark, sf_dir),
+        _train_bpe_merges(spark, sf_dir)[0],
         "merge_rank int, left string, right string, merged string, freq long",
     )
 
@@ -598,21 +608,16 @@ def vocab_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     half of tokenizer training, and the real budget number a training
     pipeline reports (tokens-after-BPE, not characters).
 
-    The merge list is learned once per corpus (one vocabulary
-    aggregation, then driver-side rounds; memoized), and applied as
-    8 CHAINED JVM array folds over each
-    word's symbol sequence in ONE corpus pass — merges must apply in
-    learned order (merge k can consume tokens merge k-1 created:
-    that is what makes BPE multiplicative), so the folds compose
-    rather than union.  No Python touches the per-word path; at
-    100 TB this is one map-side pass over text with an 8-step
-    expression pipeline."""
-    merges = [
-        (left, right, merged)
-        for _rank, left, right, merged, _freq in _train_bpe_merges(
-            spark, sf_dir
-        )
-    ]
+    A word's BPE tokens are a function of the word alone, and the
+    trainer already merges every distinct word round by round (one
+    vocabulary aggregation, then driver-side rounds; memoized).  So the
+    encode is a lookup join: explode the words of each document,
+    broadcast-join the trained (word, chars, toks) table, sum per
+    document.  Per word occurrence that is one hash probe — no array
+    folds, no Python.  The broadcast side holds one row per distinct
+    word, the bound the trainer's driver collect already has.  A word
+    the table lacks fails the query by name instead of dropping out."""
+    merges, encoded = _train_bpe_merges(spark, sf_dir)
     if len(merges) != 8:
         # explicit raise, not assert: this oracle-contract guard must
         # survive ``python -O`` (assert-stripping would revert the
@@ -624,43 +629,18 @@ def vocab_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             "would yield silently different tokens_bpe values. Corpus "
             "too small for this query's oracle contract."
         )
-    from guidewire_spark.plans.catalog import fan_out
-
-    # the 8 chained folds are CPU-heavy per word — fan the corpus out
-    # before them (no-op on real multi-file scans)
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    words = d.select(
-        "doc_id", F.explode(T.words(F.col("text"))).alias("w")
-    ).select(
-        "doc_id",
-        F.filter(F.split("w", ""), lambda c: c != "").alias("symbols"),
+    vocab = local_df(spark, encoded, "w string, chars int, toks int")
+    missing = F.raise_error(
+        F.concat(F.lit("word missing from the trained BPE vocabulary: "), "w")
     )
-    def fold_merge(col, left, right, merged):
-        lw, rw, mw = F.lit(left), F.lit(right), F.lit(merged)
-
-        def step(acc, x):
-            return F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == lw)
-                & (x == rw),
-                F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(mw)),
-            ).otherwise(F.concat(acc, F.array(x)))
-
-        return F.aggregate(col, F.array().cast("array<string>"), step)
-
-    col = F.col("symbols")
-    for left, right, merged in merges:
-        col = fold_merge(col, left, right, merged)
     return (
-        words.select(
-            "doc_id",
-            F.size("symbols").alias("chars"),
-            F.size(col).alias("toks"),
-        )
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", F.explode(T.words(F.col("text"))).alias("w"))
+        .join(F.broadcast(vocab), "w", "left")
         .groupBy("doc_id")
         .agg(
             F.sum("chars").alias("tokens_char"),
-            F.sum("toks").alias("tokens_bpe"),
+            F.sum(F.coalesce("toks", missing)).alias("tokens_bpe"),
         )
         .orderBy("doc_id")
     )

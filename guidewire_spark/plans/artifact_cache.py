@@ -1,5 +1,5 @@
 """In-process cache for small TRAINED ARTIFACTS — BPE merge lists,
-IVF centroid tables, PQ codebooks: k-sized, deterministic functions
+IVF centroid tables, PQ codebooks: deterministic functions
 of an input corpus, and (before this cache) recomputed from scratch
 by every query invocation that applies them.
 
@@ -8,8 +8,9 @@ and applied for months; an ANN index's coarse quantizer is trained
 once per corpus snapshot), made safe by keying every entry on a
 CORPUS FINGERPRINT — the backing parquet file's absolute path, size,
 and mtime_ns — so any data change invalidates naturally.  Entries are
-driver-side memory only and k-sized by contract (a merge list, an
-8x64 centroid table), never row data.
+driver-side memory only, never row data: k-sized (a merge list, an
+8x64 centroid table) or distinct-value-sized (BPE's word → token-count
+table beside its merge list, the bound its training collect has).
 
 Scale note: the training passes these artifacts come from touch the
 corpus a bounded number of times.  BPE aggregates it ONCE into its

@@ -628,8 +628,11 @@ def scan_live_files(
     Hive default partition — last), each group scanned under the data
     schema with its partition columns filled as cast literals, and the
     groups unioned, so the plan has one scan per partition read.  Plain
-    files go through the stock scan, vectored ones through the
-    (file, row index) scan anti-joined against their dead rows.
+    files and vectored ones scan apart: vectored ones through the
+    (file, row index) scan anti-joined against their dead rows, plain
+    ones through the stock scan, or the (file, row index) scan when
+    ids or keys are asked for, whose row index Spark prunes when
+    nothing reads it.
 
     ``row_ids=True`` adds the stable ``_row_id`` (Delta row tracking):
     ``coalesce(materialized, baseRowId + row index)`` — files that
@@ -667,22 +670,25 @@ def scan_live_files(
 
     def scan(data_schema, files):
         dvs = snap.deletion_vectors(files)
+        plain = [p for p in files if p not in dvs]
         frames = []
-        if not (row_ids or file_keys):
-            # only vectored files need the (file, row index) scan
-            plain = [p for p in files if p not in dvs]
-            if plain:
-                frames.append(read_files_with_schema(spark, data_schema, plain))
-            files = list(dvs)
-        if files:
-            if row_ids and mat_col:
-                data_schema = T.StructType(
-                    data_schema.fields + [T.StructField(mat_col, T.LongType(), True)]
-                )
-            df = dv.scan_with_row_index(spark, data_schema, files)
+        if plain and not (row_ids or file_keys):
+            frames.append(read_files_with_schema(spark, data_schema, plain))
+            plain = []
+        if row_ids and mat_col:
+            data_schema = T.StructType(
+                data_schema.fields + [T.StructField(mat_col, T.LongType(), True)]
+            )
+        # plain files scan apart from vectored ones: only the DV
+        # anti-join needs every row's index, so a consumer that never
+        # reads META_ROW (the match pass) prunes it from their scan
+        for group, dead in ((plain, {}), (list(dvs), dvs)):
+            if not group:
+                continue
+            df = dv.scan_with_row_index(spark, data_schema, group)
             if row_ids:
                 bases = spark.createDataFrame(
-                    [(dv.normalize_path(p), int(snap.adds[p]["baseRowId"])) for p in files],
+                    [(dv.normalize_path(p), int(snap.adds[p]["baseRowId"])) for p in group],
                     f"{dv.META_FILE} string, __base long",
                 )
                 default_id = F.col("__base") + F.col(dv.META_ROW)
@@ -694,7 +700,7 @@ def scan_live_files(
                     )
                     .drop("__base", *([mat_col] if mat_col else []))
                 )
-            df = dv.subtract_dead_rows(df, spark, dvs)
+            df = dv.subtract_dead_rows(df, spark, dead)
             frames.append(df if file_keys else df.drop(dv.META_FILE, dv.META_ROW))
         return reduce(DataFrame.unionByName, frames)
 

@@ -6,6 +6,8 @@ metrics contract."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -104,7 +106,6 @@ def _reference_bpe_merges(texts: list[str]) -> list[tuple]:
     """Pure-Python reference BPE (Sennrich-style: word-frequency vocab,
     argmax by (freq, pair) with lexicographic tie-break, greedy
     left-to-right application), written independently of the trainer."""
-    import re
     from collections import Counter
 
     words = Counter()
@@ -200,10 +201,13 @@ def test_bpe_train_matches_reference(spark, sf_dir, tmp_path, corpus):
     group = f"test-bpe-train-{corpus}"
     sc.setJobGroup(group, group)
     try:
-        trained = _train_bpe_merges_uncached(spark, d)
+        trained, encoded = _train_bpe_merges_uncached(spark, d)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    # one encoded row per distinct word
+    words = sorted(w for w, _, _ in encoded)
+    assert words == sorted({w for t in texts for w in re.findall(r"\S+", t)})
 
     got = [
         (r.merge_rank, r.left, r.right, r.merged, r.freq)
@@ -217,24 +221,45 @@ def test_bpe_train_matches_reference(spark, sf_dir, tmp_path, corpus):
             vocab_bpe_encode_corpus(spark, d)
 
 
-def test_bpe_encode_matches_reference(spark, sf_dir):
+# Sustains all 8 merges at freq >= 2.  Words repeat within one
+# document and across documents, and the texts carry leading, trailing
+# and repeated whitespace: a per-word lookup must count occurrences.
+_BPE_ENCODE_TEXTS = [
+    "  banana bandana banana\tcabana  ",
+    "ananas   banana\nbandana",
+    "cabana cabana ananas banana ",
+]
+
+
+def test_bpe_encode_matches_reference(spark, sf_dir, tmp_path):
     """vocab_bpe_encode_corpus must report EXACTLY the per-doc token
     counts the pure-Python encoder produces when applying the same
-    learned merges in order."""
-    import re
+    learned merges in order, on the sf_dir corpus and on a small
+    corpus of repeated words."""
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(_BPE_ENCODE_TEXTS)), pa.int64()),
+                "text": pa.array(_BPE_ENCODE_TEXTS, pa.string()),
+            }
+        ),
+        f"{tmp_path}/documents.parquet",
+    )
+    for d in (sf_dir, str(tmp_path)):
+        _assert_encode_matches_reference(spark, d)
 
+
+def _assert_encode_matches_reference(spark, d):
     from guidewire_spark.operators.advanced_ext import (
         vocab_bpe_encode_corpus,
         vocab_bpe_train_merges,
     )
-    from guidewire_spark.plans.catalog import load_table
 
     merges = [
         (r.left, r.right, r.merged)
-        for r in vocab_bpe_train_merges(spark, sf_dir)
-        .orderBy("merge_rank")
-        .collect()
+        for r in vocab_bpe_train_merges(spark, d).orderBy("merge_rank").collect()
     ]
+    assert len(merges) == 8
 
     def encode(word):
         syms = list(word)
@@ -248,9 +273,7 @@ def test_bpe_encode_matches_reference(spark, sf_dir):
             syms = out
         return syms
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    ).collect()
+    docs = load_table(spark, d, "documents").select("doc_id", "text").collect()
     expected = {}
     for row in docs:
         chars = toks = 0
@@ -260,8 +283,24 @@ def test_bpe_encode_matches_reference(spark, sf_dir):
         expected[row.doc_id] = (chars, toks)
     got = {
         r.doc_id: (r.tokens_char, r.tokens_bpe)
-        for r in vocab_bpe_encode_corpus(spark, sf_dir).collect()
+        for r in vocab_bpe_encode_corpus(spark, d).collect()
     }
     assert got == expected
     # BPE must actually compress: every document shrinks
     assert all(t < c for c, t in got.values())
+
+
+def test_bpe_encode_fails_on_a_word_missing_from_the_vocabulary(
+    spark, sf_dir, monkeypatch
+):
+    """The encode looks each word up in the trained vocabulary; a word
+    the table lacks fails the query by name, never drops out of the
+    token counts."""
+    from guidewire_spark.operators import advanced_ext
+
+    merges, encoded = advanced_ext._train_bpe_merges(spark, sf_dir)
+    monkeypatch.setattr(
+        advanced_ext, "_train_bpe_merges", lambda *_: (merges, encoded[1:])
+    )
+    with pytest.raises(Exception, match="missing from the trained BPE vocabulary"):
+        advanced_ext.vocab_bpe_encode_corpus(spark, sf_dir).collect()

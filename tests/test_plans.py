@@ -688,6 +688,33 @@ def test_dv_read_is_broadcast_anti_join_with_row_index(spark, sf_dir, tmp_path):
         assert bad not in plan, bad
 
 
+def test_match_pass_reads_row_index_only_for_vectored_files(
+    spark, sf_dir, tmp_path
+):
+    """The copy-on-write match pass groups live matches by file key.
+    Only files with a deletion vector need the row index (their
+    dead-row anti-join keys on it): the plain files' scan must not
+    read it."""
+    from guidewire_spark.plans.catalog import load_table
+    from guidewire_spark.sources.dv import META_FILE
+    from guidewire_spark.sources.snapshot import load_snapshot, scan_live_files
+    from guidewire_spark.sources.writer import delete_from_mor, write_delta
+
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    t = str(tmp_path / "match_plan")
+    write_delta(s.repartition(4), t, mode="append")
+    delete_from_mor(spark, t, "s_suppkey = 1")  # one file gains a vector
+    snap = load_snapshot(t)
+    assert len(snap.deletion_vectors()) == 1 and len(snap.files) == 4
+    hits = scan_live_files(spark, snap, snap.files, file_keys=True)
+    matches = hits.where("s_suppkey % 10 = 3").groupBy(META_FILE).count()
+    plan = matches._jdf.queryExecution().executedPlan().toString()
+    scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
+    assert len(scans) == 2, plan
+    indexed = [l for l in scans if "row_index" in l]
+    assert len(indexed) == 1 and "(1 paths)" in indexed[0], plan
+
+
 def test_semdedup_broadcasts_centroids_and_shuffles_on_cluster(spark, sf_dir):
     """SemDeDup's scale contract: the k centroids BROADCAST (k-sized,
     never data-sized), the within-cluster pair stage joins on
@@ -979,6 +1006,24 @@ def test_substring_family_tokenize_uses_every_core(spark, sf_dir):
     assert n_parts >= spark.sparkContext.defaultParallelism, (
         f"tokenize stage has {n_parts} partitions"
     )
+
+
+def test_bpe_encode_is_a_broadcast_vocabulary_lookup(spark, sf_dir):
+    """vocab_bpe_encode_corpus looks each word occurrence up in the
+    trained (word, chars, toks) table: one broadcast hash join, no
+    per-word array fold (an aggregate higher-order function and its
+    lambdas) and no fan-out repartition of the corpus."""
+    from guidewire_spark.operators.advanced_ext import vocab_bpe_encode_corpus
+
+    df = vocab_bpe_encode_corpus(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in plan and "BroadcastHashJoin" in plan, plan
+    for bad in ("aggregate(", "REPARTITION", "Python"):
+        assert bad not in plan, (bad, plan)
+    # the one lambda left is T.words' empty-string filter
+    assert plan.count("lambdafunction") == 1, plan
 
 
 def test_artifact_cache_fingerprint_invalidation(tmp_path):

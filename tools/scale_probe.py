@@ -58,7 +58,7 @@ RUNS = 3  # min-of-N absorbs codegen + GC noise
 # Hard per-round budgets at sf0.1 (WARM shape — min-of-RUNS with the
 # artifact cache populated by run 1), r10 verdict item 6: the BPE
 # apply stage is the suite's steepest warm alpha (0.44); a regression
-# in its fold fan-out must fail by number, not by plan re-reading.
+# in its per-word encode must fail by number, not by plan re-reading.
 # Budgeted on the r10 series (0.64 s warm) with ~4x headroom for
 # ambient machine noise.
 BUDGETS_SF01 = {
