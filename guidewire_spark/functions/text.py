@@ -28,8 +28,10 @@ BPE_TOKEN_PATTERN = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
 
 
 def words(text: Column) -> Column:
-    """Whitespace tokenization (empty strings removed)."""
-    return F.filter(F.split(text, r"\s+"), lambda w: w != "")
+    """Whitespace tokenization (empty strings removed; ``split`` never
+    yields a null element, so ``array_remove`` drops exactly the
+    empties a leading or trailing run leaves)."""
+    return F.array_remove(F.split(text, r"\s+"), "")
 
 
 def word_count(text: Column) -> Column:

@@ -472,14 +472,10 @@ def delta_concurrent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             raced["done"] = True
             write_commit(
                 snap,
-                actions=[
-                    commit_info_action("WRITE", "Append", True, len(winner_adds), 0)
-                ]
+                actions=[commit_info_action("WRITE", "Append", winner_adds, blind=True)]
                 + winner_adds,
             )
-        return [
-            commit_info_action("WRITE", "Append", True, len(our_adds), 0)
-        ] + our_adds
+        return [commit_info_action("WRITE", "Append", our_adds, blind=True)] + our_adds
 
     commit_transaction(base, append_with_race)
     return read_delta(spark, table)

@@ -129,18 +129,6 @@ def _pin_partitioning(parted: DataFrame) -> DataFrame:
     return pinned
 
 
-def register_pin(df: DataFrame) -> DataFrame:
-    """Track an ALREADY-persisted frame in the pin FIFO so
-    ``clear_two_phase_pins()`` (called by the bench / registry sweep
-    between query executions) releases it.  For operators outside the
-    two-phase family that persist a diamond intermediate for the
-    duration of one query: without registration each invocation leaks
-    an InMemoryRelation in Spark's CacheManager for the session's
-    lifetime."""
-    _PIN_FIFO.append(df)
-    return df
-
-
 def clear_two_phase_pins() -> int:
     """Unpersist every pinned two-phase frame — the explicit cleanup
     hook for long-lived sessions that execute many two-phase queries

@@ -95,9 +95,7 @@ def save_checkpoints(results: dict[str, list], base, save_mode: str = "append") 
     else:
         mode, blind = "Append", True
     actions.append(add_action(data_file, size, mtime))
-    actions.append(
-        commit_info_action("WRITE", mode, blind, num_files=1, num_bytes=size, timestamp=now)
-    )
+    actions.append(commit_info_action("WRITE", mode, actions, now, blind=blind))
     write_commit(base, actions=actions)
 
 

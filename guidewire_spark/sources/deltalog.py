@@ -333,19 +333,26 @@ def remove_action(
 def commit_info_action(
     operation: str,
     mode: str,
-    is_blind_append: bool,
-    num_files: int,
-    num_bytes: int,
+    actions: list[dict],
     timestamp: int | None = None,
+    blind: bool = False,
 ) -> dict:
+    """``commitInfo`` of a commit of ``actions``.  Its operationMetrics
+    are derived from the commit's own ``add`` actions — ``numFiles``
+    counts them, ``numOutputBytes`` sums their sizes — so no caller
+    passes counts by hand."""
+    adds = [a["add"] for a in actions if "add" in a]
     return {
         "commitInfo": {
             "timestamp": timestamp or int(time.time() * 1000),
             "operation": operation,
             "operationParameters": {"mode": mode, "partitionBy": "[]"},
             "isolationLevel": "Serializable",
-            "operationMetrics": {"numFiles": num_files, "numOutputBytes": num_bytes},
-            "isBlindAppend": is_blind_append,
+            "operationMetrics": {
+                "numFiles": len(adds),
+                "numOutputBytes": sum(a["size"] for a in adds),
+            },
+            "isBlindAppend": blind,
             "engineInfo": "guidewire-spark",
             "txnId": str(uuid.uuid4()),
         }
@@ -379,16 +386,31 @@ def _apply_in_commit_timestamp(base, version: int, actions: list[dict]) -> list[
     the FRONT of the action list, both per the protocol.  The chain is
     detected from the PREVIOUS commit's commitInfo carrying the field
     (one file read — never a log replay per commit); a truncated
-    predecessor falls back to the base snapshot's configuration flag."""
-    prev_info = _prev_commit_info(base.table_path, version)
-    if prev_info is not None:
-        if "inCommitTimestamp" not in prev_info:
-            return actions
-        prev_ict = int(prev_info["inCommitTimestamp"])
+    predecessor falls back to the base snapshot's configuration flag.
+
+    A commit whose metaData turns the flag on over a ``base`` without
+    it (``enable_in_commit_timestamps``, a clone of such a table)
+    starts the chain: it is stamped above every commit timestamp
+    ``base`` replayed, and its metaData records this version and stamp
+    as the enablement version and timestamp."""
+    meta = next((a["metaData"] for a in actions if "metaData" in a), None)
+    enabling = (
+        meta is not None
+        and (meta.get("configuration") or {}).get(ICT_KEY) == "true"
+        and base.configuration.get(ICT_KEY) != "true"
+    )
+    if enabling:
+        prev_ict = max(base.commit_timestamps.values(), default=-1)
     else:
-        if base.configuration.get(ICT_KEY) != "true":
-            return actions
-        prev_ict = -1
+        prev_info = _prev_commit_info(base.table_path, version)
+        if prev_info is not None:
+            if "inCommitTimestamp" not in prev_info:
+                return actions
+            prev_ict = int(prev_info["inCommitTimestamp"])
+        else:
+            if base.configuration.get(ICT_KEY) != "true":
+                return actions
+            prev_ict = -1
     info = next((a for a in actions if "commitInfo" in a), None)
     if info is None:
         info = {"commitInfo": {"timestamp": int(time.time() * 1000)}}
@@ -396,6 +418,12 @@ def _apply_in_commit_timestamp(base, version: int, actions: list[dict]) -> list[
     ict = max(int(time.time() * 1000), prev_ict + 1)
     info["commitInfo"]["inCommitTimestamp"] = ict
     info["commitInfo"]["timestamp"] = ict
+    if enabling:
+        meta["configuration"] = {
+            **meta["configuration"],
+            "delta.inCommitTimestampEnablementVersion": str(version),
+            "delta.inCommitTimestampEnablementTimestamp": str(ict),
+        }
     return [info] + [a for a in actions if a is not info]
 
 
@@ -409,7 +437,9 @@ def write_commit(base, actions: list[dict]):
     create: a concurrent writer that committed that version first
     raises FileExistsError — optimistic concurrency, resolved by
     ``commit_transaction`` (the indexer serializes per table, so
-    there this only fires on misuse).
+    there this only fires on misuse; ``writer._commit`` raises it as
+    ConcurrentModificationException for commits built from table
+    state).
 
     Success proves ``base`` was the latest version, so ``base`` with
     the written actions applied (``snapshot.advance_snapshot``, after

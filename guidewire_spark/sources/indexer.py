@@ -166,11 +166,6 @@ def commit_batches(
             from guidewire_spark.sources.stats import stats_for_files, stats_spec
 
             stats = stats_for_files(batch.files, stats_spec(snap.configuration))
-        adds = [
-            add_action(f.path, f.size, f.modification_time, stats=stats.get(f.path))
-            for f in batch.files
-        ]
-        num_bytes = sum(f.size for f in batch.files)
         if batch.schema is not None:
             if snap.version < 0:
                 # CREATE TABLE: fresh log starts with the protocol action.
@@ -180,12 +175,7 @@ def commit_batches(
                 # of the current snapshot (Guidewire.scala:221-237).
                 actions.extend(remove_action(p, now) for p in snap.files)
             actions.append(metadata_action(batch.schema, created_time=now))
-            actions.extend(adds)
-            actions.append(
-                commit_info_action(
-                    "WRITE", "Overwrite", False, len(batch.files), num_bytes, now
-                )
-            )
+            mode, blind = "Overwrite", False
         else:
             if snap.version < 0:
                 # Blind append onto a table with no log yet: bootstrap
@@ -194,12 +184,12 @@ def commit_batches(
                 schema = infer_schema_from_files(batch.files)
                 if schema is not None:
                     actions.append(metadata_action(schema, created_time=now))
-            actions.extend(adds)
-            actions.append(
-                commit_info_action(
-                    "WRITE", "Append", True, len(batch.files), num_bytes, now
-                )
-            )
+            mode, blind = "Append", True
+        actions.extend(
+            add_action(f.path, f.size, f.modification_time, stats=stats.get(f.path))
+            for f in batch.files
+        )
+        actions.append(commit_info_action("WRITE", mode, actions, now, blind=blind))
         snap = write_commit(snap, actions=actions)
         results.append(BatchResult(batch.schema_id, batch.commit_timestamp, len(batch.files)))
     return results
@@ -219,16 +209,12 @@ def process_table(
         entry, last_processed_timestamp, enforce_guidewire_timestamp
     )
     table_path = os.path.join(database_path, table_name)
-    if last_processed_timestamp > 0:
-        # Checkpoint exists: append (Guidewire.scala:183-186).
-        results = commit_batches(table_path, batches, collect_stats)
-    else:
-        # No checkpoint (or overwrite): rebuild the log from scratch
-        # (saveDeltaLogOverwrite, Guidewire.scala:198-209).
-        if os.path.exists(table_path):
-            shutil.rmtree(table_path)
-        results = commit_batches(table_path, batches, collect_stats)
-    return table_name, results
+    # Checkpoint exists: append (Guidewire.scala:183-186).  No checkpoint
+    # (or overwrite): rebuild the log from scratch (saveDeltaLogOverwrite,
+    # Guidewire.scala:198-209).
+    if last_processed_timestamp <= 0 and os.path.exists(table_path):
+        shutil.rmtree(table_path)
+    return table_name, commit_batches(table_path, batches, collect_stats)
 
 
 def index(

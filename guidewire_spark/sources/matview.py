@@ -123,11 +123,10 @@ def _write_state(
             created_time=now,
             table_id=snap.metadata_id,
             configuration=config,
-        ),
-        commit_info_action(
-            "MATVIEW STATE", f"base_version={base_version}", False, 0, 0, now
-        ),
+        )
     ]
+    mode = f"base_version={base_version}"
+    actions.append(commit_info_action("MATVIEW STATE", mode, actions, now))
     write_commit(snap, actions=actions)
 
 

@@ -19,8 +19,12 @@ operations the reference documents — ``README.md:39-51``).
 Every writer operation loads its table's snapshot once, checks
 everything (protocol gate, appendOnly, identity, constraints,
 generated columns, defaults, row tracking, stats spec) against that
-snapshot, and commits on it with ``write_commit(snap, ...)``: the
-helpers take the snapshot, never a path to reload.
+snapshot, and commits on it through ``_commit``: the helpers take the
+snapshot, never a path to reload.  ``_commit`` is the one commit tail.
+It adds the protocol upgrade the operation's features need and the
+``commitInfo``, whose metrics ``deltalog.commit_info_action`` derives
+from the commit's own actions.  It returns the committed snapshot, so
+no operation computes its own version.
 
 ``stage_add_actions(df, snap, ...)`` is the only way an operation turns
 the data it writes into ``add`` actions (``convert_to_delta``, which
@@ -47,10 +51,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from guidewire_spark.sources.deltalog import (
+    ConcurrentModificationException,
     add_action,
     commit_info_action,
     commit_transaction,
     delta_log_dir,
+    feature_upgrade_action,
     list_versions,
     metadata_action,
     protocol_action,
@@ -170,18 +176,41 @@ def stage_add_actions(
     return _new_file_adds(snap, files, partition_by, commit_dir, data_change)
 
 
-def _commit_info(
-    operation: str, mode: str, adds: list[dict], now: int, blind: bool = False
-) -> dict:
-    """commitInfo whose operationMetrics count the commit's new files."""
-    return commit_info_action(
-        operation,
-        mode,
-        blind,
-        len(adds),
-        sum(a["add"]["size"] for a in adds),
-        now,
-    )
+def _commit(
+    snap,
+    operation: str,
+    mode: str,
+    actions: list[dict],
+    now: int,
+    *,
+    blind: bool = False,
+    reader=(),
+    writer=(),
+):
+    """Commit ``actions`` on ``snap`` and return the committed snapshot:
+    the one commit tail of every writer operation.
+
+    The commit also carries the protocol upgrade the ``reader`` /
+    ``writer`` table features need (so EXTERNAL readers and writers
+    are told about them — a DV table advertising minReaderVersion=1
+    lets an old reader silently resurface deleted rows), then the
+    ``commitInfo`` derived from the actions.  A ``blind`` append
+    rebases past concurrent appends through ``commit_transaction``.
+    Every other commit was built from ``snap``'s state, so losing the
+    race raises ConcurrentModificationException instead of clobbering
+    the winner."""
+    upgrade = feature_upgrade_action(snap.protocol, reader, writer)
+    actions = actions + ([upgrade] if upgrade else [])
+    actions.append(commit_info_action(operation, mode, actions, now, blind=blind))
+    if blind:
+        return commit_transaction(snap, lambda _: actions)
+    try:
+        return write_commit(snap, actions=actions)
+    except FileExistsError:
+        raise ConcurrentModificationException(
+            f"{operation} lost the race for version {snap.version + 1} of "
+            f"{snap.table_path}: another writer committed it first"
+        ) from None
 
 
 def _table_metadata(snap, now: int, schema=None, configuration=None) -> dict:
@@ -433,13 +462,11 @@ def add_check_constraint(
     EXISTING rows first (Delta refuses constraints the current data
     violates), then commits a metadata action carrying the constraint
     in the configuration. Returns the new version."""
-    from guidewire_spark.sources.snapshot import read_delta
+    from pyspark.sql import functions as F
 
     snap = load_snapshot(table_path)
     _gate_write(snap)
-    from pyspark.sql import functions as F
-
-    if snap.files and read_delta(spark, table_path, version=snap.version).where(
+    if snap.files and scan_live_files(spark, snap, snap.files).where(
         ~F.expr(expr)
     ).limit(1).count() > 0:
         raise ValueError(
@@ -447,14 +474,14 @@ def add_check_constraint(
         )
     config = {**snap.configuration, f"delta.constraints.{name}": expr}
     now = int(time.time() * 1000)
-    actions = [
-        _table_metadata(snap, now, configuration=config),
-        commit_info_action(
-            "ADD CONSTRAINT", f"{name} CHECK ({expr})", False, 0, 0, now
-        ),
-    ] + _feature_upgrade_actions(snap, writer={"checkConstraints"})
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "ADD CONSTRAINT",
+        f"{name} CHECK ({expr})",
+        [_table_metadata(snap, now, configuration=config)],
+        now,
+        writer={"checkConstraints"},
+    ).version
 
 
 def drop_check_constraint(table_path: str, name: str) -> int:
@@ -468,12 +495,13 @@ def drop_check_constraint(table_path: str, name: str) -> int:
     del config[key]
     _gate_write(snap)
     now = int(time.time() * 1000)
-    actions = [
-        _table_metadata(snap, now, configuration=config),
-        commit_info_action("DROP CONSTRAINT", name, False, 0, 0, now),
-    ]
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "DROP CONSTRAINT",
+        name,
+        [_table_metadata(snap, now, configuration=config)],
+        now,
+    ).version
 
 
 def _to_physical(df: DataFrame, schema) -> DataFrame:
@@ -535,14 +563,15 @@ def rename_column(table_path: str, old: str, new: str) -> int:
             fields.append(f)
     config = {**snap.configuration, "delta.columnMapping.mode": "name"}
     now = int(time.time() * 1000)
-    actions = [
-        _table_metadata(snap, now, T.StructType(fields), config),
-        commit_info_action("RENAME COLUMN", f"{old} -> {new}", False, 0, 0, now),
-    ] + _feature_upgrade_actions(
-        snap, reader={"columnMapping"}, writer={"columnMapping"}
-    )
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "RENAME COLUMN",
+        f"{old} -> {new}",
+        [_table_metadata(snap, now, T.StructType(fields), config)],
+        now,
+        reader={"columnMapping"},
+        writer={"columnMapping"},
+    ).version
 
 
 def _apply_column_defaults(df: DataFrame, snap) -> DataFrame:
@@ -600,18 +629,14 @@ def add_column(
         + [T.StructField(name, dtype, True, metadata=meta or None)]
     )
     now = int(time.time() * 1000)
-    actions = [
-        _table_metadata(snap, now, new_schema),
-        commit_info_action(
-            "ADD COLUMNS", f"{name} {type_str}", False, 0, 0, now
-        ),
-    ] + (
-        _feature_upgrade_actions(snap, writer={"allowColumnDefaults"})
-        if default is not None
-        else []
-    )
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "ADD COLUMNS",
+        f"{name} {type_str}",
+        [_table_metadata(snap, now, new_schema)],
+        now,
+        writer={"allowColumnDefaults"} if default is not None else (),
+    ).version
 
 
 def widen_column_type(table_path: str, column: str, new_type: str) -> int:
@@ -647,22 +672,15 @@ def widen_column_type(table_path: str, column: str, new_type: str) -> int:
         for f in snap.schema.fields
     ]
     now = int(time.time() * 1000)
-    actions = [
-        _table_metadata(snap, now, T.StructType(fields)),
-        commit_info_action(
-            "ALTER COLUMN",
-            f"{column}: {old_f.dataType.simpleString()} -> "
-            f"{target.simpleString()}",
-            False,
-            0,
-            0,
-            now,
-        ),
-    ] + _feature_upgrade_actions(
-        snap, reader={"typeWidening"}, writer={"typeWidening"}
-    )
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "ALTER COLUMN",
+        f"{column}: {old_f.dataType.simpleString()} -> {target.simpleString()}",
+        [_table_metadata(snap, now, T.StructType(fields))],
+        now,
+        reader={"typeWidening"},
+        writer={"typeWidening"},
+    ).version
 
 
 def drop_column(table_path: str, name: str) -> int:
@@ -689,20 +707,17 @@ def drop_column(table_path: str, name: str) -> int:
                     "drop it first"
                 )
     config = {**snap.configuration, "delta.columnMapping.mode": "name"}
+    schema = T.StructType([f for f in snap.schema.fields if f.name != name])
     now = int(time.time() * 1000)
-    actions = [
-        _table_metadata(
-            snap,
-            now,
-            T.StructType([f for f in snap.schema.fields if f.name != name]),
-            config,
-        ),
-        commit_info_action("DROP COLUMN", name, False, 0, 0, now),
-    ] + _feature_upgrade_actions(
-        snap, reader={"columnMapping"}, writer={"columnMapping"}
-    )
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "DROP COLUMN",
+        name,
+        [_table_metadata(snap, now, schema, config)],
+        now,
+        reader={"columnMapping"},
+        writer={"columnMapping"},
+    ).version
 
 
 def table_generated_columns(snap) -> dict[str, str]:
@@ -788,7 +803,8 @@ def write_delta(
     race rebases through ``deltalog.commit_transaction`` only when the
     winning commits changed no metadata (a concurrent ADD CONSTRAINT or
     row-tracking enablement raises MetadataChangedException); every
-    other write collides with FileExistsError.
+    other write that loses the race raises
+    ConcurrentModificationException.
     """
     mode = mode.lower()
     if mode not in ("append", "overwrite"):
@@ -896,8 +912,6 @@ def write_delta(
             first_reader_feats.add("timestampNtz")
             first_writer_feats.add("timestampNtz")
         if first_writer_feats or first_reader_feats:
-            from guidewire_spark.sources.deltalog import feature_upgrade_action
-
             actions.append(
                 feature_upgrade_action(
                     None, first_reader_feats, first_writer_feats
@@ -974,16 +988,11 @@ def write_delta(
                 }
             }
         )
-    actions.append(_commit_info("WRITE", op_mode, adds, now, blind))
-    if blind:
-        # a blind append rebases past concurrent appends (the staged
-        # files are untouched) but not past a metadata change
-        committed = commit_transaction(base, lambda _: actions)
-    else:
-        # create/overwrite/evolution/row-id commits were built from
-        # table state; a collision means that state is stale →
-        # surface the conflict instead of silently clobbering
-        committed = write_commit(base, actions=actions)
+    # a blind append rebases past concurrent appends (the staged files
+    # are untouched) but not past a metadata change; create, overwrite,
+    # evolution and row-id commits were built from table state, so a
+    # collision surfaces as a conflict instead of silently clobbering
+    committed = _commit(base, "WRITE", op_mode, actions, now, blind=blind)
     _maybe_auto_compact(df.sparkSession, committed, mode)
     return committed.version
 
@@ -1206,12 +1215,11 @@ def optimize_table(
         )
     actions += _removes(victims, now, data_change=False)
     actions += adds
-    actions.append(_commit_info("OPTIMIZE", "Compaction", adds, now))
     # Commit at the version AFTER the snapshot we read: if anything
-    # committed in between, write_commit's O_EXCL collides and the
-    # conflict surfaces instead of silently resurrecting stale state
-    # (Delta's read-version conflict detection).
-    write_commit(snap, actions=actions)
+    # committed in between, the commit collides and the conflict
+    # surfaces instead of silently resurrecting stale state (Delta's
+    # read-version conflict detection).
+    version = _commit(snap, "OPTIMIZE", "Compaction", actions, now).version
     # Self-maintaining bloom index: compaction output files have no
     # sidecars (reads stay sound but stop skipping); on tables with
     # bloom columns configured, re-cover them now — one executor-side
@@ -1226,7 +1234,7 @@ def optimize_table(
     if any(snap.configuration.get(CONFIG_COLUMNS, "").split(",")):
         reindex_bloom(spark, table_path)
         vacuum_bloom_sidecars(table_path)
-    return snap.version + 1
+    return version
 
 
 def merge_into(
@@ -1335,10 +1343,8 @@ def merge_into(
     actions = [_table_metadata(snap, now, evolved)] if evolved is not None else []
     actions += _removes(candidates, now)
     actions += adds
-    actions.append(_commit_info("MERGE", "Upsert", adds, now))
     # snapshot-version commit: intervening writers collide, not clobber
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(snap, "MERGE", "Upsert", actions, now).version
 
 
 def _merge_insert_exprs(ins, out_cols, src_names):
@@ -1420,9 +1426,7 @@ def _merge_insert_only(
     if evolved is not None or (adds and _row_tracking_enabled(snap)):
         actions.append(_table_metadata(snap, now, evolved, adds.configuration))
     actions += adds
-    actions.append(_commit_info("MERGE", "Insert-only", adds, now))
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(snap, "MERGE", "Insert-only", actions, now).version
 
 
 def merge_clauses(
@@ -1681,9 +1685,7 @@ def merge_clauses(
     actions = [_table_metadata(snap, now, evolved)] if evolved is not None else []
     actions += _removes(candidates, now)
     actions += adds
-    actions.append(_commit_info("MERGE", "Merge", adds, now))
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(snap, "MERGE", "Merge", actions, now).version
 
 
 def delete_from(
@@ -1734,11 +1736,10 @@ def _delete_cow(spark, snap, predicate, prune_column, prune_lo, prune_hi) -> int
         _to_physical(survivors, snap.schema), snap, pcols or None
     )
     now = int(time.time() * 1000)
-    actions = _removes(rewrite, now) + adds
-    actions.append(_commit_info("DELETE", predicate, adds, now))
     # snapshot-version commit: intervening writers collide, not clobber
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap, "DELETE", predicate, _removes(rewrite, now) + adds, now
+    ).version
 
 
 def delete_from_mor(
@@ -1792,16 +1793,15 @@ def _delete_mor(spark, snap, predicate, prune_column, prune_lo, prune_hi) -> int
     if not merged:
         raise ValueError("predicate matches no rows; nothing to delete")
     now = int(time.time() * 1000)
-    actions = _feature_upgrade_actions(
-        snap, reader={"deletionVectors"}, writer={"deletionVectors"}
-    ) + _vector_swaps(snap, candidates, merged, now)
-    actions.append(
-        commit_info_action(
-            "DELETE", f"MOR {predicate}", False, len(merged), 0, now
-        )
-    )
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "DELETE",
+        f"MOR {predicate}",
+        _vector_swaps(snap, candidates, merged, now),
+        now,
+        reader={"deletionVectors"},
+        writer={"deletionVectors"},
+    ).version
 
 
 _ROW_TRACKING_KEY = "delta.enableRowTracking"
@@ -1850,18 +1850,6 @@ def _gate_write(snap) -> None:
     from guidewire_spark.sources.deltalog import check_writer_protocol
 
     check_writer_protocol(snap.protocol, snap.table_path)
-
-
-def _feature_upgrade_actions(snap, reader=(), writer=()) -> list[dict]:
-    """Protocol-upgrade action(s) a feature-bearing commit must carry
-    so EXTERNAL readers/writers are told about the feature (our own
-    reader handles everything regardless; the protocol action is for
-    everyone else — a DV table advertising minReaderVersion=1 lets an
-    old reader silently resurface deleted rows)."""
-    from guidewire_spark.sources.deltalog import feature_upgrade_action
-
-    act = feature_upgrade_action(snap.protocol, set(reader), set(writer))
-    return [act] if act else []
 
 
 def _file_record_counts(files_or_paths, name_hint: str) -> list[tuple[str, int]]:
@@ -1916,34 +1904,27 @@ def enable_in_commit_timestamps(table_path: str) -> int:
     and timestamp time travel resolves against it instead of the
     wall-clock ``timestamp`` — so a writer with a skewed or
     rolled-back clock can no longer make ``TIMESTAMP AS OF`` pick the
-    wrong version.  The enablement version/timestamp land in the
-    configuration per the protocol, letting readers know timestamps
-    before that point are NOT monotonic."""
+    wrong version.  The enabling commit stamps itself and records its
+    version and stamp as the enablement version/timestamp in the
+    configuration (deltalog's in-commit-timestamp step), per the
+    protocol, letting readers know timestamps before that point are
+    NOT monotonic."""
     from guidewire_spark.sources.deltalog import ICT_KEY
 
     snap = load_snapshot(table_path)
     _gate_write(snap)
-    config = dict(snap.configuration)
-    if config.get(ICT_KEY) == "true":
+    if snap.configuration.get(ICT_KEY) == "true":
         raise ValueError(f"in-commit timestamps already enabled at {table_path}")
+    config = {**snap.configuration, ICT_KEY: "true"}
     now = int(time.time() * 1000)
-    ict = max(now, max(snap.commit_timestamps.values(), default=-1) + 1)
-    config[ICT_KEY] = "true"
-    config["delta.inCommitTimestampEnablementVersion"] = str(snap.version + 1)
-    config["delta.inCommitTimestampEnablementTimestamp"] = str(ict)
-    info = commit_info_action(
-        "SET TBLPROPERTIES", "inCommitTimestamps", False, 0, 0, now
-    )
-    # seed the chain: the enabling commit stamps itself (write_commit
-    # chains every LATER commit off the predecessor's field)
-    info["commitInfo"]["inCommitTimestamp"] = ict
-    info["commitInfo"]["timestamp"] = ict
-    actions = [
-        info,
-        _table_metadata(snap, now, configuration=config),
-    ] + _feature_upgrade_actions(snap, writer={"inCommitTimestamp"})
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "SET TBLPROPERTIES",
+        "inCommitTimestamps",
+        [_table_metadata(snap, now, configuration=config)],
+        now,
+        writer={"inCommitTimestamp"},
+    ).version
 
 
 _FEATURE_MANAGED_KEYS = {
@@ -1980,12 +1961,13 @@ def set_table_properties(table_path: str, props: dict[str, str]) -> int:
         else:
             config[key] = str(value)
     now = int(time.time() * 1000)
-    actions = [
-        commit_info_action("SET TBLPROPERTIES", "setProperties", False, 0, 0, now),
-        _table_metadata(snap, now, configuration=config),
-    ]
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "SET TBLPROPERTIES",
+        "setProperties",
+        [_table_metadata(snap, now, configuration=config)],
+        now,
+    ).version
 
 
 def set_clustering_columns(table_path: str, columns: list[str]) -> int:
@@ -2023,21 +2005,20 @@ def set_clustering_columns(table_path: str, columns: list[str]) -> int:
 
     from guidewire_spark.sources.deltalog import domain_metadata_action
 
-    now = int(time.time() * 1000)
-    actions = [
-        domain_metadata_action(
-            _CLUSTERING_DOMAIN,
-            _json.dumps({"clusteringColumns": columns}, separators=(",", ":")),
-            removed=not columns,
-        ),
-        commit_info_action(
-            "CLUSTER BY", ",".join(columns) or "NONE", False, 0, 0, now
-        ),
-    ] + _feature_upgrade_actions(
-        snap, writer={"domainMetadata", "clustering"}
+    domain = domain_metadata_action(
+        _CLUSTERING_DOMAIN,
+        _json.dumps({"clusteringColumns": columns}, separators=(",", ":")),
+        removed=not columns,
     )
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    now = int(time.time() * 1000)
+    return _commit(
+        snap,
+        "CLUSTER BY",
+        ",".join(columns) or "NONE",
+        [domain],
+        now,
+        writer={"domainMetadata", "clustering"},
+    ).version
 
 
 def enable_row_tracking(table_path: str) -> int:
@@ -2065,17 +2046,14 @@ def enable_row_tracking(table_path: str) -> int:
         _ROW_TRACKING_KEY: "true",
         _ROW_HWM_KEY: str(base - 1),
     }
-    actions = [_table_metadata(snap, now, configuration=config)] + adds
-    actions.append(
-        commit_info_action(
-            "SET TBLPROPERTIES", "rowTracking", False, 0, 0, now
-        )
-    )
-    actions += _feature_upgrade_actions(
-        snap, writer={"rowTracking", "domainMetadata"}
-    )
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "SET TBLPROPERTIES",
+        "rowTracking",
+        [_table_metadata(snap, now, configuration=config)] + adds,
+        now,
+        writer={"rowTracking", "domainMetadata"},
+    ).version
 
 
 def _assign_base_row_ids(files, config: dict) -> tuple[dict[str, int], dict]:
@@ -2219,9 +2197,7 @@ def purge_deletion_vectors(spark: SparkSession, table_path: str) -> int:
         )
     actions += _removes(rewrite, now, data_change=False)
     actions += adds
-    actions.append(_commit_info("REORG", "PURGE", adds, now))
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(snap, "REORG", "PURGE", actions, now).version
 
 
 def update_table_mor(
@@ -2297,9 +2273,7 @@ def update_table_mor(
         raise ValueError("predicate matches no rows; nothing to update")
     adds = stage_add_actions(_to_physical(updated, snap.schema), snap, pcols or None)
     now = int(time.time() * 1000)
-    actions = _feature_upgrade_actions(
-        snap, reader={"deletionVectors"}, writer={"deletionVectors"}
-    )
+    actions = []
     if tracked:
         # the updated images carry their OLD ids in the materialized
         # column (read-side coalesce wins); the fresh bases of the new
@@ -2313,9 +2287,15 @@ def update_table_mor(
         )
     actions += _vector_swaps(snap, candidates, merged, now)
     actions += adds
-    actions.append(_commit_info("UPDATE", f"MOR {predicate}", adds, now))
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "UPDATE",
+        f"MOR {predicate}",
+        actions,
+        now,
+        reader={"deletionVectors"},
+        writer={"deletionVectors"},
+    ).version
 
 
 def replace_where(
@@ -2360,10 +2340,9 @@ def replace_where(
         )
     adds += stage_add_actions(_to_physical(new_df, snap.schema), snap, pcols or None)
     now = int(time.time() * 1000)
-    actions = _removes(rewrite, now) + adds
-    actions.append(_commit_info("WRITE", f"ReplaceWhere({predicate})", adds, now))
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap, "WRITE", f"ReplaceWhere({predicate})", _removes(rewrite, now) + adds, now
+    ).version
 
 
 def update_table(
@@ -2432,11 +2411,10 @@ def update_table(
     _enforce_constraints(updated, snap)
     adds = stage_add_actions(_to_physical(updated, snap.schema), snap, pcols or None)
     now = int(time.time() * 1000)
-    actions = _removes(rewrite, now) + adds
-    actions.append(_commit_info("UPDATE", predicate, adds, now))
     # snapshot-version commit: intervening writers collide, not clobber
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap, "UPDATE", predicate, _removes(rewrite, now) + adds, now
+    ).version
 
 
 def _new_clone_dir(dst_table: str) -> None:
@@ -2447,36 +2425,32 @@ def _new_clone_dir(dst_table: str) -> None:
     os.makedirs(dst_table, exist_ok=True)
 
 
-def _commit_clone(snap, dst_table: str, adds: list[dict], info: dict) -> None:
-    """Commit version 0 of a clone of ``snap``: the commitInfo
-    ``info``, the source's protocol (the features its files use —
-    deletion vectors, row tracking — come along), a metaData with a
-    fresh id and the source's schema, partitioning and configuration,
-    the source's domainMetadata (clustering columns among them), then
-    ``adds``.  A source with in-commit timestamps restarts its chain at
-    the clone's version 0, which is stamped and recorded as the
-    enablement version, as ``enable_in_commit_timestamps`` records its
-    own commit."""
-    from guidewire_spark.sources.deltalog import ICT_KEY, domain_metadata_action
+def _commit_clone(
+    snap, dst_table: str, mode: str, adds: list[dict], now: int
+) -> int:
+    """Commit version 0 of a clone of ``snap``: the source's protocol
+    (the features its files use — deletion vectors, row tracking —
+    come along), a metaData with a fresh id and the source's schema,
+    partitioning and configuration, the source's domainMetadata
+    (clustering columns among them), then ``adds``.  A source with
+    in-commit timestamps restarts its chain at the clone's version 0,
+    which enables them over an empty table and so is stamped and
+    recorded as the enablement version."""
+    from guidewire_spark.sources.deltalog import domain_metadata_action
 
-    now = info["commitInfo"]["timestamp"]
-    config = dict(snap.configuration)
-    if config.get(ICT_KEY) == "true":
-        info["commitInfo"]["inCommitTimestamp"] = now
-        config["delta.inCommitTimestampEnablementVersion"] = "0"
-        config["delta.inCommitTimestampEnablementTimestamp"] = str(now)
-    actions: list[dict] = [info, {"protocol": dict(snap.protocol)}]
+    actions: list[dict] = [{"protocol": dict(snap.protocol)}]
     if snap.schema is not None:
         actions.append(
             metadata_action(
                 snap.schema,
                 partition_columns=snap.partition_columns or None,
                 created_time=now,
-                configuration=config,
+                configuration=snap.configuration,
             )
         )
     actions.extend(domain_metadata_action(d, c) for d, c in snap.domains.items())
-    write_commit(empty_snapshot(dst_table), actions=actions + adds)
+    actions += adds
+    return _commit(empty_snapshot(dst_table), "CLONE", mode, actions, now).version
 
 
 def shallow_clone(
@@ -2496,17 +2470,13 @@ def shallow_clone(
     snap = load_snapshot(src_table, version=version)
     _new_clone_dir(dst_table)
     now = int(time.time() * 1000)
-    info = commit_info_action(
-        "CLONE",
-        f"shallow from {src_table}"
-        + (f"@v{version}" if version is not None else ""),
-        False,
-        len(snap.files),
-        0,
+    return _commit_clone(
+        snap,
+        dst_table,
+        f"shallow from {src_table}" + (f"@v{version}" if version is not None else ""),
+        [_live_add(snap, p, now) for p in snap.files],
         now,
     )
-    _commit_clone(snap, dst_table, [_live_add(snap, p, now) for p in snap.files], info)
-    return 0
 
 
 def deep_clone(
@@ -2548,14 +2518,13 @@ def deep_clone(
         shutil.copy2(src_path, dst_path)
         # log convention: absolute paths
         adds.append(_live_add(snap, p, now, path=os.path.abspath(dst_path)))
-    info = _commit_info(
-        "CLONE",
+    return _commit_clone(
+        snap,
+        dst_table,
         f"deep from {src_table}" + (f"@v{version}" if version is not None else ""),
         adds,
         now,
     )
-    _commit_clone(snap, dst_table, adds, info)
-    return 0
 
 
 def restore_table(table_path: str, version: int) -> int:
@@ -2608,12 +2577,7 @@ def restore_table(table_path: str, version: int) -> int:
     # in-place DV-state change: pair the add
     actions.extend(_removes([p for p in readd if p in cur_set], now))
     actions.extend(_live_add(old, p, now) for p in readd)
-    actions.append(
-        commit_info_action(
-            "RESTORE", f"versionAsOf={version}", False, len(old.files), 0, now
-        )
-    )
-    return write_commit(cur, actions=actions).version
+    return _commit(cur, "RESTORE", f"versionAsOf={version}", actions, now).version
 
 
 def overwrite_partitions(df: DataFrame, table_path: str) -> int:
@@ -2660,17 +2624,13 @@ def overwrite_partitions(df: DataFrame, table_path: str) -> int:
     ]
     adds = stage_add_actions(_to_physical(df, snap.schema), snap, pcols)
     now = int(time.time() * 1000)
-    actions = _removes(doomed, now) + adds
-    actions.append(
-        _commit_info(
-            "WRITE",
-            f"dynamic partition overwrite ({len(incoming)} partitions)",
-            adds,
-            now,
-        )
-    )
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(
+        snap,
+        "WRITE",
+        f"dynamic partition overwrite ({len(incoming)} partitions)",
+        _removes(doomed, now) + adds,
+        now,
+    ).version
 
 
 def convert_to_delta(parquet_dir: str) -> int:
@@ -2706,9 +2666,7 @@ def convert_to_delta(parquet_dir: str) -> int:
     base = empty_snapshot(parquet_dir)
     adds = _new_file_adds(base, files)
     actions = [protocol_action(), metadata_action(schema, created_time=now)] + adds
-    actions.append(_commit_info("CONVERT", parquet_dir, adds, now))
-    write_commit(base, actions=actions)
-    return 0
+    return _commit(base, "CONVERT", parquet_dir, actions, now).version
 
 
 def table_detail(table_path: str) -> dict:
@@ -2999,21 +2957,21 @@ def create_identity_table(
     hw = _staged_identity_max(adds, name)
     if hw is None:
         hw = start - step  # empty create: the first append starts at start
-    from guidewire_spark.sources.deltalog import feature_upgrade_action
-
     now = int(time.time() * 1000)
     spec = {"start": start, "step": step, "highWaterMark": int(hw)}
-    actions = [
-        feature_upgrade_action(None, writer_features={"identityColumns"}),
-        metadata_action(
-            assigned.schema,
-            created_time=now,
-            configuration={f"delta.identity.{name}": _json.dumps(spec)},
-        ),
-    ] + adds
-    actions.append(_commit_info("CREATE TABLE", "IdentityCreate", adds, now))
-    write_commit(base, actions=actions)
-    return 0
+    meta = metadata_action(
+        assigned.schema,
+        created_time=now,
+        configuration={f"delta.identity.{name}": _json.dumps(spec)},
+    )
+    return _commit(
+        base,
+        "CREATE TABLE",
+        "IdentityCreate",
+        [meta] + adds,
+        now,
+        writer={"identityColumns"},
+    ).version
 
 
 def append_with_identity(df: DataFrame, table_path: str) -> int:
@@ -3071,6 +3029,4 @@ def append_with_identity(df: DataFrame, table_path: str) -> int:
     new_spec = dict(spec, highWaterMark=int(hw))
     config = {**adds.configuration, f"delta.identity.{name}": _json.dumps(new_spec)}
     actions = [_table_metadata(snap, now, configuration=config)] + adds
-    actions.append(_commit_info("WRITE", "IdentityAppend", adds, now))
-    write_commit(snap, actions=actions)
-    return snap.version + 1
+    return _commit(snap, "WRITE", "IdentityAppend", actions, now).version

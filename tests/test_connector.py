@@ -178,18 +178,18 @@ def test_time_travel_by_timestamp(tmp_path):
 
     table = str(tmp_path / "tt")
     schema = T.StructType([T.StructField("x", T.IntegerType(), True)])
+    add = add_action("a.parquet", 10, 1000)
     snap = write_commit(empty_snapshot(table), [
-        protocol_action(), metadata_action(schema, created_time=1000),
-        add_action("a.parquet", 10, 1000),
-        commit_info_action("WRITE", "Overwrite", False, 1, 10, timestamp=1000),
+        protocol_action(), metadata_action(schema, created_time=1000), add,
+        commit_info_action("WRITE", "Overwrite", [add], timestamp=1000),
     ])
+    add = add_action("b.parquet", 10, 2000)
     snap = write_commit(snap, [
-        add_action("b.parquet", 10, 2000),
-        commit_info_action("WRITE", "Append", True, 1, 10, timestamp=2000),
+        add, commit_info_action("WRITE", "Append", [add], timestamp=2000, blind=True),
     ])
+    add = add_action("c.parquet", 10, 3000)
     write_commit(snap, [
-        add_action("c.parquet", 10, 3000),
-        commit_info_action("WRITE", "Append", True, 1, 10, timestamp=3000),
+        add, commit_info_action("WRITE", "Append", [add], timestamp=3000, blind=True),
     ])
     assert load_snapshot(table, timestamp=2500).version == 1
     assert load_snapshot(table, timestamp=3000).version == 2

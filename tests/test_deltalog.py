@@ -35,7 +35,7 @@ SCHEMA = T.StructType(
 def _create_v0(table, files=("f0.parquet",)):
     actions = [protocol_action(), metadata_action(SCHEMA, created_time=1)]
     actions += [add_action(f, 100, 1000) for f in files]
-    actions.append(commit_info_action("WRITE", "Overwrite", False, len(files), 100, 1))
+    actions.append(commit_info_action("WRITE", "Overwrite", actions, 1))
     return write_commit(empty_snapshot(table), actions)
 
 
@@ -59,23 +59,21 @@ def test_action_shapes(tmp_path):
     assert ci["operation"] == "WRITE"
     assert ci["operationParameters"]["mode"] == "Overwrite"
     assert ci["isBlindAppend"] is False
+    assert ci["operationMetrics"] == {"numFiles": 1, "numOutputBytes": 100}
 
 
 def test_replay_add_remove(tmp_path):
     table = str(tmp_path / "t")
     snap = _create_v0(table, files=("a.parquet", "b.parquet"))
+    add = add_action("c.parquet", 50, 2000)
     snap = write_commit(
-        snap,
-        [
-            add_action("c.parquet", 50, 2000),
-            commit_info_action("WRITE", "Append", True, 1, 50, 2),
-        ],
+        snap, [add, commit_info_action("WRITE", "Append", [add], 2, blind=True)]
     )
     write_commit(
         snap,
         [
             remove_action("a.parquet", 3),
-            commit_info_action("WRITE", "Overwrite", False, 0, 0, 3),
+            commit_info_action("WRITE", "Overwrite", [], 3),
         ],
     )
     assert load_snapshot(table, version=0).files == ["a.parquet", "b.parquet"]
@@ -104,10 +102,9 @@ def test_version_monotonic_and_file_accounting(tmp_path_factory, n_appends, file
     expected = {"f0.parquet"}
     for v in range(1, n_appends + 1):
         new_files = [f"v{v}_{i}.parquet" for i in range(files_per[v - 1])]
+        adds = [add_action(f, 10, v) for f in new_files]
         snap = write_commit(
-            snap,
-            [add_action(f, 10, v) for f in new_files]
-            + [commit_info_action("WRITE", "Append", True, len(new_files), 10, v)],
+            snap, adds + [commit_info_action("WRITE", "Append", adds, v, blind=True)]
         )
         expected |= set(new_files)
     snap = load_snapshot(table)
@@ -210,17 +207,12 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
     def append_with_race(snap):
         calls["n"] += 1
         if calls["n"] == 1:  # sneak a competing blind append in first
+            adds = [add_action("/elsewhere/winner.parquet", 1, 0)]
             write_commit(
-                snap,
-                [
-                    commit_info_action("WRITE", "Append", True, 1, 0),
-                    add_action("/elsewhere/winner.parquet", 1, 0),
-                ],
+                snap, [commit_info_action("WRITE", "Append", adds, blind=True)] + adds
             )
-        return [
-            commit_info_action("WRITE", "Append", True, 1, 0),
-            add_action("/elsewhere/ours.parquet", 1, 0),
-        ]
+        adds = [add_action("/elsewhere/ours.parquet", 1, 0)]
+        return [commit_info_action("WRITE", "Append", adds, blind=True)] + adds
 
     v = commit_transaction(base, append_with_race).version
     assert v == base.version + 2  # rebased past the winner
@@ -232,15 +224,9 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
     def remove_with_conflict(snap):
         write_commit(
             snap,
-            [
-                commit_info_action("DELETE", "Delete", False, 1, 0),
-                remove_action(data_file),
-            ],
+            [commit_info_action("DELETE", "Delete", []), remove_action(data_file)],
         )
-        return [
-            commit_info_action("DELETE", "Delete", False, 1, 0),
-            remove_action(data_file),
-        ]
+        return [commit_info_action("DELETE", "Delete", []), remove_action(data_file)]
 
     with _pytest.raises(ConcurrentDeleteException, match="rewrote"):
         commit_transaction(load_snapshot(t), remove_with_conflict)
@@ -249,7 +235,7 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
         write_commit(
             snap,
             [
-                commit_info_action("SET TBLPROPERTIES", "set", False, 0, 0),
+                commit_info_action("SET TBLPROPERTIES", "set", []),
                 {
                     "metaData": {
                         "id": snap.metadata_id,
@@ -261,10 +247,8 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
                 },
             ],
         )
-        return [
-            commit_info_action("WRITE", "Append", True, 1, 0),
-            add_action("/elsewhere/late.parquet", 1, 0),
-        ]
+        adds = [add_action("/elsewhere/late.parquet", 1, 0)]
+        return [commit_info_action("WRITE", "Append", adds, blind=True)] + adds
 
     with _pytest.raises(MetadataChangedException, match="changed table metadata"):
         commit_transaction(load_snapshot(t), append_behind_metadata_change)
@@ -396,7 +380,7 @@ def test_ict_probe_failure_aborts_the_commit(tmp_path, monkeypatch):
             metadata_action(
                 SCHEMA, created_time=1, configuration={deltalog.ICT_KEY: "true"}
             ),
-            commit_info_action("WRITE", "Overwrite", False, 0, 0, 1),
+            commit_info_action("WRITE", "Overwrite", [], 1),
         ],
     )
     snap = write_commit(snap, [add_action("f1.parquet", 100, 1000)])

@@ -42,22 +42,18 @@ SCHEMA = T.StructType(
 def _write_table(table_path: str, n_appends: int = 12) -> None:
     """v0 = CREATE_TABLE, then n_appends-1 blind appends of one fake
     file each (log replay never reads data bytes)."""
+    adds = [add_action("/data/f0.parquet", 100, 1000)]
     snap = write_commit(
         empty_snapshot(table_path),
-        [
-            protocol_action(),
-            metadata_action(SCHEMA, created_time=1000),
-            add_action("/data/f0.parquet", 100, 1000),
-            commit_info_action("WRITE", "Overwrite", False, 1, 100, 1000),
-        ],
+        [protocol_action(), metadata_action(SCHEMA, created_time=1000)]
+        + adds
+        + [commit_info_action("WRITE", "Overwrite", adds, 1000)],
     )
     for v in range(1, n_appends):
+        adds = [add_action(f"/data/f{v}.parquet", 100, 1000 + v)]
         snap = write_commit(
             snap,
-            [
-                add_action(f"/data/f{v}.parquet", 100, 1000 + v),
-                commit_info_action("WRITE", "Append", True, 1, 100, 1000 + v),
-            ],
+            adds + [commit_info_action("WRITE", "Append", adds, 1000 + v, blind=True)],
         )
 
 
@@ -91,12 +87,9 @@ def test_replay_from_checkpoint_survives_json_truncation(tmp_path):
     assert snap.files == expected_files
     assert snap.schema == SCHEMA
     # A fresh commit after truncation lands on top of the checkpoint.
+    adds = [add_action("/data/f12.parquet", 100, 2000)]
     write_commit(
-        snap,
-        [
-            add_action("/data/f12.parquet", 100, 2000),
-            commit_info_action("WRITE", "Append", True, 1, 100, 2000),
-        ],
+        snap, adds + [commit_info_action("WRITE", "Append", adds, 2000, blind=True)]
     )
     snap2 = load_snapshot(table)
     assert snap2.version == 12
@@ -189,14 +182,12 @@ def test_random_histories_replay_to_model(tmp_path_factory, steps):
         if op == "overwrite":
             actions += [remove_action(p, 1) for p in sorted(model)]
             actions += [add_action(p, 10, 1) for p in paths]
-            actions.append(
-                commit_info_action("WRITE", "Overwrite", False, len(paths), 10, 1)
-            )
+            actions.append(commit_info_action("WRITE", "Overwrite", actions, 1))
             model = set(paths)
         else:
             actions += [add_action(p, 10, 1) for p in paths]
             actions.append(
-                commit_info_action("WRITE", "Append", True, len(paths), 10, 1)
+                commit_info_action("WRITE", "Append", actions, 1, blind=True)
             )
             model |= set(paths)
         snap = write_commit(snap, actions)

@@ -3,10 +3,14 @@ through one function, ``writer._new_file_adds``: it alone reads the
 stats spec off the snapshot, recovers hive partition values and assigns
 row-tracking base ids.  Every file that is already live is re-recorded
 through ``writer._live_add``, which copies its record (deletion vector
-and ``baseRowId`` included).  An AST scan of ``sources/writer.py``
-keeps hand-built copies from growing back (a copy that skips one of
-these fields is how identity appends once committed files without
-``baseRowId``, and how clones once resurrected deleted rows)."""
+and ``baseRowId`` included).  Every commit goes through
+``writer._commit``: it alone builds the ``commitInfo`` (metrics derived
+from the commit's actions) and calls ``write_commit`` or
+``commit_transaction``.  An AST scan of ``sources/writer.py`` keeps
+hand-built copies from growing back (a copy that skips one of these
+fields is how identity appends once committed files without
+``baseRowId``, how clones once resurrected deleted rows, and how
+commits once reported file counts that were not theirs)."""
 
 from __future__ import annotations
 
@@ -25,6 +29,9 @@ HOMES = {
     "_assign_base_row_ids": {"_new_file_adds"},
     "_partition_values": {"_new_file_adds"},
     "add_action": {"_new_file_adds", "_live_add"},
+    "write_commit": {"_commit"},
+    "commit_transaction": {"_commit"},
+    "commit_info_action": {"_commit"},
 }
 
 

@@ -516,6 +516,36 @@ def test_blind_append_does_not_rebase_past_a_metadata_change(
     assert read_delta(spark, table).count() == 5
 
 
+def test_update_that_loses_the_commit_race_raises_typed_conflict(
+    spark, tmp_path, monkeypatch
+):
+    """A copy-on-write UPDATE was built from its snapshot's files, so a
+    writer that commits between the snapshot load and the UPDATE's
+    commit wins: the UPDATE raises ConcurrentModificationException
+    naming the table and the version it lost, and commits nothing."""
+    from guidewire_spark.sources import writer
+    from guidewire_spark.sources.deltalog import ConcurrentModificationException
+
+    table = str(tmp_path / "race_update")
+    write_delta(spark.range(5), table, mode="append")
+    real_stage = writer._stage_files
+
+    def stage_then_race(df, table_path, partition_by=None):
+        staged = real_stage(df, table_path, partition_by)
+        monkeypatch.setattr(writer, "_stage_files", real_stage)
+        write_delta(spark.range(100, 102), table, mode="append")  # wins v1
+        return staged
+
+    monkeypatch.setattr(writer, "_stage_files", stage_then_race)
+    with pytest.raises(ConcurrentModificationException) as lost:
+        writer.update_table(spark, table, "id = 2", {"id": "id + 10"})
+    assert table in str(lost.value) and "version 1" in str(lost.value)
+    assert list_versions(table) == [0, 1]  # only the winner committed
+    assert sorted(r.id for r in read_delta(spark, table).collect()) == [
+        0, 1, 2, 3, 4, 100, 101,
+    ]
+
+
 def test_vacuum_retention_protects_recent_removes(spark, sf_dir, tmp_path):
     table = str(tmp_path / "vac_ret")
     r = load_table(spark, sf_dir, "region")
