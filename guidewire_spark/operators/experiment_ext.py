@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions import text as T
 from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.plans.scratch import scratch_dir
@@ -129,7 +130,7 @@ def func_array_sort_comparator(spark: SparkSession, sf_dir: str) -> DataFrame:
     + word) because DuckDB's list_sort takes no comparator — the
     equivalence of the two encodings is the point of the test."""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 100 == 0)
-    words = F.filter(F.split("text", r"\s+"), lambda w: w != "")
+    words = T.words(F.col("text"))
     cmp = lambda l, r: (  # noqa: E731 — comparator: length desc, word asc
         F.when(F.length(l) > F.length(r), -1)
         .when(F.length(l) < F.length(r), 1)

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions import text as T
 from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.registry import query
@@ -97,9 +98,7 @@ def text_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for vowel runs — cross-engine-identical); the grade is one
     per-row double from exact inputs."""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 10 == 0)
-    n_words = F.size(
-        F.filter(F.split("text", r"\s+"), lambda w: w != "")
-    )
+    n_words = F.size(T.words(F.col("text")))
     n_sentences = F.greatest(
         F.length("text") - F.length(F.translate("text", ".!?", "")), F.lit(1)
     )

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from guidewire_spark.functions import text as T
 from guidewire_spark.functions.rounding import stable_round as _r
 from guidewire_spark.operators.twophase import two_phase_ordered
 from guidewire_spark.plans.catalog import load_table
@@ -684,9 +685,7 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         "lang",
-        F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda w: w != "")
-        ).alias("w"),
+        F.explode(T.words(F.lower("text"))).alias("w"),
     )
     b = toks.select(
         "doc_id",

@@ -16,8 +16,8 @@ cluster and merely *also* work on local[N]:
 * ``spark.sql.sources.parallelPartitionDiscovery.threshold`` at its
   maximum — every file scan lists on the driver, never in a Spark
   job. ``snapshot.scan_live_files`` (every ``read_delta``, writer
-  rewrite and DML match pass, and the ``bloom``/``joins`` reads),
-  ``read_delta_changes`` and bloom's sidecar build all hand
+  rewrite and DML match pass, ``read_delta_changes`` and the
+  ``bloom``/``joins`` reads) and bloom's sidecar build all hand
   ``spark.read.parquet`` an explicit path list resolved from the
   Delta log. Above the default threshold (32 paths)
   ``InMemoryFileIndex`` starts a job with one task per path just to

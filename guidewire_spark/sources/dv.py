@@ -422,9 +422,8 @@ def subtract_dead_rows(
     """LEFT ANTI the dead (file, row) pairs out of a
     :func:`scan_with_row_index`-shaped frame, keeping the metadata
     columns: broadcast below the cardinality guard, shuffled above it.
-    Live reads call it through ``snapshot.scan_live_files`` (the change
-    feed diffs vectors itself), so the guard holds on every read and
-    rewrite."""
+    Every read, rewrite and change-feed diff calls it through
+    ``snapshot.scan_live_files``, so the guard holds on all of them."""
     if not dvs:
         return df
     dead, small = dead_rows_for_join(spark, dvs)

@@ -222,9 +222,7 @@ def apply_actions(snap: DeltaSnapshot, version: int, actions: list[dict]) -> Non
             else:
                 snap.domains[dm["domain"]] = dm.get("configuration") or ""
         elif "commitInfo" in action:
-            snap.commit_timestamps[version] = action["commitInfo"].get(
-                "inCommitTimestamp", action["commitInfo"].get("timestamp", 0)
-            )
+            snap.commit_timestamps[version] = _commit_info_timestamp(action["commitInfo"])
 
 
 def advance_snapshot(
@@ -273,21 +271,10 @@ def load_snapshot(
         raise FileNotFoundError(f"no Delta log at {table_path}")
 
     if timestamp is not None and version is None:
-        chosen = None
-        for v in versions:
-            for action in _read_commit(table_path, v):
-                if "commitInfo" in action:
-                    # in-commit timestamps (monotonic, clock-skew-proof)
-                    # take precedence over the wall-clock field
-                    ts = action["commitInfo"].get(
-                        "inCommitTimestamp",
-                        action["commitInfo"].get("timestamp", 0),
-                    )
-                    if ts <= timestamp:
-                        chosen = v
-        if chosen is None:
+        chosen = [v for v in versions if _commit_timestamp(table_path, v) <= timestamp]
+        if not chosen:
             raise ValueError(f"no version at or before timestamp {timestamp}")
-        version = chosen
+        version = chosen[-1]
     if version is None:
         version = max(versions[-1] if versions else -1,
                       ckpt_version if ckpt_version is not None else -1)
@@ -298,6 +285,14 @@ def load_snapshot(
         # O(1) replay: seed from the checkpoint parquet, then apply
         # only the JSON tail — instead of O(versions) JSON reads.
         snap = load_checkpoint_state(table_path, ckpt_version)
+    elif versions[0] > 0:
+        # log retention removed the commits before the JSON tail and
+        # the checkpoint that replaced them is newer than ``version``
+        raise ValueError(
+            f"version {version} of {table_path} cannot be reconstructed: "
+            f"the log starts at version {versions[0]} with no checkpoint "
+            "at or before it"
+        )
     else:
         snap = empty_snapshot(table_path)
     for v in versions:
@@ -311,15 +306,20 @@ def load_snapshot(
     return snap
 
 
+def _commit_info_timestamp(info: dict) -> int:
+    """A ``commitInfo`` body's effective timestamp: the in-commit
+    timestamp when present (monotonic, clock-skew-proof), else the
+    wall-clock ``timestamp``."""
+    return info.get("inCommitTimestamp", info.get("timestamp", 0))
+
+
 def _commit_timestamp(table_path: str, version: int) -> int:
-    """A commit's effective timestamp: in-commit timestamp when
-    present (monotonic, clock-skew-proof), else commitInfo wall
-    clock — the same precedence time travel uses."""
+    """Commit ``version``'s effective timestamp (0 without a
+    ``commitInfo``): what TIMESTAMP AS OF and the change feed's time
+    window resolve versions by."""
     for action in _read_commit(table_path, version):
         if "commitInfo" in action:
-            return action["commitInfo"].get(
-                "inCommitTimestamp", action["commitInfo"].get("timestamp", 0)
-            )
+            return _commit_info_timestamp(action["commitInfo"])
     return 0
 
 
@@ -384,231 +384,107 @@ def read_delta_changes(
     without an always-on stream: consumers poll the log's version
     counter and read exactly the delta.
 
-    ``with_row_ids=True`` (row-tracked tables only) adds the stable
-    ``_row_id`` to every change row — the key that lets an incremental
-    consumer correlate a MOR UPDATE's delete/insert pair (same id on
-    both sides) and dedup replays.  Ids resolve exactly like the read
-    path: the file's materialized column when present, else
-    baseRowId + row index.
+    The state at ``from_version`` loads once and each commit of the
+    window replays onto it through :func:`apply_actions`, keeping the
+    ``add`` records of the paths the commit touches as they were
+    before and after it.  The rows are then read through
+    :func:`scan_live_files` under those records, one scan per version
+    and kind:
+
+    * a removed path that was live emits its live rows as deletes;
+    * an added path emits its live rows as inserts;
+    * a path removed and re-added with a deletion vector on either
+      side (MOR DELETE/UPDATE, RESTORE) emits the row-level diff: rows
+      live before but not after as deletes, rows live after but not
+      before as inserts, anti-joined on (file, row index) on the
+      executors.
+
+    Columns are the table's at the window's last version, then
+    ``_row_id`` when ``with_row_ids`` (row-tracked tables only: the
+    stable id that correlates a MOR UPDATE's delete/insert pair), then
+    ``_change_type`` and ``_commit_version``.  A window at or beyond
+    the last version is an empty feed of those columns; one whose
+    commits log retention has expired raises ``ValueError``.
     """
     from functools import reduce
 
     from pyspark.sql import functions as F
 
-    versions = [v for v in list_versions(table_path) if v > from_version]
-    if to_version is not None:
-        versions = [v for v in versions if v <= to_version]
-    # Base schema + partition layout from the latest snapshot
-    # (checkpoint-seeded, cheap); robust to from_version values that
-    # are truncated away or beyond the latest version. Per-version
-    # metaData actions below override the schema for evolving ranges.
-    latest = load_snapshot(table_path)
-    schema = latest.schema
-    pcols = list(latest.partition_columns or [])
+    from guidewire_spark.sources.dv import META_FILE, META_ROW
 
-    # Hive-layout data files don't store partition columns; they must
-    # be rematerialized from add.partitionValues. remove actions carry
-    # empty partitionValues, so removes of files added BEFORE the
-    # window resolve through a snapshot at from_version (checkpoint
-    # truncation of that version degrades to the latest snapshot's map,
-    # which still covers every currently-live file).  Base-row-id
-    # state replays alongside dv_state so every frame can resolve ids
-    # as of ITS version; pre-window removes fall back to the latest
-    # snapshot's ids the same way.
-    pv_map: dict[str, dict] = {}
-    base_map: dict[str, int] = {}
-
-    def seed(snap: DeltaSnapshot) -> None:
-        for p, add in snap.adds.items():
-            pv_map[p] = add["partitionValues"]
-            if "baseRowId" in add:
-                base_map[p] = add["baseRowId"]
-
-    seed(latest)
-    # dv_state seeds unconditionally (not only for partitioned
-    # tables): the per-version DV diff needs the vectors live AT
-    # from_version or already-dead rows re-emit as deletes.  A
-    # from_version BEFORE the table's first commit legitimately has no
-    # state (empty seed correct); an EXISTING-but-unloadable
-    # from_version (checkpoint truncation) is only safe while the
-    # window carries no deletionVector actions — checked below, since
-    # a MOR delete diffed against an empty seed would re-emit
-    # already-dead rows as fresh deletes.
-    dv_state: dict[str, dict] = {}
-    dv_seed_failed = False
-    mat_col = (latest.configuration or {}).get(MATERIALIZED_ROW_ID_KEY)
-    if from_version >= 0:
-        try:
-            start_snap = load_snapshot(table_path, version=from_version)
-            seed(start_snap)
-            dv_state = start_snap.deletion_vectors()
-        except (ValueError, FileNotFoundError):
-            dv_seed_failed = True
-
-    # Each frame: (version, change kind, file path, dead-index subtract
-    # list or None, only-index list or None).  A merge-on-read DELETE
-    # commits remove(path) + add(path, deletionVector): the CDF must
-    # emit ONLY the newly dead rows as deletes — never a whole-file
-    # delete+insert pair for rows that didn't change.
-    frames = []
-    for v in versions:
-        adds: dict[str, dict] = {}
-        removes: dict[str, dict] = {}
-        for action in _read_commit(table_path, v):
-            if "add" in action and action["add"].get("dataChange", True):
-                if dv_seed_failed and action["add"].get("deletionVector"):
-                    raise ValueError(
-                        f"cannot compute changes from version "
-                        f"{from_version} of {table_path}: that version's "
-                        "deletion-vector state is unrecoverable (log "
-                        "truncated past the checkpoint) and version "
-                        f"{v} carries a deletionVector — diffing against "
-                        "an empty seed would re-emit already-dead rows "
-                        "as deletes; start from a reconstructable version"
-                    )
-                adds[action["add"]["path"]] = action["add"]
-            elif "remove" in action and action["remove"].get("dataChange", True):
-                removes[action["remove"]["path"]] = action["remove"]
-            elif "metaData" in action:
-                schema = T.StructType.fromJson(
-                    json.loads(action["metaData"]["schemaString"])
-                )
-        from guidewire_spark.sources.dv import decode_dv
-
-        for path, add in adds.items():
-            pv_map[path] = add.get("partitionValues") or {}
-            if add.get("baseRowId") is not None:
-                base_map[path] = int(add["baseRowId"])
-            dv = add.get("deletionVector")
-            if path in removes and dv is not None:
-                # in-place DV-state change (MOR delete, or a RESTORE
-                # re-attaching a vector): the change set is the
-                # row-level diff in BOTH directions — new deaths emit
-                # as deletes, resurrected rows (a restore shrinking
-                # the vector) as inserts
-                old = (
-                    set(decode_dv(dv_state[path]))
-                    if path in dv_state
-                    else set()
-                )
-                new = set(decode_dv(dv))
-                fresh = sorted(new - old)
-                revived = sorted(old - new)
-                if fresh:
-                    frames.append(
-                        (v, "delete", path, None, fresh, base_map.get(path))
-                    )
-                if revived:
-                    frames.append(
-                        (v, "insert", path, None, revived, base_map.get(path))
-                    )
-                removes.pop(path)
-            elif path in removes and path in dv_state:
-                # in-place vector REMOVAL (RESTORE to a pre-delete
-                # version): only the previously-dead rows change —
-                # they come back as inserts
-                revived = sorted(decode_dv(dv_state[path]))
-                if revived:
-                    frames.append(
-                        (v, "insert", path, None, revived, base_map.get(path))
-                    )
-                removes.pop(path)
-            else:
-                # plain insert; rows dead under a carried DV never
-                # existed logically and are excluded
-                frames.append(
-                    (v, "insert", path, sorted(decode_dv(dv)) if dv else None,
-                     None, base_map.get(path))
-                )
-            if dv is not None:
-                dv_state[path] = dv
-            else:
-                dv_state.pop(path, None)
-        for path, rm in removes.items():
-            old = dv_state.pop(path, None)
-            frames.append(
-                (v, "delete", path, sorted(decode_dv(old)) if old else None,
-                 None, base_map.get(path))
-            )
-
-    if not frames:
-        base = schema or T.StructType([])
-        extra = [
-            T.StructField("_change_type", T.StringType(), True),
-            T.StructField("_commit_version", T.LongType(), True),
+    def touched(actions: list[dict], kind: str) -> list[str]:
+        return [
+            a[kind]["path"]
+            for a in actions
+            if kind in a and a[kind].get("dataChange", True)
         ]
-        if with_row_ids:
-            extra.append(T.StructField("_row_id", T.LongType(), True))
-        out_schema = T.StructType(list(base.fields) + extra)
-        return spark.createDataFrame([], out_schema)
 
-    dfs = []
-    for v, kind, path, subtract, only, base_id in frames:
-        base_schema = schema
-        if pcols and schema is not None:
-            base_schema = T.StructType(
-                [f for f in schema.fields if f.name not in pcols]
-            )
-        if with_row_ids and base_id is None:
-            raise ValueError(
-                f"with_row_ids: file {path} (version {v}) has no "
-                "baseRowId — row tracking is not enabled on this table"
-            )
-        if subtract is None and only is None and not with_row_ids:
-            df = read_files_with_schema(spark, base_schema, [path])
-        else:
-            from guidewire_spark.sources.dv import (
-                META_FILE,
-                META_ROW,
-                scan_with_row_index,
-            )
-
-            scan_schema = base_schema
-            if with_row_ids and mat_col and base_schema is not None:
-                scan_schema = T.StructType(
-                    list(base_schema.fields)
-                    + [T.StructField(mat_col, T.LongType(), True)]
-                )
-            scan = scan_with_row_index(spark, scan_schema, [path])
-            if with_row_ids:
-                default_id = F.lit(int(base_id)) + F.col(META_ROW)
-                scan = scan.withColumn(
-                    "_row_id",
-                    F.coalesce(F.col(mat_col), default_id)
-                    if mat_col
-                    else default_id,
-                )
-                if mat_col:
-                    scan = scan.drop(mat_col)
-            if subtract is None and only is None:
-                df = scan.drop(META_FILE, META_ROW)
-            else:
-                idx = spark.createDataFrame(
-                    [(int(i),) for i in (subtract if only is None else only)],
-                    f"{META_ROW} long",
-                )
-                how = "left_anti" if only is None else "left_semi"
-                df = scan.join(F.broadcast(idx), [META_ROW], how).drop(
-                    META_FILE, META_ROW
-                )
-        if pcols and schema is not None:
-            pv = pv_map.get(path, {})
-            for col in pcols:
-                dtype = (
-                    schema[col].dataType
-                    if col in schema.fieldNames()
-                    else T.StringType()
-                )
-                df = df.withColumn(col, F.lit(pv.get(col)).cast(dtype))
-            keep = list(schema.fieldNames())
-            if with_row_ids:
-                keep.append("_row_id")
-            df = df.select(*keep)
-        dfs.append(
-            df.withColumn("_change_type", F.lit(kind))
-            .withColumn("_commit_version", F.lit(v).cast("long"))
+    present = list_versions(table_path)
+    last = present[-1] if present else -1
+    if to_version is not None:
+        last = min(last, to_version)
+    window = [v for v in present if from_version < v <= last]
+    if not window:
+        snap = load_snapshot(table_path)
+    else:
+        expired = (
+            f"cannot read the changes of {table_path} after version "
+            f"{from_version}: log retention expired that state; the first "
+            f"version still present is {present[0]}"
         )
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
+        if window[0] != from_version + 1:
+            raise ValueError(expired)
+        try:
+            snap = (
+                load_snapshot(table_path, version=from_version)
+                if from_version >= 0
+                else empty_snapshot(table_path)
+            )
+        except (ValueError, FileNotFoundError) as e:
+            raise ValueError(expired) from e
+    changes = []
+    for v in window:
+        actions = _read_commit(table_path, v)
+        before = {p: snap.adds[p] for p in touched(actions, "remove") if p in snap.adds}
+        apply_actions(snap, v, actions)
+        after = {p: snap.adds[p] for p in touched(actions, "add") if p in snap.adds}
+        changes.append((v, before, after))
+
+    cols = snap.schema.fieldNames() if snap.schema else []
+    cols += ["_row_id"] if with_row_ids else []
+
+    def read(records: dict[str, dict], file_keys: bool = False) -> DataFrame:
+        part = replace(snap, adds=records, files=sorted(records))
+        return scan_live_files(
+            spark, part, part.files, row_ids=with_row_ids, file_keys=file_keys
+        )
+
+    def tagged(df: DataFrame, kind, version) -> DataFrame:
+        return df.select(
+            *cols,
+            F.lit(kind).cast("string").alias("_change_type"),
+            F.lit(version).cast("long").alias("_commit_version"),
+        )
+
+    frames = []
+    for v, before, after in changes:
+        vector = {
+            p for p in before.keys() & after.keys()
+            if before[p].get("deletionVector") or after[p].get("deletionVector")
+        }
+        if vector:
+            keys = [META_FILE, META_ROW]
+            old = read({p: before[p] for p in vector}, file_keys=True)
+            new = read({p: after[p] for p in vector}, file_keys=True)
+            frames.append(tagged(old.join(new.select(keys), keys, "left_anti"), "delete", v))
+            frames.append(tagged(new.join(old.select(keys), keys, "left_anti"), "insert", v))
+        for kind, records in (("delete", before), ("insert", after)):
+            plain = {p: r for p, r in records.items() if p not in vector}
+            if plain:
+                frames.append(tagged(read(plain), kind, v))
+    if not frames:
+        frames.append(tagged(read({}), None, None))
+    return reduce(DataFrame.unionByName, frames)
 
 
 def scan_live_files(

@@ -171,9 +171,25 @@ def stage_add_actions(
     block for optimistic-concurrency flows
     (deltalog.commit_transaction on the same ``snap``): data lands
     first, the log race is fought over metadata only, and a losing
-    transaction's rebase re-commits the SAME staged files."""
+    transaction's rebase re-commits the SAME staged files.
+
+    A staged file whose footer counts no rows is deleted and gets no
+    ``add``: Spark writes partition 0 even when it is empty."""
+    import json as _json
+
     files, commit_dir = _stage_files(df, snap.table_path, partition_by)
-    return _new_file_adds(snap, files, partition_by, commit_dir, data_change)
+    adds = _new_file_adds(snap, files, partition_by, commit_dir, data_change)
+    kept = []
+    for f, add in zip(files, adds):
+        stats = add["add"].get("stats")
+        if stats and _json.loads(stats).get("numRecords") == 0:
+            os.remove(f.path)
+            crc = os.path.join(os.path.dirname(f.path), f".{os.path.basename(f.path)}.crc")
+            if os.path.isfile(crc):
+                os.remove(crc)
+        else:
+            kept.append(add)
+    return _StagedAdds(kept, adds.configuration)
 
 
 def _commit(

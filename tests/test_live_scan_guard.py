@@ -5,8 +5,8 @@ deletion vectors and resolves row ids.  An AST scan of
 private copies from growing back (a read that skipped vectors or
 partition columns returned dead rows or dropped columns, and a match
 pass keyed by ``input_file_name()`` found no files once the vector
-anti-join shuffled).  The change feed diffs vectors per version and
-bloom's sidecar build indexes files; both scan files directly."""
+anti-join shuffled).  Bloom's sidecar build indexes files and scans
+them directly."""
 
 from __future__ import annotations
 
@@ -19,7 +19,6 @@ SCANNED = ("sources", "operators")
 # call it; an empty set bans the callee outright
 _SCANNERS = {
     ("sources/snapshot.py", "scan_live_files"),
-    ("sources/snapshot.py", "read_delta_changes"),
     ("sources/bloom.py", "reindex_bloom"),
 }
 HOMES = {

@@ -214,6 +214,52 @@ def test_cdf_edge_versions(tmp_path):
     assert "_change_type" in empty.columns and "_commit_version" in empty.columns
 
 
+def test_cdf_over_an_expired_window_raises(spark, sf_dir, tmp_path):
+    """A change-feed window whose start log retention deleted raises,
+    naming the table and the first version still present, instead of
+    returning the surviving versions' rows alone."""
+    from pyspark.sql import functions as F
+
+    from guidewire_spark.plans.catalog import load_table
+    from guidewire_spark.sources.log_checkpoint import expire_log
+    from guidewire_spark.sources.snapshot import read_delta_changes
+    from guidewire_spark.sources.writer import write_delta
+
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    table = str(tmp_path / "cdf_expired")
+    for i in range(6):
+        write_delta(n.where(F.col("n_nationkey") % 6 == i), table, mode="append")
+    write_log_checkpoint(load_snapshot(table, version=3))
+    expire_log(table, keep_versions=2)
+    assert list_versions(table) == [3, 4, 5]
+    for start in (-1, 0, 2):  # v1..v3 expired, or no state at v2
+        with pytest.raises(ValueError, match="first version still present is 3") as e:
+            read_delta_changes(spark, table, from_version=start)
+        assert table in str(e.value)
+    # from the checkpointed version on, the feed reads as before
+    got = read_delta_changes(spark, table, from_version=3)
+    assert sorted((r.n_nationkey, r._commit_version) for r in got.collect()) == [
+        (k, k % 6) for k in range(25) if k % 6 in (4, 5)
+    ]
+
+
+def test_time_travel_below_the_checkpoint_of_an_expired_log_raises(tmp_path):
+    """Log retention keeps JSON commits older than the newest
+    checkpoint; a version among them has no checkpoint at or before it
+    and no commit 0 to replay from, so loading it raises instead of
+    replaying that tail from an empty table."""
+    from guidewire_spark.sources.log_checkpoint import expire_log
+
+    table = str(tmp_path / "expired_tail")
+    _write_table(table, 6)
+    write_log_checkpoint(load_snapshot(table))  # checkpoint at v5
+    expire_log(table, keep_versions=3)
+    assert list_versions(table) == [3, 4, 5]
+    with pytest.raises(ValueError, match="cannot be reconstructed"):
+        load_snapshot(table, version=3)
+    assert len(load_snapshot(table, version=5).files) == 6
+
+
 def test_checkpoint_preserves_column_mapping(spark, sf_dir, tmp_path):
     """A log checkpoint written after RENAME COLUMN must carry the
     field-metadata physical names, so checkpoint-seeded reads still

@@ -715,6 +715,32 @@ def test_match_pass_reads_row_index_only_for_vectored_files(
     assert len(indexed) == 1 and "(1 paths)" in indexed[0], plan
 
 
+def test_change_feed_scans_do_not_grow_with_files_per_version(
+    spark, sf_dir, tmp_path
+):
+    """The change feed reads each version's inserts in one scan and a
+    MOR delete's before/after state in one scan each: the plan's
+    parquet scans count versions, not files."""
+    from guidewire_spark.plans.catalog import load_table
+    from guidewire_spark.sources.snapshot import load_snapshot, read_delta_changes
+    from guidewire_spark.sources.writer import delete_from_mor, write_delta
+
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+
+    def feed_scans(files_per_version: int) -> int:
+        t = str(tmp_path / f"cdf_plan_{files_per_version}")
+        for i in range(3):
+            part = s.where(F.col("s_suppkey") % 3 == i)
+            write_delta(part.repartition(files_per_version), t, mode="append")
+        delete_from_mor(spark, t, "s_suppkey = 1")
+        assert len(load_snapshot(t).files) == 3 * files_per_version
+        feed = read_delta_changes(spark, t, from_version=-1)
+        plan = feed._jdf.queryExecution().executedPlan().toString()
+        return sum("FileScan parquet" in l for l in plan.splitlines())
+
+    assert feed_scans(1) == feed_scans(3)
+
+
 def test_semdedup_broadcasts_centroids_and_shuffles_on_cluster(spark, sf_dir):
     """SemDeDup's scale contract: the k centroids BROADCAST (k-sized,
     never data-sized), the within-cluster pair stage joins on

@@ -458,6 +458,31 @@ def test_change_data_feed(spark, sf_dir, tmp_path):
     assert opt.count() == 0
 
 
+def test_staging_drops_an_empty_partition_zero_file(spark, tmp_path):
+    """Spark writes partition 0 even when it holds no rows; staging
+    deletes that file and returns adds for the files with rows only."""
+    from guidewire_spark.sources.snapshot import empty_snapshot
+    from guidewire_spark.sources.writer import stage_add_actions
+
+    table = str(tmp_path / "empty_p0")
+    df = spark.range(0, 10, 1, 2).where("id >= 5")  # partition 0 empty
+    assert df.rdd.glom().map(len).collect() == [0, 5]
+    adds = stage_add_actions(df, empty_snapshot(table))
+    assert [json.loads(a["add"]["stats"])["numRecords"] for a in adds] == [5]
+    # the empty file is gone from disk, its checksum too
+    kept = os.path.basename(adds[0]["add"]["path"])
+    staged = [
+        name
+        for _root, _dirs, names in os.walk(table)
+        for name in names
+        if ".parquet" in name
+    ]
+    assert staged and all(kept in name for name in staged), staged
+    write_delta(df, table, mode="append")
+    snap = load_snapshot(table)
+    assert len(snap.files) == 1 and snap.metadata_count() == 5
+
+
 def test_concurrent_blind_appends_all_land(spark, sf_dir, tmp_path):
     """Optimistic concurrency: parallel blind appends to one table must
     all commit (at distinct versions), Delta-style; non-blind writers
