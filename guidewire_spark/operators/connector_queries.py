@@ -442,18 +442,16 @@ def delta_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def delta_concurrent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Optimistic concurrency, driver-facing: two writers race the
-    same version — the loser's commit_transaction detects the
-    FileExistsError, rescans the winner's actions (a blind append →
-    no conflict), REBASES, and lands at winner+1. The final table
-    holds BOTH writers' rows exactly once; the reference sidesteps
-    this with one-writer-per-table, which a 1000-executor pipeline
-    cannot."""
-    from guidewire_spark.sources.deltalog import (
-        commit_info_action,
-        commit_transaction,
-        write_commit,
-    )
+    """Optimistic concurrency as a query: two blind appends commit
+    on the same snapshot.  The winner lands at base+1; the loser's
+    ``deltalog.commit`` loses the O_EXCL race, rescans the winner's
+    actions (a blind append → no conflict), REBASES, and lands at
+    winner+1. The final table holds BOTH writers' rows exactly once;
+    the reference sidesteps this with one-writer-per-table, which a
+    1000-executor pipeline cannot."""
+    import time
+
+    from guidewire_spark.sources.deltalog import commit
     from guidewire_spark.sources.snapshot import load_snapshot
     from guidewire_spark.sources.writer import stage_add_actions
 
@@ -464,20 +462,9 @@ def delta_concurrent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_snapshot(table)
     winner_adds = stage_add_actions(s.where(F.col("s_suppkey") % 4 == 1), base)
     our_adds = stage_add_actions(s.where(F.col("s_suppkey") % 4 == 3), base)
-
-    raced = {"done": False}
-
-    def append_with_race(snap):
-        if not raced["done"]:
-            raced["done"] = True
-            write_commit(
-                snap,
-                actions=[commit_info_action("WRITE", "Append", winner_adds, blind=True)]
-                + winner_adds,
-            )
-        return [commit_info_action("WRITE", "Append", our_adds, blind=True)] + our_adds
-
-    commit_transaction(base, append_with_race)
+    now = int(time.time() * 1000)
+    commit(base, "WRITE", "Append", winner_adds, now, blind=True)
+    commit(base, "WRITE", "Append", our_adds, now, blind=True)
     return read_delta(spark, table)
 
 

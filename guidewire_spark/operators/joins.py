@@ -563,35 +563,48 @@ def er_fuzzy_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     und = pairs.union(pairs.select("db", "da")).toDF("src", "dst")
-    labels = s.select(
-        "s_suppkey", F.col("s_suppkey").alias("canonical_id")
-    ).localCheckpoint(eager=True)
-    und = und.localCheckpoint(eager=True)
-    for _ in range(20):
-        propagated = und.join(
-            labels, und.src == labels.s_suppkey
-        ).select(F.col("dst").alias("s_suppkey"), "canonical_id")
-        new_labels = (
-            labels.unionByName(propagated)
-            .groupBy("s_suppkey")
-            .agg(F.min("canonical_id").alias("canonical_id"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "s_suppkey")
-            .where(F.col("n.canonical_id") < F.col("o.canonical_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
+    labels = _min_label_components(s, und, "s_suppkey", "canonical_id")
     w = Window.partitionBy("canonical_id")
     return labels.select(
         "s_suppkey",
         "canonical_id",
         F.count("*").over(w).alias("cluster_size"),
     )
+
+
+def _min_label_components(
+    nodes: DataFrame, edges: DataFrame, node: str, label: str
+) -> DataFrame:
+    """Connected components by min-label propagation: each ``node`` of
+    ``nodes`` starts labelled with itself, and every round it takes the
+    least ``label`` among its own and its neighbours' over the directed
+    ``edges`` (``src`` → ``dst``; pass both directions), until no label
+    drops or 20 rounds ran.  Both inputs and every round's labels are
+    local checkpoints, so the plan stays one round deep."""
+    labels = nodes.select(node, F.col(node).alias(label)).localCheckpoint(
+        eager=True
+    )
+    edges = edges.localCheckpoint(eager=True)
+    for _ in range(20):
+        propagated = edges.join(labels, edges.src == labels[node]).select(
+            F.col("dst").alias(node), label
+        )
+        new_labels = (
+            labels.unionByName(propagated)
+            .groupBy(node)
+            .agg(F.min(label).alias(label))
+            .localCheckpoint(eager=True)
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), node)
+            .where(F.col(f"n.{label}") < F.col(f"o.{label}"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            break
+    return labels
 
 
 @query(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from guidewire_spark.functions import text as T
 from guidewire_spark.functions.rounding import stable_round
+from guidewire_spark.operators.joins import _min_label_components
 from guidewire_spark.plans.catalog import load_table
 from guidewire_spark.registry import query
 
@@ -821,32 +822,7 @@ def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
     edges = _cc_edges(spark, sf_dir)
     und = edges.union(edges.select(F.col("db"), F.col("da"))).toDF("src", "dst")
-
-    labels = d.select(
-        "doc_id", F.col("doc_id").alias("component_id")
-    ).localCheckpoint(eager=True)
-    und = und.localCheckpoint(eager=True)
-    for _ in range(20):
-        propagated = (
-            und.join(labels, und.src == labels.doc_id)
-            .select(F.col("dst").alias("doc_id"), "component_id")
-        )
-        new_labels = (
-            labels.unionByName(propagated)
-            .groupBy("doc_id")
-            .agg(F.min("component_id").alias("component_id"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.component_id") < F.col("o.component_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+    return _min_label_components(d, und, "doc_id", "component_id")
 
 
 @query(

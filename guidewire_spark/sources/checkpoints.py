@@ -23,11 +23,10 @@ from pyspark.sql import types as T
 
 from guidewire_spark.sources.deltalog import (
     add_action,
-    commit_info_action,
+    commit,
     metadata_action,
     protocol_action,
     remove_action,
-    write_commit,
 )
 from guidewire_spark.sources.snapshot import load_snapshot_or_empty
 
@@ -58,8 +57,9 @@ def checkpoints_path(database_path: str) -> str:
 
 def save_checkpoints(results: dict[str, list], base, save_mode: str = "append") -> None:
     """Flatten per-table BatchResults into one Delta commit
-    (``Guidewire.scala:248-262``) on ``base``, the snapshot of the
-    checkpoint table the caller read its high-water marks from."""
+    (``Guidewire.scala:248-262``) through ``deltalog.commit`` on
+    ``base``, the snapshot of the checkpoint table the caller read its
+    high-water marks from."""
     rows = [
         (table_name, r.schema_id, r.commit_timestamp, r.num_files)
         for table_name, batch_results in results.items()
@@ -95,8 +95,7 @@ def save_checkpoints(results: dict[str, list], base, save_mode: str = "append") 
     else:
         mode, blind = "Append", True
     actions.append(add_action(data_file, size, mtime))
-    actions.append(commit_info_action("WRITE", mode, actions, now, blind=blind))
-    write_commit(base, actions=actions)
+    commit(base, "WRITE", mode, actions, now, blind=blind)
 
 
 def load_checkpoints(database_path: str) -> dict[str, int]:

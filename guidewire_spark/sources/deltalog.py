@@ -9,10 +9,16 @@ follow the published protocol and match the reference's golden logs
 ``add.path`` (shallow clone — data never moves), empty
 ``partitionValues``, ``dataChange: true``, no stats.
 
-Single-writer discipline: commits are created with O_EXCL so two
-writers on one table directory fail fast instead of corrupting the
-log (mirrors the reference's one-table-per-task layout,
-``Guidewire.scala:71,96``).
+One log path.  Every commit in the package — indexer batches, the
+``_checkpoints`` table, materialized views and every writer
+operation — goes through ``commit``: it appends the protocol upgrade
+the commit's features need and the ``commitInfo`` derived from the
+commit's own actions, then writes through ``commit_transaction``
+(blind appends, which rebase) or ``write_commit`` (everything else,
+where a lost race raises ``ConcurrentModificationException``).
+``write_commit`` creates the version file with O_EXCL, so two writers
+on one table directory never corrupt the log.  Every commit file is
+read back through ``snapshot._read_commit``.
 """
 
 from __future__ import annotations
@@ -63,28 +69,22 @@ def data_version(table_path: str) -> int | None:
     A version whose JSON is unreadable (expired into a checkpoint)
     counts as data-changing, the conservative direction: a needless
     recompute is correct; a stale hit is not."""
-    import json as _json
+    from guidewire_spark.sources.snapshot import _read_commit
 
     versions = list_versions(table_path)
     if not versions:
         return None
-    log_dir = delta_log_dir(table_path)
     for v in reversed(versions):
-        path = os.path.join(log_dir, f"{v:020d}.json")
         try:
-            with open(path, encoding="utf-8") as fh:
-                for line in fh:
-                    action = _json.loads(line)
-                    if "commitInfo" in action:
-                        continue
-                    if "add" in action or "remove" in action:
-                        key = "add" if "add" in action else "remove"
-                        if action[key].get("dataChange", True):
-                            return v
-                        continue
-                    return v  # metaData/protocol/txn/domainMetadata/cdc
+            actions = _read_commit(table_path, v)
         except (OSError, ValueError):
             return v  # unreadable tail: conservative
+        for action in actions:
+            if "commitInfo" in action:
+                continue
+            key = "add" if "add" in action else "remove" if "remove" in action else None
+            if key is None or action[key].get("dataChange", True):
+                return v  # a data change, or metaData/protocol/txn/domainMetadata/cdc
     return versions[0]
 
 
@@ -362,31 +362,19 @@ def commit_info_action(
 ICT_KEY = "delta.enableInCommitTimestamps"
 
 
-def _prev_commit_info(table_path: str, version: int) -> dict | None:
-    """commitInfo of ``version - 1``, or None when that JSON is absent
-    (first commit, or checkpoint-truncated log)."""
-    prev = os.path.join(delta_log_dir(table_path), f"{version - 1:020d}.json")
-    if version <= 0 or not os.path.isfile(prev):
-        return None
-    with open(prev, encoding="utf-8") as f:
-        for line in f:
-            line = line.strip()
-            if line:
-                action = json.loads(line)
-                if "commitInfo" in action:
-                    return action["commitInfo"]
-    return None
-
-
 def _apply_in_commit_timestamp(base, version: int, actions: list[dict]) -> list[dict]:
     """In-commit timestamps (public Delta table feature): when the
     chain is live, stamp this commit's ``commitInfo`` with a
     MONOTONIC ``inCommitTimestamp`` (max(now, prev + 1) — immune to
     wall-clock skew/rollback between writers) and move commitInfo to
     the FRONT of the action list, both per the protocol.  The chain is
-    detected from the PREVIOUS commit's commitInfo carrying the field
-    (one file read — never a log replay per commit); a truncated
-    predecessor falls back to the base snapshot's configuration flag.
+    live when ``base``'s configuration enables it (the protocol's rule;
+    the flag is only ever set by a commit that starts the chain).  The
+    previous stamp is ``base.commit_timestamps[base.version]``; only a
+    ``base`` seeded from a log checkpoint at its own version lacks it,
+    and then commit ``base.version`` is read for it (a JSON already
+    expired with the log before the checkpoint leaves no stamp to
+    exceed; any other read failure aborts the commit).
 
     A commit whose metaData turns the flag on over a ``base`` without
     it (``enable_in_commit_timestamps``, a clone of such a table)
@@ -401,15 +389,16 @@ def _apply_in_commit_timestamp(base, version: int, actions: list[dict]) -> list[
     )
     if enabling:
         prev_ict = max(base.commit_timestamps.values(), default=-1)
+    elif base.configuration.get(ICT_KEY) != "true":
+        return actions
+    elif base.version in base.commit_timestamps:
+        prev_ict = base.commit_timestamps[base.version]
     else:
-        prev_info = _prev_commit_info(base.table_path, version)
-        if prev_info is not None:
-            if "inCommitTimestamp" not in prev_info:
-                return actions
-            prev_ict = int(prev_info["inCommitTimestamp"])
-        else:
-            if base.configuration.get(ICT_KEY) != "true":
-                return actions
+        from guidewire_spark.sources.snapshot import _commit_timestamp
+
+        try:
+            prev_ict = _commit_timestamp(base.table_path, base.version)
+        except FileNotFoundError:
             prev_ict = -1
     info = next((a for a in actions if "commitInfo" in a), None)
     if info is None:
@@ -435,18 +424,17 @@ def write_commit(base, actions: list[dict]):
     (``snapshot.empty_snapshot`` — version -1 — for a table with no
     log).  The commit lands at ``base.version + 1`` with an O_EXCL
     create: a concurrent writer that committed that version first
-    raises FileExistsError — optimistic concurrency, resolved by
-    ``commit_transaction`` (the indexer serializes per table, so
-    there this only fires on misuse; ``writer._commit`` raises it as
-    ConcurrentModificationException for commits built from table
-    state).
+    raises FileExistsError.  Only ``commit`` and
+    ``commit_transaction`` call it: ``commit_transaction`` rebases a
+    blind append past the winner, ``commit`` raises
+    ConcurrentModificationException for every other commit.
 
     Success proves ``base`` was the latest version, so ``base`` with
     the written actions applied (``snapshot.advance_snapshot``, after
     the in-commit-timestamp step stamped and reordered commitInfo) is
     exactly what a replay of the log would give — callers chain
-    ``snap = write_commit(snap, actions)`` instead of reloading.
-    ``base`` itself is not modified."""
+    ``snap = commit(snap, ...)`` instead of reloading.  ``base`` itself
+    is not modified."""
     from guidewire_spark.sources.snapshot import advance_snapshot
 
     version = base.version + 1
@@ -540,9 +528,10 @@ def commit_transaction(base, build_actions):
       and retry, the same resolution delta-spark applies.
 
     ``build_actions(snapshot)`` is called fresh per attempt, so the
-    caller's logic must be a pure function of the snapshot.  The
-    reference connector sidesteps all of this by serializing one
-    writer per table; a 1000-executor pipeline cannot."""
+    caller's logic must be a pure function of the snapshot.  Its one
+    caller is ``commit``, for blind appends.  The reference connector
+    sidesteps all of this by serializing one writer per table; a
+    1000-executor pipeline cannot."""
     from guidewire_spark.sources.snapshot import _read_commit, load_snapshot
 
     table_path = base.table_path
@@ -582,3 +571,41 @@ def commit_transaction(base, build_actions):
     raise ConcurrentModificationException(
         f"could not commit to {table_path} after {COMMIT_RETRIES + 1} attempts"
     )
+
+
+def commit(
+    snap,
+    operation: str,
+    mode: str,
+    actions: list[dict],
+    now: int,
+    *,
+    blind: bool = False,
+    reader=(),
+    writer=(),
+):
+    """Commit ``actions`` on ``snap`` and return the committed snapshot:
+    the one commit tail of the package (indexer batches, the
+    ``_checkpoints`` table, materialized views, every writer operation).
+
+    The commit also carries the protocol upgrade the ``reader`` /
+    ``writer`` table features need (so EXTERNAL readers and writers
+    are told about them — a DV table advertising minReaderVersion=1
+    lets an old reader silently resurface deleted rows), then the
+    ``commitInfo`` derived from the actions.  A ``blind`` append
+    rebases past concurrent appends through ``commit_transaction``.
+    Every other commit was built from ``snap``'s state, so losing the
+    race raises ConcurrentModificationException instead of clobbering
+    the winner."""
+    upgrade = feature_upgrade_action(snap.protocol, reader, writer)
+    actions = actions + ([upgrade] if upgrade else [])
+    actions.append(commit_info_action(operation, mode, actions, now, blind=blind))
+    if blind:
+        return commit_transaction(snap, lambda _: actions)
+    try:
+        return write_commit(snap, actions=actions)
+    except FileExistsError:
+        raise ConcurrentModificationException(
+            f"{operation} lost the race for version {snap.version + 1} of "
+            f"{snap.table_path}: another writer committed it first"
+        ) from None

@@ -28,11 +28,10 @@ from pyspark.sql import types as T
 from guidewire_spark.sources import checkpoints as ckpt
 from guidewire_spark.sources.deltalog import (
     add_action,
-    commit_info_action,
+    commit,
     metadata_action,
     protocol_action,
     remove_action,
-    write_commit,
 )
 from guidewire_spark.sources.fs import FileMeta, list_parquet_files, list_timestamp_dirs
 from guidewire_spark.sources.manifest import ManifestEntry, read_manifest
@@ -141,11 +140,14 @@ def commit_batches(
     (``/root/reference/src/test/resources/delta/*.json``).
 
     The table's snapshot is loaded once, and only when there is a
-    batch to commit; each commit then advances it
-    (``snap = write_commit(snap, actions)``), so the log is never
-    replayed between batches — an initial index of N folders writes N
-    commits and reads no commit back.  The stats spec comes from the
-    carried snapshot too.
+    batch to commit; each batch commits through ``deltalog.commit`` on
+    it and carries the returned snapshot (``snap = commit(snap, ...)``),
+    so the log is never replayed between batches — an initial index of
+    N folders writes N commits and reads no commit back.  The stats
+    spec comes from the carried snapshot too.  The indexer runs one
+    writer per table, so only misuse loses a commit race: a blind
+    append then rebases past the winner, any other commit raises
+    ``ConcurrentModificationException`` naming the table and version.
 
     Log checkpoints follow ``write_commit``'s one rule
     (``delta.checkpointInterval``, default every 10th version), so a
@@ -189,8 +191,7 @@ def commit_batches(
             add_action(f.path, f.size, f.modification_time, stats=stats.get(f.path))
             for f in batch.files
         )
-        actions.append(commit_info_action("WRITE", mode, actions, now, blind=blind))
-        snap = write_commit(snap, actions=actions)
+        snap = commit(snap, "WRITE", mode, actions, now, blind=blind)
         results.append(BatchResult(batch.schema_id, batch.commit_timestamp, len(batch.files)))
     return results
 

@@ -21,28 +21,41 @@ final agg on the group key), then folds the per-group deltas into the
 view with a full-outer join sized by |groups| — a day of changes
 against a years-deep base costs the changed rows plus the (small) view,
 never a base rescan. State (last refreshed base version) rides in the
-view's own Delta log as configuration, so refresh is idempotent and
-survives restarts without a side channel.
+view's own Delta log as configuration, in the SAME commit as the rows
+it describes: a create is one commit (protocol + metaData + adds) and
+a refresh is one commit (metaData + removes + adds), both through
+``deltalog.commit``. A create or refresh that fails before its commit
+leaves the view as it was (the staged files are orphans VACUUM
+reclaims), so re-running it is exact, and a refresh with no new base
+commits is a no-op.
 """
 
 from __future__ import annotations
 
 import json
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from guidewire_spark.sources.deltalog import (
-    commit_info_action,
+    check_writer_protocol,
+    commit,
     metadata_action,
-    write_commit,
+    remove_action,
 )
 from guidewire_spark.sources.snapshot import (
+    empty_snapshot,
     load_snapshot,
     read_delta,
     read_delta_changes,
+    scan_live_files,
 )
-from guidewire_spark.sources.writer import table_configuration, write_delta
+from guidewire_spark.sources.writer import (
+    _first_protocol,
+    stage_add_actions,
+    table_configuration,
+)
 
 _STATE_KEY = "guidewire.matview.state"
 
@@ -98,43 +111,15 @@ def _signed_agg(
     )
 
 
-def _write_state(
-    view_path: str, base_version: int, group_cols, sum_cols, minmax_cols,
-    var_cols=None,
-) -> None:
-    snap = load_snapshot(view_path)
-    config = dict(snap.configuration)
-    config[_STATE_KEY] = json.dumps(
-        {
-            "base_version": base_version,
-            "group_cols": group_cols,
-            "sum_cols": sum_cols,
-            "minmax_cols": minmax_cols,
-            "var_cols": var_cols or [],
-        }
-    )
-    import time as _time
-
-    now = int(_time.time() * 1000)
-    actions = [
-        metadata_action(
-            snap.schema,
-            partition_columns=snap.partition_columns or None,
-            created_time=now,
-            table_id=snap.metadata_id,
-            configuration=config,
-        )
-    ]
-    mode = f"base_version={base_version}"
-    actions.append(commit_info_action("MATVIEW STATE", mode, actions, now))
-    write_commit(snap, actions=actions)
-
-
-def view_state(view_path: str) -> dict:
-    raw = table_configuration(view_path).get(_STATE_KEY)
+def _state(configuration: dict, view_path: str) -> dict:
+    raw = configuration.get(_STATE_KEY)
     if raw is None:
         raise ValueError(f"{view_path} is not a materialized view")
     return json.loads(raw)
+
+
+def view_state(view_path: str) -> dict:
+    return _state(table_configuration(view_path), view_path)
 
 
 def create_materialized_aggregate(
@@ -146,9 +131,11 @@ def create_materialized_aggregate(
     minmax_cols: list[str] | None = None,
     var_cols: list[str] | None = None,
 ) -> int:
-    """Initial build: one full aggregate of the base snapshot, then the
-    base version is pinned in the view's configuration. Returns the
-    pinned base version.
+    """Initial build: one full aggregate of the base snapshot, committed
+    as the view's version 0 with the base version pinned in its
+    configuration. Returns the pinned base version. A path that
+    already holds a log refuses the create (its version-0 commit
+    collides).
 
     ``minmax_cols`` adds min_c/max_c columns. Min/max is not
     invertible under deletes, so refresh handles it hybrid: inserts
@@ -160,14 +147,28 @@ def create_materialized_aggregate(
     var_cols = var_cols or []
     base_snap = load_snapshot(base_table)
     full = (
-        read_delta(spark, base_table)
+        scan_live_files(spark, base_snap, base_snap.files)
         .groupBy(*group_cols)
         .agg(*_agg_exprs(sum_cols, minmax_cols, var_cols))
     )
-    write_delta(full, view_path, mode="append")
-    _write_state(
-        view_path, base_snap.version, group_cols, sum_cols, minmax_cols, var_cols
-    )
+    state = {
+        "base_version": base_snap.version,
+        "group_cols": group_cols,
+        "sum_cols": sum_cols,
+        "minmax_cols": minmax_cols,
+        "var_cols": var_cols,
+    }
+    view = empty_snapshot(view_path)
+    adds = stage_add_actions(full, view)
+    now = int(time.time() * 1000)
+    config = {**adds.configuration, _STATE_KEY: json.dumps(state)}
+    actions = [
+        _first_protocol(full.schema),
+        metadata_action(full.schema, created_time=now, configuration=config),
+        *adds,
+    ]
+    mode = f"base_version={base_snap.version}"
+    commit(view, "CREATE MATERIALIZED VIEW", mode, actions, now)
     return base_snap.version
 
 
@@ -176,9 +177,12 @@ def refresh_materialized_aggregate(
 ) -> int:
     """Incremental refresh: aggregate ONLY the CDF rows since the
     pinned base version, merge the signed deltas into the view, drop
-    zero-count groups, advance the pin. Idempotent: re-running with no
-    new base commits is a no-op. Returns the new pinned version."""
-    state = view_state(view_path)
+    zero-count groups, advance the pin — rows and pin in one commit.
+    Re-running with no new base commits is a no-op. Returns the new
+    pinned version."""
+    view = load_snapshot(view_path)
+    state = _state(view.configuration, view_path)
+    check_writer_protocol(view.protocol, view_path)
     group_cols, sum_cols = state["group_cols"], state["sum_cols"]
     minmax_cols = state.get("minmax_cols") or []
     var_cols = state.get("var_cols") or []
@@ -210,7 +214,7 @@ def refresh_materialized_aggregate(
             .distinct()
         )
         recomputed = (
-            read_delta(spark, base_table)
+            scan_live_files(spark, base_snap, base_snap.files)
             .join(F.broadcast(del_groups), group_cols, "left_semi")
             .groupBy(*group_cols)
             .agg(
@@ -220,7 +224,7 @@ def refresh_materialized_aggregate(
             .withColumn("__recomputed", F.lit(True))
         )
 
-    current = read_delta(spark, view_path)
+    current = scan_live_files(spark, view, view.files)
     merged = (
         current.select(
             *group_cols,
@@ -293,10 +297,22 @@ def refresh_materialized_aggregate(
     # and stays proportional to |groups|, never |base|. (A keyed MERGE
     # of only-touched groups is the next refinement when |groups| is
     # itself huge.)
-    write_delta(merged, view_path, mode="overwrite")
-    _write_state(
-        view_path, base_snap.version, group_cols, sum_cols, minmax_cols, var_cols
-    )
+    adds = stage_add_actions(merged, view)
+    now = int(time.time() * 1000)
+    state = {**state, "base_version": base_snap.version}
+    config = {**adds.configuration, _STATE_KEY: json.dumps(state)}
+    actions = [
+        metadata_action(
+            merged.schema,
+            created_time=now,
+            table_id=view.metadata_id,
+            configuration=config,
+        ),
+        *[remove_action(p, now) for p in view.files],
+        *adds,
+    ]
+    mode = f"base_version={base_snap.version}"
+    commit(view, "REFRESH MATERIALIZED VIEW", mode, actions, now)
     return base_snap.version
 
 

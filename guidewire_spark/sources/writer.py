@@ -19,12 +19,13 @@ operations the reference documents — ``README.md:39-51``).
 Every writer operation loads its table's snapshot once, checks
 everything (protocol gate, appendOnly, identity, constraints,
 generated columns, defaults, row tracking, stats spec) against that
-snapshot, and commits on it through ``_commit``: the helpers take the
-snapshot, never a path to reload.  ``_commit`` is the one commit tail.
-It adds the protocol upgrade the operation's features need and the
-``commitInfo``, whose metrics ``deltalog.commit_info_action`` derives
-from the commit's own actions.  It returns the committed snapshot, so
-no operation computes its own version.
+snapshot, and commits on it through ``deltalog.commit``: the helpers
+take the snapshot, never a path to reload.  ``commit`` is the one
+commit tail of the package.  It adds the protocol upgrade the
+operation's features need and the ``commitInfo``, whose metrics
+``deltalog.commit_info_action`` derives from the commit's own actions.
+It returns the committed snapshot, so no operation computes its own
+version.
 
 ``stage_add_actions(df, snap, ...)`` is the only way an operation turns
 the data it writes into ``add`` actions (``convert_to_delta``, which
@@ -51,20 +52,17 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from guidewire_spark.sources.deltalog import (
-    ConcurrentModificationException,
     add_action,
-    commit_info_action,
-    commit_transaction,
-    delta_log_dir,
+    commit,
     feature_upgrade_action,
     list_versions,
     metadata_action,
     protocol_action,
     remove_action,
-    write_commit,
 )
 from guidewire_spark.sources.fs import walk_parquet_files
 from guidewire_spark.sources.snapshot import (
+    _read_commit,
     empty_snapshot,
     load_snapshot,
     load_snapshot_or_empty,
@@ -168,8 +166,8 @@ def stage_add_actions(
     Every writer operation builds the adds of the files it writes
     here; the commit goes on the same ``snap`` and carries the returned
     ``configuration`` when the table is row-tracked.  Also the building
-    block for optimistic-concurrency flows
-    (deltalog.commit_transaction on the same ``snap``): data lands
+    block for optimistic-concurrency flows (a blind
+    ``deltalog.commit`` on the same ``snap``): data lands
     first, the log race is fought over metadata only, and a losing
     transaction's rebase re-commits the SAME staged files.
 
@@ -192,41 +190,20 @@ def stage_add_actions(
     return _StagedAdds(kept, adds.configuration)
 
 
-def _commit(
-    snap,
-    operation: str,
-    mode: str,
-    actions: list[dict],
-    now: int,
-    *,
-    blind: bool = False,
-    reader=(),
-    writer=(),
-):
-    """Commit ``actions`` on ``snap`` and return the committed snapshot:
-    the one commit tail of every writer operation.
+def _first_protocol(schema, generated: bool = False) -> dict:
+    """``protocol`` action of a table's first commit: the default
+    versions, or the table-features form advertising what the commit
+    already uses — generated columns, and TIMESTAMP WITHOUT TIME ZONE
+    columns (a reader+writer feature: an old reader would misread the
+    values as zoned instants)."""
+    from pyspark.sql import types as T
 
-    The commit also carries the protocol upgrade the ``reader`` /
-    ``writer`` table features need (so EXTERNAL readers and writers
-    are told about them — a DV table advertising minReaderVersion=1
-    lets an old reader silently resurface deleted rows), then the
-    ``commitInfo`` derived from the actions.  A ``blind`` append
-    rebases past concurrent appends through ``commit_transaction``.
-    Every other commit was built from ``snap``'s state, so losing the
-    race raises ConcurrentModificationException instead of clobbering
-    the winner."""
-    upgrade = feature_upgrade_action(snap.protocol, reader, writer)
-    actions = actions + ([upgrade] if upgrade else [])
-    actions.append(commit_info_action(operation, mode, actions, now, blind=blind))
-    if blind:
-        return commit_transaction(snap, lambda _: actions)
-    try:
-        return write_commit(snap, actions=actions)
-    except FileExistsError:
-        raise ConcurrentModificationException(
-            f"{operation} lost the race for version {snap.version + 1} of "
-            f"{snap.table_path}: another writer committed it first"
-        ) from None
+    writer = {"generatedColumns"} if generated else set()
+    reader = set()
+    if any(isinstance(f.dataType, T.TimestampNTZType) for f in schema.fields):
+        reader.add("timestampNtz")
+        writer.add("timestampNtz")
+    return feature_upgrade_action(None, reader, writer) or protocol_action()
 
 
 def _table_metadata(snap, now: int, schema=None, configuration=None) -> dict:
@@ -390,7 +367,7 @@ def table_configuration(table_path: str) -> dict[str, str]:
     (matview, bloom, connector queries, tests).  Writer operations
     never call it: each loads its snapshot once and every check reads
     that snapshot, so what is checked is what the commit is built on
-    (``write_commit`` collides if the table moved in between)."""
+    (``deltalog.commit`` collides if the table moved in between)."""
     try:
         return dict(load_snapshot(table_path).configuration)
     except FileNotFoundError:
@@ -490,7 +467,7 @@ def add_check_constraint(
         )
     config = {**snap.configuration, f"delta.constraints.{name}": expr}
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap,
         "ADD CONSTRAINT",
         f"{name} CHECK ({expr})",
@@ -511,7 +488,7 @@ def drop_check_constraint(table_path: str, name: str) -> int:
     del config[key]
     _gate_write(snap)
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap,
         "DROP CONSTRAINT",
         name,
@@ -579,7 +556,7 @@ def rename_column(table_path: str, old: str, new: str) -> int:
             fields.append(f)
     config = {**snap.configuration, "delta.columnMapping.mode": "name"}
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap,
         "RENAME COLUMN",
         f"{old} -> {new}",
@@ -645,7 +622,7 @@ def add_column(
         + [T.StructField(name, dtype, True, metadata=meta or None)]
     )
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap,
         "ADD COLUMNS",
         f"{name} {type_str}",
@@ -688,7 +665,7 @@ def widen_column_type(table_path: str, column: str, new_type: str) -> int:
         for f in snap.schema.fields
     ]
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap,
         "ALTER COLUMN",
         f"{column}: {old_f.dataType.simpleString()} -> {target.simpleString()}",
@@ -725,7 +702,7 @@ def drop_column(table_path: str, name: str) -> int:
     config = {**snap.configuration, "delta.columnMapping.mode": "name"}
     schema = T.StructType([f for f in snap.schema.fields if f.name != name])
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap,
         "DROP COLUMN",
         name,
@@ -913,28 +890,7 @@ def write_delta(
     now = int(time.time() * 1000)
     actions: list[dict] = []
     if prev is None:
-        from pyspark.sql import types as _T
-
-        first_writer_feats = set()
-        first_reader_feats = set()
-        if generated_columns:
-            first_writer_feats.add("generatedColumns")
-        if any(
-            isinstance(f.dataType, _T.TimestampNTZType) for f in df.schema.fields
-        ):
-            # TIMESTAMP WITHOUT TIME ZONE is a reader+writer table
-            # feature: an old reader would misread the values as
-            # zoned instants
-            first_reader_feats.add("timestampNtz")
-            first_writer_feats.add("timestampNtz")
-        if first_writer_feats or first_reader_feats:
-            actions.append(
-                feature_upgrade_action(
-                    None, first_reader_feats, first_writer_feats
-                )
-            )
-        else:
-            actions.append(protocol_action())
+        actions.append(_first_protocol(df.schema, bool(generated_columns)))
         actions.append(
             metadata_action(
                 df.schema,
@@ -1008,7 +964,7 @@ def write_delta(
     # are untouched) but not past a metadata change; create, overwrite,
     # evolution and row-id commits were built from table state, so a
     # collision surfaces as a conflict instead of silently clobbering
-    committed = _commit(base, "WRITE", op_mode, actions, now, blind=blind)
+    committed = commit(base, "WRITE", op_mode, actions, now, blind=blind)
     _maybe_auto_compact(df.sparkSession, committed, mode)
     return committed.version
 
@@ -1235,7 +1191,7 @@ def optimize_table(
     # committed in between, the commit collides and the conflict
     # surfaces instead of silently resurrecting stale state (Delta's
     # read-version conflict detection).
-    version = _commit(snap, "OPTIMIZE", "Compaction", actions, now).version
+    version = commit(snap, "OPTIMIZE", "Compaction", actions, now).version
     # Self-maintaining bloom index: compaction output files have no
     # sidecars (reads stay sound but stop skipping); on tables with
     # bloom columns configured, re-cover them now — one executor-side
@@ -1262,8 +1218,10 @@ def merge_into(
     merge_schema: bool = False,
 ) -> int:
     """MERGE (upsert): update target rows matching ``source`` on the
-    key column(s), insert source rows with no match. Source must be
-    unique on the key. Returns the new version.
+    key column(s), insert source rows with no match. Returns the new
+    version. A target row that matches more than one source row raises
+    ValueError (Delta's deterministic-merge rule) before anything is
+    staged.
 
     Scale design — rewrite only touched files: the source's key bounds
     prune the target file list via ``add.stats`` (data skipping), so a
@@ -1331,10 +1289,21 @@ def merge_into(
     out_schema = evolved or snap.schema
     out_cols = [f.name for f in out_schema.fields]
 
-    bounds = source.agg(
-        F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi")
-    ).collect()[0]
+    # one job: the source's key bounds and its largest key group — the
+    # exact multiple-match check runs only when some key repeats
+    bounds = (
+        source.groupBy(*keys)
+        .count()
+        .agg(
+            F.min(keys[0]).alias("lo"),
+            F.max(keys[0]).alias("hi"),
+            F.max("count").alias("dups"),
+        )
+        .collect()[0]
+    )
     candidates = snap.pruned_files(keys[0], bounds["lo"], bounds["hi"])
+    if candidates and (bounds["dups"] or 0) > 1:
+        _reject_multiple_matches(spark, snap, source, keys, candidates)
 
     if candidates:
         target = scan_live_files(spark, snap, candidates)
@@ -1360,7 +1329,23 @@ def merge_into(
     actions += _removes(candidates, now)
     actions += adds
     # snapshot-version commit: intervening writers collide, not clobber
-    return _commit(snap, "MERGE", "Upsert", actions, now).version
+    return commit(snap, "MERGE", "Upsert", actions, now).version
+
+
+def _reject_multiple_matches(spark, snap, source, keys, candidates) -> None:
+    """Delta's deterministic-merge rule: a target row may match at most
+    one source row.  Equi-key merge → equivalent check: duplicated
+    source keys that also exist in the target; scans only the
+    stats-pruned ``candidates`` of ``snap``, keys column only."""
+    from pyspark.sql import functions as F
+
+    dup_keys = source.groupBy(*keys).count().where(F.col("count") > 1).drop("count")
+    target_keys = scan_live_files(spark, snap, candidates).select(*keys)
+    if dup_keys.join(target_keys, keys, "left_semi").limit(1).count():
+        raise ValueError(
+            "MERGE source has multiple rows matching one target row; "
+            "deduplicate the source on the join key first"
+        )
 
 
 def _merge_insert_exprs(ins, out_cols, src_names):
@@ -1442,7 +1427,7 @@ def _merge_insert_only(
     if evolved is not None or (adds and _row_tracking_enabled(snap)):
         actions.append(_table_metadata(snap, now, evolved, adds.configuration))
     actions += adds
-    return _commit(snap, "MERGE", "Insert-only", actions, now).version
+    return commit(snap, "MERGE", "Insert-only", actions, now).version
 
 
 def merge_clauses(
@@ -1577,21 +1562,9 @@ def merge_clauses(
             candidates = snap.pruned_files(keys[0], bounds["lo"], bounds["hi"])
 
     if (matched or by_source) and candidates:
-        # Delta's deterministic-merge rule: a target row may match at
-        # most one source row.  Required whenever the full-outer join
-        # runs (a by-source-only merge would otherwise DUPLICATE every
-        # multiply-matched kept row).  Equi-key merge → equivalent
-        # check: duplicated source keys that also exist in the target;
-        # scans only the stats-pruned candidates, keys column only.
-        dup_keys = (
-            source.groupBy(*keys).count().where(F.col("count") > 1).drop("count")
-        )
-        target_keys = scan_live_files(spark, snap, candidates).select(*keys)
-        if dup_keys.join(target_keys, keys, "left_semi").limit(1).count():
-            raise ValueError(
-                "MERGE source has multiple rows matching one target row; "
-                "deduplicate the source on the join key first"
-            )
+        # required whenever the full-outer join runs (a by-source-only
+        # merge would otherwise DUPLICATE every multiply-matched kept row)
+        _reject_multiple_matches(spark, snap, source, keys, candidates)
 
     if not candidates and not not_matched:
         return snap.version  # nothing to touch, nothing to insert: no-op
@@ -1701,7 +1674,7 @@ def merge_clauses(
     actions = [_table_metadata(snap, now, evolved)] if evolved is not None else []
     actions += _removes(candidates, now)
     actions += adds
-    return _commit(snap, "MERGE", "Merge", actions, now).version
+    return commit(snap, "MERGE", "Merge", actions, now).version
 
 
 def delete_from(
@@ -1753,7 +1726,7 @@ def _delete_cow(spark, snap, predicate, prune_column, prune_lo, prune_hi) -> int
     )
     now = int(time.time() * 1000)
     # snapshot-version commit: intervening writers collide, not clobber
-    return _commit(
+    return commit(
         snap, "DELETE", predicate, _removes(rewrite, now) + adds, now
     ).version
 
@@ -1809,7 +1782,7 @@ def _delete_mor(spark, snap, predicate, prune_column, prune_lo, prune_hi) -> int
     if not merged:
         raise ValueError("predicate matches no rows; nothing to delete")
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap,
         "DELETE",
         f"MOR {predicate}",
@@ -1933,7 +1906,7 @@ def enable_in_commit_timestamps(table_path: str) -> int:
         raise ValueError(f"in-commit timestamps already enabled at {table_path}")
     config = {**snap.configuration, ICT_KEY: "true"}
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap,
         "SET TBLPROPERTIES",
         "inCommitTimestamps",
@@ -1977,7 +1950,7 @@ def set_table_properties(table_path: str, props: dict[str, str]) -> int:
         else:
             config[key] = str(value)
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap,
         "SET TBLPROPERTIES",
         "setProperties",
@@ -2027,7 +2000,7 @@ def set_clustering_columns(table_path: str, columns: list[str]) -> int:
         removed=not columns,
     )
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap,
         "CLUSTER BY",
         ",".join(columns) or "NONE",
@@ -2062,7 +2035,7 @@ def enable_row_tracking(table_path: str) -> int:
         _ROW_TRACKING_KEY: "true",
         _ROW_HWM_KEY: str(base - 1),
     }
-    return _commit(
+    return commit(
         snap,
         "SET TBLPROPERTIES",
         "rowTracking",
@@ -2213,7 +2186,7 @@ def purge_deletion_vectors(spark: SparkSession, table_path: str) -> int:
         )
     actions += _removes(rewrite, now, data_change=False)
     actions += adds
-    return _commit(snap, "REORG", "PURGE", actions, now).version
+    return commit(snap, "REORG", "PURGE", actions, now).version
 
 
 def update_table_mor(
@@ -2303,7 +2276,7 @@ def update_table_mor(
         )
     actions += _vector_swaps(snap, candidates, merged, now)
     actions += adds
-    return _commit(
+    return commit(
         snap,
         "UPDATE",
         f"MOR {predicate}",
@@ -2356,7 +2329,7 @@ def replace_where(
         )
     adds += stage_add_actions(_to_physical(new_df, snap.schema), snap, pcols or None)
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap, "WRITE", f"ReplaceWhere({predicate})", _removes(rewrite, now) + adds, now
     ).version
 
@@ -2428,7 +2401,7 @@ def update_table(
     adds = stage_add_actions(_to_physical(updated, snap.schema), snap, pcols or None)
     now = int(time.time() * 1000)
     # snapshot-version commit: intervening writers collide, not clobber
-    return _commit(
+    return commit(
         snap, "UPDATE", predicate, _removes(rewrite, now) + adds, now
     ).version
 
@@ -2466,7 +2439,7 @@ def _commit_clone(
         )
     actions.extend(domain_metadata_action(d, c) for d, c in snap.domains.items())
     actions += adds
-    return _commit(empty_snapshot(dst_table), "CLONE", mode, actions, now).version
+    return commit(empty_snapshot(dst_table), "CLONE", mode, actions, now).version
 
 
 def shallow_clone(
@@ -2593,7 +2566,7 @@ def restore_table(table_path: str, version: int) -> int:
     # in-place DV-state change: pair the add
     actions.extend(_removes([p for p in readd if p in cur_set], now))
     actions.extend(_live_add(old, p, now) for p in readd)
-    return _commit(cur, "RESTORE", f"versionAsOf={version}", actions, now).version
+    return commit(cur, "RESTORE", f"versionAsOf={version}", actions, now).version
 
 
 def overwrite_partitions(df: DataFrame, table_path: str) -> int:
@@ -2640,7 +2613,7 @@ def overwrite_partitions(df: DataFrame, table_path: str) -> int:
     ]
     adds = stage_add_actions(_to_physical(df, snap.schema), snap, pcols)
     now = int(time.time() * 1000)
-    return _commit(
+    return commit(
         snap,
         "WRITE",
         f"dynamic partition overwrite ({len(incoming)} partitions)",
@@ -2682,7 +2655,7 @@ def convert_to_delta(parquet_dir: str) -> int:
     base = empty_snapshot(parquet_dir)
     adds = _new_file_adds(base, files)
     actions = [protocol_action(), metadata_action(schema, created_time=now)] + adds
-    return _commit(base, "CONVERT", parquet_dir, actions, now).version
+    return commit(base, "CONVERT", parquet_dir, actions, now).version
 
 
 def table_detail(table_path: str) -> dict:
@@ -2708,29 +2681,22 @@ def table_history(table_path: str) -> list[dict]:
     (commits compacted away by log checkpointing have no commitInfo —
     mirrored from Delta, where expired log files drop out of HISTORY).
     Newest first."""
-    import json as _json
-
-    from guidewire_spark.sources.deltalog import delta_log_dir, list_versions
-
     rows: list[dict] = []
-    for v in list_versions(table_path):
-        path = os.path.join(delta_log_dir(table_path), f"{v:020d}.json")
-        with open(path, encoding="utf-8") as f:
-            for line in f:
-                action = _json.loads(line)
-                if "commitInfo" in action:
-                    info = action["commitInfo"]
-                    rows.append(
-                        {
-                            "version": v,
-                            "timestamp": info.get("timestamp"),
-                            "operation": info.get("operation"),
-                            "operationParameters": info.get("operationParameters"),
-                            "operationMetrics": info.get("operationMetrics"),
-                            "isBlindAppend": info.get("isBlindAppend"),
-                        }
-                    )
-    return sorted(rows, key=lambda r: -r["version"])
+    for v in reversed(list_versions(table_path)):
+        for action in _read_commit(table_path, v):
+            if "commitInfo" in action:
+                info = action["commitInfo"]
+                rows.append(
+                    {
+                        "version": v,
+                        "timestamp": info.get("timestamp"),
+                        "operation": info.get("operation"),
+                        "operationParameters": info.get("operationParameters"),
+                        "operationMetrics": info.get("operationMetrics"),
+                        "isBlindAppend": info.get("isBlindAppend"),
+                    }
+                )
+    return rows
 
 
 def vacuum_table(
@@ -2753,22 +2719,15 @@ def vacuum_table(
     horizon: int | None = None
     recently_removed: set[str] = set()
     if retention_ms is not None:
-        import json as _json
-
-        from guidewire_spark.sources.deltalog import delta_log_dir, list_versions
-
         horizon = int(time.time() * 1000) - retention_ms
         for v in list_versions(table_path):
-            path = os.path.join(delta_log_dir(table_path), f"{v:020d}.json")
-            with open(path, encoding="utf-8") as f:
-                for line in f:
-                    action = _json.loads(line)
-                    if "remove" in action:
-                        ts = action["remove"].get("deletionTimestamp", 0)
-                        if ts > horizon:
-                            recently_removed.add(
-                                os.path.realpath(action["remove"]["path"])
-                            )
+            for action in _read_commit(table_path, v):
+                if "remove" in action:
+                    ts = action["remove"].get("deletionTimestamp", 0)
+                    if ts > horizon:
+                        recently_removed.add(
+                            os.path.realpath(action["remove"]["path"])
+                        )
     snap = load_snapshot(table_path)
     if not dry_run:
         # vacuumProtocolCheck's contract: deleting files from a table
@@ -2980,7 +2939,7 @@ def create_identity_table(
         created_time=now,
         configuration={f"delta.identity.{name}": _json.dumps(spec)},
     )
-    return _commit(
+    return commit(
         base,
         "CREATE TABLE",
         "IdentityCreate",
@@ -3045,4 +3004,4 @@ def append_with_identity(df: DataFrame, table_path: str) -> int:
     new_spec = dict(spec, highWaterMark=int(hw))
     config = {**adds.configuration, f"delta.identity.{name}": _json.dumps(new_spec)}
     actions = [_table_metadata(snap, now, configuration=config)] + adds
-    return _commit(snap, "WRITE", "IdentityAppend", actions, now).version
+    return commit(snap, "WRITE", "IdentityAppend", actions, now).version

@@ -364,13 +364,17 @@ def test_first_write_features_advertised(spark, sf_dir, tmp_path):
 
 
 def test_ict_probe_failure_aborts_the_commit(tmp_path, monkeypatch):
-    """When the previous commit's JSON is gone, the in-commit-timestamp
-    step reads the flag from the base snapshot's configuration, so an
-    ICT table still stamps ``inCommitTimestamp``. If reading the
-    previous commitInfo fails, the commit fails before anything is
-    written: a commit on an ICT table without ``inCommitTimestamp``
-    would break the protocol."""
-    from guidewire_spark.sources import deltalog
+    """An in-commit-timestamp table stamps every commit above the
+    previous one.  A carried snapshot knows the previous stamp, so no
+    commit file is read (here the previous one is even gone).  A
+    snapshot seeded from a log checkpoint at its own version does not,
+    and reads that one commit; if the read fails, the commit fails
+    before anything is written: a commit on an ICT table without
+    ``inCommitTimestamp`` would break the protocol.  Only a commit file
+    that is gone (the log cleaned down to the checkpoint) stamps
+    without a previous stamp."""
+    from guidewire_spark.sources import deltalog, snapshot
+    from guidewire_spark.sources.log_checkpoint import write_log_checkpoint
 
     table = str(tmp_path / "t")
     snap = write_commit(
@@ -387,16 +391,44 @@ def test_ict_probe_failure_aborts_the_commit(tmp_path, monkeypatch):
     log = os.path.join(table, "_delta_log")
     os.remove(os.path.join(log, f"{1:020d}.json"))
 
+    real_read = snapshot._read_commit
+    reads = []
+
+    def counted(path, version):
+        reads.append(version)
+        return real_read(path, version)
+
+    monkeypatch.setattr(snapshot, "_read_commit", counted)
     snap = write_commit(snap, [add_action("f2.parquet", 100, 1000)])
+    assert reads == []
     with open(os.path.join(log, f"{2:020d}.json")) as f:
         first = json.loads(f.readline())
     assert "inCommitTimestamp" in first["commitInfo"]
     assert snap.commit_timestamps[2] == first["commitInfo"]["inCommitTimestamp"]
 
-    def boom(path, version):
-        raise OSError(f"commit {version - 1} unreadable")
+    write_log_checkpoint(snap)
+    seeded = load_snapshot(table)
+    assert seeded.version == 2 and 2 not in seeded.commit_timestamps
 
-    monkeypatch.setattr(deltalog, "_prev_commit_info", boom)
+    def boom(path, version):
+        raise OSError(f"commit {version} unreadable")
+
+    monkeypatch.setattr(snapshot, "_read_commit", boom)
     with pytest.raises(OSError, match="commit 2 unreadable"):
-        write_commit(snap, [add_action("f3.parquet", 100, 1000)])
+        write_commit(seeded, [add_action("f3.parquet", 100, 1000)])
     assert not os.path.exists(os.path.join(log, f"{3:020d}.json"))
+
+    reads.clear()
+    monkeypatch.setattr(snapshot, "_read_commit", counted)
+    after = write_commit(seeded, [add_action("f3.parquet", 100, 1000)])
+    assert reads == [2]
+    assert after.commit_timestamps[3] > snap.commit_timestamps[2]
+
+    # a log cleaned down to its checkpoint leaves no stamp to exceed:
+    # the commit is still stamped
+    write_log_checkpoint(after)
+    os.remove(os.path.join(log, f"{3:020d}.json"))
+    last = write_commit(load_snapshot(table), [add_action("f4.parquet", 100, 1000)])
+    with open(os.path.join(log, f"{4:020d}.json")) as f:
+        first = json.loads(f.readline())
+    assert last.commit_timestamps[4] == first["commitInfo"]["inCommitTimestamp"]

@@ -355,7 +355,7 @@ def test_legacy_view_without_var_cols_still_refreshes(spark, sf_dir, tmp_path):
     # simulate a pre-var_cols state payload (no "var_cols" key)
     import json as _json
 
-    from guidewire_spark.sources.matview import _STATE_KEY, _write_state  # noqa
+    from guidewire_spark.sources.matview import _STATE_KEY
     from guidewire_spark.sources.writer import (
         set_table_properties,
         table_configuration,
@@ -367,3 +367,124 @@ def test_legacy_view_without_var_cols_still_refreshes(spark, sf_dir, tmp_path):
     write_delta(n.limit(3), base, mode="append")
     refresh_materialized_aggregate(spark, base, view)
     assert read_delta(spark, view).count() > 0
+
+
+def _crash_on_commit(monkeypatch, after: int) -> None:
+    """From now on, every ``write_commit`` after the first ``after``
+    raises before writing, as a process killed at that point would:
+    every module-level binding of it in the package is replaced."""
+    import sys
+
+    from guidewire_spark.sources import deltalog
+
+    real = deltalog.write_commit
+    done = []
+
+    def crashing(base, actions):
+        if len(done) >= after:
+            raise RuntimeError("simulated crash before the commit")
+        done.append(base.version + 1)
+        return real(base, actions=actions)
+
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("guidewire_spark") and mod is not None:
+            for attr, value in list(vars(mod).items()):
+                if value is real:
+                    monkeypatch.setattr(mod, attr, crashing)
+
+
+def _crash_on_staging(monkeypatch) -> None:
+    from guidewire_spark.sources import writer
+
+    def crashing(*args, **kwargs):
+        raise RuntimeError("simulated crash while staging")
+
+    monkeypatch.setattr(writer, "_stage_files", crashing)
+
+
+def _nation_base(spark, sf_dir, base):
+    n = load_table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_regionkey", F.col("n_nationkey").cast("double").alias("x")
+    )
+    write_delta(n, base, mode="append")
+    return n
+
+
+def _rows(spark, view):
+    return sorted(
+        (r.n_regionkey, r.view_count, r.sum_x)
+        for r in read_delta(spark, view).collect()
+    )
+
+
+@pytest.mark.parametrize("crash", ["staging", "first commit", "second commit"])
+def test_refresh_crash_then_rerun_equals_fresh_create(
+    spark, sf_dir, tmp_path, monkeypatch, crash
+):
+    """A refresh that dies before, between or after writing its commits
+    and is re-run lands the view on exactly what a fresh create over
+    the final base holds: rows and base-version pin commit together."""
+    from guidewire_spark.sources.writer import table_history
+
+    base, view = str(tmp_path / "b"), str(tmp_path / "v")
+    n = _nation_base(spark, sf_dir, base)
+    create_materialized_aggregate(
+        spark, base, view, group_cols=["n_regionkey"], sum_cols=["x"]
+    )
+    write_delta(n.where("n_nationkey < 3"), base, mode="append")
+
+    with monkeypatch.context() as m:
+        if crash == "staging":
+            _crash_on_staging(m)
+        else:
+            _crash_on_commit(m, after=0 if crash == "first commit" else 1)
+        try:
+            refresh_materialized_aggregate(spark, base, view)
+        except RuntimeError:
+            pass
+    pinned = refresh_materialized_aggregate(spark, base, view)
+
+    fresh = str(tmp_path / "fresh")
+    assert create_materialized_aggregate(
+        spark, base, fresh, group_cols=["n_regionkey"], sum_cols=["x"]
+    ) == pinned
+    assert _rows(spark, view) == _rows(spark, fresh)
+    assert view_state(view)["base_version"] == pinned
+    # one commit per create and one per refresh
+    assert [h["operation"] for h in table_history(view)] == [
+        "REFRESH MATERIALIZED VIEW",
+        "CREATE MATERIALIZED VIEW",
+    ]
+
+
+@pytest.mark.parametrize("crash", ["staging", "first commit", "second commit"])
+def test_create_crash_then_rerun_holds_no_duplicate_rows(
+    spark, sf_dir, tmp_path, monkeypatch, crash
+):
+    """A create that dies and is re-run commits its rows once: a view
+    whose rows landed without their pin would be re-created on top of
+    them."""
+    base, view = str(tmp_path / "b"), str(tmp_path / "v")
+    _nation_base(spark, sf_dir, base)
+
+    def create():
+        return create_materialized_aggregate(
+            spark, base, view, group_cols=["n_regionkey"], sum_cols=["x"]
+        )
+
+    with monkeypatch.context() as m:
+        if crash == "staging":
+            _crash_on_staging(m)
+        else:
+            _crash_on_commit(m, after=0 if crash == "first commit" else 1)
+        try:
+            create()
+            crashed = False
+        except RuntimeError:
+            crashed = True
+    if crashed:
+        create()
+    rows = _rows(spark, view)
+    assert [k for k, _, _ in rows] == [0, 1, 2, 3, 4]
+    assert sum(c for _, c, _ in rows) == 25
+    assert sum(x for _, _, x in rows) == float(sum(range(25)))

@@ -193,6 +193,29 @@ def test_merge_inserts_unmatched_rows(spark, sf_dir, tmp_path):
     assert read_delta(spark, table).count() == r.count() * 2
 
 
+def test_merge_refuses_a_target_row_matching_two_source_rows(spark, tmp_path):
+    """Delta's deterministic-merge rule: a target row matched by more
+    than one source row raises and commits nothing; duplicated source
+    keys that match no target row insert as given."""
+    from guidewire_spark.sources.snapshot import load_snapshot
+    from guidewire_spark.sources.writer import merge_into
+
+    table = str(tmp_path / "mrg_dup")
+    write_delta(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
+                table, mode="append")
+    dup = spark.createDataFrame([(1, "x"), (1, "y")], "k long, v string")
+    with pytest.raises(ValueError, match="multiple rows matching one target row"):
+        merge_into(spark, table, dup, on="k")
+    assert load_snapshot(table).version == 0
+    assert sorted(map(tuple, read_delta(spark, table).collect())) == [(1, "a"), (2, "b")]
+
+    fresh = spark.createDataFrame([(7, "x"), (7, "y"), (2, "c")], "k long, v string")
+    merge_into(spark, table, fresh, on="k")
+    assert sorted(map(tuple, read_delta(spark, table).collect())) == [
+        (1, "a"), (2, "c"), (7, "x"), (7, "y"),
+    ]
+
+
 def test_restore_and_history(spark, sf_dir, tmp_path):
     from guidewire_spark.sources.writer import restore_table, table_history
 
