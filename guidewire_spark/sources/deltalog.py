@@ -507,15 +507,14 @@ class ConcurrentDeleteException(ConcurrentModificationException):
 COMMIT_RETRIES = 10
 
 
-def commit_transaction(base, build_actions):
-    """Commit ``build_actions(base)`` on the held snapshot ``base``
-    with Delta's optimistic-concurrency loop and return the committed
-    snapshot.  The first attempt lands at ``base.version + 1`` without
-    touching the log; only after losing the race (O_EXCL
-    FileExistsError from ``write_commit``) is the latest snapshot
-    loaded, and every commit that landed since ``base`` decides
-    between a REBASE (rebuild the actions against the new snapshot
-    and retry) and a typed conflict:
+def commit_transaction(base, actions: list[dict]):
+    """Commit ``actions`` on the held snapshot ``base`` with Delta's
+    optimistic-concurrency loop and return the committed snapshot.
+    The first attempt lands at ``base.version + 1`` without touching
+    the log; only after losing the race (O_EXCL FileExistsError from
+    ``write_commit``) is the latest snapshot loaded, and every commit
+    that landed since ``base`` decides between a REBASE (retry the same
+    actions on the new snapshot) and a typed conflict:
 
     * winner changed ``metaData``/``protocol`` → MetadataChangedException
       (our actions were checked against a schema, constraints or
@@ -524,25 +523,27 @@ def commit_transaction(base, build_actions):
     * winner ``remove``d or re-``add``ed a file our transaction
       removes → ConcurrentDeleteException (classic write-write
       conflict: both transactions rewrote the same file);
+    * winner ``add``ed a file our transaction adds →
+      ConcurrentModificationException (two appends of the same file —
+      two indexers that read the same high-water mark — would replay
+      its rows twice in the change feed);
     * otherwise (concurrent blind appends, disjoint removes) → rebase
       and retry, the same resolution delta-spark applies.
 
-    ``build_actions(snapshot)`` is called fresh per attempt, so the
-    caller's logic must be a pure function of the snapshot.  Its one
-    caller is ``commit``, for blind appends.  The reference connector
-    sidesteps all of this by serializing one writer per table; a
-    1000-executor pipeline cannot."""
+    Its one caller is ``commit``, for blind appends.  The reference
+    connector sidesteps all of this by serializing one writer per
+    table; a 1000-executor pipeline cannot."""
     from guidewire_spark.sources.snapshot import _read_commit, load_snapshot
 
     table_path = base.table_path
+    ours_adds = {a["add"]["path"] for a in actions if "add" in a}
+    ours_removes = {a["remove"]["path"] for a in actions if "remove" in a}
+    ours_meta = any("metaData" in a or "protocol" in a for a in actions)
     for _ in range(COMMIT_RETRIES + 1):
-        actions = build_actions(base)
         try:
             return write_commit(base, actions=actions)
         except FileExistsError:
             pass
-        ours_removes = {a["remove"]["path"] for a in actions if "remove" in a}
-        ours_meta = any("metaData" in a or "protocol" in a for a in actions)
         latest = load_snapshot(table_path)
         for v in range(base.version + 1, latest.version + 1):
             for won in _read_commit(table_path, v):
@@ -562,6 +563,11 @@ def commit_transaction(base, build_actions):
                     touched = won["remove"]["path"]
                 elif "add" in won:
                     touched = won["add"]["path"]
+                    if touched in ours_adds:
+                        raise ConcurrentModificationException(
+                            f"version {v} already added {touched!r}, which "
+                            f"our transaction adds, at {table_path}"
+                        )
                 if touched is not None and touched in ours_removes:
                     raise ConcurrentDeleteException(
                         f"version {v} rewrote {touched!r}, which our "
@@ -593,7 +599,8 @@ def commit(
     are told about them — a DV table advertising minReaderVersion=1
     lets an old reader silently resurface deleted rows), then the
     ``commitInfo`` derived from the actions.  A ``blind`` append
-    rebases past concurrent appends through ``commit_transaction``.
+    rebases past concurrent appends of other files through
+    ``commit_transaction``.
     Every other commit was built from ``snap``'s state, so losing the
     race raises ConcurrentModificationException instead of clobbering
     the winner."""
@@ -601,7 +608,7 @@ def commit(
     actions = actions + ([upgrade] if upgrade else [])
     actions.append(commit_info_action(operation, mode, actions, now, blind=blind))
     if blind:
-        return commit_transaction(snap, lambda _: actions)
+        return commit_transaction(snap, actions)
     try:
         return write_commit(snap, actions=actions)
     except FileExistsError:

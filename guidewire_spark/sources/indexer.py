@@ -146,7 +146,9 @@ def commit_batches(
     N folders writes N commits and reads no commit back.  The stats
     spec comes from the carried snapshot too.  The indexer runs one
     writer per table, so only misuse loses a commit race: a blind
-    append then rebases past the winner, any other commit raises
+    append then rebases past a winner that added other files; a winner
+    that already added the same files (two indexers from one
+    high-water mark), or any lost non-blind commit, raises
     ``ConcurrentModificationException`` naming the table and version.
 
     Log checkpoints follow ``write_commit``'s one rule

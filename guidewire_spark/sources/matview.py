@@ -38,12 +38,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from guidewire_spark.sources.deltalog import (
-    check_writer_protocol,
-    commit,
-    metadata_action,
-    remove_action,
-)
+from guidewire_spark.sources.deltalog import commit
 from guidewire_spark.sources.snapshot import (
     empty_snapshot,
     load_snapshot,
@@ -52,7 +47,9 @@ from guidewire_spark.sources.snapshot import (
     scan_live_files,
 )
 from guidewire_spark.sources.writer import (
-    _first_protocol,
+    _checked_write,
+    _create_actions,
+    _overwrite_actions,
     stage_add_actions,
     table_configuration,
 )
@@ -162,11 +159,7 @@ def create_materialized_aggregate(
     adds = stage_add_actions(full, view)
     now = int(time.time() * 1000)
     config = {**adds.configuration, _STATE_KEY: json.dumps(state)}
-    actions = [
-        _first_protocol(full.schema),
-        metadata_action(full.schema, created_time=now, configuration=config),
-        *adds,
-    ]
+    actions = _create_actions(full.schema, now, config) + adds
     mode = f"base_version={base_snap.version}"
     commit(view, "CREATE MATERIALIZED VIEW", mode, actions, now)
     return base_snap.version
@@ -182,7 +175,6 @@ def refresh_materialized_aggregate(
     pinned version."""
     view = load_snapshot(view_path)
     state = _state(view.configuration, view_path)
-    check_writer_protocol(view.protocol, view_path)
     group_cols, sum_cols = state["group_cols"], state["sum_cols"]
     minmax_cols = state.get("minmax_cols") or []
     var_cols = state.get("var_cols") or []
@@ -296,21 +288,15 @@ def refresh_materialized_aggregate(
     # full-outer rebuild of the view table is the simple correct move,
     # and stays proportional to |groups|, never |base|. (A keyed MERGE
     # of only-touched groups is the next refinement when |groups| is
-    # itself huge.)
+    # itself huge.)  The rebuild is an overwrite of the view, so it
+    # runs the checks write_delta's overwrite runs (constraints,
+    # append-only, identity, the writer-protocol gate) before staging.
+    merged = _checked_write(merged, view, "overwrite")
     adds = stage_add_actions(merged, view)
     now = int(time.time() * 1000)
     state = {**state, "base_version": base_snap.version}
     config = {**adds.configuration, _STATE_KEY: json.dumps(state)}
-    actions = [
-        metadata_action(
-            merged.schema,
-            created_time=now,
-            table_id=view.metadata_id,
-            configuration=config,
-        ),
-        *[remove_action(p, now) for p in view.files],
-        *adds,
-    ]
+    actions = _overwrite_actions(view, merged.schema, now, config) + adds
     mode = f"base_version={base_snap.version}"
     commit(view, "REFRESH MATERIALIZED VIEW", mode, actions, now)
     return base_snap.version

@@ -190,12 +190,14 @@ def stage_add_actions(
     return _StagedAdds(kept, adds.configuration)
 
 
-def _first_protocol(schema, generated: bool = False) -> dict:
-    """``protocol`` action of a table's first commit: the default
-    versions, or the table-features form advertising what the commit
-    already uses — generated columns, and TIMESTAMP WITHOUT TIME ZONE
-    columns (a reader+writer feature: an old reader would misread the
-    values as zoned instants)."""
+def _create_actions(
+    schema, now: int, configuration: dict, partition_by=None, generated: bool = False
+) -> list[dict]:
+    """``protocol`` + ``metaData`` of a table's first commit.  The
+    protocol is the default versions, or the table-features form
+    advertising what the commit already uses — generated columns, and
+    TIMESTAMP WITHOUT TIME ZONE columns (a reader+writer feature: an
+    old reader would misread the values as zoned instants)."""
     from pyspark.sql import types as T
 
     writer = {"generatedColumns"} if generated else set()
@@ -203,7 +205,34 @@ def _first_protocol(schema, generated: bool = False) -> dict:
     if any(isinstance(f.dataType, T.TimestampNTZType) for f in schema.fields):
         reader.add("timestampNtz")
         writer.add("timestampNtz")
-    return feature_upgrade_action(None, reader, writer) or protocol_action()
+    return [
+        feature_upgrade_action(None, reader, writer) or protocol_action(),
+        metadata_action(
+            schema,
+            partition_columns=partition_by,
+            created_time=now,
+            configuration=configuration,
+        ),
+    ]
+
+
+def _overwrite_actions(
+    snap, schema, now: int, configuration: dict, partition_by=None
+) -> list[dict]:
+    """``metaData`` (the table id of ``snap`` kept, ``schema``,
+    ``partition_by`` and ``configuration`` replacing its own) + a
+    ``remove`` of every live file: an overwrite's actions before its
+    adds."""
+    return [
+        metadata_action(
+            schema,
+            partition_columns=partition_by,
+            created_time=now,
+            table_id=snap.metadata_id,
+            configuration=configuration,
+        ),
+        *_removes(snap.files, now),
+    ]
 
 
 def _table_metadata(snap, now: int, schema=None, configuration=None) -> dict:
@@ -751,6 +780,42 @@ def _apply_generated_columns(df: DataFrame, snap) -> DataFrame:
     return df
 
 
+def _checked_write(df: DataFrame, snap, mode: str) -> DataFrame:
+    """The checks a write of ``df`` into the existing table of ``snap``
+    runs before any file is staged; returns ``df`` with generated
+    columns and column defaults filled in.  ``write_delta`` and the
+    materialized-view refresh (an overwrite) both run them."""
+    idents = _identity_specs(snap)
+    if idents:
+        # GENERATED ALWAYS AS IDENTITY: only the identity writer
+        # may append (it assigns values and bumps the high-water
+        # mark atomically); a plain write would commit NULL or
+        # user-chosen identities and break uniqueness
+        raise ValueError(
+            f"table has identity column(s) {sorted(idents)}; write "
+            "through append_with_identity, not write_delta"
+        )
+    # Generated columns materialize/validate first (constraints may
+    # reference them); CHECK constraints survive overwrite (Delta
+    # semantics: the table definition outlives its data), so both are
+    # enforced on every write into an existing table.
+    df = _apply_generated_columns(df, snap)
+    df = _apply_column_defaults(df, snap)
+    # The absent-non-nullable-column rule applies to APPENDS only: an
+    # overwrite replaces the table's metadata with df.schema in the
+    # same commit, so the old schema's non-nullable columns leave with
+    # the old rows (value-level CHECK constraints still apply — the
+    # table definition outlives its data; nullability does not survive
+    # a schema-replacing overwrite).
+    _enforce_constraints(df, snap, require_all=(mode == "append"))
+    if mode == "overwrite":
+        _reject_on_append_only(snap, "overwrite")
+    # a refused write must not first dump the whole dataset into the
+    # table directory as orphan files
+    _gate_write(snap)
+    return df
+
+
 def write_delta(
     df: DataFrame,
     table_path: str,
@@ -822,32 +887,7 @@ def write_delta(
             raise ValueError(
                 "generated_columns may only be declared on the first write"
             )
-        # Generated columns materialize/validate first (constraints may
-        # reference them); CHECK constraints survive overwrite (Delta
-        # semantics: the table definition outlives its data), so both
-        # are enforced on every write into an existing table before any
-        # file is staged.
-        idents = _identity_specs(base)
-        if idents:
-            # GENERATED ALWAYS AS IDENTITY: only the identity writer
-            # may append (it assigns values and bumps the high-water
-            # mark atomically); a plain write would commit NULL or
-            # user-chosen identities and break uniqueness
-            raise ValueError(
-                f"table has identity column(s) {sorted(idents)}; write "
-                "through append_with_identity, not write_delta"
-            )
-        df = _apply_generated_columns(df, base)
-        df = _apply_column_defaults(df, base)
-        # The absent-non-nullable-column rule applies to APPENDS only:
-        # an overwrite replaces the table's metadata with df.schema in
-        # the same commit, so the old schema's non-nullable columns
-        # leave with the old rows (value-level CHECK constraints still
-        # apply — the table definition outlives its data; nullability
-        # does not survive a schema-replacing overwrite).
-        _enforce_constraints(df, base, require_all=(mode == "append"))
-        if mode == "overwrite":
-            _reject_on_append_only(base, "overwrite")
+        df = _checked_write(df, base, mode)
     if prev is not None:
         existing = base.partition_columns
         if partition_by:
@@ -861,10 +901,6 @@ def write_delta(
             # into a partitioned table
             partition_by = list(existing)
     incoming_schema = df.schema  # logical, pre-column-mapping
-    if prev is not None:
-        # gate BEFORE staging: a refused write must not first dump the
-        # whole dataset into the table directory as orphan files
-        _gate_write(base)
     if prev is not None and mode == "append":
         # mapped tables stage files under physical column names
         df = _to_physical(df, base.schema)
@@ -890,30 +926,18 @@ def write_delta(
     now = int(time.time() * 1000)
     actions: list[dict] = []
     if prev is None:
-        actions.append(_first_protocol(df.schema, bool(generated_columns)))
-        actions.append(
-            metadata_action(
-                df.schema,
-                partition_columns=partition_by,
-                created_time=now,
-                configuration={
-                    f"delta.generatedColumns.{c}": e
-                    for c, e in (generated_columns or {}).items()
-                },
-            )
+        generated = {
+            f"delta.generatedColumns.{c}": e
+            for c, e in (generated_columns or {}).items()
+        }
+        actions += _create_actions(
+            df.schema, now, generated, partition_by, bool(generated_columns)
         )
         op_mode, blind = "Overwrite" if mode == "overwrite" else "Append", False
     elif mode == "overwrite":
-        actions.append(
-            metadata_action(
-                df.schema,
-                partition_columns=partition_by,
-                created_time=now,
-                table_id=base.metadata_id,
-                configuration=adds.configuration,
-            )
+        actions += _overwrite_actions(
+            base, df.schema, now, adds.configuration, partition_by
         )
-        actions.extend(_removes(base.files, now))
         op_mode, blind = "Overwrite", False
     else:
         schema = base.schema

@@ -200,6 +200,53 @@ def test_indexer_snapshots_equal_replay(tmp_path, monkeypatch):
     assert os.path.isfile(checkpoint_path(table, 9))
 
 
+def test_indexers_racing_from_one_high_water_mark(tmp_path, monkeypatch):
+    """Two indexers that loaded the same table snapshot race for its
+    next version.  The loser's append of the CDA files the winner
+    already committed raises, naming the table and version, instead of
+    adding them a second time; a loser with other files rebases.  A
+    ``_checkpoints`` append on a stale snapshot rebases too (its rows
+    are per-table high-water marks, each row a file of its own)."""
+    from guidewire_spark.sources import indexer
+    from guidewire_spark.sources.checkpoints import (
+        checkpoints_path,
+        load_checkpoints,
+        save_checkpoints,
+    )
+    from guidewire_spark.sources.deltalog import ConcurrentModificationException
+    from guidewire_spark.sources.indexer import BatchResult
+    from guidewire_spark.sources.snapshot import load_snapshot_or_empty
+
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    table = str(tmp_path / "db" / "t")
+
+    def batch(i, with_schema=False):
+        files = [FileMeta(f"/data/f{i}.parquet", 10, 1000 + i)]
+        return Batch("fp1", _BASE_TS + i, files, schema if with_schema else None)
+
+    commit_batches(table, [batch(0, with_schema=True)])
+    stale = load_snapshot(table)
+    commit_batches(table, [batch(1)])  # the winner takes version 1
+    monkeypatch.setattr(indexer, "load_snapshot_or_empty", lambda path: stale)
+    with pytest.raises(ConcurrentModificationException) as lost:
+        commit_batches(table, [batch(1)])
+    assert "version 1 already added '/data/f1.parquet'" in str(lost.value)
+    assert table in str(lost.value)
+    commit_batches(table, [batch(2)])  # other files: rebased to version 2
+    monkeypatch.undo()
+    snap = load_snapshot(table)
+    assert snap.version == 2
+    assert snap.files == [f"/data/f{i}.parquet" for i in range(3)]
+
+    ckpts = checkpoints_path(str(tmp_path / "db"))
+    save_checkpoints({"t": [BatchResult("fp1", 5, 1)]}, load_snapshot_or_empty(ckpts))
+    stale = load_snapshot(ckpts)
+    save_checkpoints({"t": [BatchResult("fp1", 7, 1)]}, stale)
+    save_checkpoints({"u": [BatchResult("fp1", 9, 1)]}, stale)
+    assert load_checkpoints(str(tmp_path / "db")) == {"t": 7, "u": 9}
+    assert load_snapshot(ckpts).version == 2
+
+
 def test_writer_snapshots_equal_replay(spark, sf_dir, tmp_path, monkeypatch):
     """Every writer commit kind the sequence reaches: create, append,
     ``delta.checkpointInterval`` set (auto checkpoints follow), a

@@ -178,14 +178,18 @@ def test_reader_protocol_gating(tmp_path):
 
 def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tmp_path):
     """commit_transaction: a lost race over a blind append REBASES and
-    lands at winner+1; a race where the winner rewrote a file our
-    transaction removes raises ConcurrentDeleteException; a winner
-    that changed metadata raises MetadataChangedException."""
+    lands at winner+1; a winner that already added a file our append
+    adds raises ConcurrentModificationException; a race where the
+    winner rewrote a file our transaction removes raises
+    ConcurrentDeleteException; a winner that changed metadata raises
+    MetadataChangedException.  Each winner commits first on the same
+    stale snapshot the loser then commits on."""
     import pytest as _pytest
 
     from guidewire_spark.plans.catalog import load_table
     from guidewire_spark.sources.deltalog import (
         ConcurrentDeleteException,
+        ConcurrentModificationException,
         MetadataChangedException,
         add_action,
         commit_info_action,
@@ -193,7 +197,7 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
         remove_action,
         write_commit,
     )
-    from guidewire_spark.sources.snapshot import load_snapshot, read_delta
+    from guidewire_spark.sources.snapshot import load_snapshot
     from guidewire_spark.sources.writer import write_delta
 
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -202,60 +206,54 @@ def test_optimistic_commit_rebases_appends_and_types_conflicts(spark, sf_dir, tm
     base = load_snapshot(t)
     data_file = base.files[0]
 
-    calls = {"n": 0}
-
-    def append_with_race(snap):
-        calls["n"] += 1
-        if calls["n"] == 1:  # sneak a competing blind append in first
-            adds = [add_action("/elsewhere/winner.parquet", 1, 0)]
-            write_commit(
-                snap, [commit_info_action("WRITE", "Append", adds, blind=True)] + adds
-            )
-        adds = [add_action("/elsewhere/ours.parquet", 1, 0)]
+    def append(path):
+        adds = [add_action(path, 1, 0)]
         return [commit_info_action("WRITE", "Append", adds, blind=True)] + adds
 
-    v = commit_transaction(base, append_with_race).version
+    def delete():
+        return [commit_info_action("DELETE", "Delete", []), remove_action(data_file)]
+
+    write_commit(base, append("/elsewhere/winner.parquet"))
+    v = commit_transaction(base, append("/elsewhere/ours.parquet")).version
     assert v == base.version + 2  # rebased past the winner
-    assert calls["n"] == 2  # actions rebuilt against the fresh snapshot
     snap = load_snapshot(t)
     assert "/elsewhere/ours.parquet" in snap.files
     assert "/elsewhere/winner.parquet" in snap.files
 
-    def remove_with_conflict(snap):
-        write_commit(
-            snap,
-            [commit_info_action("DELETE", "Delete", []), remove_action(data_file)],
-        )
-        return [commit_info_action("DELETE", "Delete", []), remove_action(data_file)]
+    stale = load_snapshot(t)
+    write_commit(stale, append("/elsewhere/twice.parquet"))
+    with _pytest.raises(ConcurrentModificationException, match="already added"):
+        commit_transaction(stale, append("/elsewhere/twice.parquet"))
+    assert load_snapshot(t).version == stale.version + 1  # no second add
 
+    stale = load_snapshot(t)
+    write_commit(stale, delete())
     with _pytest.raises(ConcurrentDeleteException, match="rewrote"):
-        commit_transaction(load_snapshot(t), remove_with_conflict)
+        commit_transaction(stale, delete())
 
-    def append_behind_metadata_change(snap):
-        write_commit(
-            snap,
-            [
-                commit_info_action("SET TBLPROPERTIES", "set", []),
-                {
-                    "metaData": {
-                        "id": snap.metadata_id,
-                        "format": {"provider": "parquet"},
-                        "schemaString": snap.schema.json(),
-                        "partitionColumns": [],
-                        "configuration": {"k": "v"},
-                    }
-                },
-            ],
-        )
-        adds = [add_action("/elsewhere/late.parquet", 1, 0)]
-        return [commit_info_action("WRITE", "Append", adds, blind=True)] + adds
-
+    stale = load_snapshot(t)
+    write_commit(
+        stale,
+        [
+            commit_info_action("SET TBLPROPERTIES", "set", []),
+            {
+                "metaData": {
+                    "id": stale.metadata_id,
+                    "format": {"provider": "parquet"},
+                    "schemaString": stale.schema.json(),
+                    "partitionColumns": [],
+                    "configuration": {"k": "v"},
+                }
+            },
+        ],
+    )
     with _pytest.raises(MetadataChangedException, match="changed table metadata"):
-        commit_transaction(load_snapshot(t), append_behind_metadata_change)
+        commit_transaction(stale, append("/elsewhere/late.parquet"))
     final = load_snapshot(t)
     # the losing transactions never half-landed: the conflicted DELETE
     # did not re-remove, the conflicted append's file is absent, and
     # only the winners' commits advanced the version
+    assert final.version == stale.version + 1
     assert data_file not in final.files  # the WINNER's delete stands
     assert "/elsewhere/late.parquet" not in final.files
     assert final.configuration.get("k") == "v"

@@ -488,3 +488,37 @@ def test_create_crash_then_rerun_holds_no_duplicate_rows(
     assert [k for k, _, _ in rows] == [0, 1, 2, 3, 4]
     assert sum(c for _, c, _ in rows) == 25
     assert sum(x for _, _, x in rows) == float(sum(range(25)))
+
+
+@pytest.mark.parametrize("rule", ["check constraint", "append-only"])
+def test_refresh_honours_the_view_table_rules(spark, sf_dir, tmp_path, rule):
+    """A refresh rewrites the view like any overwrite: a view given a
+    CHECK constraint the new rows break, or set append-only, refuses
+    the refresh and commits nothing."""
+    from guidewire_spark.sources.writer import (
+        add_check_constraint,
+        set_table_properties,
+        table_history,
+    )
+
+    base, view = str(tmp_path / "b"), str(tmp_path / "v")
+    n = _nation_base(spark, sf_dir, base)
+    create_materialized_aggregate(
+        spark, base, view, group_cols=["n_regionkey"], sum_cols=["x"]
+    )
+    if rule == "check constraint":
+        add_check_constraint(spark, view, "small_groups", "view_count <= 5")
+        match = "CHECK constraint violation"
+    else:
+        set_table_properties(view, {"delta.appendOnly": "true"})
+        match = "append-only"
+    before = _rows(spark, view)
+    pinned = view_state(view)["base_version"]
+    commits = len(table_history(view))
+    write_delta(n.where("n_nationkey < 3"), base, mode="append")
+
+    with pytest.raises(ValueError, match=match):
+        refresh_materialized_aggregate(spark, base, view)
+    assert len(table_history(view)) == commits
+    assert view_state(view)["base_version"] == pinned
+    assert _rows(spark, view) == before
